@@ -10,29 +10,12 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Typed OSM element rows — schema contract per FIXTURES.md B2, input format
-  * per the reference sample (`osm/example.osm:4-7` node attrs + tag children,
-  * `:7046-7055` way with ORDERED nd refs, `:19350-19378` relation members).
+/** A relation member. Element schema contract per FIXTURES.md B2, input
+  * format per the reference sample (`osm/example.osm:4-7` node attrs + tag
+  * children, `:7046-7055` way with ORDERED nd refs, `:19350-19378` relation
+  * members).
   */
 case class OsmMember(mtype: String, ref: Long, role: String)
-
-case class OsmNode(
-    id: Long, lat: Double, lon: Double,
-    version: Option[Int], changeset: Option[Long], ts: Option[Timestamp],
-    user: Option[String], uid: Option[Long], visible: Option[Boolean],
-    tags: Map[String, String])
-
-case class OsmWay(
-    id: Long,
-    version: Option[Int], changeset: Option[Long], ts: Option[Timestamp],
-    user: Option[String], uid: Option[Long], visible: Option[Boolean],
-    nds: Seq[Long], tags: Map[String, String])
-
-case class OsmRelation(
-    id: Long,
-    version: Option[Int], changeset: Option[Long], ts: Option[Timestamp],
-    user: Option[String], uid: Option[Long], visible: Option[Boolean],
-    members: Seq[OsmMember], tags: Map[String, String])
 
 /** Union row for single-pass parsing (kind ∈ node|way|relation). */
 private[osm] case class OsmRaw(

@@ -65,21 +65,16 @@ object RoutingGraph {
     val w = Window.partitionBy("way_id").orderBy("pos")
     // Segment index: how many vertices seen before this position. A vertex
     // node CLOSES one segment and OPENS the next, so it belongs to both —
-    // emit it twice (as segment end via seg, as start via seg-1).
-    val seq = exploded
-      .withColumn("vseen",
-        sum(when(col("is_vertex"), 1L).otherwise(0L))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val asMember = seq.select(col("way_id"), col("tags"), col("pos"), col("nd"),
-      col("lon"), col("lat"),
-      when(col("is_vertex"), col("vseen") - 1).otherwise(col("vseen")).as("seg"))
-    val asOpener = seq.filter(col("is_vertex"))
+    // explode it into two rows (seg-1 as closer, seg as opener) in the same
+    // projection that assigns every other node its one seg.
+    val vseen = sum(when(col("is_vertex"), 1L).otherwise(0L))
+      .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    val parts = exploded
+      .withColumn("vseen", vseen)
       .select(col("way_id"), col("tags"), col("pos"), col("nd"),
-        col("lon"), col("lat"), col("vseen").as("seg"))
-    // No dedup needed: a vertex row lands in seg-1 (as closer) via asMember
-    // and seg (as opener) via asOpener — distinct rows by construction.
-    // (And MapType columns can't be distinct()'d anyway.)
-    val parts = asMember.unionByName(asOpener)
+        col("lon"), col("lat"),
+        explode(when(col("is_vertex"), array(col("vseen") - 1, col("vseen")))
+          .otherwise(array(col("vseen")))).as("seg"))
     parts.groupBy("way_id", "seg")
       .agg(
         first(col("tags")).as("tags"),

@@ -3,9 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Upsert
 import graft.osm.{OsmXml, RoutingGraph}
-import graft.raster.{RasterSampler, SyntheticTileStore, Tile, TileStore, ValueFns}
+import graft.raster.{RasterPass, RasterSampler, SyntheticTileStore, Tile, TileStore, ValueFns}
 
 /** One enrichment pass = the reference's `process_*` functions:
   * (tile source, value function, zoom, output column).
@@ -19,14 +18,20 @@ case class EnrichmentPass(
 
 /** The §3.1 pipeline (`update_ways_metadata.main`, :128-144), one lazy DAG:
   *
-  *   parse OSM → routing edges → posexplode(geom) → T1/T2 address →
-  *   repartition(tile) → sample → median per gid → normalize by global max
-  *   → join-upsert into ways_metadata.
+  *   parse OSM → routing edges → explode(geom) → T1/T2 address per pass →
+  *   ONE repartition + sort by (pass, tile) → sample → ONE groupBy(gid)
+  *   with a median per pass → normalize each column by its global max.
   *
-  * Passes run sequentially like the reference's main(): popularity (Strava
-  * L-mode heat, zoom 12), greenery (satellite RGB, zoom 15), and the
-  * config-gated highres pass DISABLED by default, matching the
-  * commented-out call at `update_ways_metadata.py:138`.
+  * The reference runs its passes sequentially and upserts each into
+  * `ways_metadata` (`INSERT … ON CONFLICT`); here all passes share one
+  * sampling shuffle and one aggregate ([[RasterSampler.medians]]), whose
+  * rows are what that upsert sequence produces: a gid appears iff some
+  * pass sampled it, and a pass that did not reads null. There is no FK
+  * join either: every coordinate comes from an edge, so every gid already
+  * references one (J4). Passes: popularity (Strava L-mode heat, zoom 12),
+  * greenery (satellite RGB, zoom 15), and the config-gated highres pass
+  * DISABLED by default, matching the commented-out call at
+  * `update_ways_metadata.py:138`.
   */
 object WaysEnrichment {
 
@@ -45,24 +50,18 @@ object WaysEnrichment {
       .select(col("gid"), col("pt.lng").as("lng"), col("pt.lat").as("lat"))
 
   /** Run all enabled passes and return the final `ways_metadata` table
-    * (gid, <one column per pass>), FK-filtered to existing edges (J4).
+    * (gid, <one column per enabled pass>). Fails before any Spark job
+    * unless ≥ 1 pass is enabled and the enabled columns are distinct and
+    * not `gid`.
     */
   def run(spark: SparkSession, osmPath: String,
       passes: Seq[EnrichmentPass]): DataFrame = {
     val tables = OsmXml.parse(spark, osmPath)
     val routable = RoutingGraph.routableWays(tables.ways)
-    val edges = RoutingGraph.edges(routable, tables.nodes).cache()
-    val coords = edgeCoords(edges).cache()
-
-    val metadata = passes.filter(_.enabled).foldLeft(Option.empty[DataFrame]) {
-      case (acc, pass) =>
-        val m = RasterSampler.medianPass(
-          coords, pass.store, pass.zoom, pass.valueFn, pass.column)
-        Some(acc.fold(m)(prev => Upsert.upsert(prev, m, "gid")))
-    }.getOrElse(spark.emptyDataFrame)
-
-    // FK contract (sql/ways_metadata.ddl:6): every gid references an edge.
-    metadata.join(edges.select("gid"), Seq("gid"), "left_semi")
+    // Every pass addresses these rows: materialize them once.
+    val coords = edgeCoords(RoutingGraph.edges(routable, tables.nodes)).cache()
+    RasterSampler.medians(coords, passes.filter(_.enabled)
+      .map(p => RasterPass(p.column, p.store, p.zoom, p.valueFn)))
   }
 
   /** Convenience: full pipeline on an OSM extract with synthetic tiles. */

@@ -116,10 +116,10 @@ class FileTileStore(
   }
 }
 
-/** Per-process LRU cache around any TileStore — the distributed analog of
-  * the reference's per-run dict cache (`dataproviders.py:79-83`). With
-  * tile-grouped execution (RasterSampler) most partitions touch few tiles,
-  * so a small capacity suffices.
+/** Per-process LRU cache around any TileStore — the analog of the
+  * reference's per-run dict cache (`dataproviders.py:79-83`), for callers
+  * that fetch in arbitrary order. `RasterSampler` does not need it: it sorts
+  * its rows by tile and holds only the current one.
   */
 class CachingTileStore(underlying: TileStore, capacity: Int = 64) extends TileStore {
   override def tileSize: Int = underlying.tileSize

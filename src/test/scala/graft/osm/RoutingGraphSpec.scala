@@ -1,8 +1,12 @@
 package graft.osm
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+
+private object ExecutedPlan extends AdaptiveSparkPlanHelper
 
 /** S7/J3 — osm2pgrouting-documented noding + POI snap (README.md:44-54). */
 class RoutingGraphSpec extends SparkSpec {
@@ -45,6 +49,15 @@ class RoutingGraphSpec extends SparkSpec {
     seg13.getAs[Seq[Any]]("geom").size shouldBe 3 // nodes 1,2,3
     // gids unique
     e.select("gid").distinct().count() shouldBe e.count()
+  }
+
+  test("edges runs the noding window once: one branch, no union of two") {
+    val e = RoutingGraph.edges(RoutingGraph.routableWays(ways), nodes)
+    e.collect()
+    val windows = ExecutedPlan.collect(e.queryExecution.executedPlan) {
+      case w: WindowExec => w
+    }
+    windows.size shouldBe 1
   }
 
   test("POI snap: nearest edge within bound; distant POI stays null (J3/F5)") {

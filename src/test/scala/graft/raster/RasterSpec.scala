@@ -1,8 +1,23 @@
 package graft.raster
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 import graft.SparkSpec
+
+/** Cheap L tiles, pixel i of tile (x, y) = (7x + 3y + i mod 256 + salt)
+  * mod 256; every fetch adds 1 to `fetches`, and the tiles in `dead` fail
+  * (F6).
+  */
+final class CountingStore(fetches: LongAccumulator, salt: Int,
+    dead: Set[(Long, Long)] = Set.empty) extends TileStore {
+  val tileSize = 256
+  def fetch(x: Long, y: Long, z: Int): Option[Tile] = {
+    fetches.add(1L)
+    if (dead((x, y))) None
+    else Some(Tile(256, 256, "L",
+      Array.tabulate(256 * 256)(i => ((7 * x + 3 * y + i % 256 + salt) % 256).toInt)))
+  }
+}
 
 /** T4-T7 + F6 — value functions, tile cache semantics, and the tile-grouped
   * median pass (dataproviders.py:59-105, update_ways_metadata.py:12-35).
@@ -107,6 +122,89 @@ class RasterSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     exact.keySet shouldBe approx.keySet
     exact.foreach { case (g, v) => approx(g) shouldBe v +- 0.11 }
+  }
+
+  /** (lng, lat) at fraction (fx, fy) of z15 slippy tile (tx, ty). */
+  private def inTile15(tx: Long, ty: Long, fx: Double, fy: Double): (Double, Double) = {
+    val n = 1 << 15
+    val lng = (tx + fx) / n * 360.0 - 180.0
+    val lat = math.toDegrees(math.atan(math.sinh(math.Pi * (1 - 2 * (ty + fy) / n))))
+    (lng, lat)
+  }
+
+  private def collectByGid(df: org.apache.spark.sql.DataFrame, cols: String*) =
+    df.collect().map { r =>
+      r.getAs[Long]("gid") -> cols.map(c => Option(r.getAs[java.lang.Double](c)).map(_.doubleValue))
+    }.toMap
+
+  test("medians: one fetch per tile per pass, over far more tiles than a 64-entry LRU") {
+    // 20×20 = 400 z15 tiles, three points in each, visited round-robin so a
+    // tile's points arrive far apart; gid k covers tiles 2k and 2k+1.
+    val tiles = for (i <- 0L until 20L; j <- 0L until 20L) yield (5620L + i, 13060L + j)
+    val coords = (for (f <- Seq(0.2, 0.5, 0.8); ((tx, ty), k) <- tiles.zipWithIndex) yield {
+      val (lng, lat) = inTile15(tx, ty, f, f)
+      ((k / 2).toLong, lng, lat)
+    }).toDF("gid", "lng", "lat")
+    val distinct = RasterSampler.address(coords, 15).select("tx", "ty").distinct().count()
+    distinct shouldBe 400L
+    val (fa, fb) = (spark.sparkContext.longAccumulator, spark.sparkContext.longAccumulator)
+    val passes = Seq(
+      RasterPass("a", new CountingStore(fa, 0), 15, ValueFns.strava),
+      RasterPass("b", new CountingStore(fb, 101), 15, ValueFns.strava))
+    val both = collectByGid(RasterSampler.medians(coords, passes), "a", "b")
+    fa.value shouldBe distinct
+    fb.value shouldBe distinct
+    both.size shouldBe 200
+    // Same values as one pass at a time (each its own medianPass).
+    val (ga, gb) = (spark.sparkContext.longAccumulator, spark.sparkContext.longAccumulator)
+    val a = collectByGid(RasterSampler.medianPass(coords, new CountingStore(ga, 0), 15,
+      ValueFns.strava, "a"), "a")
+    val b = collectByGid(RasterSampler.medianPass(coords, new CountingStore(gb, 101), 15,
+      ValueFns.strava, "b"), "b")
+    ga.value shouldBe distinct
+    gb.value shouldBe distinct
+    both shouldBe a.map { case (g, v) => g -> (v ++ b(g)) }
+  }
+
+  test("medians: a pass without samples reads null; a gid without any is absent (F6)") {
+    val (t1, t2, t3) = ((5620L, 13060L), (5621L, 13060L), (5622L, 13061L))
+    val pts = Seq(1L -> t1, 1L -> t1, 2L -> t2, 3L -> t3, 3L -> t3).zipWithIndex.map {
+      case ((g, (tx, ty)), i) =>
+        val (lng, lat) = inTile15(tx, ty, 0.1 + 0.15 * i, 0.3)
+        (g, lng, lat)
+    }
+    val acc = spark.sparkContext.longAccumulator
+    val out = collectByGid(RasterSampler.medians(pts.toDF("gid", "lng", "lat"), Seq(
+      RasterPass("a", new CountingStore(acc, 0, dead = Set(t2)), 15, ValueFns.strava),
+      RasterPass("b", new CountingStore(acc, 9, dead = Set(t1, t2)), 15, ValueFns.strava))),
+      "a", "b")
+    out.keySet shouldBe Set(1L, 3L) // every tile of gid 2 failed in both passes
+    out(1L)(0) shouldBe defined
+    out(1L)(1) shouldBe None // pass b failed gid 1's only tile
+    out(3L).flatten.size shouldBe 2
+    out.values.flatMap(_(1)).max shouldBe 1.0 // b normalizes over gid 3 only
+    acc.value shouldBe 6L // three tiles, two passes
+  }
+
+  test("medians: at least one pass is required") {
+    val coords = Seq((1L, 0.0, 0.0)).toDF("gid", "lng", "lat")
+    val e = intercept[IllegalArgumentException](RasterSampler.medians(coords, Nil))
+    e.getMessage should include("at least one pass")
+  }
+
+  test("medians: pass columns must be distinct") {
+    val coords = Seq((1L, 0.0, 0.0)).toDF("gid", "lng", "lat")
+    val store = new SyntheticTileStore(256, "L")
+    val e = intercept[IllegalArgumentException](RasterSampler.medians(coords, Seq(
+      RasterPass("v", store, 12, ValueFns.strava), RasterPass("v", store, 15, ValueFns.strava))))
+    e.getMessage should include("distinct")
+  }
+
+  test("medians: no pass column may be named gid") {
+    val coords = Seq((1L, 0.0, 0.0)).toDF("gid", "lng", "lat")
+    val e = intercept[IllegalArgumentException](RasterSampler.medianPass(
+      coords, new SyntheticTileStore(256, "L"), 12, ValueFns.strava, "gid"))
+    e.getMessage should include("`gid` is the key")
   }
 
   // --- FileTileStore: real ImageIO decode of PNG bytes (S3 parity) ---
