@@ -24,6 +24,21 @@ object Soak {
     r
   }
 
+  /** Rows in each partition of `df`, EMPTY partitions included (grouping
+    * by `spark_partition_id()` skips them: a few-hot / rest-empty exchange
+    * would read as balanced).
+    */
+  private[graft] def partitionRows(df: DataFrame): Seq[Long] =
+    df.rdd.mapPartitions(it => Iterator(it.size.toLong)).collect().toSeq
+
+  /** Max over median partition rows; a zero median is unbounded skew. */
+  private[graft] def partitionSkew(counts: Seq[Long]): Double = {
+    val sorted = counts.sorted
+    val (mx, med) = (sorted.last, sorted(sorted.length / 2))
+    if (mx == 0) 1.0 else if (med == 0) Double.PositiveInfinity
+    else mx.toDouble / med
+  }
+
   /** Deterministic word-soup documents: ~40-120 tokens from a 10k-word
     * vocabulary; every 100th doc duplicates its predecessor (dedup bait).
     * `seedOffset` shifts the text seeds so a caller can mint documents
@@ -265,9 +280,8 @@ object Soak {
     val gramIdx = Dedup.gramIndex(docs, "doc_id", "text", n = 2)
     time("gram index build (shared)")(gramIdx.sets.count())
     time("jaccard join candidates (fan-out bound)")({
-      val (_, cand) = Dedup.jaccardSetsAndCandidates(gramIdx,
-        tauNum = 1, tauDen = 2)
-      val nCand = cand.count()
+      val nCand = Dedup.candidates(Dedup.Jaccard, gramIdx, gramIdx,
+        tauNum = 1, tauDen = 2).count()
       assert(nCand <= nDocs,
         s"prefix-filter fan-out broke: $nCand candidate pairs exceed the " +
           s"linear bound $nDocs (true dups ~${nDocs / 100})")
@@ -286,20 +300,17 @@ object Soak {
     // ≤ 4 is a loose straggler bound (uniform hashing measures ~1.0-1.1).
     time("pinned exchange skew (gid probes / doc_a pairs)")({
       def maxMed(df: org.apache.spark.sql.DataFrame, label: String): Unit = {
-        val counts = df.groupBy(spark_partition_id().as("p")).count()
-          .select(col("count")).collect().map(_.getLong(0)).sorted
-        val mx = counts.last
-        val med = counts(counts.length / 2)
-        val ratio = mx.toDouble / math.max(med, 1L)
+        val counts = partitionRows(df)
+        val ratio = partitionSkew(counts)
         assert(ratio <= 4.0,
-          s"pinned $label exchange skewed: max partition $mx vs median " +
-            s"$med (ratio $ratio > 4) — salt the pin keys")
-        println(f"[soak] pinned $label partitions: max=$mx med=$med " +
-          f"ratio=$ratio%.2f (bound 4.0)")
+          s"pinned $label exchange skewed: max/median partition rows " +
+            s"$ratio > 4 over ${counts.length} partitions — salt the pin keys")
+        println(f"[soak] pinned $label partitions: n=${counts.length} " +
+          f"max=${counts.max} ratio=$ratio%.2f (bound 4.0)")
       }
-      maxMed(Dedup.jaccardProbes(gramIdx, 1, 2), "gid-probe")
-      val (_, cand) = Dedup.jaccardSetsAndCandidates(gramIdx, 1, 2)
-      maxMed(cand, "doc_a-pair")
+      maxMed(Dedup.probeRows(Dedup.Jaccard, gramIdx, 1, 2), "gid-probe")
+      maxMed(Dedup.candidates(Dedup.Jaccard, gramIdx, gramIdx, 1, 2),
+        "doc_a-pair")
     })
 
     // round-6: the incremental exact joins — probing the FROZEN 1M-doc

@@ -129,7 +129,7 @@ object Dedup {
   /** Dense long ids for a (g, gdf) vocabulary, ranked rarest-first so
     * ascending gid order = prefix order — DISTRIBUTED (range-partitioned
     * sort + zipWithIndex per-partition offsets, never a single-partition
-    * window; see [[jaccardSetsAndCandidates]] for why). The rank key
+    * window; see [[GramIndex.dict]] for why). The rank key
     * (gdf, g) is unique per gram, so ids are the exact global rank
     * regardless of where range boundaries land.
     */
@@ -675,44 +675,10 @@ object Dedup {
           6).as("jac"))
   }
 
-  /** EXACT all-pairs set-similarity join (AllPairs/PPJoin prefix filtering,
-    * Bayardo et al. WWW'07): every document pair whose distinct word
-    * n-gram sets have Jaccard ≥ tauNum/tauDen, with the exact overlap and
-    * score. The LSH pipeline above is the probabilistic fast path; this is
-    * its exact complement — no false negatives, no bands to tune.
-    *
-    * Candidate generation: order each document's grams rarest-first by
-    * global document frequency (a broadcast-size vocabulary join) and emit
-    * only the first `n - ⌈τ·n⌉ + 1` grams as probes. The prefix-filter
-    * lemma guarantees any qualifying pair collides on at least one probe
-    * gram under the common order; the length filter (`τ·max ≤ min`) prunes
-    * size-incompatible pairs inside the join condition. Rarest-first makes
-    * probe buckets the SMALLEST ones — the frequent grams that would
-    * produce quadratic bucket fan-out never become probes. Verification
-    * joins the per-doc sorted gram arrays (one row per doc, the
-    * set-per-doc shape of [[consecutiveNgramJaccard]]) and compares with
-    * INTEGER arithmetic (`tauDen·i ≥ tauNum·(na+nb−i)`), so there is no
-    * float threshold to drift across engines.
-    *
-    * Physical plan (measured 102 s → ~8 s at sf0.1): grams are
-    * dictionary-encoded to dense longs ranked by (df, gram), so (a) probe
-    * join keys and verification arrays are primitive longs, never strings,
-    * (b) each doc's ascending gid array IS its rarest-first prefix order,
-    * and (c) verification is [[graft.functions.SortedIntersectCount]] — a
-    * codegen'd two-pointer merge instead of a per-pair boxed-string hash
-    * set, which was ~90% of the old runtime. The join condition also
-    * carries the PPJoin positional filter: a pair matching prefix ranks
-    * (pa, pb) can share at most `1 + min(na−pa−1, nb−pb−1)` grams, and the
-    * smallest common gram under the shared order appears at a match where
-    * that bound is exact, so requiring it to reach the equivalent-overlap
-    * threshold `tauNum·(na+nb)/(tauNum+tauDen)` (checked in integers)
-    * prunes candidates without false negatives. The vocabulary dictionary
-    * is a DISTRIBUTED rank over distinct grams (range-partitioned sort +
-    * per-partition offsets, never a single-partition window), and the
-    * dictionary join carries NO broadcast hint: distinct n-grams grow
-    * with the corpus (the 1M-doc soak dictionary already breaks a forced
-    * broadcast build), so AQE broadcasts when the vocabulary is small and
-    * shuffle-joins when it is not.
+  /** EXACT all-pairs Jaccard join over distinct word-n-gram sets: every
+    * pair with Jaccard ≥ tauNum/tauDen — the exact complement of the LSH
+    * pipeline above (no false negatives, no bands to tune). [[prefixJoin]]
+    * with [[Jaccard]]. Output: (doc_a < doc_b, n_common, jac).
     */
   def jaccardSimilarityJoin(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 2, tauNum: Int = 1, tauDen: Int = 2): DataFrame =
@@ -722,56 +688,88 @@ object Dedup {
     * running several joins over one corpus builds the gram pipeline once.
     */
   def jaccardSimilarityJoin(index: GramIndex, tauNum: Int,
-      tauDen: Int): DataFrame = {
-    val sets = index.sets
-    // Distinct-BEFORE-verify, deliberately: the tempting alternative —
-    // skip the pair-level distinct, verify every raw prefix match, dedup
-    // survivors — was measured strictly worse here (q86 5.9 s → 12.2 s,
-    // q103 7.0 s → 16.4 s at sf0.1): the verification joins are
-    // sort-merge (the per-doc array relation is tens of MB — past the
-    // broadcast threshold), so every raw match would be SORTED TWICE
-    // (once per verify join); the distinct's one hash exchange prunes
-    // duplication factor × (2 sorts + 2 kernel evals) and wins whenever
-    // duplication > ~1.1×. At τ=1/2 a near-dup pair shares ~half its
-    // grams as probes, so duplication is large, not the 1.4× of high-τ.
-    val verified = jaccardSetsAndCandidates(index, tauNum, tauDen)._2
-      .join(sets.select(col("__id").as("doc_a"), col("gs").as("ga"),
-        col("nn").as("na")), "doc_a")
-      .join(sets.select(col("__id").as("doc_b"), col("gs").as("gb"),
-        col("nn").as("nb")), "doc_b")
-      .withColumn("n_common",
-        graft.functions.VectorExpressions.sortedIntersectCount(
-          col("ga"), col("gb")))
-      .filter(col("n_common") * tauDen >=
-        (col("na") + col("nb") - col("n_common")) * tauNum)
-    verified.select(col("doc_a"), col("doc_b"), col("n_common"),
-      round(col("n_common").cast("double") /
-        (col("na") + col("nb") - col("n_common")).cast("double"), 6).as("jac"))
-  }
+      tauDen: Int): DataFrame =
+    prefixJoin(Jaccard, index, index, tauNum, tauDen)
 
-  /** Shared gram-pipeline relations over ONE corpus, reused by the three
-    * exact joins ([[jaccardSimilarityJoin]], [[cosineSimilarityJoin]],
-    * [[containmentJoin]]): tokenize → n-gram → tf → rarest-first
-    * dictionary → per-doc encodings, with the EXPENSIVE relations
-    * materialized once (`localCheckpoint` at dict/enc/sets; weighted and
-    * packed stay lazy — see their doc), so a session running
-    * several joins — the normal shape of a dedup pass that wants both the
-    * symmetric and containment views — pays the dictionary pipeline once
-    * instead of once per join. All members are lazy: a jaccard-only caller
-    * never runs the cosine norm windows.
+  /** EXACT all-pairs COSINE join over tf-weighted word-n-gram vectors:
+    * every pair with cos ≥ tauNum/tauDen. Jaccard sees sets, cosine sees
+    * how OFTEN grams repeat, so it separates "same vocabulary" from "same
+    * emphasis". [[prefixJoin]] with [[Cosine]].
+    * Output: (doc_a < doc_b, dot, cos).
+    */
+  def cosineSimilarityJoin(docs: DataFrame, idCol: String, textCol: String,
+      n: Int = 2, tauNum: Int = 1, tauDen: Int = 2): DataFrame =
+    cosineSimilarityJoin(gramIndex(docs, idCol, textCol, n), tauNum, tauDen)
+
+  /** [[cosineSimilarityJoin]] over a prebuilt [[GramIndex]]. */
+  def cosineSimilarityJoin(index: GramIndex, tauNum: Int,
+      tauDen: Int): DataFrame =
+    prefixJoin(Cosine, index, index, tauNum, tauDen)
+
+  /** EXACT all-pairs CONTAINMENT join: every ordered pair a ≠ b with
+    * |A∩B| / |A| ≥ tauNum/tauDen — quotes, excerpts and supersets that
+    * Jaccard misses when |B| ≫ |A|. [[prefixJoin]] with [[Containment]].
+    * Output: (doc_a, doc_b, n_common, containment).
+    */
+  def containmentJoin(docs: DataFrame, idCol: String, textCol: String,
+      n: Int = 2, tauNum: Int = 4, tauDen: Int = 5): DataFrame =
+    containmentJoin(gramIndex(docs, idCol, textCol, n), tauNum, tauDen)
+
+  /** [[containmentJoin]] over a prebuilt [[GramIndex]]. */
+  def containmentJoin(index: GramIndex, tauNum: Int,
+      tauDen: Int): DataFrame =
+    prefixJoin(Containment, index, index, tauNum, tauDen)
+
+  /** EXACT incremental Jaccard join: every (doc_a = batch doc, doc_b =
+    * corpus doc) pair with Jaccard ≥ tauNum/tauDen, probing a FROZEN
+    * corpus [[GramIndex]] — the exact complement of the [[incrementalDupIds]]
+    * LSH probe, O(batch · matches) where re-running the all-pairs join per
+    * ingest is O(corpus²). The batch is a [[batchSide]].
+    * Output: (doc_a, doc_b, n_common, jac).
+    */
+  def incrementalJaccardJoin(index: GramIndex, batch: DataFrame,
+      idCol: String, textCol: String, tauNum: Int, tauDen: Int): DataFrame =
+    prefixJoin(Jaccard, batchSide(index, batch, idCol, textCol), index,
+      tauNum, tauDen)
+
+  /** The ingest-time [[containmentJoin]]: batch docs contained in frozen
+    * corpus docs, as [[incrementalJaccardJoin]] probes.
+    * Output: (doc_a = batch id, doc_b = corpus id, n_common, containment).
+    */
+  def incrementalContainmentJoin(index: GramIndex, batch: DataFrame,
+      idCol: String, textCol: String, tauNum: Int = 4,
+      tauDen: Int = 5): DataFrame =
+    prefixJoin(Containment, batchSide(index, batch, idCol, textCol), index,
+      tauNum, tauDen)
+
+  /** The ingest-time [[cosineSimilarityJoin]], as [[incrementalJaccardJoin]]
+    * probes. Output: (doc_a = batch id, doc_b = corpus id, dot, cos).
+    */
+  def incrementalCosineJoin(index: GramIndex, batch: DataFrame,
+      idCol: String, textCol: String, tauNum: Int = 4,
+      tauDen: Int = 5): DataFrame =
+    prefixJoin(Cosine, batchSide(index, batch, idCol, textCol), index,
+      tauNum, tauDen)
+
+  /** Shared gram-pipeline relations over ONE corpus, the [[JoinSide]] of
+    * every exact join: tokenize → n-gram → tf → rarest-first dictionary →
+    * per-doc encodings, the EXPENSIVE relations materialized once
+    * (`localCheckpoint` at dict/enc/sets; weighted and packed stay lazy —
+    * see their doc), so a session running several joins pays the
+    * dictionary pipeline once. All members are lazy: a jaccard-only caller
+    * never runs the cosine norm windows. Dense gids make probe keys and
+    * verify arrays primitive longs, and each doc's ascending gid array IS
+    * its rarest-first prefix order — rarest-first makes probe buckets the
+    * SMALLEST ones. The dictionary join carries NO broadcast hint: distinct
+    * n-grams grow with the corpus (the 1M-doc soak dictionary already
+    * breaks a forced broadcast build), so AQE decides.
     *
-    * @param enc      (__id, gid, w): dictionary-encoded gram occurrences
-    *                 with tf weights (w capped at 65535), checkpointed —
-    *                 every downstream relation derives from it.
-    * @param sets     (__id, gs, nn): sorted distinct-gid array per doc
-    *                 (jaccard/containment probe + verify sides).
-    * @param weighted (__id, gid, w, sufsq, n2): per-occurrence suffix /
-    *                 total squared norms (cosine probes).
-    * @param packed   (__id, pk, n2): packed `gid·2^16 + w` arrays (cosine
-    *                 verify sides).
+    * @param enc (__id, gid, w): dictionary-encoded gram occurrences with tf
+    *            weights (w capped at 65535), checkpointed — every
+    *            downstream relation derives from it.
     */
   class GramIndex private[ext] (docs: DataFrame, idCol: String,
-      textCol: String, val n: Int) {
+      textCol: String, val n: Int) extends JoinSide {
     /** Deliberately NOT checkpointed (round-16 A/B): both `dict` and `enc`
       * consume it fully, but serializing the string-bearing tf relation
       * into the block manager measured strictly worse than recomputing the
@@ -780,9 +778,7 @@ object Dedup {
       * the checkpoint. The multi-use rule (q86) applies to relations whose
       * REBUILD is expensive; after the element_at rewrite this one isn't.
       */
-    private lazy val tf: DataFrame = ngramRows(docs, idCol, textCol, n)
-      .groupBy(col(idCol).as("__id"), col("g"))
-      .agg(count(lit(1)).as("w"))
+    private lazy val tf: DataFrame = tfOf(docs, idCol, textCol, n)
     /** (g, gid): the corpus vocabulary, dense gids ranked rarest-first so
       * ascending gid order = prefix order. A row_number() over an
       * unpartitioned Window would funnel every distinct n-gram through
@@ -793,14 +789,8 @@ object Dedup {
       */
     lazy val dict: DataFrame = rankDictionary(
       tf.groupBy("g").agg(count(lit(1)).as("gdf"))).localCheckpoint()
-    lazy val enc: DataFrame = tf.join(dict, "g")
-      .select(col("__id"), col("gid"), least(col("w"), lit(65535L)).as("w"))
-      .localCheckpoint()
-    lazy val sets: DataFrame = enc
-      .groupBy("__id")
-      .agg(array_sort(collect_list(col("gid"))).as("gs"))
-      .select(col("__id"), col("gs"), size(col("gs")).cast("long").as("nn"))
-      .localCheckpoint()
+    lazy val enc: DataFrame = encOf(tf, dict).localCheckpoint()
+    lazy val sets: DataFrame = setsOf(enc).localCheckpoint()
     /** Deliberately NOT checkpointed since round 17 (same rule as `tf`,
       * re-A/B'd after the round-16 rebuild-vs-serialize lesson): both
       * relations derive from the CHECKPOINTED `enc` in one window /
@@ -814,20 +804,8 @@ object Dedup {
       * (q86) applies to relations whose REBUILD is expensive — after the
       * enc checkpoint these aren't.
       */
-    lazy val weighted: DataFrame = {
-      // Suffix squared norm from each position (rarest-first order) and
-      // the full squared norm — one doc-keyed window sort serves both.
-      val wOrd = Window.partitionBy("__id").orderBy("gid")
-      enc
-        .withColumn("sufsq", sum(col("w") * col("w"))
-          .over(wOrd.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
-        .withColumn("n2", sum(col("w") * col("w"))
-          .over(Window.partitionBy("__id")))
-    }
-    lazy val packed: DataFrame = weighted
-      .groupBy("__id")
-      .agg(array_sort(collect_list(col("gid") * 65536L + col("w"))).as("pk"),
-        min(col("n2")).as("n2"))
+    lazy val weighted: DataFrame = weightedOf(enc)
+    lazy val packed: DataFrame = packedOf(weighted)
 
     /** A new [[GramIndex]] with `batch` documents APPENDED without
       * rebuilding the corpus pipeline — the index-maintenance analog of
@@ -840,20 +818,13 @@ object Dedup {
       * appended index stays EXACT: the prefix/positional filters need
       * only a TOTAL, consistent gram order (ascending gid), never the
       * rarest-first heuristic itself — appended-new grams sit at the
-      * order's tail, which merely weakens pruning for batch-heavy
-      * vocabulary until a periodic full rebuild re-ranks (at 100 TB:
-      * append per ingest batch, rebuild on a slow cadence). Batch-side
-      * relations checkpoint LAZILY, so a jaccard-only caller never runs
-      * the cosine norm windows. Caller contract: batch ids are disjoint
-      * from corpus ids (not checked — id semantics belong to the
-      * caller, same as the all-pairs joins).
+      * order's tail, which merely weakens pruning until a periodic full
+      * rebuild re-ranks. Batch-side relations checkpoint LAZILY. Caller
+      * contract: batch ids are disjoint from corpus ids (not checked).
       */
     def append(batch: DataFrame, idCol: String, textCol: String): GramIndex = {
       val self = this
-      val bTf = ngramRows(batch, idCol, textCol, n)
-        .groupBy(col(idCol).as("__id"), col("g"))
-        .agg(count(lit(1)).as("w"))
-        .localCheckpoint()
+      val bTf = tfOf(batch, idCol, textCol, n).localCheckpoint()
       val base = self.dict.agg(coalesce(max(col("gid")), lit(0L)).as("__base"))
       val newDict = rankDictionary(
         bTf.join(self.dict, Seq("g"), "left_anti")
@@ -861,33 +832,17 @@ object Dedup {
         .crossJoin(broadcast(base))
         .select(col("g"), (col("gid") + col("__base")).as("gid"))
       val fullDict = self.dict.unionByName(newDict).localCheckpoint()
-      val bEnc = bTf.join(fullDict, "g")
-        .select(col("__id"), col("gid"), least(col("w"), lit(65535L)).as("w"))
-        .localCheckpoint()
-      val bSets = bEnc
-        .groupBy("__id")
-        .agg(array_sort(collect_list(col("gid"))).as("gs"))
-        .select(col("__id"), col("gs"), size(col("gs")).cast("long").as("nn"))
-      val wOrd = Window.partitionBy("__id").orderBy("gid")
-      val bWeighted = bEnc
-        .withColumn("sufsq", sum(col("w") * col("w"))
-          .over(wOrd.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
-        .withColumn("n2", sum(col("w") * col("w"))
-          .over(Window.partitionBy("__id")))
-        .localCheckpoint(false)
-      val bPacked = bWeighted
-        .groupBy("__id")
-        .agg(array_sort(collect_list(col("gid") * 65536L + col("w"))).as("pk"),
-          min(col("n2")).as("n2"))
+      val bEnc = encOf(bTf, fullDict).localCheckpoint()
+      val bWeighted = weightedOf(bEnc).localCheckpoint(false)
       new GramIndex(batch, idCol, textCol, n) {
         override lazy val dict: DataFrame = fullDict
         override lazy val enc: DataFrame = self.enc.unionByName(bEnc)
         override lazy val sets: DataFrame =
-          self.sets.unionByName(bSets.localCheckpoint(false))
+          self.sets.unionByName(setsOf(bEnc).localCheckpoint(false))
         override lazy val weighted: DataFrame =
           self.weighted.unionByName(bWeighted)
         override lazy val packed: DataFrame =
-          self.packed.unionByName(bPacked.localCheckpoint(false))
+          self.packed.unionByName(packedOf(bWeighted).localCheckpoint(false))
       }
     }
   }
@@ -911,429 +866,308 @@ object Dedup {
       override lazy val packed: DataFrame = spark.read.parquet(s"$path/packed")
     }
 
-  /** The prefix/candidate stages of [[jaccardSimilarityJoin]], exposed so
-    * the soak harness can assert the prefix filter's fan-out bound
-    * directly (candidate pairs must scale with true duplicates, not
-    * quadratically). Returns (per-doc gram sets, distinct candidate pairs).
+  /** One side of a [[prefixJoin]]: per-document relations keyed `__id`,
+    * all under ONE ascending-gid gram order — a [[GramIndex]] or a
+    * [[batchSide]] encoded against one.
     */
-  private[graft] def jaccardSetsAndCandidates(docs: DataFrame, idCol: String,
-      textCol: String, n: Int, tauNum: Int, tauDen: Int)
-      : (DataFrame, DataFrame) =
-    jaccardSetsAndCandidates(gramIndex(docs, idCol, textCol, n), tauNum, tauDen)
-
-  /** The pinned probe side of the jaccard candidate join — exposed so the
-    * soak harness can assert the PINNED exchange's partition balance
-    * directly (the pin opts this exchange out of AQE's skew splitting;
-    * see [[atFullWidth]]).
-    */
-  private[graft] def jaccardProbes(index: GramIndex, tauNum: Int,
-      tauDen: Int): DataFrame = {
-    val sets = index.sets
-    val prefixLen = (col("nn") -
-      floor((col("nn") * tauNum + (tauDen - 1)) / lit(tauDen.toDouble)) + 1)
-      .cast("int")
-    // Probe sides pinned to full width (atFullWidth): the gid exchange the
-    // join would insert anyway, but at a user-specified partition count AQE
-    // cannot coalesce — the merge-join's O(Σ bucket²) pair fan-out is
-    // CPU-bound, and AQE's byte heuristic (probe rows are a few compressed
-    // MB) was squeezing it onto a handful of tasks (the distinctPairs
-    // measurement). Same shuffle bytes, full parallelism.
-    atFullWidth("gid")(
-      sets.select(col("__id"), col("nn"),
-        posexplode(slice(col("gs"), lit(1), prefixLen)).as(Seq("pos", "gid"))))
+  sealed trait JoinSide {
+    /** (__id, gs, nn): sorted distinct-gid array per doc (set measures). */
+    def sets: DataFrame
+    /** (__id, gid, w, sufsq, n2): per-occurrence suffix and total squared
+      * norms (cosine probes).
+      */
+    def weighted: DataFrame
+    /** (__id, pk, n2): packed `gid·2^16 + w` arrays (cosine verify). */
+    def packed: DataFrame
   }
 
-  private[graft] def jaccardSetsAndCandidates(index: GramIndex,
-      tauNum: Int, tauDen: Int): (DataFrame, DataFrame) = {
-    require(tauNum >= 1 && tauNum <= tauDen,
-      s"jaccardSimilarityJoin: need 0 < tauNum/tauDen <= 1, got $tauNum/$tauDen")
-    val sets = index.sets
-    val probes = jaccardProbes(index, tauNum, tauDen)
-    val cand = probes.alias("a").join(probes.alias("b"),
-      col("a.gid") === col("b.gid") &&
-        col("a.__id") < col("b.__id") &&
-        col("a.nn") * tauNum <= col("b.nn") * tauDen &&
-        col("b.nn") * tauNum <= col("a.nn") * tauDen &&
-        // positional filter: best-case overlap from this match position on
-        (lit(1) + least(col("a.nn") - col("a.pos") - 1,
-          col("b.nn") - col("b.pos") - 1)) * (tauNum + tauDen) >=
-          (col("a.nn") + col("b.nn")) * tauNum)
-      .select(col("a.__id").as("doc_a"), col("b.__id").as("doc_b"))
-      .transform(distinctPairs("doc_a"))
-    (sets, cand)
+  /** What the exact similarity measures do NOT share in [[prefixJoin]]:
+    * probe rows, index rows, the self-join pair rule, the candidate
+    * filter, and the verify kernel with its integer threshold and score.
+    * Candidate filters read the probe side as `a.` and the index side as
+    * `b.`; verify columns are `doc_a`/`doc_b` plus each side's
+    * [[verifyRows]] aliased with the side letter.
+    */
+  private[graft] sealed trait Measure {
+    /** The probe side's rows: only these grams may start a candidate. */
+    def probes(s: JoinSide, tauNum: Int, tauDen: Int): DataFrame
+    /** The index side's rows; the probe prefix unless overridden. */
+    def index(s: JoinSide, tauNum: Int, tauDen: Int): DataFrame =
+      probes(s, tauNum, tauDen)
+    /** The self-join pair rule: each unordered pair once. */
+    def selfPair(a: Column, b: Column): Column = a < b
+    def filter(tauNum: Int, tauDen: Int): Seq[Column]
+    def verifyRows(s: JoinSide, x: String): DataFrame
+    /** (column name, exact kernel) evaluated on each distinct candidate. */
+    def kernel: (String, Column)
+    def accept(tauNum: Int, tauDen: Int): Column
+    def score: Column
   }
 
-  /** EXACT all-pairs COSINE similarity join over tf-weighted word-n-gram
-    * vectors (the AllPairs/APSS shape of Bayardo et al. WWW'07, weighted
-    * variant): every pair with cos(a, b) ≥ tauNum/tauDen, plus the exact
-    * integer dot product and the score. The tf-weighted sibling of
-    * [[jaccardSimilarityJoin]] — Jaccard sees sets, cosine sees how OFTEN
-    * grams repeat, so it separates "same vocabulary" from "same emphasis".
+  /** The set measures. Probes are the rarest-first prefix of
+    * `|A| − ⌈τ·|A|⌉ + 1` grams: a qualifying pair shares ≥ ⌈τ·|A|⌉ grams
+    * and the suffix holds one fewer, so a match lands in the prefix under
+    * the shared order. Verify is [[graft.functions.SortedIntersectCount]],
+    * a codegen'd two-pointer merge over primitive gid arrays (a per-pair
+    * boxed-string hash set was ~90% of the runtime before: 102 s → ~8 s at
+    * sf0.1), with an INTEGER threshold `n_common·tauDen ≥ tauNum·denom` —
+    * no float boundary to drift across engines.
     *
-    * Exactness across engines: weights are integer tf counts, so the dot
-    * product and squared norms are exact longs; the threshold compares as
-    * `tauDen²·dot² ≥ tauNum²·‖a‖²·‖b‖²` in exact DECIMAL(38,0) arithmetic —
-    * no float boundary to drift (the q86 discipline), and no long overflow
-    * either: with squared norms below ~2^31 (any real document; tf caps at
-    * 65535) the four-factor products reach ~2^66·τ², past a signed long but
-    * comfortably inside decimal's 38 digits (~2^126). The reported score
-    * divides once by `sqrt` of an exact integer product (correctly rounded,
-    * bit-identical on both engines); the DuckDB twin compares in HUGEINT.
-    *
-    * Physical plan (the q86 lessons applied): grams dictionary-encode to
-    * dense longs via the distributed [[rankDictionary]]; each vector is
-    * ONE packed primitive array (`gid·2^16 + min(tf, 65535)` — key in the
-    * high bits, so sorting packed values is sorting keys; no struct rows,
-    * no interpreted transforms); verification is the codegen'd
-    * [[graft.functions.PackedWeightedDot]] two-pointer merge. Candidates
-    * come from the weighted prefix filter: with grams rarest-first, a
-    * position stays in the probe prefix while the suffix-from-here squared
-    * norm satisfies `sufsq·tauDen² ≥ tauNum²·‖a‖²` — if two vectors share
-    * NO prefix feature of either side, dot ≤ ‖suf_a‖·‖b‖ < τ·‖a‖·‖b‖, so
-    * no qualifying pair is lost. The set relation feeds the plan three
-    * times → one checkpoint.
+    * Positional filter (PPJoin): a pair matching at prefix ranks (pa, pb)
+    * shares at most `1 + min(na−pa−1, nb−pb−1)` grams from there on, exact
+    * at the smallest common gram — requiring it to reach the overlap
+    * threshold prunes frequent-gram matches without false negatives.
     */
-  def cosineSimilarityJoin(docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 2, tauNum: Int = 1, tauDen: Int = 2): DataFrame =
-    cosineSimilarityJoin(gramIndex(docs, idCol, textCol, n), tauNum, tauDen)
+  private[graft] sealed abstract class SetMeasure(scoreName: String)
+      extends Measure {
+    /** The score's denominator: |A∪B| for Jaccard, |A| for containment. */
+    protected def denom: Column
+    protected def bestOverlap: Column = lit(1) +
+      least(col("a.nn") - col("a.pos") - 1, col("b.nn") - col("b.pos") - 1)
+    def probes(s: JoinSide, tauNum: Int, tauDen: Int): DataFrame =
+      s.sets.select(col("__id"), col("nn"),
+        posexplode(slice(col("gs"), lit(1), prefixLen(tauNum, tauDen)))
+          .as(Seq("pos", "gid")))
+    def verifyRows(s: JoinSide, x: String): DataFrame =
+      s.sets.select(col("__id").as(s"doc_$x"), col("gs").as(s"g$x"),
+        col("nn").as(s"n$x"))
+    def kernel: (String, Column) = "n_common" ->
+      graft.functions.VectorExpressions.sortedIntersectCount(
+        col("ga"), col("gb"))
+    def accept(tauNum: Int, tauDen: Int): Column =
+      col("n_common") * tauDen >= denom * tauNum
+    def score: Column =
+      round(col("n_common").cast("double") / denom.cast("double"), 6)
+        .as(scoreName)
+  }
 
-  /** [[cosineSimilarityJoin]] over a prebuilt [[GramIndex]]. */
-  def cosineSimilarityJoin(index: GramIndex, tauNum: Int,
-      tauDen: Int): DataFrame = {
-    require(tauNum >= 1 && tauNum <= tauDen,
-      s"cosineSimilarityJoin: need 0 < tauNum/tauDen <= 1, got $tauNum/$tauDen")
-    val sets = index.packed
-    // atFullWidth: see jaccardSetsAndCandidates — pins the candidate
-    // join's gid exchange at full parallelism.
-    val probes = atFullWidth("gid")(index.weighted
-      .filter(col("sufsq") * (tauDen.toLong * tauDen) >=
-        col("n2") * (tauNum.toLong * tauNum))
-      .select(col("__id"), col("gid"), col("sufsq"), col("n2")))
-    // Positional filter (Cauchy-Schwarz at the match): every common
-    // feature of a qualifying pair sits at-or-after the SMALLEST common
-    // gram in both rarest-first lists, so dot² ≤ sufsq_a·sufsq_b there;
-    // requiring sufsq_a·sufsq_b·tauDen² ≥ tauNum²·n2a·n2b prunes matches
-    // on frequent grams (deep positions, small suffixes) without false
-    // negatives — the first common gram of a true pair always passes.
-    // This is what keeps frequent-gram probe buckets from fanning out
-    // quadratically. Evaluated in DOUBLE with a 1e-9 relaxation (the
-    // four-long product can overflow; a prune may only be conservative —
-    // the exact integer comparison stays in the verification step).
-    // Distinct-before-verify (see the note in jaccardSimilarityJoin:
-    // verifying raw matches instead was measured 2.3× slower — the
-    // sort-merge verify joins would sort every duplicate twice).
-    val cand = probes.alias("a").join(probes.alias("b"),
-      col("a.gid") === col("b.gid") && col("a.__id") < col("b.__id") &&
-        col("a.sufsq").cast("double") * col("b.sufsq") *
-          lit((tauDen.toDouble * tauDen)) >=
-          col("a.n2").cast("double") * col("b.n2") *
-            lit(tauNum.toDouble * tauNum * (1.0 - 1e-9)))
-      .select(col("a.__id").as("doc_a"), col("b.__id").as("doc_b"))
-      .transform(distinctPairs("doc_a"))
-    cand
-      .join(sets.select(col("__id").as("doc_a"), col("pk").as("pa"),
-        col("n2").as("na2")), "doc_a")
-      .join(sets.select(col("__id").as("doc_b"), col("pk").as("pb"),
-        col("n2").as("nb2")), "doc_b")
-      .withColumn("dot",
-        graft.functions.VectorExpressions.packedWeightedDot(
-          col("pa"), col("pb")))
-      // DECIMAL(38,0) operands: dot²·tauDen² can reach ~2^66 — a silent
-      // long wraparound (or an ANSI throw) at exactly the pairs nearest
-      // the threshold. Decimal math runs only on surviving candidates,
-      // never in the candidate-volume hot path.
-      .filter(col("dot").cast("decimal(38,0)") * col("dot") *
-          lit(tauDen.toLong * tauDen) >=
+  /** Jaccard (AllPairs/PPJoin, Bayardo et al. WWW'07): both sides probe
+    * their prefix; the length filter `τ·max ≤ min` prunes
+    * size-incompatible pairs, and the positional bound must reach the
+    * equivalent-overlap threshold `tauNum·(na+nb)/(tauNum+tauDen)`.
+    */
+  private[graft] case object Jaccard extends SetMeasure("jac") {
+    protected def denom: Column = col("na") + col("nb") - col("n_common")
+    def filter(tauNum: Int, tauDen: Int): Seq[Column] = Seq(
+      col("a.nn") * tauNum <= col("b.nn") * tauDen,
+      col("b.nn") * tauNum <= col("a.nn") * tauDen,
+      bestOverlap * (tauNum + tauDen) >= (col("a.nn") + col("b.nn")) * tauNum)
+  }
+
+  /** Containment |A∩B| / |A|: only the contained side probes its prefix;
+    * the container side indexes its FULL gram list (containment does not
+    * bound B's extra mass, so B gets no prefix) and a self-join keeps
+    * both orders of a pair (`a ≠ b`). The size filter
+    * `|B|·tauDen ≥ tauNum·|A|` prunes containers too small to hold the
+    * overlap; the positional bound must reach ⌈τ·na⌉.
+    */
+  private[graft] case object Containment extends SetMeasure("containment") {
+    protected def denom: Column = col("na")
+    override def index(s: JoinSide, tauNum: Int, tauDen: Int): DataFrame =
+      s.sets.select(col("__id"), col("nn"),
+        posexplode(col("gs")).as(Seq("pos", "gid")))
+    override def selfPair(a: Column, b: Column): Column = a =!= b
+    def filter(tauNum: Int, tauDen: Int): Seq[Column] = Seq(
+      col("b.nn") * tauDen >= col("a.nn") * tauNum,
+      bestOverlap * tauDen >= col("a.nn") * tauNum)
+  }
+
+  /** Cosine over tf weights (weighted AllPairs/APSS, Bayardo et al.
+    * WWW'07). Probes: with grams rarest-first, a position stays in the
+    * prefix while `sufsq·tauDen² ≥ tauNum²·‖a‖²` — sharing NO prefix
+    * feature means dot ≤ ‖suf_a‖·‖b‖ < τ·‖a‖·‖b‖.
+    *
+    * Positional filter (Cauchy-Schwarz): every common feature sits
+    * at-or-after the SMALLEST common gram in both lists, so dot² ≤
+    * sufsq_a·sufsq_b there; requiring sufsq_a·sufsq_b·tauDen² ≥
+    * tauNum²·n2a·n2b keeps frequent-gram buckets from fanning out
+    * quadratically. In DOUBLE with a 1e-9 relaxation: the four-long product
+    * can overflow, and a prune may only be conservative.
+    *
+    * Verify: ONE packed primitive array per vector (`gid·2^16 +
+    * min(tf, 65535)`, so sorting packed values sorts keys) merged by the
+    * codegen'd [[graft.functions.PackedWeightedDot]]. Dot and squared
+    * norms are exact longs; `tauDen²·dot² ≥ tauNum²·‖a‖²·‖b‖²` reaches
+    * ~2^66·τ², past a signed long (a silent wraparound, or an ANSI throw,
+    * at exactly the pairs nearest the threshold), so it compares in
+    * DECIMAL(38,0) — on distinct candidates only. The score divides once
+    * by `sqrt` of an exact integer product (bit-identical on both engines;
+    * the DuckDB twin compares in HUGEINT).
+    */
+  private[graft] case object Cosine extends Measure {
+    def probes(s: JoinSide, tauNum: Int, tauDen: Int): DataFrame =
+      s.weighted
+        .filter(col("sufsq") * (tauDen.toLong * tauDen) >=
+          col("n2") * (tauNum.toLong * tauNum))
+        .select(col("__id"), col("gid"), col("sufsq"), col("n2"))
+    def filter(tauNum: Int, tauDen: Int): Seq[Column] = Seq(
+      col("a.sufsq").cast("double") * col("b.sufsq") *
+        lit(tauDen.toDouble * tauDen) >=
+        col("a.n2").cast("double") * col("b.n2") *
+          lit(tauNum.toDouble * tauNum * (1.0 - 1e-9)))
+    def verifyRows(s: JoinSide, x: String): DataFrame =
+      s.packed.select(col("__id").as(s"doc_$x"), col("pk").as(s"p$x"),
+        col("n2").as(s"n${x}2"))
+    def kernel: (String, Column) = "dot" ->
+      graft.functions.VectorExpressions.packedWeightedDot(
+        col("pa"), col("pb"))
+    def accept(tauNum: Int, tauDen: Int): Column =
+      col("dot").cast("decimal(38,0)") * col("dot") *
+        lit(tauDen.toLong * tauDen) >=
         col("na2").cast("decimal(38,0)") * col("nb2") *
-          lit(tauNum.toLong * tauNum))
-      .select(col("doc_a"), col("doc_b"), col("dot"),
-        round(col("dot").cast("double") /
-          sqrt((col("na2") * col("nb2")).cast("double")), 6).as("cos"))
+          lit(tauNum.toLong * tauNum)
+    def score: Column =
+      round(col("dot").cast("double") /
+        sqrt((col("na2") * col("nb2")).cast("double")), 6).as("cos")
   }
 
-  /** EXACT all-pairs CONTAINMENT join over distinct word-n-gram sets:
-    * every ordered pair (a, b), a ≠ b, with |A∩B| / |A| ≥ tauNum/tauDen —
-    * "document a is mostly inside document b". The asymmetric sibling of
-    * [[jaccardSimilarityJoin]]: quotes, excerpts, and supersets that
-    * Jaccard misses when |B| ≫ |A| (the union in the denominator drowns
-    * the overlap). Thresholds compare in integer arithmetic
-    * (`n_common·tauDen ≥ tauNum·|A|`) — no float boundary.
-    *
-    * Candidates: the probe (contained) side emits its rarest-first prefix
-    * of `|A| − ⌈τ·|A|⌉ + 1` grams — a qualifying pair needs ⌈τ·|A|⌉
-    * common grams and the suffix holds only ⌈τ·|A|⌉ − 1, so at least one
-    * match lands in the prefix; the container side indexes its FULL gram
-    * list (asymmetry: B gets no prefix because containment does not bound
-    * B's extra mass). A size filter `|B|·tauDen ≥ tauNum·|A|` prunes
-    * containers too small to hold the overlap. Verification is the
-    * codegen'd sorted merge-intersect, one row per candidate pair.
-    */
-  def containmentJoin(docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 2, tauNum: Int = 4, tauDen: Int = 5): DataFrame =
-    containmentJoin(gramIndex(docs, idCol, textCol, n), tauNum, tauDen)
+  /** Probe-prefix length `nn − ⌈τ·nn⌉ + 1` of a sets relation. */
+  private def prefixLen(tauNum: Int, tauDen: Int): Column = (col("nn") -
+    floor((col("nn") * tauNum + (tauDen - 1)) / lit(tauDen.toDouble)) + 1)
+    .cast("int")
 
-  /** [[containmentJoin]] over a prebuilt [[GramIndex]]. */
-  def containmentJoin(index: GramIndex, tauNum: Int,
+  /** The EXACT prefix-filter similarity join behind all six public joins:
+    * `a` probes, `b` is indexed; `a eq b` is the all-pairs self-join
+    * (adds the measure's pair rule), otherwise `a` is a batch probing a
+    * frozen corpus. Probe → gid equi-join with the measure's filters →
+    * distinct pairs → the measure's verify.
+    *
+    * Distinct-BEFORE-verify, deliberately: the tempting alternative —
+    * skip the pair-level distinct, verify every raw prefix match, dedup
+    * survivors — was measured strictly worse (q86 5.9 s → 12.2 s, q103
+    * 7.0 s → 16.4 s at sf0.1): the verification joins are sort-merge (the
+    * per-doc array relation is tens of MB — past the broadcast
+    * threshold), so every raw match would be SORTED TWICE (once per
+    * verify join); the distinct's one hash exchange prunes duplication
+    * factor × (2 sorts + 2 kernel evals) and wins whenever duplication
+    * > ~1.1×. At τ=1/2 a near-dup pair shares ~half its grams as probes.
+    */
+  private def prefixJoin(m: Measure, a: JoinSide, b: JoinSide, tauNum: Int,
       tauDen: Int): DataFrame = {
-    require(tauNum >= 1 && tauNum <= tauDen,
-      s"containmentJoin: need 0 < tauNum/tauDen <= 1, got $tauNum/$tauDen")
-    val sets = index.sets
-    // prefix = nn − ⌈τ·nn⌉ + 1 probe grams (rarest-first = head of gs)
-    val prefixLen = (col("nn") -
-      floor((col("nn") * tauNum + (tauDen - 1)) / lit(tauDen.toDouble)) + 1)
-      .cast("int")
-    // atFullWidth on both join inputs: see jaccardSetsAndCandidates.
-    val probes = atFullWidth("gid")(
-      sets.select(col("__id"), col("nn"),
-        posexplode(slice(col("gs"), lit(1), prefixLen)).as(Seq("pos", "gid"))))
-    val fullIndex = atFullWidth("gid")(
-      sets.select(col("__id"), col("nn"),
-        posexplode(col("gs")).as(Seq("pos", "gid"))))
-    // Positional filter (the q86 pattern): at the smallest common gram —
-    // matched at ranks (pa, pb) — the pair can share at most
-    // 1 + min(na−pa−1, nb−pb−1) grams; requiring that best case to reach
-    // ⌈τ·na⌉ prunes frequent-gram matches without false negatives.
-    // Distinct-before-verify (see the note in jaccardSimilarityJoin).
-    val cand = probes.alias("a").join(fullIndex.alias("b"),
-      col("a.gid") === col("b.gid") &&
-        col("a.__id") =!= col("b.__id") &&
-        col("b.nn") * tauDen >= col("a.nn") * tauNum &&
-        (lit(1) + least(col("a.nn") - col("a.pos") - 1,
-          col("b.nn") - col("b.pos") - 1)) * tauDen >=
-          col("a.nn") * tauNum)
+    val (kName, kernel) = m.kernel
+    candidates(m, a, b, tauNum, tauDen)
+      .join(m.verifyRows(a, "a"), "doc_a")
+      .join(m.verifyRows(b, "b"), "doc_b")
+      .withColumn(kName, kernel)
+      .filter(m.accept(tauNum, tauDen))
+      .select(col("doc_a"), col("doc_b"), col(kName), m.score)
+  }
+
+  /** The distinct (doc_a, doc_b) candidate pairs of [[prefixJoin]] —
+    * exposed so the soak harness can assert the prefix filter's fan-out
+    * bound directly (candidate pairs must scale with true duplicates, not
+    * quadratically) and the doc_a exchange's partition balance.
+    */
+  private[graft] def candidates(m: Measure, a: JoinSide, b: JoinSide,
+      tauNum: Int, tauDen: Int): DataFrame = {
+    val pairRule =
+      if (a eq b) Seq(m.selfPair(col("a.__id"), col("b.__id"))) else Nil
+    probeRows(m, a, tauNum, tauDen).alias("a")
+      .join(atFullWidth("gid")(m.index(b, tauNum, tauDen)).alias("b"),
+        ((col("a.gid") === col("b.gid")) +:
+          (pairRule ++ m.filter(tauNum, tauDen))).reduce(_ && _))
       .select(col("a.__id").as("doc_a"), col("b.__id").as("doc_b"))
       .transform(distinctPairs("doc_a"))
-    cand
-      .join(sets.select(col("__id").as("doc_a"), col("gs").as("ga"),
-        col("nn").as("na")), "doc_a")
-      .join(sets.select(col("__id").as("doc_b"), col("gs").as("gb")), "doc_b")
-      .withColumn("n_common",
-        graft.functions.VectorExpressions.sortedIntersectCount(
-          col("ga"), col("gb")))
-      .filter(col("n_common") * tauDen >= col("na") * tauNum)
-      .select(col("doc_a"), col("doc_b"), col("n_common"),
-        round(col("n_common").cast("double") / col("na").cast("double"), 6)
-          .as("containment"))
   }
 
-  /** EXACT incremental Jaccard join: every (batch doc, corpus doc) pair
-    * with distinct-n-gram Jaccard ≥ tauNum/tauDen, probing a prebuilt
-    * corpus [[GramIndex]] — the EXACT complement of the probabilistic
-    * [[incrementalDupIds]] LSH probe, and the ingest-time shape of
-    * [[jaccardSimilarityJoin]]: a 100 TB corpus grows by batches, and
-    * re-running the all-pairs join per ingest would be O(corpus²) where
-    * this is O(batch · matches). No false negatives, nothing retrained:
-    * the corpus dictionary, prefix arrays, and set arrays are reused
-    * frozen.
+  /** The pinned probe side of [[prefixJoin]] — the one place every join
+    * and accessor validates its threshold. Both join inputs are pinned to
+    * full width ([[atFullWidth]]): the gid exchange the join would insert
+    * anyway, but at a user-specified partition count AQE cannot coalesce —
+    * the merge-join's O(Σ bucket²) pair fan-out is CPU-bound, and AQE's
+    * byte heuristic (probe rows are a few compressed MB) was squeezing it
+    * onto a handful of tasks (the [[distinctPairs]] measurement). Same
+    * shuffle bytes, full parallelism. Exposed so the soak harness can
+    * assert the pinned exchange's partition balance.
+    */
+  private[graft] def probeRows(m: Measure, side: JoinSide, tauNum: Int,
+      tauDen: Int): DataFrame = {
+    require(tauNum >= 1 && tauNum <= tauDen,
+      s"$m prefix join: need 0 < tauNum/tauDen <= 1, got $tauNum/$tauDen")
+    atFullWidth("gid")(m.probes(side, tauNum, tauDen))
+  }
+
+  /** A batch encoded under a corpus index's gram order: the probe side of
+    * the incremental joins. Lazy, so a Jaccard-only caller never runs the
+    * cosine windows. Batch ids must be disjoint from corpus ids.
     *
-    * Order correctness with unseen grams: the prefix-filter lemma needs
-    * one total order shared by both sides of a pair. Batch grams absent
-    * from the corpus vocabulary can never match a corpus gram, but they
-    * still occupy prefix slots, so they must SORT somewhere consistent:
-    * they get NEGATIVE dense ids (a batch-local [[rankDictionary]] rank,
-    * negated) — below every corpus gid, i.e. treated as rarest of all
-    * (df 0 against any corpus df ≥ 1), which leaves corpus-side prefix
-    * arrays byte-identical to the all-pairs case. The verification
-    * merge-intersect only ever counts equal ids, and negative ids exist
-    * on the batch side only, so they can never inflate the overlap.
-    * Candidate generation joins batch prefixes to CORPUS prefixes (both
-    * under the shared order) with the standard length and positional
-    * filters; verification is the codegen'd sorted intersect with the
-    * integer threshold. Output: (doc_a = batch id, doc_b = corpus id,
-    * n_common, jac).
+    * `sets` — negative unseen gids: the prefix-filter lemma needs ONE total
+    * order on both sides. Batch grams unseen in the corpus never match but
+    * still occupy prefix slots, so they take NEGATIVE ids (a batch-local
+    * [[rankDictionary]] rank, negated): rarest of all, the same for every
+    * batch doc, and corpus arrays stay byte-identical. The merge-intersect
+    * counts equal ids only, so they never inflate the overlap.
+    *
+    * `weighted`/`packed` — the full-norm rule: [[graft.functions.PackedWeightedDot]]
+    * compares keys UNSIGNED, so a negative gid would break its merge.
+    * Unseen grams leave the vectors and the probe order, but their squared
+    * weights STAY in ‖a‖² (summed before the vocabulary join): a
+    * mostly-novel doc is not similar merely because its corpus-known part
+    * matches. The prefix proof survives: at the smallest common gram g*,
+    * dot ≤ √(sufsq_a(g*))·‖b‖ with sufsq over seen grams only.
     */
-  def incrementalJaccardJoin(index: GramIndex, batch: DataFrame,
-      idCol: String, textCol: String, tauNum: Int, tauDen: Int): DataFrame = {
-    require(tauNum >= 1 && tauNum <= tauDen,
-      s"incrementalJaccardJoin: need 0 < tauNum/tauDen <= 1, got $tauNum/$tauDen")
-    val bSets = encodeBatchSets(index, batch, idCol, textCol)
-    def prefixLen = (col("nn") -
-      floor((col("nn") * tauNum + (tauDen - 1)) / lit(tauDen.toDouble)) + 1)
-      .cast("int")
-    // atFullWidth on both join inputs: see jaccardSetsAndCandidates.
-    val bProbes = atFullWidth("gid")(
-      bSets.select(col("__bid"), col("nn"),
-        posexplode(slice(col("gs"), lit(1), prefixLen)).as(Seq("pos", "gid"))))
-    val cSets = index.sets
-    val cProbes = atFullWidth("gid")(
-      cSets.select(col("__id"), col("nn"),
-        posexplode(slice(col("gs"), lit(1), prefixLen)).as(Seq("pos", "gid"))))
-    val cand = bProbes.alias("a").join(cProbes.alias("b"),
-      col("a.gid") === col("b.gid") &&
-        col("a.nn") * tauNum <= col("b.nn") * tauDen &&
-        col("b.nn") * tauNum <= col("a.nn") * tauDen &&
-        (lit(1) + least(col("a.nn") - col("a.pos") - 1,
-          col("b.nn") - col("b.pos") - 1)) * (tauNum + tauDen) >=
-          (col("a.nn") + col("b.nn")) * tauNum)
-      .select(col("a.__bid").as("doc_a"), col("b.__id").as("doc_b"))
-      .transform(distinctPairs("doc_a"))
-    cand
-      .join(bSets.select(col("__bid").as("doc_a"), col("gs").as("ga"),
-        col("nn").as("na")), "doc_a")
-      .join(cSets.select(col("__id").as("doc_b"), col("gs").as("gb"),
-        col("nn").as("nb")), "doc_b")
-      .withColumn("n_common",
-        graft.functions.VectorExpressions.sortedIntersectCount(
-          col("ga"), col("gb")))
-      .filter(col("n_common") * tauDen >=
-        (col("na") + col("nb") - col("n_common")) * tauNum)
-      .select(col("doc_a"), col("doc_b"), col("n_common"),
-        round(col("n_common").cast("double") /
-          (col("na") + col("nb") - col("n_common")).cast("double"), 6).as("jac"))
+  private def batchSide(index: GramIndex, batch: DataFrame, idCol: String,
+      textCol: String): JoinSide = new JoinSide {
+    lazy val sets: DataFrame = {
+      val bGrams = ngramsExploded(batch, idCol, textCol, index.n)
+        .select(col(idCol).as("__id"), col("g"))
+      val unseenDict = rankDictionary(
+        bGrams.join(index.dict, Seq("g"), "left_anti")
+          .select("g").distinct().withColumn("gdf", lit(0L)))
+        .select(col("g"), (-col("gid")).as("gid"))
+      setsOf(bGrams.join(index.dict.unionByName(unseenDict), "g"))
+        .localCheckpoint()
+    }
+    lazy val weighted: DataFrame = {
+      val tf = ngramRows(batch, idCol, textCol, index.n)
+        .groupBy(col(idCol).as("__id"), col("g"))
+        .agg(least(count(lit(1)), lit(65535L)).as("w"))
+      val n2 = tf.groupBy("__id").agg(sum(col("w") * col("w")).as("n2"))
+      weightedOf(tf.join(index.dict, "g")
+        .select(col("__id"), col("gid"), col("w")), Some(n2))
+        .localCheckpoint()
+    }
+    lazy val packed: DataFrame = packedOf(weighted)
   }
 
-  /** Batch-side encoded set arrays (`__bid`, gs, nn) under the corpus
-    * index's gram order — the shared front half of the incremental exact
-    * joins. Corpus-known grams keep their corpus gid; unseen grams rank
-    * among themselves (deterministic (0, gram) order) and NEGATE —
-    * distinct ids below every corpus gid, identical for every batch doc
-    * containing them, so the global prefix order stays total and the
-    * verify intersect (equal ids only, negatives exist on the batch side
-    * only) can never overcount.
+  /** (__id, g, w): per-doc n-gram occurrence counts. */
+  private def tfOf(docs: DataFrame, idCol: String, textCol: String,
+      n: Int): DataFrame = ngramRows(docs, idCol, textCol, n)
+    .groupBy(col(idCol).as("__id"), col("g"))
+    .agg(count(lit(1)).as("w"))
+
+  /** (__id, gid, w): tf rows encoded through a dictionary, w capped at
+    * 65535 (the packed-array weight width).
     */
-  private def encodeBatchSets(index: GramIndex, batch: DataFrame,
-      idCol: String, textCol: String): DataFrame = {
-    val bGrams = ngramsExploded(batch, idCol, textCol, index.n)
-      .select(col(idCol).as("__bid"), col("g"))
-    val unseenDict = rankDictionary(
-      bGrams.join(index.dict, Seq("g"), "left_anti")
-        .select("g").distinct().withColumn("gdf", lit(0L)))
-      .select(col("g"), (-col("gid")).as("gid"))
-    val bDict = index.dict.unionByName(unseenDict)
-    bGrams.join(bDict, "g")
-      .groupBy("__bid")
-      .agg(array_sort(collect_list(col("gid"))).as("gs"))
-      .select(col("__bid"), col("gs"), size(col("gs")).cast("long").as("nn"))
-      .localCheckpoint()
+  private def encOf(tf: DataFrame, dict: DataFrame): DataFrame =
+    tf.join(dict, "g")
+      .select(col("__id"), col("gid"), least(col("w"), lit(65535L)).as("w"))
+
+  /** [[JoinSide.sets]] of (__id, gid) rows. */
+  private def setsOf(enc: DataFrame): DataFrame = enc
+    .groupBy("__id")
+    .agg(array_sort(collect_list(col("gid"))).as("gs"))
+    .select(col("__id"), col("gs"), size(col("gs")).cast("long").as("nn"))
+
+  /** [[JoinSide.weighted]] of (__id, gid, w) rows: the suffix squared norm
+    * from each position (rarest-first order) and the full squared norm —
+    * one doc-keyed window sort serves both — unless `n2` (__id, n2)
+    * supplies the full norm.
+    */
+  private def weightedOf(enc: DataFrame,
+      n2: Option[DataFrame] = None): DataFrame = {
+    val wOrd = Window.partitionBy("__id").orderBy("gid")
+    val suf = enc.withColumn("sufsq", sum(col("w") * col("w"))
+      .over(wOrd.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
+    n2.fold(suf.withColumn("n2", sum(col("w") * col("w"))
+      .over(Window.partitionBy("__id"))))(suf.join(_, "__id"))
   }
 
-  /** EXACT incremental CONTAINMENT join: every (batch doc a, corpus doc b)
-    * pair with |A∩B| / |A| ≥ tauNum/tauDen, probing a prebuilt corpus
-    * [[GramIndex]] — the ingest-time [[containmentJoin]]: detects arriving
-    * quotes/excerpts of (and near-verbatim pulls from) the frozen corpus
-    * without touching corpus-side structures. Asymmetric like the
-    * all-pairs form: the batch (contained) side emits its rarest-first
-    * prefix of `|A| − ⌈τ·|A|⌉ + 1` grams (a qualifying pair needs
-    * ⌈τ·|A|⌉ common grams and the suffix holds one fewer, so a match
-    * lands in the prefix — under the shared order of [[encodeBatchSets]],
-    * where unseen batch grams sort first and can never match); the corpus
-    * side reuses the index's full per-doc arrays. Size filter
-    * `|B|·tauDen ≥ tauNum·|A|`, standard positional filter, codegen'd
-    * merge-intersect verify, integer threshold. Output:
-    * (doc_a = batch id, doc_b = corpus id, n_common, containment).
-    */
-  def incrementalContainmentJoin(index: GramIndex, batch: DataFrame,
-      idCol: String, textCol: String, tauNum: Int = 4,
-      tauDen: Int = 5): DataFrame = {
-    require(tauNum >= 1 && tauNum <= tauDen,
-      s"incrementalContainmentJoin: need 0 < tauNum/tauDen <= 1, got $tauNum/$tauDen")
-    val bSets = encodeBatchSets(index, batch, idCol, textCol)
-    val prefixLen = (col("nn") -
-      floor((col("nn") * tauNum + (tauDen - 1)) / lit(tauDen.toDouble)) + 1)
-      .cast("int")
-    // atFullWidth on both join inputs: see jaccardSetsAndCandidates.
-    val bProbes = atFullWidth("gid")(
-      bSets.select(col("__bid"), col("nn"),
-        posexplode(slice(col("gs"), lit(1), prefixLen)).as(Seq("pos", "gid"))))
-    val cSets = index.sets
-    val cIndex = atFullWidth("gid")(
-      cSets.select(col("__id"), col("nn"),
-        posexplode(col("gs")).as(Seq("pos", "gid"))))
-    val cand = bProbes.alias("a").join(cIndex.alias("b"),
-      col("a.gid") === col("b.gid") &&
-        col("b.nn") * tauDen >= col("a.nn") * tauNum &&
-        (lit(1) + least(col("a.nn") - col("a.pos") - 1,
-          col("b.nn") - col("b.pos") - 1)) * tauDen >=
-          col("a.nn") * tauNum)
-      .select(col("a.__bid").as("doc_a"), col("b.__id").as("doc_b"))
-      .transform(distinctPairs("doc_a"))
-    cand
-      .join(bSets.select(col("__bid").as("doc_a"), col("gs").as("ga"),
-        col("nn").as("na")), "doc_a")
-      .join(cSets.select(col("__id").as("doc_b"), col("gs").as("gb")), "doc_b")
-      .withColumn("n_common",
-        graft.functions.VectorExpressions.sortedIntersectCount(
-          col("ga"), col("gb")))
-      .filter(col("n_common") * tauDen >= col("na") * tauNum)
-      .select(col("doc_a"), col("doc_b"), col("n_common"),
-        round(col("n_common").cast("double") / col("na").cast("double"), 6)
-          .as("containment"))
-  }
-
-  /** EXACT incremental COSINE join: every (batch doc a, corpus doc b)
-    * pair with cos(a, b) ≥ tauNum/tauDen over tf-weighted word-n-gram
-    * vectors, probing a prebuilt corpus [[GramIndex]] — the tf-weighted
-    * ingest-time sibling of [[incrementalJaccardJoin]]. Batch grams
-    * unseen in the corpus vocabulary can never contribute to a dot
-    * product, so they are dropped from the packed vectors and the probe
-    * order entirely (unlike the set joins, no negative ids: the packed
-    * merge kernel compares keys unsigned) — but their squared weights
-    * STAY in the batch norm ‖a‖², so a mostly-novel doc is not declared
-    * similar merely because its corpus-known fraction matches. The
-    * prefix-filter proof survives the asymmetry: at the smallest common
-    * gram g*, dot ≤ √(sufsq_a(g*))·‖b‖ with sufsq over seen grams only
-    * (every common gram is corpus-known and ranks ≥ g*), so a qualifying
-    * pair still passes both per-side probe filters and the
-    * Cauchy-Schwarz positional product. Verification is the codegen'd
-    * [[graft.functions.PackedWeightedDot]] merge with the exact
-    * DECIMAL(38,0) threshold of [[cosineSimilarityJoin]]. Output:
-    * (doc_a = batch id, doc_b = corpus id, dot, cos).
-    */
-  def incrementalCosineJoin(index: GramIndex, batch: DataFrame,
-      idCol: String, textCol: String, tauNum: Int = 4,
-      tauDen: Int = 5): DataFrame = {
-    require(tauNum >= 1 && tauNum <= tauDen,
-      s"incrementalCosineJoin: need 0 < tauNum/tauDen <= 1, got $tauNum/$tauDen")
-    val bTf = ngramRows(batch, idCol, textCol, index.n)
-      .groupBy(col(idCol).as("__bid"), col("g"))
-      .agg(least(count(lit(1)), lit(65535L)).as("w"))
-    // full norm BEFORE the vocabulary join: unseen mass counts
-    val bn2 = bTf.groupBy("__bid").agg(sum(col("w") * col("w")).as("n2"))
-    val wOrd = Window.partitionBy("__bid").orderBy("gid")
-    val bWeighted = bTf.join(index.dict, "g")
-      .select(col("__bid"), col("gid"), col("w"))
-      .withColumn("sufsq", sum(col("w") * col("w"))
-        .over(wOrd.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
-      .join(bn2, "__bid")
-      .localCheckpoint()
-    val bPacked = bWeighted
-      .groupBy("__bid")
-      .agg(array_sort(collect_list(col("gid") * 65536L + col("w"))).as("pk"),
-        min(col("n2")).as("n2"))
-    def probeFilter(df: DataFrame): DataFrame = df
-      .filter(col("sufsq") * (tauDen.toLong * tauDen) >=
-        col("n2") * (tauNum.toLong * tauNum))
-    // atFullWidth on both join inputs: see jaccardSetsAndCandidates.
-    val bProbes = atFullWidth("gid")(probeFilter(bWeighted)
-      .select(col("__bid"), col("gid"), col("sufsq"), col("n2")))
-    val cProbes = atFullWidth("gid")(probeFilter(index.weighted)
-      .select(col("__id"), col("gid"), col("sufsq"), col("n2")))
-    // Positional product filter + distinct-before-verify: see the
-    // scaladoc notes in cosineSimilarityJoin / jaccardSimilarityJoin.
-    val cand = bProbes.alias("a").join(cProbes.alias("b"),
-      col("a.gid") === col("b.gid") &&
-        col("a.sufsq").cast("double") * col("b.sufsq") *
-          lit(tauDen.toDouble * tauDen) >=
-          col("a.n2").cast("double") * col("b.n2") *
-            lit(tauNum.toDouble * tauNum * (1.0 - 1e-9)))
-      .select(col("a.__bid").as("doc_a"), col("b.__id").as("doc_b"))
-      .transform(distinctPairs("doc_a"))
-    cand
-      .join(bPacked.select(col("__bid").as("doc_a"), col("pk").as("pa"),
-        col("n2").as("na2")), "doc_a")
-      .join(index.packed.select(col("__id").as("doc_b"), col("pk").as("pb"),
-        col("n2").as("nb2")), "doc_b")
-      .withColumn("dot",
-        graft.functions.VectorExpressions.packedWeightedDot(
-          col("pa"), col("pb")))
-      .filter(col("dot").cast("decimal(38,0)") * col("dot") *
-          lit(tauDen.toLong * tauDen) >=
-        col("na2").cast("decimal(38,0)") * col("nb2") *
-          lit(tauNum.toLong * tauNum))
-      .select(col("doc_a"), col("doc_b"), col("dot"),
-        round(col("dot").cast("double") /
-          sqrt((col("na2") * col("nb2")).cast("double")), 6).as("cos"))
-  }
+  /** [[JoinSide.packed]] of a weighted relation. */
+  private def packedOf(weighted: DataFrame): DataFrame = weighted
+    .groupBy("__id")
+    .agg(array_sort(collect_list(col("gid") * 65536L + col("w"))).as("pk"),
+      min(col("n2")).as("n2"))
 
   /** Exact-substring dedup (the ExactSubstr shape of Lee et al.,
     * "Deduplicating Training Data Makes Language Models Better"): find

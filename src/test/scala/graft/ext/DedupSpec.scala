@@ -546,4 +546,30 @@ class DedupSpec extends SparkSpec {
       if (tn == 4) got.map(p => (p._1, p._2)) should contain((7L, 60L))
     }
   }
+
+  test("every exact gram join and probe accessor rejects tau outside (0, 1]") {
+    val idx = Dedup.gramIndex(docs, "doc_id", "text", n = 2)
+    def call(name: String)(f: (Int, Int) => Any) = name -> f
+    val calls = Seq(
+      call("jaccard")((tn, td) => Dedup.jaccardSimilarityJoin(idx, tn, td)),
+      call("cosine")((tn, td) => Dedup.cosineSimilarityJoin(idx, tn, td)),
+      call("containment")((tn, td) => Dedup.containmentJoin(idx, tn, td)),
+      call("jaccard(docs)")((tn, td) =>
+        Dedup.jaccardSimilarityJoin(docs, "doc_id", "text", 2, tn, td)),
+      call("incrementalJaccard")((tn, td) =>
+        Dedup.incrementalJaccardJoin(idx, docs, "doc_id", "text", tn, td)),
+      call("incrementalContainment")((tn, td) =>
+        Dedup.incrementalContainmentJoin(idx, docs, "doc_id", "text", tn, td)),
+      call("incrementalCosine")((tn, td) =>
+        Dedup.incrementalCosineJoin(idx, docs, "doc_id", "text", tn, td)),
+      call("candidates")((tn, td) =>
+        Dedup.candidates(Dedup.Jaccard, idx, idx, tn, td))
+    ) ++ Seq(Dedup.Jaccard, Dedup.Containment, Dedup.Cosine).map { m =>
+      call(s"probeRows($m)")((tn, td) => Dedup.probeRows(m, idx, tn, td))
+    }
+    for ((name, f) <- calls; (tn, td) <- Seq((3, 2), (0, 5)))
+      withClue(s"$name at $tn/$td: ") {
+        an[IllegalArgumentException] should be thrownBy f(tn, td)
+      }
+  }
 }
