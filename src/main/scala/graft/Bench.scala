@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
 
@@ -66,19 +65,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     // Timed passes per query (beyond the untimed warmup). Host variance on
     // this box is ±30-40%; a single sample cannot distinguish noise from a
     // real regression, so we take `runs` samples and report BOTH the min
     // (steady-state capability) and the median (typical) per query.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("WARN")
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     // Steady-state measurement: one untimed warmup pass first. A fresh JVM

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Single-query micro-bench under the SAME JVM flags as graft.Bench (the
   * spark-submit flag set in build.sbt — spark-shell timings are not
@@ -15,14 +14,7 @@ object QBench {
     val sfDir = args(0)
     val runs = args(1).toInt
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -69,16 +69,10 @@ object Soak {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(1000000L)
     val nVecs = args.drop(1).headOption.map(_.toLong).getOrElse(200000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("WARN")
 
-    println(s"[soak] docs=$nDocs vecs=$nVecs cores=$cpus")
+    println(s"[soak] docs=$nDocs vecs=$nVecs cores=${Harness.cpus}")
     val docs = syntheticDocs(spark, nDocs).cache()
     time("materialize docs")(docs.count())
 
@@ -1294,11 +1288,11 @@ object Soak {
         }
       val perBatch =
         scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Double)]()
-      val q = streaming.EventStreams.warcGateOnArrival(
+      val q = streaming.EventStreams.onArrival(
         streaming.EventStreams.readWarcShardStream(spark, dir.toString,
-          maxFilesPerTrigger = 4),
-        gramIdx, sig, docs, editIdx, keyed, editKeyLen = 24, k = 2,
-        tauNum = 4, tauDen = 5) { v =>
+          maxFilesPerTrigger = 4))(
+        streaming.EventStreams.warcGateBatch(_, gramIdx, sig, docs, editIdx,
+          keyed, editKeyLen = 24, k = 2, tauNum = 4, tauDen = 5)) { v =>
         val t0 = System.nanoTime()
         val agg = v.select(
             regexp_extract(col("url"), "/([0-9]+)$", 1).cast("long")

@@ -80,6 +80,9 @@ object Opq {
       .groupBy("i", "j")
       .agg(sum(floor(col("xv") * col("qv") * S).cast("long")).as("s"))
       .collect()
+    require(cells.nonEmpty, "Opq.crossSums: no row of `a` shares an id " +
+      s"with a row of `b` on `$idCol` (empty or id-disjoint inputs), so " +
+      "M = Xᵀ·Q is undefined")
     val d = cells.iterator.map(r => math.max(r.getInt(0), r.getInt(1)))
       .max + 1
     val m = Array.ofDim[Double](d, d)

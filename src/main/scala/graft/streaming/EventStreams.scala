@@ -516,944 +516,136 @@ object EventStreams {
     writer.start()
   }
 
-  /** ST8 batch kernel: survivors of one micro-batch against a frozen
-    * corpus [[graft.ext.Dedup.GramIndex]] — every arriving doc with an
-    * EXACT Jaccard match ≥ τ in the corpus drops. Plain DataFrame →
-    * DataFrame, so batch/stream parity is directly testable.
+  // ------------------------------------------------- stateless on arrival
+
+  /** The stateless on-arrival surface: each micro-batch of `rows` goes
+    * through `kernel` and the result reaches `sink`. A kernel probes
+    * FROZEN corpus structures the corpus paid for once, so each
+    * micro-batch costs O(batch); it is a plain DataFrame → DataFrame
+    * function, so stream ≡ batch is tested by calling the same kernel on
+    * a batch frame. foreachBatch because the kernels need per-batch
+    * aggregations and whole-relation joins (batch encode, candidate
+    * distinct, span merge) that an append-mode streaming plan cannot host
+    * inline. An empty micro-batch is skipped: no kernel run, no sink call
+    * (a two-sample test needs a sample; no other kernel has anything to
+    * say about nothing). The stages and their kernels:
+    *
+    *  - ST8 exact near-dup drop against a `GramIndex`: [[exactDedupBatch]];
+    *  - ST9 ingest gate, (id, exact_dup, jac_dup, sh_dup, admit):
+    *    [[graft.ext.Dedup.ingestGate]];
+    *  - ST10 LM fluency under a frozen bigram LM:
+    *    [[graft.ext.TextAnalysis.scoreBigramLm]];
+    *  - ST11 decontamination by excision against frozen benchmark grams:
+    *    [[graft.ext.Dedup.decontaminateExciseAgainstGrams]];
+    *  - ST12 four-signal gate (the arriving rows carry the edit key
+    *    column): [[graft.ext.Dedup.ingestGateWithEdit]];
+    *  - ST13 embedding dedup by SRP fingerprint: [[srpDedupBatch]];
+    *  - ST14 image dedup by perceptual hash: [[phashDedupBatch]];
+    *  - ST17 CDC byte delta: [[graft.ext.Multimodal.incrementalCdcBytes]]
+    *    over [[graft.ext.Multimodal.asMedia]];
+    *  - ST18 cluster assignment:
+    *    [[graft.ext.Multimodal.assignToPhashClusters]];
+    *  - ST19 audio dedup through real containers: [[audioDedupBatch]];
+    *  - ST20 PSI drift against frozen buckets:
+    *    [[graft.ops.Drift.psiAgainstReference]];
+    *  - ST21 topic routing: [[graft.ext.Retrieval.maxSimRoute]];
+    *  - ST23 KS / Wasserstein-1 drift: [[ecdfDriftBatch]];
+    *  - ST32 WARC shards through the four-signal gate:
+    *    [[readWarcShardStream]] into [[warcGateBatch]].
+    */
+  def onArrival(rows: DataFrame)(kernel: DataFrame => DataFrame)(
+      sink: DataFrame => Unit): StreamingQuery =
+    rows.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty) sink(kernel(batch))
+      }
+      .start()
+
+  /** Survivors of `batch` with no `idCol` among `dupIds`' `dupCol`. */
+  private def dropMatched(batch: DataFrame, dupIds: DataFrame,
+      dupCol: String, idCol: String): DataFrame =
+    batch.join(dupIds.select(col(dupCol).as(idCol)).distinct(), Seq(idCol),
+      "left_anti")
+
+  /** ST8 kernel: survivors of one micro-batch against a frozen corpus
+    * [[graft.ext.Dedup.GramIndex]] — every arriving doc with an EXACT
+    * Jaccard match ≥ τ in the corpus drops (the O(batch) q112 join). The
+    * exact twin of ST7b's LSH path: LSH triages inline and cheaply (false
+    * positives possible), this renders the zero-false-positive/negative
+    * verdict where dropping a document is irreversible.
     */
   def exactDedupBatch(index: graft.ext.Dedup.GramIndex, batch: DataFrame,
       idCol: String, textCol: String, tauNum: Int, tauDen: Int): DataFrame =
-    batch.join(
-      graft.ext.Dedup.incrementalJaccardJoin(index, batch, idCol, textCol,
-        tauNum, tauDen)
-        .select(col("doc_a").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")
+    dropMatched(batch, graft.ext.Dedup.incrementalJaccardJoin(index, batch,
+      idCol, textCol, tauNum, tauDen), "doc_a", idCol)
 
-  /** ST8: streaming EXACT near-dup drop-on-arrival — the exact twin of
-    * ST7b's LSH path: each micro-batch probes a FROZEN corpus
-    * [[graft.ext.Dedup.GramIndex]] with the O(batch) incremental Jaccard
-    * join (q112) and keeps only documents with NO corpus match at τ.
-    * That join needs its own aggregations (batch encode + candidate
-    * distinct), which an append-mode streaming plan cannot host inline —
-    * hence foreachBatch, the standard Structured Streaming pattern for
-    * whole-relation logic per micro-batch. The at-scale division of
-    * labor: ST7b's per-row LSH plan triages inline and cheaply (false
-    * positives possible), THIS path renders the final zero-false-
-    * positive/negative verdict where dropping a document is
-    * irreversible. `sink` receives each micro-batch's survivors.
-    */
-  def exactDedupAgainstIndex(docs: DataFrame,
-      index: graft.ext.Dedup.GramIndex, idCol: String, textCol: String,
-      tauNum: Int, tauDen: Int)(sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(exactDedupBatch(index, batch, idCol, textCol, tauNum, tauDen))
-      }
-      .start()
-
-  /** ST9: streaming INGEST GATE — the q118 capstone verdict rendered on
-    * arrival: each micro-batch probes the three FROZEN corpus structures
-    * ([[graft.ext.Dedup.GramIndex]], the 64-bit simhash signature table,
-    * the corpus texts) through [[graft.ext.Dedup.ingestGate]], and the
-    * sink receives the per-document flag table (idCol, exact_dup,
-    * jac_dup, sh_dup, admit). Same foreachBatch rationale as ST8 — the
-    * gate's probes need whole-relation joins and aggregations per
-    * micro-batch — and the same O(batch) cost: every probe hits
-    * structures the corpus paid for once. Downstream, `admit` splits the
-    * stream into the corpus-append path and the audit/reject path while
-    * the per-signal flags feed the curation dashboards.
-    */
-  def gateOnArrival(docs: DataFrame, index: graft.ext.Dedup.GramIndex,
-      corpusSig: DataFrame, corpusTexts: DataFrame, idCol: String,
-      textCol: String, tauNum: Int = 1, tauDen: Int = 2,
-      maxDist: Int = 3)(sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.ext.Dedup.ingestGate(index, corpusSig, corpusTexts,
-          batch, idCol, textCol, tauNum, tauDen, maxDist))
-      }
-      .start()
-
-  /** ST10 — streaming LM fluency scoring: each arriving micro-batch is
-    * scored under a FROZEN corpus bigram LM
-    * ([[graft.ext.TextAnalysis.trainBigramLm]], trained once — its count
-    * tables are checkpointed, so micro-batches never re-run the corpus
-    * pass) via foreachBatch, the quality sibling of ST9's dedup gate. The
-    * sink receives (id, logprob, n_bigrams, oov_bigrams) per scorable doc;
-    * callers threshold with [[graft.ext.TextAnalysis.calibratedLmGate]]'s
-    * calibration or route raw scores to the audit path.
-    */
-  def lmScoreOnArrival(docs: DataFrame,
-      lm: graft.ext.TextAnalysis.BigramLm, idCol: String, textCol: String)(
-      sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.ext.TextAnalysis.scoreBigramLm(lm, batch, idCol, textCol))
-      }
-      .start()
-
-  /** ST11 — streaming DECONTAMINATION by excision: each arriving
-    * micro-batch has benchmark n-gram spans cut out of its text
-    * ([[graft.ext.Dedup.decontaminateExciseAgainstGrams]], the q142
-    * kernel) against a FROZEN benchmark gram set
-    * ([[graft.ext.Dedup.benchmarkGrams]], built once and checkpointed by
-    * the caller — micro-batches never re-run the benchmark pass). The
-    * excision sibling of ST9's gate: the gate decides admit/reject, THIS
-    * path repairs what it admits — eval leakage is removed at ingest,
-    * before a contaminated document ever lands in the corpus. Same
-    * foreachBatch rationale as ST8–ST10: the kernel needs per-batch
-    * windows and aggregations (span merge, ordered reassembly) that an
-    * append-mode streaming plan cannot host inline, and the benchmark
-    * side broadcasts per batch exactly as in the batch query. `sink`
-    * receives (id, clean_text, n_tokens, n_removed) for every arriving
-    * doc — untouched docs pass through with n_removed = 0.
-    */
-  def decontaminateOnArrival(docs: DataFrame, benchGrams: DataFrame,
-      idCol: String, textCol: String, n: Int)(
-      sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.ext.Dedup.decontaminateExciseAgainstGrams(batch,
-          benchGrams, idCol, textCol, n))
-      }
-      .start()
-
-  /** ST12 — ST9's streaming ingest gate grown the STRING signal: each
-    * micro-batch renders the FOUR-signal verdict
-    * ([[graft.ext.Dedup.ingestGateWithEdit]] — exact / Jaccard / simhash /
-    * edit-distance-on-key against the four frozen corpus structures,
-    * including the [[graft.ext.Fuzzy.segmentIndex]]). The arriving stream
-    * must carry both textCol and the short key column `editCol` (derive it
-    * upstream with a select — it is a pure projection). Sink receives
-    * (idCol, exact_dup, jac_dup, sh_dup, ed_dup, admit).
-    */
-  /** ST13 batch kernel: survivors of one micro-batch of VECTORS against a
+  /** ST13 kernel: survivors of one micro-batch of VECTORS against a
     * frozen corpus SRP signature table — every arriving embedding whose
     * 64-bit [[graft.ext.Similarity.srpSignature]] fingerprint lies within
-    * `maxDist` bits of any corpus vector drops. Plain DataFrame →
-    * DataFrame for direct batch/stream parity testing.
+    * `maxDist` bits of any corpus vector drops (the q150 band probe).
     */
   def srpDedupBatch(corpusSig: DataFrame, batch: DataFrame, vecCol: String,
       idCol: String, maxDist: Int): DataFrame =
-    batch.join(
-      graft.ext.Similarity.incrementalSrpPairs(corpusSig, batch, vecCol,
-        idCol, maxDist)
-        .select(col("id_a").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")
+    dropMatched(batch, graft.ext.Similarity.incrementalSrpPairs(corpusSig,
+      batch, vecCol, idCol, maxDist), "id_a", idCol)
 
-  /** ST13 — streaming EMBEDDING dedup-on-arrival: the vector sibling of
-    * ST8 (exact text) and ST7b (token LSH): each micro-batch of arriving
-    * embeddings probes a FROZEN corpus SRP signature table with the
-    * O(batch) [[graft.ext.Similarity.incrementalSrpPairs]] band probe
-    * (q150) and keeps only vectors with NO corpus fingerprint within
-    * `maxDist` bits. Same foreachBatch rationale as ST8 — the probe needs
-    * per-batch aggregation (signature pass + candidate distinct) that an
-    * append-mode plan cannot host inline. The corpus pays one signature
-    * pass ever; `sink` receives each micro-batch's survivors.
-    */
-  def srpDedupOnArrival(vecs: DataFrame, corpusSig: DataFrame,
-      vecCol: String, idCol: String, maxDist: Int = 3)(
-      sink: DataFrame => Unit): StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(srpDedupBatch(corpusSig, batch, vecCol, idCol, maxDist))
-      }
-      .start()
-
-  /** ST19 batch kernel: survivors of one micro-batch of AUDIO payloads
-    * against the frozen corpus energy-delta fingerprint table — arrivals
-    * whose fingerprint lands within `maxDist` of any corpus stream drop
-    * (re-encodes, amplitude-scaled re-uploads); novel audio survives.
-    */
-  def audioDedupBatch(corpusFp: DataFrame,
-      batch: Dataset[graft.ext.Multimodal.MediaRow], window: Int,
-      maxDist: Int, decode: Array[Byte] => Array[Int]): DataFrame =
-    batch.toDF().join(
-      graft.ext.Multimodal.incrementalAudioPairs(corpusFp, batch, window,
-        maxDist, decode)
-        .select(col("doc_a").as("media_id")).distinct(),
-      Seq("media_id"), "left_anti")
-
-  /** ST19 — streaming AUDIO dedup-on-arrival THROUGH REAL CONTAINERS:
-    * each micro-batch of arriving (media_id, payload) rows is parsed by
-    * the supplied decoder (e.g. [[graft.ext.Containers.decodeWav]] —
-    * actual RIFF bytes, not the stub), fingerprinted
-    * ([[graft.ext.Multimodal.audioFingerprint]], q190), and probed
-    * against the FROZEN corpus fingerprint table at Hamming radius
-    * `maxDist` (q191's O(batch) banded probe); only novel audio reaches
-    * `sink`. The audio member of the on-arrival dedup family (ST8 exact
-    * text, ST7b token LSH, ST13 embeddings, ST14 images), and the first
-    * stage whose payloads ride a real container format end-to-end. Same
-    * foreachBatch rationale as ST8: the probe needs per-batch
-    * aggregation an append-mode plan cannot host inline.
-    */
-  def audioDedupOnArrival(media: DataFrame, corpusFp: DataFrame,
-      window: Int, maxDist: Int = 6,
-      decode: Array[Byte] => Array[Int])(
-      sink: DataFrame => Unit): StreamingQuery =
-    media.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import batch.sparkSession.implicits._
-        val ds = batch
-          .select(col("media_id").cast("long").as("media_id"), col("payload"))
-          .as[graft.ext.Multimodal.MediaRow]
-        sink(audioDedupBatch(corpusFp, ds, window, maxDist, decode))
-      }
-      .start()
-
-  /** ST20 — streaming DRIFT monitoring: each micro-batch's value
-    * distribution is PSI-tested against a FROZEN corpus bucket table
-    * ([[graft.ops.Drift.psiAgainstReference]]) — the
-    * "does today's ingest still look like the corpus" alarm run
-    * continuously at the door, the statistical sibling of the dedup/
-    * quality on-arrival stages (a batch can be duplicate-free and
-    * fluent and still be distributionally alien). The corpus pays one
-    * bucket-count pass ever; each probe is O(batch) + |buckets|. `sink`
-    * receives the per-bucket term table (sum `psi_term` for the scalar
-    * alarm). Same foreachBatch rationale as ST8–ST19.
-    */
-  def driftOnArrival(values: DataFrame, refBuckets: DataFrame,
-      valueCol: String, thresholds: Seq[Long])(
-      sink: DataFrame => Unit): StreamingQuery =
-    values.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.ops.Drift.psiAgainstReference(refBuckets, batch,
-          graft.ops.Drift.bucketOf(col(valueCol), thresholds)))
-      }
-      .start()
-
-  /** ST23 — streaming SHAPE-DRIFT monitoring: each micro-batch's value
-    * distribution is two-sample-tested against the FROZEN corpus ECDF
-    * count table with the sharper statistics ST20's fixed PSI buckets
-    * can miss — KS (worst quantile gap) and Wasserstein-1 (shift
-    * magnitude in value units) — via the incremental probes
-    * ([[graft.ops.Drift.incrementalKs]] /
-    * [[graft.ops.Drift.incrementalWasserstein]], the q201/q202
-    * kernels): O(batch + |table|) per micro-batch, the corpus pays its
-    * aggregation once. Pass `step` when the table is a
-    * [[graft.ops.Drift.quantizedEcdfTable]] — the batch is snapped to
-    * the same grid, the shared-grid exactness contract. Empty
-    * micro-batches are skipped (a two-sample test needs a sample).
-    * `sink` receives one row per micro-batch:
-    * (n_a, n_b, d_stat, at_value, w1).
-    */
-  def ecdfDriftOnArrival(values: DataFrame, corpusCounts: DataFrame,
-      valueCol: String, step: Option[Double] = None, nBuckets: Int = 256)(
-      sink: DataFrame => Unit): StreamingQuery =
-    values.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val (ks, w1) = step match {
-            case Some(s) => (
-              graft.ops.Drift.incrementalKsQuantized(corpusCounts, batch,
-                valueCol, s, nBuckets),
-              graft.ops.Drift.incrementalWassersteinQuantized(corpusCounts,
-                batch, valueCol, s, nBuckets))
-            case None => (
-              graft.ops.Drift.incrementalKs(corpusCounts, batch, valueCol,
-                nBuckets),
-              graft.ops.Drift.incrementalWasserstein(corpusCounts, batch,
-                valueCol, nBuckets))
-          }
-          sink(ks.crossJoin(w1.select(col("w1"))))
-        }
-      }
-      .start()
-
-  /** ST22 — streaming DISTINCT-COUNT maintenance: the persisted state is
-    * ONE mergeable HLL sketch (Spark's Datasketches `hll_sketch_agg`);
-    * each micro-batch reduces to its own sketch and `hll_union`s into
-    * the stored one — the cardinality sibling of ST16's covariance
-    * sketch, and the template for any register-max structure: HLL union
-    * is a per-register MAX, so MERGE ORDER never changes the result —
-    * the streamed chain of unions is equivalent to one union over the
-    * same batch sketches. (A union's estimate can differ by a hair from
-    * a single direct build: Datasketches' HIP estimator accumulates
-    * during building and is discarded on union — the documented
-    * trade-off of mergeability, not an ordering artifact.)
-    * State is O(1) (a few KB) regardless of stream volume —
-    * the "how many distinct users/documents ever" counter a dashboard
-    * reads at any moment via [[distinctEstimate]]. Same crash contract
-    * as ST16: `Upsert.recover`, a batch-id column inside the atomic
-    * swap, replayed batches skipped (at-least-once ⇒ a re-union is
-    * harmless for HLL, but the guard keeps the contract uniform).
-    */
-  def distinctCountOnArrival(rows: DataFrame, keyCol: String,
-      targetPath: String, checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        distinctMergeBatch(batch, keyCol, targetPath, batchId)
-        ()
-      }
-      .start()
-
-  /** ST22's per-batch kernel (exposed for the replay spec): union one
-    * micro-batch's HLL sketch into the persisted single-row sketch
-    * table `(sketch binary, batch_id)` unless `batchId` was already
-    * applied. Returns true when merged.
-    */
-  def distinctMergeBatch(batch: DataFrame, keyCol: String,
-      targetPath: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    // One pass computes sketch + count: an empty micro-batch would
-    // yield a NULL sketch (seeding the table with it breaks
-    // distinctEstimate, and unioning it breaks hll_union_agg), so a
-    // contentless merge is skipped entirely — the batch_id marker must
-    // NOT advance either, or a replayed non-empty sibling of the same
-    // id would be dropped.
-    val aggRow = batch.agg(hll_sketch_agg(col(keyCol)).as("sketch"),
-      count(lit(1)).as("n")).head()
-    if (aggRow.getLong(1) == 0L) return false
-    val bSketch = spark.createDataFrame(
-      java.util.Collections.singletonList(
-        org.apache.spark.sql.Row(aggRow.get(0), batchId)),
-      new org.apache.spark.sql.types.StructType()
-        .add("sketch", org.apache.spark.sql.types.BinaryType)
-        .add("batch_id", org.apache.spark.sql.types.LongType))
-    if (!exists) {
-      Upsert.writeAtomic(bSketch, targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false
-      else {
-        val merged = prev.select(col("sketch"))
-          .unionByName(bSketch.select(col("sketch")))
-          .agg(hll_union_agg(col("sketch")).as("sketch"))
-          .select(col("sketch"), lit(batchId).as("batch_id"))
-        Upsert.writeAtomic(merged, targetPath)
-        true
-      }
-    }
-  }
-
-  /** Read the ST22 sketch table's current cardinality estimate. */
-  def distinctEstimate(spark: SparkSession, targetPath: String): Long = {
-    Upsert.recover(spark, targetPath)
-    spark.read.parquet(targetPath)
-      .select(hll_sketch_estimate(col("sketch"))).head().getLong(0)
-  }
-
-  /** ST25 — streaming BOTTOM-K (KMV) sketch maintenance: ST22's
-    * DETERMINISTIC counterpart. The persisted state is the per-group
-    * bottom-k hash table ([[graft.ops.Sketches]], ≤ k rows per group
-    * forever); each micro-batch reduces to its own sketch and merges in
-    * O(k) per group. Where the HLL union is only order-equivalent (the
-    * HIP estimator is discarded on union), the bottom-k merge law is
-    * EXACT — the streamed chain equals a single build over the full
-    * history bit-for-bit (q214's certificate, live), so a dashboard
-    * reading [[bottomKDistinctEstimate]] sees precisely what a cold
-    * rebuild would report. Same crash contract as ST16/ST22:
-    * `Upsert.recover`, batch-id inside the atomic swap, replays
-    * skipped (a set-union replay is harmless, the guard keeps the
-    * contract uniform).
-    */
-  def bottomKOnArrival(rows: DataFrame, groupCol: String, elemCol: String,
-      k: Int, targetPath: String, checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        bottomKMergeBatch(batch, groupCol, elemCol, k, targetPath, batchId)
-        ()
-      }
-      .start()
-
-  /** ST25's per-batch kernel (exposed for the replay spec): merge one
-    * micro-batch's bottom-k sketch into the persisted table unless
-    * `batchId` was already applied. An empty batch is skipped entirely
-    * (no write, no marker advance — the ST22 rule). Returns true when
-    * merged.
-    */
-  def bottomKMergeBatch(batch: DataFrame, groupCol: String, elemCol: String,
-      k: Int, targetPath: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    if (batch.isEmpty) return false
-    val bSketch = graft.ops.Sketches.bottomK(batch, groupCol, elemCol, k)
-    if (!exists) {
-      Upsert.writeAtomic(
-        bSketch.withColumn("batch_id", lit(batchId)), targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false
-      else {
-        val merged = graft.ops.Sketches
-          .merge(prev, bSketch, groupCol, k)
-          .withColumn("batch_id", lit(batchId))
-        Upsert.writeAtomic(merged, targetPath)
-        true
-      }
-    }
-  }
-
-  /** Read the ST25 sketch table's per-group KMV distinct estimates. */
-  def bottomKDistinctEstimate(spark: SparkSession, targetPath: String,
-      groupCol: String, k: Int): DataFrame = {
-    Upsert.recover(spark, targetPath)
-    graft.ops.Sketches.distinctEstimate(
-      spark.read.parquet(targetPath), groupCol, k)
-  }
-
-  /** ST31 — streaming GRID-FREE QUANTILE maintenance: the rank-KMV
-    * sketch ([[graft.ops.Sketches.rankSketch]], ≤ k rows per group
-    * forever) kept live as values arrive — each micro-batch sketches
-    * itself and folds in via `rankSketchMerge`, whose result is
-    * BIT-EQUAL to a cold rebuild over the full history (the q242 law),
-    * so any moment's [[rankQuantilesRead]] is exactly what a batch
-    * build would answer. Percentiles of a continuous stream with no
-    * pre-declared grid — the live sibling of ST23's fixed-grid ECDF
-    * monitor. The kept-value COUNTS add (not idempotent) ⇒ the batch-id
-    * replay guard is load-bearing (the ST26/ST28/ST29/ST30 class).
-    */
-  def rankSketchOnArrival(rows: DataFrame, groupCol: String,
-      valueCol: String, k: Int, targetPath: String,
-      checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        rankSketchMergeBatch(batch, groupCol, valueCol, k, targetPath,
-          batchId)
-        ()
-      }
-      .start()
-
-  /** ST31's per-batch kernel (exposed for the replay spec) — the
-    * ST26/ST28 contract: recover, skip empty, refuse replayed batch
-    * ids, atomic swap. Returns true when merged.
-    */
-  def rankSketchMergeBatch(batch: DataFrame, groupCol: String,
-      valueCol: String, k: Int, targetPath: String,
-      batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    if (batch.isEmpty) return false
-    val bSketch = graft.ops.Sketches.rankSketch(batch, groupCol,
-      valueCol, k)
-    if (!exists) {
-      Upsert.writeAtomic(
-        bSketch.withColumn("batch_id", lit(batchId)), targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false
-      else {
-        // rankSketchMerge projects (g, v, cnt, h) — batch_id drops there
-        val merged = graft.ops.Sketches
-          .rankSketchMerge(prev, bSketch, groupCol, k)
-          .withColumn("batch_id", lit(batchId))
-        Upsert.writeAtomic(merged, targetPath)
-        true
-      }
-    }
-  }
-
-  /** Read the ST31 table as a live percentile ladder — O(k·|pcts|) per
-    * group, no history re-read.
-    */
-  def rankQuantilesRead(spark: SparkSession, targetPath: String,
-      groupCol: String, pcts: Seq[Int]): DataFrame = {
-    Upsert.recover(spark, targetPath)
-    graft.ops.Sketches.quantilesFromRankSketch(
-      spark.read.parquet(targetPath).drop("batch_id"), groupCol, pcts)
-  }
-
-  /** ST26 — streaming SHARD-MANIFEST maintenance: the dataset card kept
-    * live at the ingest door. The persisted state is the per-shard
-    * manifest table ([[graft.ops.Manifest]], `shards` rows forever);
-    * each micro-batch reduces to its OWN manifest (one scan + one
-    * group-by over the batch) and folds in via
-    * [[graft.ops.Manifest.mergeManifests]] — counts/totals add, id
-    * ranges combine, mod-P checksums ADD, so the streamed chain equals
-    * a single manifest over the full history EXACTLY (q217's merge law,
-    * live). Unlike the set-union sketches (ST22/ST25) the merge is NOT
-    * replay-idempotent — a re-applied batch would double-count — so
-    * here the ST16-style batch-id guard inside the atomic swap is
-    * load-bearing, not just contract-uniform.
-    */
-  def manifestOnArrival(rows: DataFrame, idCol: String, textCol: String,
-      shards: Int, targetPath: String, checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        manifestMergeBatch(batch, idCol, textCol, shards, targetPath,
-          batchId)
-        ()
-      }
-      .start()
-
-  /** ST26's per-batch kernel (exposed for the replay spec): merge one
-    * micro-batch's manifest into the persisted table unless `batchId`
-    * was already applied — the guard that keeps the NON-idempotent
-    * additive merge exactly-once under at-least-once replay. An empty
-    * batch is skipped entirely (no write, no marker advance — the ST22
-    * rule). Returns true when merged.
-    */
-  def manifestMergeBatch(batch: DataFrame, idCol: String, textCol: String,
-      shards: Int, targetPath: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    if (batch.isEmpty) return false
-    val bMan = graft.ops.Manifest.shardManifest(batch, idCol, textCol,
-      shards)
-    if (!exists) {
-      Upsert.writeAtomic(
-        bMan.withColumn("batch_id", lit(batchId)), targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false
-      else {
-        val merged = graft.ops.Manifest
-          .mergeManifests(prev.drop("batch_id"), bMan)
-          .withColumn("batch_id", lit(batchId))
-        Upsert.writeAtomic(merged, targetPath)
-        true
-      }
-    }
-  }
-
-  /** Read the ST26 manifest table's current dataset-card rows. */
-  def manifestRead(spark: SparkSession, targetPath: String): DataFrame = {
-    Upsert.recover(spark, targetPath)
-    spark.read.parquet(targetPath).drop("batch_id")
-  }
-
-  /** ST28 — streaming COUNT-MIN maintenance: live per-group frequency
-    * counters at the ingest door. The persisted state is the sparse CMS
-    * table ([[graft.ops.LinearSketches]], ≤ depth·width rows per group
-    * FOREVER); each micro-batch sketches ITSELF (one scan, one
-    * map-side-combinable group-by) and folds in via
-    * [[graft.ops.LinearSketches.cmsMerge]] — element-wise integer
-    * counter ADDITION, the LINEAR merge law, so the streamed chain
-    * equals one sketch over the full history BIT-FOR-BIT (q222's
-    * certificate, live). Like ST26 (and unlike the set-union sketches
-    * ST22/ST25) the merge is NOT replay-idempotent — a re-applied batch
-    * would double its counters — so the batch-id guard inside the
-    * atomic swap is load-bearing.
-    */
-  def cmsOnArrival(rows: DataFrame, groupCol: String, elemCol: String,
-      depth: Int, width: Int, targetPath: String,
-      checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        cmsMergeBatch(batch, groupCol, elemCol, depth, width, targetPath,
-          batchId)
-        ()
-      }
-      .start()
-
-  /** ST28's per-batch kernel (exposed for the replay spec): merge one
-    * micro-batch's CMS into the persisted table unless `batchId` was
-    * already applied; empty batches are skipped without advancing the
-    * marker (the ST22 rule). Returns true when merged.
-    */
-  def cmsMergeBatch(batch: DataFrame, groupCol: String, elemCol: String,
-      depth: Int, width: Int, targetPath: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    if (batch.isEmpty) return false
-    val bSketch = graft.ops.LinearSketches.cmsSketch(batch, groupCol,
-      elemCol, depth, width)
-    if (!exists) {
-      Upsert.writeAtomic(
-        bSketch.withColumn("batch_id", lit(batchId)), targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false
-      else {
-        // cmsMerge projects (group, r, b, cnt) — batch_id drops there
-        val merged = graft.ops.LinearSketches
-          .cmsMerge(prev, bSketch, groupCol)
-          .withColumn("batch_id", lit(batchId))
-        Upsert.writeAtomic(merged, targetPath)
-        true
-      }
-    }
-  }
-
-  /** Probe the ST28 CMS table for point-frequency estimates of
-    * `probes` (group, elem) rows — O(probes·depth) lookups against the
-    * frozen counters, corpus rows never re-read.
-    */
-  def cmsEstimateRead(spark: SparkSession, targetPath: String,
-      probes: DataFrame, groupCol: String, elemCol: String,
-      depth: Int, width: Int): DataFrame = {
-    Upsert.recover(spark, targetPath)
-    graft.ops.LinearSketches.cmsEstimate(
-      spark.read.parquet(targetPath).drop("batch_id"),
-      probes, groupCol, elemCol, depth, width)
-  }
-
-  /** ST29 — streaming MOMENT-STATS maintenance: the per-group
-    * (n, Σx, Σx²) table ([[graft.ops.Hypothesis.statsTable]], O(groups)
-    * rows forever) kept live at the ingest door; each micro-batch
-    * reduces to its own table and folds in via
-    * [[graft.ops.Hypothesis.mergeStatsTables]] (counts/sums ADD — the
-    * linear law, streamed chain ≡ cold rebuild exactly). With
-    * [[statsWelchRead]] this is a LIVE A/B monitor: any arriving
-    * cohort's own stats Welch-test against the persisted corpus table
-    * without re-reading a single corpus row (q231's probe, streaming).
-    * Additive ⇒ not replay-idempotent ⇒ the batch-id guard is
-    * load-bearing (the ST26/ST28 class).
-    */
-  def statsOnArrival(rows: DataFrame, groupCol: String, valueCol: String,
-      targetPath: String, checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        statsMergeBatch(batch, groupCol, valueCol, targetPath, batchId)
-        ()
-      }
-      .start()
-
-  /** ST29's per-batch kernel (exposed for the replay spec) — the
-    * ST26/ST28 contract: recover, skip empty, refuse replayed batch
-    * ids, atomic swap. Returns true when merged.
-    */
-  def statsMergeBatch(batch: DataFrame, groupCol: String, valueCol: String,
-      targetPath: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    if (batch.isEmpty) return false
-    val bStats = graft.ops.Hypothesis.statsTable(batch, groupCol,
-      col(valueCol))
-    if (!exists) {
-      Upsert.writeAtomic(
-        bStats.withColumn("batch_id", lit(batchId)), targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false
-      else {
-        // mergeStatsTables projects (g, n, s1, s2) — batch_id drops there
-        val merged = graft.ops.Hypothesis
-          .mergeStatsTables(prev, bStats)
-          .withColumn("batch_id", lit(batchId))
-        Upsert.writeAtomic(merged, targetPath)
-        true
-      }
-    }
-  }
-
-  /** Welch-probe an arriving cohort's OWN stats against the ST29
-    * persisted corpus table — the live A/B read: O(groups) work, no
-    * corpus rows.
-    */
-  def statsWelchRead(spark: SparkSession, targetPath: String,
-      cohort: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    Upsert.recover(spark, targetPath)
-    graft.ops.Hypothesis.welchFromStats(
-      spark.read.parquet(targetPath).drop("batch_id"),
-      graft.ops.Hypothesis.statsTable(cohort, groupCol, col(valueCol)),
-      groupCol)
-  }
-
-  /** ST30 — streaming CONFUSION-MATRIX maintenance: per-(group,
-    * threshold) tp/fp/fn/tn counts
-    * ([[graft.ops.Hypothesis.confusionCounts]], O(groups·thresholds)
-    * rows forever) kept live as labeled classifier outcomes arrive —
-    * the gate-tuning table (q233) without a corpus re-read: read
-    * precision/recall/F1 at any moment via [[confusionRead]]. Counts
-    * ADD (linear law ⇒ streamed chain ≡ cold rebuild bit-for-bit;
-    * additive ⇒ NOT replay-idempotent ⇒ the batch-id guard is
-    * load-bearing — the ST26/ST28/ST29 class).
-    *
-    * Deliberately NOT maintained here: ROC-AUC itself. Its exact linear
-    * reduction is the per-DISTINCT-score (n₊, n₋) table (q232's `pv`
-    * relation) — additive, but its state grows with score cardinality,
-    * unbounded for continuous scores; the constant-state door statistic
-    * is this ladder, and the full-history AUC stays a batch read over
-    * the distinct-score table (or its grid/rank-sketch compaction).
-    */
-  def confusionOnArrival(rows: DataFrame, groupCol: String,
-      labelCol: String, scoreCol: String, thresholds: Seq[Double],
-      targetPath: String, checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        confusionMergeBatch(batch, groupCol, labelCol, scoreCol,
-          thresholds, targetPath, batchId)
-        ()
-      }
-      .start()
-
-  /** ST30's per-batch kernel (exposed for the replay spec) — the
-    * ST26/ST28/ST29 contract: recover, skip empty, refuse replayed
-    * batch ids, atomic swap. Returns true when merged.
-    */
-  def confusionMergeBatch(batch: DataFrame, groupCol: String,
-      labelCol: String, scoreCol: String, thresholds: Seq[Double],
-      targetPath: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    if (batch.isEmpty) return false
-    val bCounts = graft.ops.Hypothesis.confusionCounts(batch, groupCol,
-      col(labelCol), col(scoreCol), thresholds)
-    if (!exists) {
-      Upsert.writeAtomic(
-        bCounts.withColumn("batch_id", lit(batchId)), targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false
-      else {
-        // mergeConfusion projects (g, thr, tp, fp, fn, tn) — batch_id
-        // drops there
-        val merged = graft.ops.Hypothesis
-          .mergeConfusion(prev, bCounts, groupCol)
-          .withColumn("batch_id", lit(batchId))
-        Upsert.writeAtomic(merged, targetPath)
-        true
-      }
-    }
-  }
-
-  /** Read the ST30 table as the precision/recall/F1 gate-tuning surface
-    * (q233's output, live) — O(groups·thresholds), no corpus rows.
-    */
-  def confusionRead(spark: SparkSession, targetPath: String,
-      groupCol: String): DataFrame = {
-    Upsert.recover(spark, targetPath)
-    graft.ops.Hypothesis.confusionRatios(
-      spark.read.parquet(targetPath).drop("batch_id"), groupCol)
-  }
-
-  /** ST21 — streaming TOPIC ROUTING on arrival: each micro-batch of
-    * documents is assigned to its best-matching named term set by the
-    * MaxSim rule ([[graft.ext.Retrieval.maxSimRoute]], q200) — the
-    * router in front of a topic-sharded corpus, run at the door. The
-    * only non-batch state is the broadcast (topic, term) list, so each
-    * probe is purely O(batch) — no frozen corpus structure needed.
-    * `sink` receives (id, topic, score) per micro-batch.
-    */
-  def routeOnArrival(docs: DataFrame, idCol: String, textCol: String,
-      topics: Map[String, Seq[String]])(
-      sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.ext.Retrieval.maxSimRoute(batch, idCol, textCol, topics))
-      }
-      .start()
-
-  /** ST16 — STREAMING COVARIANCE maintenance: each micro-batch of
-    * arriving vectors is reduced to its integer covariance sketch
-    * ([[graft.ext.Similarity.covarianceSums]]) and MERGED into the
-    * persisted sketch table by per-cell addition — the streaming form of
-    * the q174 incremental covariance, and the general pattern for any
-    * order-free-sum statistic: the state is a mergeable sketch in a
-    * parquet table, each batch pays O(batch) + |sketch|, and
-    * `finalizeCovariance` over the table yields the exact full-history
-    * matrix at any moment. Crash contract: `Upsert.recover` before the
-    * existence check, atomic swap after the merge — PLUS a replay guard
-    * that ST5 doesn't need: foreachBatch is at-least-once, and an
-    * ADDITIVE merge (unlike ST5's by-key replace) double-counts a
-    * replayed batch. The sketch therefore carries a `(-2, -2, batchId)`
-    * marker row inside the same atomic swap; a batch whose id is ≤ the
-    * stored marker was already applied and is skipped. The marker cell
-    * is outside the sketch's value domain (cells have i,j ≥ 0; means
-    * j = -1; count (-1,-1)), so `finalizeCovariance` never sees it.
-    */
-  def covarianceOnArrival(vecs: DataFrame, vecCol: String, idCol: String,
-      targetPath: String, checkpoint: String): StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        covarianceMergeBatch(batch, vecCol, idCol, targetPath, batchId)
-        ()
-      }
-      .start()
-
-  /** ST16's per-batch kernel, exposed for the replay-idempotence spec:
-    * merge one micro-batch's covariance sketch into the persisted table
-    * unless `batchId` was already applied (see [[covarianceOnArrival]]).
-    * Returns true when the batch was merged, false when skipped as a
-    * replay.
-    */
-  def covarianceMergeBatch(batch: DataFrame, vecCol: String, idCol: String,
-      targetPath: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    val marker = spark.range(1).select(
-      lit(-2).as("i"), lit(-2).as("j"), lit(batchId).as("s"))
-    if (!exists) {
-      val sums = graft.ext.Similarity.covarianceSums(batch, vecCol, idCol)
-      Upsert.writeAtomic(sums.unionByName(marker), targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.filter(col("i") === -2 && col("j") === -2)
-        .agg(coalesce(max(col("s")), lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false // at-least-once replay — already merged
-      else {
-        val sums = graft.ext.Similarity.covarianceSums(batch, vecCol, idCol)
-        val merged = graft.ext.Similarity.mergeCovarianceSums(
-          prev.filter(!(col("i") === -2 && col("j") === -2)), sums)
-        Upsert.writeAtomic(merged.unionByName(marker), targetPath)
-        true
-      }
-    }
-  }
-
-  /** ST18 — streaming CLUSTER ASSIGNMENT on arrival: each micro-batch of
-    * payloads adopts corpus cluster labels through the frozen frame-0
-    * perceptual-hash table ([[graft.ext.Multimodal.assignToPhashClusters]],
-    * q187) — the online-clustering step run continuously: arriving
-    * near-duplicate images land in their existing cluster (and lose the
-    * keeper flag) the moment they arrive; novel images found fresh
-    * clusters. Same foreachBatch rationale as ST8–ST17. `sink` receives
-    * (media_id, cluster_id, is_keeper) per micro-batch.
-    */
-  def assignClustersOnArrival(docs: DataFrame, corpusLabels: DataFrame,
-      corpusSig: DataFrame, idCol: String, textCol: String,
-      maxDist: Int = 4)(sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.ext.Multimodal.assignToPhashClusters(corpusLabels,
-          corpusSig, graft.ext.Multimodal.asMedia(batch, idCol, textCol),
-          maxDist))
-      }
-      .start()
-
-  /** ST17 — streaming CDC byte-delta on arrival: each micro-batch of
-    * payloads is content-defined-chunked and probed against the FROZEN
-    * corpus chunk-hash table ([[graft.ext.Multimodal.incrementalCdcBytes]],
-    * q184) — the per-upload "bytes actually new" report a dedup store
-    * renders at the door, continuously. Same foreachBatch rationale as
-    * ST8–ST16: the probe needs per-batch aggregation. `sink` receives
-    * (media_id, n_chunks, n_bytes, new_bytes, new_frac) per micro-batch.
-    */
-  def cdcBytesOnArrival(docs: DataFrame, corpusChunks: DataFrame,
-      idCol: String, textCol: String)(
-      sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.ext.Multimodal.incrementalCdcBytes(corpusChunks,
-          graft.ext.Multimodal.asMedia(batch, idCol, textCol)))
-      }
-      .start()
-
-  /** ST14 batch kernel: survivors of one micro-batch of IMAGE payloads
-    * against a frozen corpus perceptual-hash table — every arriving
-    * payload whose frame-0 aHash ([[graft.ext.Multimodal.frameHashes]])
-    * lies within `maxDist` bits of any corpus image drops. Plain
-    * DataFrame → DataFrame for direct batch/stream parity testing.
+  /** ST14 kernel: survivors of one micro-batch of IMAGE payloads against
+    * a frozen corpus perceptual-hash table — every payload whose frame-0
+    * aHash ([[graft.ext.Multimodal.frameHashes]]) lies within `maxDist`
+    * bits of any corpus image drops (the q160 band probe), so re-encoded
+    * copies drop even though their bytes differ.
     */
   def phashDedupBatch(corpusSig: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, maxDist: Int): DataFrame =
-    batch.join(
-      graft.ext.Multimodal.incrementalPhashPairs(corpusSig,
-        graft.ext.Multimodal.asMedia(batch, idCol, textCol), maxDist)
-        .select(col("doc_a").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")
+    dropMatched(batch, graft.ext.Multimodal.incrementalPhashPairs(corpusSig,
+      graft.ext.Multimodal.asMedia(batch, idCol, textCol), maxDist),
+      "doc_a", idCol)
 
-  /** ST14 — streaming IMAGE dedup-on-arrival: the multimodal sibling of
-    * ST8 (exact text), ST7b (token LSH), and ST13 (embedding SRP): each
-    * micro-batch of arriving payloads is stub-decoded, perceptually
-    * hashed, and probed against a FROZEN corpus signature table with the
-    * O(batch) [[graft.ext.Multimodal.incrementalPhashPairs]] band probe
-    * (q160); only payloads with NO corpus image within `maxDist` bits
-    * survive — re-encoded copies of corpus images drop even though their
-    * bytes differ. Same foreachBatch rationale as ST8/ST13: the probe
-    * needs per-batch aggregation an append-mode plan cannot host inline.
-    * The corpus pays one decode+hash pass ever; `sink` receives each
-    * micro-batch's survivors.
+  /** ST19 kernel: survivors of one micro-batch of (media_id, payload)
+    * AUDIO rows against the frozen corpus energy-delta fingerprint table.
+    * Payloads are parsed by `decode` (e.g. [[graft.ext.Containers.decodeWav]]
+    * — real RIFF bytes), fingerprinted
+    * ([[graft.ext.Multimodal.audioFingerprint]], q190) and probed at
+    * Hamming radius `maxDist` (q191); arrivals within it of any corpus
+    * stream drop (re-encodes, amplitude-scaled re-uploads).
     */
-  def phashDedupOnArrival(docs: DataFrame, corpusSig: DataFrame,
-      idCol: String, textCol: String, maxDist: Int = 4)(
-      sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(phashDedupBatch(corpusSig, batch, idCol, textCol, maxDist))
-      }
-      .start()
+  def audioDedupBatch(corpusFp: DataFrame, batch: DataFrame, window: Int,
+      maxDist: Int, decode: Array[Byte] => Array[Int]): DataFrame = {
+    import batch.sparkSession.implicits._
+    val media = batch
+      .select(col("media_id").cast("long").as("media_id"), col("payload"))
+      .as[graft.ext.Multimodal.MediaRow]
+    dropMatched(media.toDF(), graft.ext.Multimodal.incrementalAudioPairs(
+      corpusFp, media, window, maxDist, decode), "doc_a", "media_id")
+  }
 
-  def gateWithEditOnArrival(docs: DataFrame,
-      index: graft.ext.Dedup.GramIndex, corpusSig: DataFrame,
-      corpusTexts: DataFrame, editIndex: DataFrame, editCorpus: DataFrame,
-      idCol: String, textCol: String, editCol: String, k: Int,
-      tauNum: Int = 1, tauDen: Int = 2, maxDist: Int = 3)(
-      sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.ext.Dedup.ingestGateWithEdit(index, corpusSig,
-          corpusTexts, editIndex, editCorpus, batch, idCol, textCol,
-          editCol, k, tauNum, tauDen, maxDist))
-      }
-      .start()
-
-  // ----------------------------------------------------------- ST32/ST33
+  /** ST23 kernel: one micro-batch's value distribution two-sample-tested
+    * against the FROZEN corpus ECDF count table with the statistics
+    * ST20's fixed PSI buckets can miss — KS (worst quantile gap) and
+    * Wasserstein-1 (shift magnitude in value units), the q201/q202
+    * incremental probes. Pass `step` when the table is a
+    * [[graft.ops.Drift.quantizedEcdfTable]]: the batch snaps to the same
+    * grid (the shared-grid exactness contract). One row:
+    * (n_a, n_b, d_stat, at_value, w1).
+    */
+  def ecdfDriftBatch(corpusCounts: DataFrame, batch: DataFrame,
+      valueCol: String, step: Option[Double] = None,
+      nBuckets: Int = 256): DataFrame = {
+    import graft.ops.Drift
+    val (ks, w1) = step match {
+      case Some(s) => (
+        Drift.incrementalKsQuantized(corpusCounts, batch, valueCol, s,
+          nBuckets),
+        Drift.incrementalWassersteinQuantized(corpusCounts, batch, valueCol,
+          s, nBuckets))
+      case None => (
+        Drift.incrementalKs(corpusCounts, batch, valueCol, nBuckets),
+        Drift.incrementalWasserstein(corpusCounts, batch, valueCol,
+          nBuckets))
+    }
+    ks.crossJoin(w1.select(col("w1")))
+  }
 
   /** The binaryFile schema (file streams require an explicit schema). */
   private val binaryFileSchema: StructType = StructType(Seq(
@@ -1478,19 +670,20 @@ object EventStreams {
       .option("pathGlobFilter", "*.warc.gz")
       .load(dir)
 
-  /** ST32's per-batch kernel: shard bytes → per-record gzip member
-    * split → record walk → WET conversion view → the FOUR-signal ingest
-    * gate against the frozen corpus structures (the q244 capstone's
-    * downstream half, run per micro-batch). The edit-signal key is
+  /** ST32 kernel — STREAMING WARC/WET INGESTION, the continuous form of
+    * the q244 crawl door: shard bytes → per-record gzip member split →
+    * record walk → WET conversion view → the FOUR-signal ingest gate
+    * against the frozen corpus structures. The container parse touches
+    * only the new shards. The edit-signal key is
     * `substring(text, 1, editKeyLen)` — the caller must have built
     * `editIndex`/`editCorpus` over the same projection of the corpus.
     * The gate's signal probes read the corpus structures BY the column
     * names they were built with (`corpusIdCol`, `editCol`), so the WET
-    * url and derived key ride under those names through the gate (value types never mix —
-    * batch ids and corpus ids live on separate columns throughout) and
-    * comes back out as `url`. Returns (url, date, text, exact_dup,
-    * jac_dup, sh_dup, ed_dup, admit): the verdict plus the decoded
-    * document, so the admit path can append downstream without
+    * url and derived key ride under those names through the gate (value
+    * types never mix — batch ids and corpus ids live on separate columns
+    * throughout) and come back out as `url`. Returns (url, date, text,
+    * exact_dup, jac_dup, sh_dup, ed_dup, admit): the verdict plus the
+    * decoded document, so the admit path can append downstream without
     * re-parsing the container.
     */
   def warcGateBatch(shards: DataFrame, index: graft.ext.Dedup.GramIndex,
@@ -1511,267 +704,330 @@ object EventStreams {
         col("jac_dup"), col("sh_dup"), col("ed_dup"), col("admit"))
   }
 
-  /** ST32 — STREAMING WARC/WET INGESTION: the continuous form of the
-    * q244 crawl door. Arriving `.warc.gz` shards ([[readWarcShardStream]])
-    * flow through the real container codec into the 4-signal ingest
-    * gate per micro-batch; `sink` receives each batch's verdict table
-    * with the decoded text attached. Cost per batch is O(batch): the
-    * container parse touches only the new shards and every gate probe
-    * hits FROZEN corpus structures (GramIndex / simhash signatures /
-    * segment index) the corpus paid for once — the ST9/ST12 posture,
-    * now starting from crawl bytes instead of pre-decoded rows.
+  // ---------------------------------------------------- persisted state
+
+  /** One persisted streaming state: how a micro-batch reduces to its own
+    * table (`summarize`) and how the stored table absorbs it (`merge`).
+    * Every member obeys its merge law — merge(summarize(A), summarize(B))
+    * equals summarize(A ∪ B), exactly or (HLL) up to the estimator —
+    * so any moment's stored table is what a cold build over the stream
+    * history would be, and reads never re-scan a stream row. The crash
+    * contract lives once, in [[mergeBatch]]; a member never sees the
+    * `batch_id` column.
     */
-  def warcGateOnArrival(shards: DataFrame,
-      index: graft.ext.Dedup.GramIndex, corpusSig: DataFrame,
-      corpusTexts: DataFrame, editIndex: DataFrame, editCorpus: DataFrame,
-      editKeyLen: Int, k: Int, tauNum: Int = 1, tauDen: Int = 2,
-      maxDist: Int = 3, corpusIdCol: String = "doc_id",
-      editCol: String = "pfx")(
-      sink: DataFrame => Unit): StreamingQuery =
-    shards.writeStream
+  sealed abstract class MergeState private {
+    def summarize(batch: DataFrame): DataFrame
+    def merge(prev: DataFrame, summary: DataFrame): DataFrame
+  }
+
+  object MergeState {
+
+    /** ST22 — distinct count: ONE Datasketches HLL sketch row. Union is a
+      * per-register MAX, so merge order never changes the result; an
+      * estimate can differ by a hair from a direct build (the HIP
+      * estimator is discarded on union — the documented cost of
+      * mergeability). O(1) state; read with `hll_sketch_estimate`.
+      */
+    final case class Hll(keyCol: String) extends MergeState {
+      def summarize(batch: DataFrame): DataFrame =
+        batch.agg(hll_sketch_agg(col(keyCol)).as("sketch"))
+      def merge(prev: DataFrame, summary: DataFrame): DataFrame =
+        prev.unionByName(summary)
+          .agg(hll_union_agg(col("sketch")).as("sketch"))
+    }
+
+    /** ST25 — bottom-k (KMV) per group ([[graft.ops.Sketches.bottomK]],
+      * ≤ k rows per group forever): the EXACT merge law, streamed chain ≡
+      * cold rebuild bit-for-bit (q214). Read with
+      * [[graft.ops.Sketches.distinctEstimate]].
+      */
+    final case class BottomK(groupCol: String, elemCol: String, k: Int)
+        extends MergeState {
+      def summarize(batch: DataFrame): DataFrame =
+        graft.ops.Sketches.bottomK(batch, groupCol, elemCol, k)
+      def merge(prev: DataFrame, summary: DataFrame): DataFrame =
+        graft.ops.Sketches.merge(prev, summary, groupCol, k)
+    }
+
+    /** ST31 — grid-free quantiles: the rank-KMV sketch
+      * ([[graft.ops.Sketches.rankSketch]], ≤ k rows per group), merged
+      * bit-equal to a cold rebuild (q242). Kept-value counts ADD, so a
+      * replay would double them. Read with
+      * [[graft.ops.Sketches.quantilesFromRankSketch]].
+      */
+    final case class RankSketch(groupCol: String, valueCol: String, k: Int)
+        extends MergeState {
+      def summarize(batch: DataFrame): DataFrame =
+        graft.ops.Sketches.rankSketch(batch, groupCol, valueCol, k)
+      def merge(prev: DataFrame, summary: DataFrame): DataFrame =
+        graft.ops.Sketches.rankSketchMerge(prev, summary, groupCol, k)
+    }
+
+    /** ST26 — the per-shard dataset card ([[graft.ops.Manifest]],
+      * `shards` rows): counts and mod-P checksums ADD, id ranges combine,
+      * so the chain equals one manifest over the full history (q217).
+      */
+    final case class Manifest(idCol: String, textCol: String, shards: Int)
+        extends MergeState {
+      def summarize(batch: DataFrame): DataFrame =
+        graft.ops.Manifest.shardManifest(batch, idCol, textCol, shards)
+      def merge(prev: DataFrame, summary: DataFrame): DataFrame =
+        graft.ops.Manifest.mergeManifests(prev, summary)
+    }
+
+    /** ST28 — sparse count-min per group
+      * ([[graft.ops.LinearSketches.cmsSketch]], ≤ depth·width rows per
+      * group): counters ADD, the linear law, bit-equal to a cold rebuild
+      * (q222). Read with [[graft.ops.LinearSketches.cmsEstimate]].
+      */
+    final case class Cms(groupCol: String, elemCol: String, depth: Int,
+        width: Int) extends MergeState {
+      def summarize(batch: DataFrame): DataFrame =
+        graft.ops.LinearSketches.cmsSketch(batch, groupCol, elemCol, depth,
+          width)
+      def merge(prev: DataFrame, summary: DataFrame): DataFrame =
+        graft.ops.LinearSketches.cmsMerge(prev, summary, groupCol)
+    }
+
+    /** ST29 — per-group (n, Σx, Σx²)
+      * ([[graft.ops.Hypothesis.statsTable]]): counts and sums ADD. With [[graft.ops.Hypothesis.welchFromStats]]
+      * this is a live A/B monitor — an arriving cohort's own stats
+      * Welch-test against the stored table, no corpus row re-read (q231).
+      */
+    final case class Stats(groupCol: String, valueCol: String)
+        extends MergeState {
+      def summarize(batch: DataFrame): DataFrame =
+        graft.ops.Hypothesis.statsTable(batch, groupCol, col(valueCol))
+      def merge(prev: DataFrame, summary: DataFrame): DataFrame =
+        graft.ops.Hypothesis.mergeStatsTables(prev, summary)
+    }
+
+    /** ST30 — per-(group, threshold) tp/fp/fn/tn
+      * ([[graft.ops.Hypothesis.confusionCounts]]): counts ADD; read
+      * precision/recall/F1 with [[graft.ops.Hypothesis.confusionRatios]]
+      * (q233, live). ROC-AUC is deliberately not kept: its exact linear
+      * reduction is the per-distinct-score table, whose state grows with
+      * score cardinality; the full-history AUC stays a batch read.
+      */
+    final case class Confusion(groupCol: String, labelCol: String,
+        scoreCol: String, thresholds: Seq[Double]) extends MergeState {
+      def summarize(batch: DataFrame): DataFrame =
+        graft.ops.Hypothesis.confusionCounts(batch, groupCol, col(labelCol),
+          col(scoreCol), thresholds)
+      def merge(prev: DataFrame, summary: DataFrame): DataFrame =
+        graft.ops.Hypothesis.mergeConfusion(prev, summary, groupCol)
+    }
+
+    /** ST34 — per-(group, bucket) live counts on the integer bucket
+      * ladder ([[graft.ops.Drift.bucketOf]], groups·(|thresholds|+1) rows):
+      * counts ADD. Read as the PSI alarm against a frozen reference count
+      * table with [[graft.ops.Drift.psiOfCounts]] (the q257 mirror).
+      */
+    final case class DriftCounts(groupCol: String, valueCol: String,
+        thresholds: Seq[Long]) extends MergeState {
+      def summarize(batch: DataFrame): DataFrame =
+        batch.groupBy(col(groupCol),
+            graft.ops.Drift.bucketOf(col(valueCol), thresholds).as("bucket"))
+          .agg(count(lit(1)).as("n_live"))
+      def merge(prev: DataFrame, summary: DataFrame): DataFrame =
+        prev.unionByName(summary).groupBy(groupCol, "bucket")
+          .agg(sum("n_live").as("n_live"))
+    }
+
+    /** ST16 — the integer covariance sketch
+      * ([[graft.ext.Similarity.covarianceSums]]) merged by per-cell
+      * addition: the streaming q174, and the pattern for any order-free
+      * sum. [[graft.ext.Similarity.finalizeCovariance]] over the stored
+      * table is the exact full-history matrix at any moment.
+      */
+    final case class Covariance(vecCol: String, idCol: String)
+        extends MergeState {
+      def summarize(batch: DataFrame): DataFrame =
+        graft.ext.Similarity.covarianceSums(batch, vecCol, idCol)
+      def merge(prev: DataFrame, summary: DataFrame): DataFrame =
+        graft.ext.Similarity.mergeCovarianceSums(prev, summary)
+    }
+
+    /** ST35 — crawl-frontier membership: arriving keys OR into the
+      * [[graft.ext.Bloom]] word table (≤ mBits/63 rows), so "seen?"
+      * reads at O(k · probe) with [[graft.ext.Bloom.probe]]. The law is
+      * `∨`, idempotent: a batch replayed under a NEW id is a no-op by
+      * algebra, so the shared replay guard is uniformity here, not
+      * correctness.
+      */
+    final case class Frontier(keyCol: String, p: graft.ext.Bloom.Params)
+        extends MergeState {
+      def summarize(batch: DataFrame): DataFrame =
+        graft.ext.Bloom.build(batch, keyCol, p)
+      def merge(prev: DataFrame, summary: DataFrame): DataFrame =
+        graft.ext.Bloom.merge(prev, summary)
+    }
+  }
+
+  /** The stored state at `targetPath`, if any, after [[Upsert.recover]]:
+    * a crash between [[Upsert.writeAtomic]]'s two renames leaves the
+    * table only at `<targetPath>.old`, and reading before the restore
+    * would merge against nothing — silently dropping the accumulated
+    * state. A table that exists but cannot be read fails the batch.
+    */
+  private def stored(spark: SparkSession,
+      targetPath: String): Option[DataFrame] = {
+    Upsert.recover(spark, targetPath)
+    val tgt = new org.apache.hadoop.fs.Path(targetPath)
+    if (tgt.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(tgt))
+      Some(spark.read.parquet(targetPath))
+    else None
+  }
+
+  /** The crash contract of every persisted streaming state, once:
+    * recover the table, skip an EMPTY batch (no write, and the `batch_id`
+    * marker must not advance, or a replayed non-empty sibling of the same
+    * id would be dropped), and refuse a `batchId` at or below the stored
+    * marker — foreachBatch is at-least-once, and an additive merge would
+    * silently double-count a batch redelivered after a crash between the
+    * swap and the checkpoint commit. Otherwise `step` runs on the stored
+    * table (None on the first batch; the `batch_id` column included).
+    * Returns None when the batch was skipped.
+    */
+  private def guarded[A](batch: DataFrame, targetPath: String,
+      batchId: Long)(step: Option[DataFrame] => A): Option[A] = {
+    val prev = stored(batch.sparkSession, targetPath)
+    if (batch.isEmpty) return None
+    val applied = prev.fold(Long.MinValue)(_.agg(coalesce(
+      max(col("batch_id")), lit(Long.MinValue))).head().getLong(0))
+    if (applied >= batchId) None else Some(step(prev))
+  }
+
+  /** Swap `state` in at `targetPath`, stamped with `batchId` inside the
+    * same atomic write — the marker can never disagree with the data.
+    */
+  private def swap(state: DataFrame, targetPath: String,
+      batchId: Long): Unit =
+    Upsert.writeAtomic(state.withColumn("batch_id", lit(batchId)),
+      targetPath)
+
+  /** Merge one micro-batch into the persisted `state` table at
+    * `targetPath` under the shared crash contract (see [[guarded]]): the
+    * first batch writes `state.summarize(batch)`, later ones
+    * `state.merge(stored, summary)`. Returns true when merged, false when
+    * skipped as empty or as a replay.
+    */
+  def mergeBatch(state: MergeState, batch: DataFrame, targetPath: String,
+      batchId: Long): Boolean =
+    guarded(batch, targetPath, batchId) { prev =>
+      val summary = state.summarize(batch)
+      swap(prev.fold(summary)(p => state.merge(p.drop("batch_id"), summary)),
+        targetPath, batchId)
+    }.isDefined
+
+  /** The stateful on-arrival surface: a checkpointed append stream that
+    * drains what is available (`AvailableNow`) and hands each micro-batch
+    * and its id to `step` — `mergeBatch(state, _, path, _)` for a
+    * [[MergeState]], or a verdict kernel ([[hostCapMergeBatch]],
+    * [[crawlDoorMergeBatch]]) feeding a sink.
+    */
+  def mergeOnArrival(rows: DataFrame, checkpoint: String)(
+      step: (DataFrame, Long) => Unit): StreamingQuery =
+    rows.writeStream
       .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(warcGateBatch(batch, index, corpusSig, corpusTexts,
-          editIndex, editCorpus, editKeyLen, k, tauNum, tauDen, maxDist,
-          corpusIdCol, editCol))
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        step(batch, batchId)
       }
       .start()
 
-  /** ST33's per-batch kernel (exposed for the replay spec): render
-    * per-document HOST-CAP verdicts for one micro-batch against the
-    * persisted per-host admitted counts, then fold the batch's admits
-    * into the state — unless `batchId` was already applied (the
-    * ST26/ST28 batch-id guard: count addition is NOT replay-idempotent).
-    * Within a batch, docs compete FCFS by `orderCol` (`row_number` per
-    * host — the [[graft.ext.Curation.perHostCap]] window, so the
-    * partial group limit bounds the exchange); a doc admits iff
-    * prior_admitted + its in-batch rank ≤ cap. State stays O(hosts)
-    * forever. Returns None on replay/empty (no write, no verdicts),
-    * else Some(verdicts) MATERIALIZED before the state swap (the
-    * verdict plan reads the state parquet the swap replaces).
+  /** Read a persisted state table: recover, read, drop the `batch_id`
+    * marker. Pass the result to the state's reader
+    * ([[graft.ops.Sketches]], [[graft.ops.Hypothesis]],
+    * [[graft.ops.Drift]], [[graft.ext.Bloom]]).
+    */
+  def readState(spark: SparkSession, targetPath: String): DataFrame = {
+    Upsert.recover(spark, targetPath)
+    spark.read.parquet(targetPath).drop("batch_id")
+  }
+
+  // ------------------------------------------------------- ST33 / ST36
+
+  /** The per-host FCFS cap shared by ST33 and ST36: rank `rows` per
+    * `hostCol` by `orderCol` (`row_number` — the
+    * [[graft.ext.Curation.perHostCap]] window, so the partial group limit
+    * bounds the exchange) and admit iff the host's prior admitted count
+    * in the cap state plus the rank ≤ `cap`. Adds `admit`.
+    */
+  private def capAdmit(rows: DataFrame, hostCol: String, orderCol: String,
+      cap: Int, prev: Option[DataFrame]): DataFrame = {
+    val ranked = rows.withColumn("__rn", row_number().over(
+      org.apache.spark.sql.expressions.Window
+        .partitionBy(col(hostCol)).orderBy(col(orderCol))))
+    prev.fold(ranked.withColumn("__prev", lit(0L))) { p =>
+      ranked.join(broadcast(p.select(col("host").as(hostCol),
+        col("n_admitted").as("__prev"))), Seq(hostCol), "left_outer")
+    }
+      .withColumn("admit",
+        col("__rn") + coalesce(col("__prev"), lit(0L)) <= cap)
+      .drop("__rn", "__prev")
+  }
+
+  /** Fold a batch's admits (one row per admitted doc, column `host`) into
+    * the per-host admitted counts and swap the cap state in.
+    */
+  private def capFold(prev: Option[DataFrame], admittedHosts: DataFrame,
+      capPath: String, batchId: Long): Unit = {
+    val fresh = admittedHosts.groupBy("host")
+      .agg(count(lit(1)).as("n_admitted"))
+    swap(prev.fold(fresh)(p => p.select(col("host"), col("n_admitted"))
+        .unionByName(fresh).groupBy("host")
+        .agg(sum("n_admitted").as("n_admitted"))),
+      capPath, batchId)
+  }
+
+  /** ST33 — STREAMING PER-HOST CAP: the [[graft.ext.Curation.perHostCap]]
+    * crawl-curation primitive rendered on arrival — no host may exceed
+    * `cap` admitted documents across the whole stream history. The state
+    * is the per-host admitted-count table (O(hosts) rows forever; counts
+    * ADD, so the replay guard is load-bearing). Within a batch, docs
+    * compete FCFS by `orderCol`; each verdict is final when emitted.
+    * Returns None when skipped (empty or replay: no write, no verdicts),
+    * else Some(verdicts) — (…, admit, host) — MATERIALIZED before the
+    * state swap (the verdict plan reads the state parquet the swap
+    * replaces). Run on a stream with [[mergeOnArrival]].
     */
   def hostCapMergeBatch(batch: DataFrame, idCol: String, urlCol: String,
       orderCol: String, cap: Int, targetPath: String, batchId: Long)
       : Option[DataFrame] = {
     require(cap >= 1, s"hostCapMergeBatch: cap=$cap")
-    val spark = batch.sparkSession
-    import spark.implicits._
-    Upsert.recover(spark, targetPath)
-    if (batch.isEmpty) return None
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(
-      spark.sparkContext.hadoopConfiguration).exists(tgt)
-    val prev =
-      if (exists) spark.read.parquet(targetPath)
-      else Seq.empty[(String, Long, Long)]
-        .toDF("host", "n_admitted", "batch_id")
-    if (exists) {
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) return None
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__host")).orderBy(col(orderCol))
-    val verdicts = batch
-      .withColumn("__host", graft.ext.Curation.urlHost(col(urlCol)))
-      .withColumn("__rn", row_number().over(w))
-      .join(broadcast(prev.select(col("host").as("__host"),
-        col("n_admitted").as("__prev"))), Seq("__host"), "left_outer")
-      .withColumn("admit",
-        col("__rn") + coalesce(col("__prev"), lit(0L)) <= cap)
-      .withColumn("host", col("__host"))
-      .drop("__rn", "__prev", "__host")
-      .localCheckpoint() // verdicts must outlive the state swap below
-    val merged = prev.select(col("host"), col("n_admitted"))
-      .unionByName(verdicts.filter(col("admit"))
-        .groupBy("host").agg(count(lit(1)).as("n_admitted")))
-      .groupBy("host").agg(sum("n_admitted").as("n_admitted"))
-      .withColumn("batch_id", lit(batchId))
-    Upsert.writeAtomic(merged, targetPath)
-    Some(verdicts)
-  }
-
-  /** ST33 — STREAMING PER-HOST CAP: the [[graft.ext.Curation.perHostCap]]
-    * crawl-curation primitive rendered on arrival — no host may exceed
-    * `cap` admitted documents across the whole stream history. Persisted
-    * state is the per-host admitted-count table (O(hosts) rows forever,
-    * atomic swap + batch-id replay guard — the ST26/ST28 class); each
-    * arriving doc's verdict is final when emitted (admission is
-    * first-come-first-served across batches, by `orderCol` within one).
-    * `sink` receives each batch's (…, host, admit) verdicts.
-    */
-  def hostCapOnArrival(docs: DataFrame, idCol: String, urlCol: String,
-      orderCol: String, cap: Int, targetPath: String, checkpoint: String)(
-      sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        hostCapMergeBatch(batch, idCol, urlCol, orderCol, cap,
-          targetPath, batchId).foreach(sink)
-      }
-      .start()
-
-  /** Read the ST33 per-host admitted-count state. */
-  def hostCapRead(spark: SparkSession, targetPath: String): DataFrame = {
-    Upsert.recover(spark, targetPath)
-    spark.read.parquet(targetPath).select("host", "n_admitted")
-  }
-
-  // ---------------------------------------------------------------- ST34
-
-  /** ST34 — streaming DRIFT maintenance: per-(group, bucket) live
-    * counts of an arriving numeric stream on the integer bucket ladder
-    * ([[graft.ops.Drift.bucketOf]] — O(groups · (|thresholds|+1)) rows
-    * forever), so the PSI-vs-frozen-reference alarm
-    * ([[graft.ops.Drift.psiOfCounts]], the q257 batch mirror) reads at
-    * any moment without a corpus re-read via [[driftRead]]. Counts ADD
-    * (linear law ⇒ streamed chain ≡ cold rebuild bit-for-bit; additive
-    * ⇒ NOT replay-idempotent ⇒ the batch-id guard is load-bearing —
-    * the ST26/ST28/ST29/ST30/ST31 class).
-    */
-  def driftOnArrival(rows: DataFrame, groupCol: String, valueCol: String,
-      thresholds: Seq[Long], targetPath: String,
-      checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        driftMergeBatch(batch, groupCol, valueCol, thresholds,
-          targetPath, batchId)
-        ()
-      }
-      .start()
-
-  /** ST34's per-batch kernel (exposed for the replay spec) — the
-    * additive-state contract: recover, skip empty, refuse replayed
-    * batch ids, atomic swap. Returns true when merged.
-    */
-  def driftMergeBatch(batch: DataFrame, groupCol: String, valueCol: String,
-      thresholds: Seq[Long], targetPath: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    if (batch.isEmpty) return false
-    val bCounts = batch
-      .groupBy(col(groupCol),
-        graft.ops.Drift.bucketOf(col(valueCol), thresholds).as("bucket"))
-      .agg(count(lit(1)).as("n_live"))
-    if (!exists) {
-      Upsert.writeAtomic(
-        bCounts.withColumn("batch_id", lit(batchId)), targetPath)
-      true
-    } else {
-      val prev = spark.read.parquet(targetPath)
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) false
-      else {
-        val merged = prev.drop("batch_id")
-          .unionByName(bCounts)
-          .groupBy(groupCol, "bucket")
-          .agg(sum("n_live").as("n_live"))
-          .withColumn("batch_id", lit(batchId))
-        Upsert.writeAtomic(merged, targetPath)
-        true
-      }
+    guarded(batch, targetPath, batchId) { prev =>
+      val verdicts = capAdmit(
+          batch.withColumn("__host", graft.ext.Curation.urlHost(col(urlCol))),
+          "__host", orderCol, cap, prev)
+        .withColumn("host", col("__host"))
+        .drop("__host")
+        .localCheckpoint() // verdicts must outlive the state swap below
+      capFold(prev, verdicts.filter(col("admit")).select(col("host")),
+        targetPath, batchId)
+      verdicts
     }
   }
 
-  /** Read the ST34 state as the live drift alarm: per-group PSI terms
-    * of the accumulated stream against the frozen reference count
-    * table `ref` (group, bucket, n_ref — one
-    * [[graft.ops.Drift.referenceCounts]] pass, persisted once).
-    * O(groups · buckets), no stream rows.
-    */
-  def driftRead(spark: SparkSession, targetPath: String, groupCol: String,
-      ref: DataFrame): DataFrame = {
-    Upsert.recover(spark, targetPath)
-    graft.ops.Drift.psiOfCounts(ref,
-      spark.read.parquet(targetPath).drop("batch_id"), groupCol)
-  }
-
-  // ---------------------------------------------------------------- ST35
-
-  /** ST35 — streaming CRAWL-FRONTIER membership: arriving keys (URLs)
-    * OR into the persisted [[graft.ext.Bloom]] word table, so "have we
-    * seen this?" reads at any moment at O(k · probe) against
-    * filter-sized state (≤ mBits/63 rows forever). The state law is
-    * `∨` — IDEMPOTENT, so unlike every count-based stage (ST26–ST31,
-    * ST34) a replayed micro-batch is a NO-OP by algebra and this stage
-    * carries NO batch-id guard: at-least-once delivery is exactly-once
-    * state for free. Recovery/atomicity still go through the
-    * [[Upsert]] swap (a torn write is a torn write, whatever the
-    * merge law).
-    */
-  def frontierOnArrival(rows: DataFrame, keyCol: String,
-      p: graft.ext.Bloom.Params, targetPath: String,
-      checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        frontierMergeBatch(batch, keyCol, p, targetPath)
-        ()
-      }
-      .start()
-
-  /** ST35's per-batch kernel: recover, skip empty, OR-merge, atomic
-    * swap. Deliberately no replay guard — see [[frontierOnArrival]].
-    */
-  def frontierMergeBatch(batch: DataFrame, keyCol: String,
-      p: graft.ext.Bloom.Params, targetPath: String): Boolean = {
-    val spark = batch.sparkSession
-    Upsert.recover(spark, targetPath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tgt = new org.apache.hadoop.fs.Path(targetPath)
-    val exists = tgt.getFileSystem(hconf).exists(tgt)
-    if (batch.isEmpty) return false
-    val bWords = graft.ext.Bloom.build(batch, keyCol, p)
-    val merged =
-      if (!exists) bWords
-      else graft.ext.Bloom.merge(spark.read.parquet(targetPath), bWords)
-    Upsert.writeAtomic(merged, targetPath)
-    true
-  }
-
-  /** Probe the ST35 frontier: (id, key, maybe_present) for an arriving
-    * candidate set — false positives possible (skip a re-crawl), false
-    * negatives impossible for merged keys.
-    */
-  def frontierRead(spark: SparkSession, targetPath: String,
-      candidates: DataFrame, keyCol: String, idCol: String,
-      p: graft.ext.Bloom.Params): DataFrame = {
-    Upsert.recover(spark, targetPath)
-    graft.ext.Bloom.probe(candidates, keyCol, idCol,
-      spark.read.parquet(targetPath), p)
-  }
-
-  // ---------------------------------------------------------------- ST36
-
-  /** ST36's per-batch kernel — the CRAWL DOOR (q261) rendered on
-    * arrival, all four gates in production order inside one batch:
-    * (1) robots.txt permission against the broadcast rule table
+  /** ST36 — the STREAMING CRAWL DOOR (q261) rendered on arrival, all four
+    * gates in production order inside one batch: (1) robots.txt
+    * permission against the broadcast rule table
     * ([[graft.ext.Robots.allowed]]), (2) frontier NOVELTY against the
     * persisted ST35 Bloom state AS OF BATCH START (a URL admitted in an
     * earlier wave comes back seen), (3) payload MIME sniff
     * ([[graft.ext.Containers.sniffMime]] — only `text/plain` enters the
     * text pipeline), (4) the per-host cap over survivors of 1–3 with
-    * the accumulated ST33-style counts (FCFS by `idCol` within the
-    * batch). Then the states advance: admitted counts fold into the cap
-    * table, and the batch's ADMITTED urls — now crawled — OR into the
-    * frontier.
+    * the accumulated ST33 counts (FCFS by `idCol` within the batch).
+    * Then the states advance: admitted counts fold into the cap table,
+    * and the batch's ADMITTED urls — now crawled — OR into the frontier
+    * through [[mergeBatch]].
     *
     * Replay: the guard rides the CAP state (the only non-idempotent
-    * one); a replayed batch id returns None before any read, and the
+    * one); a replayed batch id returns None before any verdict, and the
     * frontier — which would have been a no-op anyway (∨) — is never
-    * re-touched, so the two states can never diverge by one batch.
-    * Verdicts materialize (localCheckpoint) BEFORE either swap.
+    * re-touched. Verdicts materialize (localCheckpoint) BEFORE either
+    * swap. Returns (id, host, url, robots_ok, novel, mime_ok, admitted).
     */
   def crawlDoorMergeBatch(batch: DataFrame, idCol: String, hostCol: String,
       pathCol: String, urlCol: String, payloadCol: String,
@@ -1781,96 +1037,44 @@ object EventStreams {
     require(cap >= 1, s"crawlDoorMergeBatch: cap=$cap")
     val spark = batch.sparkSession
     import spark.implicits._
-    Upsert.recover(spark, frontierPath)
-    Upsert.recover(spark, capPath)
-    if (batch.isEmpty) return None
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val capExists = new org.apache.hadoop.fs.Path(capPath)
-      .getFileSystem(hconf).exists(new org.apache.hadoop.fs.Path(capPath))
-    val prev =
-      if (capExists) spark.read.parquet(capPath)
-      else Seq.empty[(String, Long, Long)]
-        .toDF("host", "n_admitted", "batch_id")
-    if (capExists) {
-      val applied = prev.agg(coalesce(max(col("batch_id")),
-        lit(Long.MinValue))).head().getLong(0)
-      if (applied >= batchId) return None
-    }
-    // (1) robots — rule table is per-host small: broadcast inside allowed
-    val rob = graft.ext.Robots.allowed(
-      batch.select(col(idCol), col(hostCol), col(pathCol)),
-      idCol, hostCol, pathCol, rules)
-      .select(col(idCol), col("allowed").as("robots_ok"))
-    // (2) frontier novelty vs the state at batch start
-    val fExists = new org.apache.hadoop.fs.Path(frontierPath)
-      .getFileSystem(hconf)
-      .exists(new org.apache.hadoop.fs.Path(frontierPath))
-    val novel =
-      if (fExists) graft.ext.Bloom.probe(
-        batch.select(col(idCol), col(urlCol)), urlCol, idCol,
-        spark.read.parquet(frontierPath), p)
-        .select(col(idCol), (!col("maybe_present")).as("novel"))
-      else batch.select(col(idCol)).withColumn("novel", lit(true))
-    // (3) MIME sniff — per-payload JVM byte logic, batch-sized map
-    val mime = batch.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .map { case (id, b) =>
-        (id, graft.ext.Containers.sniffMime(b) == "text/plain")
+    guarded(batch, capPath, batchId) { prev =>
+      // (1) robots — rule table is per-host small: broadcast inside allowed
+      val rob = graft.ext.Robots.allowed(
+        batch.select(col(idCol), col(hostCol), col(pathCol)),
+        idCol, hostCol, pathCol, rules)
+        .select(col(idCol), col("allowed").as("robots_ok"))
+      // (2) frontier novelty vs the state at batch start
+      val novel = stored(spark, frontierPath).fold(
+          batch.select(col(idCol)).withColumn("novel", lit(true))) { f =>
+        graft.ext.Bloom.probe(batch.select(col(idCol), col(urlCol)), urlCol,
+          idCol, f.drop("batch_id"), p)
+          .select(col(idCol), (!col("maybe_present")).as("novel"))
       }
-      .toDF(idCol, "mime_ok")
-    val gated = batch.select(col(idCol), col(hostCol), col(urlCol))
-      .join(rob, idCol).join(novel, idCol).join(mime, idCol)
-    // (4) per-host cap over survivors, FCFS by idCol, prior counts added
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(hostCol)).orderBy(col(idCol))
-    val surv = gated.filter(col("robots_ok") && col("novel") && col("mime_ok"))
-      .withColumn("__rn", row_number().over(w))
-      .join(broadcast(prev.select(col("host").as(hostCol),
-        col("n_admitted").as("__prev"))), Seq(hostCol), "left_outer")
-      .withColumn("__adm", col("__rn") + coalesce(col("__prev"), lit(0L)) <= cap)
-      .select(col(idCol), col("__adm"))
-    val verdicts = gated.join(surv, Seq(idCol), "left_outer")
-      .select(col(idCol), col(hostCol), col(urlCol), col("robots_ok"),
-        col("novel"), col("mime_ok"),
-        coalesce(col("__adm"), lit(false)).as("admitted"))
-      .localCheckpoint() // must outlive both state swaps below
-    val admitted = verdicts.filter(col("admitted"))
-    val mergedCap = prev.select(col("host"), col("n_admitted"))
-      .unionByName(admitted
-        .select(col(hostCol).as("host"))
-        .groupBy("host").agg(count(lit(1)).as("n_admitted")))
-      .groupBy("host").agg(sum("n_admitted").as("n_admitted"))
-      .withColumn("batch_id", lit(batchId))
-    Upsert.writeAtomic(mergedCap, capPath)
-    if (!admitted.isEmpty) {
-      val aw = graft.ext.Bloom.build(admitted.select(col(urlCol)), urlCol, p)
-      val mergedF =
-        if (fExists) graft.ext.Bloom.merge(
-          spark.read.parquet(frontierPath), aw)
-        else aw
-      Upsert.writeAtomic(mergedF, frontierPath)
+      // (3) MIME sniff — per-payload JVM byte logic, batch-sized map
+      val mime = batch.select(col(idCol).cast("long"), col(payloadCol))
+        .as[(Long, Array[Byte])]
+        .map { case (id, b) =>
+          (id, graft.ext.Containers.sniffMime(b) == "text/plain")
+        }
+        .toDF(idCol, "mime_ok")
+      val gated = batch.select(col(idCol), col(hostCol), col(urlCol))
+        .join(rob, idCol).join(novel, idCol).join(mime, idCol)
+      // (4) per-host cap over survivors, FCFS by idCol, prior counts added
+      val surv = capAdmit(
+          gated.filter(col("robots_ok") && col("novel") && col("mime_ok")),
+          hostCol, idCol, cap, prev)
+        .select(col(idCol), col("admit").as("__adm"))
+      val verdicts = gated.join(surv, Seq(idCol), "left_outer")
+        .select(col(idCol), col(hostCol), col(urlCol), col("robots_ok"),
+          col("novel"), col("mime_ok"),
+          coalesce(col("__adm"), lit(false)).as("admitted"))
+        .localCheckpoint() // must outlive both state swaps below
+      val admitted = verdicts.filter(col("admitted"))
+      capFold(prev, admitted.select(col(hostCol).as("host")), capPath,
+        batchId)
+      mergeBatch(MergeState.Frontier(urlCol, p), admitted.select(col(urlCol)),
+        frontierPath, batchId)
+      verdicts
     }
-    Some(verdicts)
   }
-
-  /** ST36 — the STREAMING CRAWL DOOR: q261's four-gate audit table
-    * rendered per micro-batch with both states advancing exactly once.
-    * `sink` receives each batch's
-    * (id, host, url, robots_ok, novel, mime_ok, admitted) verdicts.
-    */
-  def crawlDoorOnArrival(docs: DataFrame, idCol: String, hostCol: String,
-      pathCol: String, urlCol: String, payloadCol: String,
-      rules: DataFrame, p: graft.ext.Bloom.Params, cap: Int,
-      frontierPath: String, capPath: String, checkpoint: String)(
-      sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        crawlDoorMergeBatch(batch, idCol, hostCol, pathCol, urlCol,
-          payloadCol, rules, p, cap, frontierPath, capPath, batchId)
-          .foreach(sink)
-      }
-      .start()
 }

@@ -100,6 +100,19 @@ class OpqSpec extends SparkSpec {
     }
   }
 
+  test("crossSums fails loudly on empty or id-disjoint inputs") {
+    val xs = Seq((1L, Array(1.0, 2.0)), (2L, Array(3.0, 4.0))).toDF("id", "x")
+    val qs = Seq((7L, Array(1.0, 0.0))).toDF("id", "q")
+    val empty = intercept[IllegalArgumentException] {
+      Opq.crossSums(xs.limit(0), "x", qs, "q", "id")
+    }
+    empty.getMessage should include("id-disjoint")
+    val disjoint = intercept[IllegalArgumentException] {
+      Opq.crossSums(xs, "x", qs, "q", "id")
+    }
+    disjoint.getMessage should include("id-disjoint")
+  }
+
   test("trainRotation: R is orthogonal (R·Rᵀ = I)") {
     val r = Opq.trainRotation(planted, "embedding", "vec_id",
       m = 2, ksub = 4, alternations = 2, maxIter = 10)

@@ -192,8 +192,8 @@ class EventStreamsSpec extends SparkSpec {
       val mem = MemoryStream[ArrivingDoc]
       mem.addData(arriving)
       val got = scala.collection.mutable.ArrayBuffer[Long]()
-      val q = EventStreams.exactDedupAgainstIndex(
-        mem.toDF(), idx, "doc_id", "text", tn, td) { surv =>
+      val q = EventStreams.onArrival(mem.toDF())(
+        EventStreams.exactDedupBatch(idx, _, "doc_id", "text", tn, td)) { surv =>
         got.synchronized { got ++= surv.collect().map(_.getLong(0)) }
       }
       q.processAllAvailable()
@@ -230,8 +230,8 @@ class EventStreamsSpec extends SparkSpec {
     val mem = MemoryStream[ArrivingDoc]
     mem.addData(arriving)
     val got = scala.collection.mutable.ArrayBuffer[(Long, Boolean, Boolean, Boolean, Boolean)]()
-    val q = EventStreams.gateOnArrival(
-      mem.toDF(), idx, sig, corpus, "doc_id", "text") { verdicts =>
+    val q = EventStreams.onArrival(mem.toDF())(
+      Dedup.ingestGate(idx, sig, corpus, _, "doc_id", "text")) { verdicts =>
       got.synchronized {
         got ++= verdicts.collect().map(r => (r.getLong(0), r.getBoolean(1),
           r.getBoolean(2), r.getBoolean(3), r.getBoolean(4)))
@@ -268,8 +268,8 @@ class EventStreamsSpec extends SparkSpec {
     val mem = MemoryStream[ArrivingDoc]
     mem.addData(arriving)
     val got = scala.collection.mutable.ArrayBuffer[(Long, Double, Long, Long)]()
-    val q = EventStreams.lmScoreOnArrival(
-      mem.toDF(), lm, "doc_id", "text") { scores =>
+    val q = EventStreams.onArrival(mem.toDF())(
+      TextAnalysis.scoreBigramLm(lm, _, "doc_id", "text")) { scores =>
       got.synchronized {
         got ++= scores.collect().map(r =>
           (r.getLong(0), r.getDouble(1), r.getLong(2), r.getLong(3)))
@@ -305,8 +305,8 @@ class EventStreamsSpec extends SparkSpec {
     val mem = MemoryStream[ArrivingDoc]
     mem.addData(arriving)
     val got = scala.collection.mutable.ArrayBuffer[(Long, String, Long, Long)]()
-    val q = EventStreams.decontaminateOnArrival(
-      mem.toDF(), bg, "doc_id", "text", n = 4) { cleaned =>
+    val q = EventStreams.onArrival(mem.toDF())(
+      Dedup.decontaminateExciseAgainstGrams(_, bg, "doc_id", "text", 4)) { cleaned =>
       got.synchronized {
         got ++= cleaned.collect().map(r =>
           (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
@@ -353,9 +353,9 @@ class EventStreamsSpec extends SparkSpec {
     val mem = MemoryStream[ArrivingDoc]
     mem.addData(arriving)
     val got = scala.collection.mutable.ArrayBuffer[(Long, Boolean, Boolean, Boolean, Boolean, Boolean)]()
-    val q = EventStreams.gateWithEditOnArrival(
-      keyed(mem.toDF()), idx, sig, corpus, editIdx, editCorpus,
-      "doc_id", "text", "pfx", k = 2) { verdicts =>
+    val q = EventStreams.onArrival(keyed(mem.toDF()))(
+      Dedup.ingestGateWithEdit(idx, sig, corpus, editIdx, editCorpus, _,
+        "doc_id", "text", "pfx", 2)) { verdicts =>
       got.synchronized {
         got ++= verdicts.collect().map(r => (r.getAs[Long]("doc_id"),
           r.getAs[Boolean]("exact_dup"), r.getAs[Boolean]("jac_dup"),
@@ -508,8 +508,8 @@ class EventStreamsSpec extends SparkSpec {
     val mem = MemoryStream[ArrivingVec]
     mem.addData(arriving)
     val got = scala.collection.mutable.ArrayBuffer[Long]()
-    val q = EventStreams.srpDedupOnArrival(
-      mem.toDF(), corpusSig, "embedding", "vec_id", maxDist = 3) { surv =>
+    val q = EventStreams.onArrival(mem.toDF())(
+      EventStreams.srpDedupBatch(corpusSig, _, "embedding", "vec_id", 3)) { surv =>
       got.synchronized { got ++= surv.collect().map(_.getLong(0)) }
     }
     q.processAllAvailable()
@@ -536,12 +536,13 @@ class EventStreamsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("st16_").toString
     val mem = MemoryStream[ArrivingVec]
     mem.addData(b1)
-    val q1 = EventStreams.covarianceOnArrival(mem.toDF(), "embedding",
-      "vec_id", s"$dir/t", s"$dir/cp")
+    val cov = EventStreams.MergeState.Covariance("embedding", "vec_id")
+    val q1 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+      EventStreams.mergeBatch(cov, _, s"$dir/t", _))
     q1.awaitTermination()
     mem.addData(b2)
-    val q2 = EventStreams.covarianceOnArrival(mem.toDF(), "embedding",
-      "vec_id", s"$dir/t", s"$dir/cp")
+    val q2 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+      EventStreams.mergeBatch(cov, _, s"$dir/t", _))
     q2.awaitTermination()
     def cells(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
@@ -554,8 +555,8 @@ class EventStreamsSpec extends SparkSpec {
     // is a no-op (foreachBatch can redeliver after a crash between the
     // atomic swap and the checkpoint commit — an additive merge would
     // silently double-count without the marker)
-    EventStreams.covarianceMergeBatch(b2.toDF("vec_id", "embedding"),
-      "embedding", "vec_id", s"$dir/t", 1L) shouldBe false
+    EventStreams.mergeBatch(cov, b2.toDF("vec_id", "embedding"),
+      s"$dir/t", 1L) shouldBe false
     cells(spark.read.parquet(s"$dir/t")
       .filter(!(col("i") === -2 && col("j") === -2))
       .select("i", "j", "s")) shouldBe cells(Similarity.covarianceSums(
@@ -584,8 +585,9 @@ class EventStreamsSpec extends SparkSpec {
     val mem = MemoryStream[ArrivingDoc]
     mem.addData(arriving)
     val got = scala.collection.mutable.Map[Long, (Long, Int)]()
-    val q = EventStreams.assignClustersOnArrival(
-      mem.toDF(), labels, sig, "doc_id", "text") { rep =>
+    val q = EventStreams.onArrival(mem.toDF())(b =>
+      Multimodal.assignToPhashClusters(labels, sig,
+        Multimodal.asMedia(b, "doc_id", "text"), 4)) { rep =>
       got.synchronized {
         rep.collect().foreach(r =>
           got(r.getLong(0)) = (r.getLong(1), r.getInt(2)))
@@ -621,15 +623,16 @@ class EventStreamsSpec extends SparkSpec {
     val mem = MemoryStream[ArrivingMedia]
     mem.addData(arriving)
     val got = scala.collection.mutable.Set[Long]()
-    val q = EventStreams.audioDedupOnArrival(mem.toDF(), corpusFp,
-      window = 48, maxDist = 6, decode = Containers.decodeWav) { out =>
+    val q = EventStreams.onArrival(mem.toDF())(
+      EventStreams.audioDedupBatch(corpusFp, _, window = 48, maxDist = 6,
+        decode = Containers.decodeWav)) { out =>
       got.synchronized { out.collect().foreach(r => got += r.getLong(0)) }
     }
     q.processAllAvailable()
     q.stop()
     // stream ≡ batch kernel
     val batchIds = EventStreams.audioDedupBatch(corpusFp,
-      arriving.map(a => Multimodal.MediaRow(a.media_id, a.payload)).toDS(),
+      arriving.map(a => Multimodal.MediaRow(a.media_id, a.payload)).toDF(),
       window = 48, maxDist = 6, decode = Containers.decodeWav)
       .collect().map(_.getLong(0)).toSet
     got.toSet shouldBe batchIds
@@ -651,8 +654,9 @@ class EventStreamsSpec extends SparkSpec {
       val mem = MemoryStream[Ev]
       mem.addData(rows)
       val got = scala.collection.mutable.ArrayBuffer[Double]()
-      val q = EventStreams.driftOnArrival(mem.toDF(), refBuckets,
-        "value", thresholds) { out =>
+      val q = EventStreams.onArrival(mem.toDF())(
+        Drift.psiAgainstReference(refBuckets, _,
+          Drift.bucketOf(col("value"), thresholds))) { out =>
         got.synchronized {
           got ++= out.collect().map(_.getDouble(3))
         }
@@ -693,8 +697,8 @@ class EventStreamsSpec extends SparkSpec {
       val mem = MemoryStream[Ev]
       mem.addData(rows)
       val got = scala.collection.mutable.ArrayBuffer[(Double, Double)]()
-      val q = EventStreams.ecdfDriftOnArrival(mem.toDF(), corpus,
-        "value", step = Some(step)) { out =>
+      val q = EventStreams.onArrival(mem.toDF())(
+        EventStreams.ecdfDriftBatch(corpus, _, "value", step = Some(step))) { out =>
         got.synchronized {
           got ++= out.collect().map(r =>
             (r.getAs[Double]("d_stat"), r.getAs[Double]("w1")))
@@ -734,8 +738,8 @@ class EventStreamsSpec extends SparkSpec {
     val mem = MemoryStream[ArrivingDoc]
     mem.addData(arriving)
     val got = scala.collection.mutable.Map[Long, String]()
-    val q = EventStreams.routeOnArrival(mem.toDF(), "doc_id", "text",
-      topics) { out =>
+    val q = EventStreams.onArrival(mem.toDF())(
+      Retrieval.maxSimRoute(_, "doc_id", "text", topics)) { out =>
       got.synchronized {
         out.collect().foreach(r => got(r.getLong(0)) = r.getString(1))
       }
@@ -757,14 +761,17 @@ class EventStreamsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("st22_").toString
     val mem = MemoryStream[ArrivingDoc]
     mem.addData(b1)
-    val q1 = EventStreams.distinctCountOnArrival(mem.toDF(), "text",
-      s"$dir/t", s"$dir/cp")
+    val hll = EventStreams.MergeState.Hll("text")
+    val q1 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+      EventStreams.mergeBatch(hll, _, s"$dir/t", _))
     q1.awaitTermination()
     mem.addData(b2)
-    val q2 = EventStreams.distinctCountOnArrival(mem.toDF(), "text",
-      s"$dir/t", s"$dir/cp")
+    val q2 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+      EventStreams.mergeBatch(hll, _, s"$dir/t", _))
     q2.awaitTermination()
-    val streamed = EventStreams.distinctEstimate(spark, s"$dir/t")
+    def estimate() = EventStreams.readState(spark, s"$dir/t")
+      .select(hll_sketch_estimate(col("sketch"))).head().getLong(0)
+    val streamed = estimate()
     // HLL union is per-register max → the streamed chain of unions must
     // equal one DIRECT union over the same two batch sketches (a direct
     // single build can differ by a hair: HIP is discarded on union)
@@ -777,9 +784,9 @@ class EventStreamsSpec extends SparkSpec {
     val exact = (b1 ++ b2).map(_.text).distinct.size.toLong
     math.abs(streamed - exact).toDouble / exact should be < 0.05
     // at-least-once replay: re-merging an applied batchId is a no-op
-    EventStreams.distinctMergeBatch(b2.toDF("doc_id", "text"), "text",
+    EventStreams.mergeBatch(hll, b2.toDF("doc_id", "text"),
       s"$dir/t", 1L) shouldBe false
-    EventStreams.distinctEstimate(spark, s"$dir/t") shouldBe streamed
+    estimate() shouldBe streamed
   }
 
   test("ST25 streaming bottom-k sketch: streamed merge ≡ cold rebuild bit-for-bit, replay no-op") {
@@ -792,12 +799,13 @@ class EventStreamsSpec extends SparkSpec {
       df.withColumn("grp", (col("doc_id") % 2).cast("string"))
     val mem = MemoryStream[ArrivingDoc]
     mem.addData(b1)
-    val q1 = EventStreams.bottomKOnArrival(withGrp(mem.toDF()), "grp",
-      "text", 32, s"$dir/t", s"$dir/cp")
+    val bk = EventStreams.MergeState.BottomK("grp", "text", 32)
+    val q1 = EventStreams.mergeOnArrival(withGrp(mem.toDF()), s"$dir/cp")(
+      EventStreams.mergeBatch(bk, _, s"$dir/t", _))
     q1.awaitTermination()
     mem.addData(b2)
-    val q2 = EventStreams.bottomKOnArrival(withGrp(mem.toDF()), "grp",
-      "text", 32, s"$dir/t", s"$dir/cp")
+    val q2 = EventStreams.mergeOnArrival(withGrp(mem.toDF()), s"$dir/cp")(
+      EventStreams.mergeBatch(bk, _, s"$dir/t", _))
     q2.awaitTermination()
     // the merge law is exact: streamed state == one direct build over
     // the full history (not merely estimate-equal, row-for-row equal)
@@ -808,8 +816,8 @@ class EventStreamsSpec extends SparkSpec {
     streamedSketch.exceptAll(direct).count() shouldBe 0L
     direct.exceptAll(streamedSketch).count() shouldBe 0L
     // the estimate reader matches a direct estimate over the same sketch
-    val est = EventStreams.bottomKDistinctEstimate(
-      spark, s"$dir/t", "grp", 32).collect()
+    val est = graft.ops.Sketches.distinctEstimate(
+      EventStreams.readState(spark, s"$dir/t"), "grp", 32).collect()
     est.length shouldBe 2
     val exactByGrp = (b1 ++ b2).groupBy(_.doc_id % 2)
       .map { case (g, docs) => g.toString -> docs.map(_.text).distinct.size }
@@ -818,12 +826,12 @@ class EventStreamsSpec extends SparkSpec {
       math.abs(r.getDouble(3) - exact) / exact should be < 0.5
     }
     // at-least-once replay: re-merging an applied batchId is a no-op
-    EventStreams.bottomKMergeBatch(withGrp(b2.toDF("doc_id", "text")),
-      "grp", "text", 32, s"$dir/t", 1L) shouldBe false
+    EventStreams.mergeBatch(bk, withGrp(b2.toDF("doc_id", "text")),
+      s"$dir/t", 1L) shouldBe false
     // empty batch: no write, no marker advance
-    EventStreams.bottomKMergeBatch(
+    EventStreams.mergeBatch(bk,
       withGrp(b1.take(0).toDF("doc_id", "text")),
-      "grp", "text", 32, s"$dir/t", 99L) shouldBe false
+      s"$dir/t", 99L) shouldBe false
   }
 
   test("ST26 streaming shard manifest: streamed merge ≡ cold recompute; replay guard is load-bearing") {
@@ -833,17 +841,18 @@ class EventStreamsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("st26_").toString
     val mem = MemoryStream[ArrivingDoc]
     mem.addData(b1)
-    val q1 = EventStreams.manifestOnArrival(mem.toDF(), "doc_id", "text",
-      shards = 4, s"$dir/t", s"$dir/cp")
+    val man = EventStreams.MergeState.Manifest("doc_id", "text", shards = 4)
+    val q1 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+      EventStreams.mergeBatch(man, _, s"$dir/t", _))
     q1.awaitTermination()
     mem.addData(b2)
-    val q2 = EventStreams.manifestOnArrival(mem.toDF(), "doc_id", "text",
-      shards = 4, s"$dir/t", s"$dir/cp")
+    val q2 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+      EventStreams.mergeBatch(man, _, s"$dir/t", _))
     q2.awaitTermination()
     // the additive merge is exact: streamed dataset card == one direct
     // manifest over the full history, row-for-row (counts, id ranges,
     // AND the mod-P content checksum)
-    val streamed = EventStreams.manifestRead(spark, s"$dir/t")
+    val streamed = EventStreams.readState(spark, s"$dir/t")
     val direct = graft.ops.Manifest.shardManifest(
       (b1 ++ b2).toDF("doc_id", "text"), "doc_id", "text", 4)
     streamed.exceptAll(direct).count() shouldBe 0L
@@ -851,13 +860,13 @@ class EventStreamsSpec extends SparkSpec {
     // at-least-once replay: the additive merge is NOT idempotent, so the
     // batch-id guard must refuse a re-applied batch (a double-merge
     // would double every count)
-    EventStreams.manifestMergeBatch(b2.toDF("doc_id", "text"), "doc_id",
-      "text", 4, s"$dir/t", 1L) shouldBe false
-    val after = EventStreams.manifestRead(spark, s"$dir/t")
+    EventStreams.mergeBatch(man, b2.toDF("doc_id", "text"),
+      s"$dir/t", 1L) shouldBe false
+    val after = EventStreams.readState(spark, s"$dir/t")
     after.exceptAll(direct).count() shouldBe 0L
     // empty batch: no write, no marker advance
-    EventStreams.manifestMergeBatch(b1.take(0).toDF("doc_id", "text"),
-      "doc_id", "text", 4, s"$dir/t", 99L) shouldBe false
+    EventStreams.mergeBatch(man, b1.take(0).toDF("doc_id", "text"),
+      s"$dir/t", 99L) shouldBe false
   }
 
   test("ST28 streaming count-min sketch: streamed merge ≡ cold rebuild bit-for-bit, replay refused") {
@@ -870,12 +879,14 @@ class EventStreamsSpec extends SparkSpec {
       df.withColumn("grp", (col("doc_id") % 2).cast("string"))
     val mem = MemoryStream[ArrivingDoc]
     mem.addData(b1)
-    val q1 = EventStreams.cmsOnArrival(withGrp(mem.toDF()), "grp", "text",
-      depth = 3, width = 64, s"$dir/t", s"$dir/cp")
+    val cms = EventStreams.MergeState.Cms("grp", "text", depth = 3,
+      width = 64)
+    val q1 = EventStreams.mergeOnArrival(withGrp(mem.toDF()), s"$dir/cp")(
+      EventStreams.mergeBatch(cms, _, s"$dir/t", _))
     q1.awaitTermination()
     mem.addData(b2)
-    val q2 = EventStreams.cmsOnArrival(withGrp(mem.toDF()), "grp", "text",
-      depth = 3, width = 64, s"$dir/t", s"$dir/cp")
+    val q2 = EventStreams.mergeOnArrival(withGrp(mem.toDF()), s"$dir/cp")(
+      EventStreams.mergeBatch(cms, _, s"$dir/t", _))
     q2.awaitTermination()
     // LINEAR merge law: streamed counters == one sketch over the full
     // history, bit-for-bit (integer addition commutes exactly)
@@ -887,19 +898,20 @@ class EventStreamsSpec extends SparkSpec {
     // the probe reader: every estimate >= the true count (CMS one-sided)
     val truth = withGrp((b1 ++ b2).toDF("doc_id", "text"))
       .groupBy("grp", "text").count()
-    val est = EventStreams.cmsEstimateRead(spark, s"$dir/t",
+    val est = graft.ops.LinearSketches.cmsEstimate(
+      EventStreams.readState(spark, s"$dir/t"),
       truth.select("grp", "text"), "grp", "text", 3, 64)
     est.join(truth, Seq("grp", "text")).collect()
       .foreach(r => r.getLong(2) should be >= r.getLong(3))
     // at-least-once replay: counter addition is NOT idempotent — the
     // batch-id guard must refuse a re-applied batch
-    EventStreams.cmsMergeBatch(withGrp(b2.toDF("doc_id", "text")), "grp",
-      "text", 3, 64, s"$dir/t", 1L) shouldBe false
+    EventStreams.mergeBatch(cms, withGrp(b2.toDF("doc_id", "text")),
+      s"$dir/t", 1L) shouldBe false
     spark.read.parquet(s"$dir/t").select("grp", "r", "b", "cnt")
       .exceptAll(direct).count() shouldBe 0L
     // empty batch: no write, no marker advance
-    EventStreams.cmsMergeBatch(withGrp(b1.take(0).toDF("doc_id", "text")),
-      "grp", "text", 3, 64, s"$dir/t", 99L) shouldBe false
+    EventStreams.mergeBatch(cms, withGrp(b1.take(0).toDF("doc_id", "text")),
+      s"$dir/t", 99L) shouldBe false
   }
 
   test("ST29 streaming moment stats: streamed merge ≡ cold rebuild; live Welch probe") {
@@ -916,12 +928,13 @@ class EventStreamsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("st29_").toString
     val mem = MemoryStream[Ev]
     mem.addData(b1)
-    val q1 = EventStreams.statsOnArrival(mem.toDF(), "event_type", "value",
-      s"$dir/t", s"$dir/cp")
+    val stats = EventStreams.MergeState.Stats("event_type", "value")
+    val q1 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+      EventStreams.mergeBatch(stats, _, s"$dir/t", _))
     q1.awaitTermination()
     mem.addData(b2)
-    val q2 = EventStreams.statsOnArrival(mem.toDF(), "event_type", "value",
-      s"$dir/t", s"$dir/cp")
+    val q2 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+      EventStreams.mergeBatch(stats, _, s"$dir/t", _))
     q2.awaitTermination()
     // linear merge law: streamed table == one build over full history
     val streamed = spark.read.parquet(s"$dir/t").select("g", "n", "s1", "s2")
@@ -934,16 +947,17 @@ class EventStreamsSpec extends SparkSpec {
     val shifted = (0L until 100L).map(i =>
       ev(9000 + i, if (i % 2 == 0) "A" else "B",
         (i % 20).toDouble + (if (i % 2 == 0) 0 else 30) + 50))
-    val probe = EventStreams.statsWelchRead(spark, s"$dir/t",
-      shifted.toDF(), "event_type", "value")
+    val probe = graft.ops.Hypothesis.welchFromStats(
+      EventStreams.readState(spark, s"$dir/t"),
+      graft.ops.Hypothesis.statsTable(shifted.toDF(), "event_type",
+        col("value")), "event_type")
       .collect().map(r => r.getString(0) -> r.getDouble(5)).toMap
     probe.keySet shouldBe Set("A", "B")
     probe.values.foreach(_ should be < -10.0)
     // replay refused (addition is not idempotent); empty batch skipped
-    EventStreams.statsMergeBatch(b2.toDF(), "event_type", "value",
-      s"$dir/t", 1L) shouldBe false
-    EventStreams.statsMergeBatch(b1.take(0).toDF(), "event_type", "value",
-      s"$dir/t", 99L) shouldBe false
+    EventStreams.mergeBatch(stats, b2.toDF(), s"$dir/t", 1L) shouldBe false
+    EventStreams.mergeBatch(stats, b1.take(0).toDF(), s"$dir/t",
+      99L) shouldBe false
   }
 
   test("ST30 streaming confusion matrix: streamed merge ≡ cold rebuild; live ratios") {
@@ -962,12 +976,14 @@ class EventStreamsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("st30_").toString
     val mem = MemoryStream[Ev]
     mem.addData(b1)
-    val q1 = EventStreams.confusionOnArrival(labeled(mem.toDF()),
-      "event_type", "y", "value", thr, s"$dir/t", s"$dir/cp")
+    val conf = EventStreams.MergeState.Confusion("event_type", "y", "value",
+      thr)
+    val q1 = EventStreams.mergeOnArrival(labeled(mem.toDF()), s"$dir/cp")(
+      EventStreams.mergeBatch(conf, _, s"$dir/t", _))
     q1.awaitTermination()
     mem.addData(b2)
-    val q2 = EventStreams.confusionOnArrival(labeled(mem.toDF()),
-      "event_type", "y", "value", thr, s"$dir/t", s"$dir/cp")
+    val q2 = EventStreams.mergeOnArrival(labeled(mem.toDF()), s"$dir/cp")(
+      EventStreams.mergeBatch(conf, _, s"$dir/t", _))
     q2.awaitTermination()
     // linear merge law: streamed table == one count over full history
     val streamed = spark.read.parquet(s"$dir/t")
@@ -979,16 +995,17 @@ class EventStreamsSpec extends SparkSpec {
     // state bound: groups × thresholds rows, forever
     streamed.count() shouldBe 2L * thr.size
     // live gate-tuning read == the q233 batch surface over full history
-    val live = EventStreams.confusionRead(spark, s"$dir/t", "event_type")
+    val live = graft.ops.Hypothesis.confusionRatios(
+      EventStreams.readState(spark, s"$dir/t"), "event_type")
     val batchSurface = graft.ops.Hypothesis.confusionAtThresholds(
       labeled((b1 ++ b2).toDF()), "event_type", col("y"), col("value"), thr)
     live.exceptAll(batchSurface).count() shouldBe 0L
     batchSurface.exceptAll(live).count() shouldBe 0L
     // replay refused (addition is not idempotent); empty batch skipped
-    EventStreams.confusionMergeBatch(labeled(b2.toDF()), "event_type",
-      "y", "value", thr, s"$dir/t", 1L) shouldBe false
-    EventStreams.confusionMergeBatch(labeled(b1.take(0).toDF()),
-      "event_type", "y", "value", thr, s"$dir/t", 99L) shouldBe false
+    EventStreams.mergeBatch(conf, labeled(b2.toDF()), s"$dir/t",
+      1L) shouldBe false
+    EventStreams.mergeBatch(conf, labeled(b1.take(0).toDF()), s"$dir/t",
+      99L) shouldBe false
   }
 
   test("ST31 streaming rank sketch: streamed merge ≡ cold rebuild; live quantiles") {
@@ -1003,11 +1020,12 @@ class EventStreamsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("st31_").toString
     val mem = MemoryStream[Ev]
     mem.addData(b1)
-    EventStreams.rankSketchOnArrival(mem.toDF(), "event_type", "value",
-      32, s"$dir/t", s"$dir/cp").awaitTermination()
+    val rank = EventStreams.MergeState.RankSketch("event_type", "value", 32)
+    EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+      EventStreams.mergeBatch(rank, _, s"$dir/t", _)).awaitTermination()
     mem.addData(b2)
-    EventStreams.rankSketchOnArrival(mem.toDF(), "event_type", "value",
-      32, s"$dir/t", s"$dir/cp").awaitTermination()
+    EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+      EventStreams.mergeBatch(rank, _, s"$dir/t", _)).awaitTermination()
     // merge law live: streamed table == one sketch over full history
     val streamed = spark.read.parquet(s"$dir/t")
       .select("event_type", "v", "cnt", "h")
@@ -1017,17 +1035,16 @@ class EventStreamsSpec extends SparkSpec {
     direct.exceptAll(streamed).count() shouldBe 0L
     streamed.count() should be <= 64L // ≤ k per group forever
     // live ladder == batch ladder off the same (cold) sketch
-    val live = EventStreams.rankQuantilesRead(spark, s"$dir/t",
-      "event_type", Seq(50))
+    val live = graft.ops.Sketches.quantilesFromRankSketch(
+      EventStreams.readState(spark, s"$dir/t"), "event_type", Seq(50))
     val batchLadder = graft.ops.Sketches.quantilesFromRankSketch(
       direct, "event_type", Seq(50))
     live.exceptAll(batchLadder).count() shouldBe 0L
     batchLadder.exceptAll(live).count() shouldBe 0L
     // replay refused (counts add); empty batch skipped
-    EventStreams.rankSketchMergeBatch(b2.toDF(), "event_type", "value",
-      32, s"$dir/t", 1L) shouldBe false
-    EventStreams.rankSketchMergeBatch(b1.take(0).toDF(), "event_type",
-      "value", 32, s"$dir/t", 99L) shouldBe false
+    EventStreams.mergeBatch(rank, b2.toDF(), s"$dir/t", 1L) shouldBe false
+    EventStreams.mergeBatch(rank, b1.take(0).toDF(), s"$dir/t",
+      99L) shouldBe false
   }
 
   test("ST34 streaming drift: streamed merge ≡ cold rebuild; live PSI vs frozen reference") {
@@ -1045,11 +1062,12 @@ class EventStreamsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("st34_").toString
     val mem = MemoryStream[Ev]
     mem.addData(b1)
-    EventStreams.driftOnArrival(mem.toDF(), "event_type", "value", thr,
-      s"$dir/t", s"$dir/cp").awaitTermination()
+    val drift = EventStreams.MergeState.DriftCounts("event_type", "value", thr)
+    EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+      EventStreams.mergeBatch(drift, _, s"$dir/t", _)).awaitTermination()
     mem.addData(b2)
-    EventStreams.driftOnArrival(mem.toDF(), "event_type", "value", thr,
-      s"$dir/t", s"$dir/cp").awaitTermination()
+    EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+      EventStreams.mergeBatch(drift, _, s"$dir/t", _)).awaitTermination()
     // linear merge law: streamed counts == one count over full history
     val streamed = spark.read.parquet(s"$dir/t")
       .select("event_type", "bucket", "n_live")
@@ -1064,7 +1082,8 @@ class EventStreamsSpec extends SparkSpec {
     // live alarm read == the batch psiOfCounts over full history
     val ref = graft.ops.Drift.referenceCounts(refRows.toDF(), "event_type",
       graft.ops.Drift.bucketOf(col("value"), thr))
-    val live = EventStreams.driftRead(spark, s"$dir/t", "event_type", ref)
+    val live = graft.ops.Drift.psiOfCounts(ref,
+      EventStreams.readState(spark, s"$dir/t"), "event_type")
     val batchPsi = graft.ops.Drift.psiOfCounts(ref, direct, "event_type")
     live.exceptAll(batchPsi).count() shouldBe 0L
     batchPsi.exceptAll(live).count() shouldBe 0L
@@ -1074,10 +1093,9 @@ class EventStreamsSpec extends SparkSpec {
       .map(r => r.getDouble(1)).max
     alarm should be > 0.1
     // replay refused (addition is not idempotent); empty batch skipped
-    EventStreams.driftMergeBatch(b2.toDF(), "event_type", "value", thr,
-      s"$dir/t", 1L) shouldBe false
-    EventStreams.driftMergeBatch(b1.take(0).toDF(), "event_type", "value",
-      thr, s"$dir/t", 99L) shouldBe false
+    EventStreams.mergeBatch(drift, b2.toDF(), s"$dir/t", 1L) shouldBe false
+    EventStreams.mergeBatch(drift, b1.take(0).toDF(), s"$dir/t",
+      99L) shouldBe false
   }
 
   test("ST35 streaming frontier: OR-merge ≡ cold build; replay is a no-op by algebra") {
@@ -1088,11 +1106,14 @@ class EventStreamsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("st35_").toString
     val mem = MemoryStream[ArrivingDoc]
     mem.addData(b1)
-    EventStreams.frontierOnArrival(mem.toDF().withColumnRenamed("text", "url"),
-      "url", p, s"$dir/t", s"$dir/cp").awaitTermination()
+    val frontier = EventStreams.MergeState.Frontier("url", p)
+    EventStreams.mergeOnArrival(mem.toDF().withColumnRenamed("text", "url"),
+      s"$dir/cp")(EventStreams.mergeBatch(frontier, _, s"$dir/t", _))
+      .awaitTermination()
     mem.addData(b2)
-    EventStreams.frontierOnArrival(mem.toDF().withColumnRenamed("text", "url"),
-      "url", p, s"$dir/t", s"$dir/cp").awaitTermination()
+    EventStreams.mergeOnArrival(mem.toDF().withColumnRenamed("text", "url"),
+      s"$dir/cp")(EventStreams.mergeBatch(frontier, _, s"$dir/t", _))
+      .awaitTermination()
     val all = (b1 ++ b2).toDF("doc_id", "url")
     // streamed state == one cold build over full history
     val streamed = spark.read.parquet(s"$dir/t")
@@ -1100,16 +1121,22 @@ class EventStreamsSpec extends SparkSpec {
     val cold = graft.ext.Bloom.build(all, "url", p)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     streamed shouldBe cold
-    // REPLAYING a batch is a no-op by the ∨ law (no guard needed)
-    EventStreams.frontierMergeBatch(b2.toDF("doc_id", "url"), "url", p,
-      s"$dir/t") shouldBe true
+    // an applied batch id is refused by the shared guard; REPLAYING the
+    // batch under a new id is a no-op by the ∨ law
+    EventStreams.mergeBatch(frontier, b2.toDF("doc_id", "url"), s"$dir/t",
+      1L) shouldBe false
+    spark.read.parquet(s"$dir/t")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe cold
+    EventStreams.mergeBatch(frontier, b2.toDF("doc_id", "url"), s"$dir/t",
+      2L) shouldBe true
     spark.read.parquet(s"$dir/t")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe cold
     // live probe: every merged key present, empty batch skipped
-    EventStreams.frontierRead(spark, s"$dir/t", all, "url", "doc_id", p)
+    graft.ext.Bloom.probe(all, "url", "doc_id",
+      EventStreams.readState(spark, s"$dir/t"), p)
       .filter(!col("maybe_present")).count() shouldBe 0L
-    EventStreams.frontierMergeBatch(b1.take(0).toDF("doc_id", "url"),
-      "url", p, s"$dir/t") shouldBe false
+    EventStreams.mergeBatch(frontier, b1.take(0).toDF("doc_id", "url"),
+      s"$dir/t", 99L) shouldBe false
   }
 
   test("ST17 streaming CDC byte-delta: exact copy reports zero new bytes") {
@@ -1127,8 +1154,9 @@ class EventStreamsSpec extends SparkSpec {
     val mem = MemoryStream[ArrivingDoc]
     mem.addData(arriving)
     val got = scala.collection.mutable.Map[Long, (Long, Double)]()
-    val q = EventStreams.cdcBytesOnArrival(
-      mem.toDF(), corpusChunks, "doc_id", "text") { rep =>
+    val q = EventStreams.onArrival(mem.toDF())(b =>
+      Multimodal.incrementalCdcBytes(corpusChunks,
+        Multimodal.asMedia(b, "doc_id", "text"))) { rep =>
       got.synchronized {
         rep.collect().foreach(r =>
           got(r.getLong(0)) = (r.getLong(3), r.getDouble(4)))
@@ -1161,8 +1189,8 @@ class EventStreamsSpec extends SparkSpec {
     val mem = MemoryStream[ArrivingDoc]
     mem.addData(arriving)
     val got = scala.collection.mutable.ArrayBuffer[Long]()
-    val q = EventStreams.phashDedupOnArrival(
-      mem.toDF(), corpusSig, "doc_id", "text", maxDist = 4) { surv =>
+    val q = EventStreams.onArrival(mem.toDF())(
+      EventStreams.phashDedupBatch(corpusSig, _, "doc_id", "text", 4)) { surv =>
       got.synchronized { got ++= surv.collect().map(_.getLong(0)) }
     }
     q.processAllAvailable()
@@ -1421,10 +1449,11 @@ class EventStreamsSpec extends SparkSpec {
       "http://t/a" -> "alpha beta gam q1 q2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12",
       "http://t/b" -> "z1 z2 z3 z4 z5 z6 z7 z8 z9 z10 z11 z12 z13 z14")))
     val got = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-    val q = EventStreams.warcGateOnArrival(
+    val q = EventStreams.onArrival(
       EventStreams.readWarcShardStream(spark, dir.toString,
-        maxFilesPerTrigger = 1),
-      idx, sig, corpus, editIdx, editCorpus, editKeyLen = 16, k = 2) { v =>
+        maxFilesPerTrigger = 1))(
+      EventStreams.warcGateBatch(_, idx, sig, corpus, editIdx, editCorpus,
+        editKeyLen = 16, k = 2)) { v =>
       got.synchronized { got ++= v.collect() }
     }
     q.processAllAvailable()
@@ -1467,12 +1496,14 @@ class EventStreamsSpec extends SparkSpec {
     val mem = MemoryStream[(Long, String)]
     val admitted = scala.collection.mutable.ArrayBuffer[Long]()
     def run(): Unit = {
-      val q = EventStreams.hostCapOnArrival(
-        mem.toDF().toDF("doc_id", "url"), "doc_id", "url", "doc_id",
-        cap = 3, s"$dir/t", s"$dir/cp") { v =>
-        admitted.synchronized {
-          admitted ++= v.filter(col("admit")).select("doc_id")
-            .collect().map(_.getLong(0))
+      val q = EventStreams.mergeOnArrival(
+        mem.toDF().toDF("doc_id", "url"), s"$dir/cp") { (b, id) =>
+        EventStreams.hostCapMergeBatch(b, "doc_id", "url", "doc_id",
+          cap = 3, s"$dir/t", id).foreach { v =>
+          admitted.synchronized {
+            admitted ++= v.filter(col("admit")).select("doc_id")
+              .collect().map(_.getLong(0))
+          }
         }
       }
       q.awaitTermination()
@@ -1484,14 +1515,14 @@ class EventStreamsSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSet
     admitted.toSet shouldBe batchKeep
     // state is O(hosts): 3 rows (host0, host1, garbage ""), counts at cap
-    val state = EventStreams.hostCapRead(spark, s"$dir/t")
+    val state = EventStreams.readState(spark, s"$dir/t")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     state.keySet shouldBe Set("", "host0.test", "host1.test")
     state.values.foreach(_ shouldBe 3L)
     // replay guard: a re-applied batch id is refused, state unchanged
     EventStreams.hostCapMergeBatch(b2.toDF("doc_id", "url"), "doc_id",
       "url", "doc_id", 3, s"$dir/t", 0L) shouldBe None
-    EventStreams.hostCapRead(spark, s"$dir/t")
+    EventStreams.readState(spark, s"$dir/t")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe state
     // empty batch: no write, no verdicts
     EventStreams.hostCapMergeBatch(b1.take(0).toDF("doc_id", "url"),
@@ -1570,14 +1601,17 @@ class EventStreamsSpec extends SparkSpec {
     val got = scala.collection.mutable
       .Map.empty[Long, (Boolean, Boolean, Boolean, Boolean)]
     def run(): Unit = {
-      val q = EventStreams.crawlDoorOnArrival(
-        mem.toDF().toDF(cols: _*), "id", "host", "path", "url", "payload",
-        rules, p, cap, s"$dir/frontier", s"$dir/cap", s"$dir/cp") { v =>
-        got.synchronized {
-          v.collect().foreach(r => got(r.getLong(0)) =
-            (r.getBoolean(3), r.getBoolean(4), r.getBoolean(5),
-              r.getBoolean(6)))
-        }
+      val q = EventStreams.mergeOnArrival(mem.toDF().toDF(cols: _*),
+        s"$dir/cp") { (b, id) =>
+        EventStreams.crawlDoorMergeBatch(b, "id", "host", "path", "url",
+          "payload", rules, p, cap, s"$dir/frontier", s"$dir/cap", id)
+          .foreach { v =>
+            got.synchronized {
+              v.collect().foreach(r => got(r.getLong(0)) =
+                (r.getBoolean(3), r.getBoolean(4), r.getBoolean(5),
+                  r.getBoolean(6)))
+            }
+          }
       }
       q.awaitTermination()
     }
