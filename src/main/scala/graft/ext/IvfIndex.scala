@@ -5,8 +5,6 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorExpressions
-
 /** IVF (inverted-file) approximate nearest neighbor: coarse-quantize the
   * corpus into `nlist` k-means cells; a query scans only its `nprobe`
   * nearest cells with exact rescoring inside (the other scale path next
@@ -22,45 +20,30 @@ object IvfIndex {
 
   case class Model(centroids: Array[Array[Double]], assigned: DataFrame)
 
-  /** Build the index: seeded k-means over the embedding column. `maxIter`
-    * trades centroid quality for build time — IVF recall only needs cells
-    * that roughly tile the space, so small values (3-5) are usually
-    * enough; the default matches MLlib's.
+  /** Build the index: seeded k-means over the embedding column, then each
+    * vector's cell is its [[Nearest]] centroid (the same kernel
+    * [[IvfPq]]'s encode runs). `maxIter` trades centroid quality for build
+    * time — IVF recall only needs cells that roughly tile the space, so
+    * small values (3-5) are usually enough; the default matches MLlib's.
     */
   def build(emb: DataFrame, vecCol: String, idCol: String,
       nlist: Int, seed: Long = 42L, maxIter: Int = 20): Model = {
-    val withVec = emb.select(col(idCol), col(vecCol),
-      array_to_vector(col(vecCol)).as("_features"))
-    val model = new KMeans()
+    val cents = new KMeans()
       .setK(nlist).setSeed(seed).setFeaturesCol("_features")
       .setMaxIter(maxIter)
-      .fit(withVec)
-    val assigned = model.transform(withVec)
-      .select(col(idCol), col(vecCol), col("prediction").as("cell"))
-    Model(model.clusterCenters.map(_.toArray), assigned)
+      .fit(emb.select(array_to_vector(col(vecCol)).as("_features")))
+      .clusterCenters.map(_.toArray)
+    val cell = udf { (v: Seq[Double]) => Nearest(cents, v) }
+    Model(cents, emb.select(col(idCol), col(vecCol),
+      cell(Similarity.asDouble(col(vecCol))).as("cell")))
   }
 
-  /** Top-k by cosine among the `nprobe` cells nearest the query vector
-    * (centroid distances are driver-side micro-math over nlist rows).
-    */
+  /** Top-k by cosine among the `nprobe` cells nearest the query vector. */
   def search(model: Model, queryVec: Array[Double], vecCol: String,
       idCol: String, nprobe: Int, k: Int): DataFrame = {
-    val cells = model.centroids.zipWithIndex
-      .map { case (c, i) =>
-        val d = c.zip(queryVec).map { case (a, b) => (a - b) * (a - b) }.sum
-        (i, d)
-      }
-      .sortBy(_._2).take(nprobe).map(_._1)
-    val q = array(queryVec.map(lit): _*)
-    val vd = org.apache.spark.sql.functions.transform(
-      col(vecCol), _.cast("double"))
-    val cos = VectorExpressions.dotNative(vd, q) /
-      (sqrt(VectorExpressions.dotNative(vd, vd)) *
-        math.sqrt(queryVec.map(x => x * x).sum))
-    model.assigned
-      .filter(col("cell").isin(cells.toSeq: _*))
-      .select(col(idCol), round(cos, 6).as("cos_r"))
-      .orderBy(desc("cos_r"), col(idCol))
-      .limit(k)
+    val cells = Nearest.probe(model.centroids, queryVec, nprobe)
+    Similarity.cosineTopK(
+      model.assigned.filter(col("cell").isin(cells.toSeq: _*)), idCol,
+      Similarity.asDouble(col(vecCol)), typedLit(queryVec), k)
   }
 }

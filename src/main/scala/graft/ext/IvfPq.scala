@@ -46,116 +46,42 @@ object IvfPq {
       codebooks: Array[Array[Array[Double]]],
       encoded: DataFrame)
 
-  /** Train coarse cells + residual PQ codebooks and encode the corpus. */
+  /** Train coarse cells + residual PQ codebooks (seeds `seed + 100 + s`)
+    * and encode the corpus through the same path as [[encodeBatch]].
+    */
   def build(emb: DataFrame, vecCol: String, idCol: String,
       nlist: Int, m: Int, ksub: Int, seed: Long = 42L,
       maxIter: Int = 10): Model = {
-    val ivf = IvfIndex.build(emb, vecCol, idCol, nlist, seed, maxIter)
-    val cents = ivf.centroids
+    val cents = IvfIndex.build(emb, vecCol, idCol, nlist, seed, maxIter)
+      .centroids
     val d = cents(0).length
     require(d % m == 0, s"dim $d not divisible by m=$m")
-    val dsub = d / m
-    // Residuals v − c(cell): narrow (cell, vec) pass; the residual table
-    // only feeds sub-space training + encoding.
-    val bcCents = emb.sparkSession.sparkContext.broadcast(cents)
-    val resid = udf { (v: Seq[Double], cell: Int) =>
-      val c = bcCents.value(cell)
-      Array.tabulate(v.length)(i => v(i) - c(i))
-    }
-    val withResid = ivf.assigned
-      .select(col(idCol), col("cell"),
-        resid(Similarity.asDouble(col(vecCol)), col("cell")).as("_r"))
-    // m independent sub-space fits over the residuals — concurrent jobs
-    // (the PqIndex lesson: sequential fits pay m job-latency floors).
-    import org.apache.spark.ml.functions.array_to_vector
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val codebooks = Await.result(
-      Future.sequence((0 until m).toList.map { s => Future {
-        val sub = withResid.select(
-          array_to_vector(slice(col("_r"), s * dsub + 1, dsub)).as("_features"))
-        new org.apache.spark.ml.clustering.KMeans()
-          .setK(ksub).setSeed(seed + 100 + s).setFeaturesCol("_features")
-          .setMaxIter(maxIter).fit(sub)
-          .clusterCenters.map(_.toArray)
-      }}), Duration.Inf).toArray
-    val enc = udf { (r: Seq[Double]) =>
-      Array.tabulate(m) { s =>
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < ksub) {
-          var dd = 0.0; var i = 0
-          while (i < dsub) {
-            val diff = r(s * dsub + i) - codebooks(s)(c)(i)
-            dd += diff * diff; i += 1
-          }
-          if (dd < bestD) { bestD = dd; best = c }
-          c += 1
-        }
-        best
-      }
-    }
-    Model(m, dsub, cents, codebooks,
-      withResid.select(col(idCol), col("cell"), enc(col("_r")).as("codes")))
+    val resid = residuals(cents, emb, vecCol, idCol)
+    val pq = ProductQuantizer.train(resid, col("_r"), m, d / m, ksub,
+      seed + 100, maxIter)
+    Model(m, d / m, cents, pq.codebooks, encode(pq, resid, idCol))
   }
 
   /** Encode a NEW batch against the FROZEN model — no retraining. The
     * at-scale ingest path: a 100 TB corpus grows by batches, and
     * re-running both k-means trainings per ingest would make index
-    * maintenance O(corpus); this is O(batch) — one codegen'd pass that
-    * assigns each vector to its nearest coarse cell and PQ-encodes its
-    * residual with the existing codebooks (both broadcast: nlist·d +
-    * m·ksub·dsub doubles, kilobytes), then unions into `Model.encoded`.
+    * maintenance O(corpus); this is O(batch) — one pass that assigns each
+    * vector to its nearest coarse cell and PQ-encodes its residual with
+    * the existing codebooks (both closure literals: nlist·d + m·ksub·dsub
+    * doubles, kilobytes), then unions into `Model.encoded`.
     * The relational twin of [[Dedup.incrementalDupIds]]: probe frozen
-    * structure, never rebuild it. Deterministic: re-encoding a vector the
-    * model was built on reproduces its (cell, codes) exactly, so searches
-    * over the appended index rank appended duplicates identically.
+    * structure, never rebuild it. [[build]] encodes through this same
+    * path, so re-encoding a vector the model was built on reproduces its
+    * (cell, codes) exactly, and searches over the appended index rank
+    * appended duplicates identically.
     * Retrain only when drift degrades residuals (an offline decision —
     * e.g. [[graft.ops.Drift]] on the per-cell ADC error distribution).
     */
   def encodeBatch(model: Model, batch: DataFrame, vecCol: String,
-      idCol: String): Model = {
-    val m = model.m; val dsub = model.dsub
-    val sc = batch.sparkSession.sparkContext
-    val bcCents = sc.broadcast(model.centroids)
-    val bcBooks = sc.broadcast(model.codebooks)
-    val assignEnc = udf { (v: Seq[Double]) =>
-      val cs = bcCents.value
-      var best = 0; var bestD = Double.MaxValue
-      var c = 0
-      while (c < cs.length) {
-        var dd = 0.0; var i = 0
-        while (i < v.length) {
-          val df = v(i) - cs(c)(i); dd += df * df; i += 1
-        }
-        if (dd < bestD) { bestD = dd; best = c }
-        c += 1
-      }
-      val cc = cs(best)
-      val books = bcBooks.value
-      val ksub = books(0).length
-      val codes = Array.tabulate(m) { s =>
-        var bk = 0; var bd = Double.MaxValue
-        var k = 0
-        while (k < ksub) {
-          var dd = 0.0; var i = 0
-          while (i < dsub) {
-            val df = (v(s * dsub + i) - cc(s * dsub + i)) - books(s)(k)(i)
-            dd += df * df; i += 1
-          }
-          if (dd < bd) { bd = dd; bk = k }
-          k += 1
-        }
-        bk
-      }
-      (best, codes)
-    }
-    val enc = batch.select(col(idCol),
-      assignEnc(Similarity.asDouble(col(vecCol))).as("_ae"))
-      .select(col(idCol), col("_ae._1").as("cell"), col("_ae._2").as("codes"))
-    model.copy(encoded = model.encoded.unionByName(enc))
-  }
+      idCol: String): Model =
+    model.copy(encoded = model.encoded.unionByName(
+      encode(ProductQuantizer(model.codebooks),
+        residuals(model.centroids, batch, vecCol, idCol), idCol)))
 
   /** Top-k: probe the `nprobe` nearest cells, ADC-scan their codes with
     * per-cell distance tables on the query's residual, exact-cosine
@@ -164,41 +90,36 @@ object IvfPq {
   def search(model: Model, emb: DataFrame, vecCol: String, idCol: String,
       queryVec: Array[Double], nprobe: Int, k: Int,
       refine: Int = 4): DataFrame = {
-    val m = model.m; val dsub = model.dsub
-    val cellDist = model.centroids.zipWithIndex.map { case (c, i) =>
-      (i, c.zip(queryVec).map { case (a, b) => (a - b) * (a - b) }.sum)
-    }
-    val probed = cellDist.sortBy(_._2).take(nprobe).map(_._1)
-    // One ADC table per probed cell, on the query's residual there.
-    val tables: Map[Int, Array[Array[Double]]] = probed.map { cell =>
-      val c = model.centroids(cell)
-      val qr = Array.tabulate(queryVec.length)(i => queryVec(i) - c(i))
-      cell -> Array.tabulate(m, model.codebooks(0).length) { (s, cc) =>
-        var dd = 0.0; var i = 0
-        while (i < dsub) {
-          val diff = qr(s * dsub + i) - model.codebooks(s)(cc)(i)
-          dd += diff * diff; i += 1
-        }
-        dd
-      }
-    }.toMap
-    val adc = udf { (cell: Int, codes: Seq[Int]) =>
-      val t = tables(cell)
-      var dd = 0.0; var s = 0
-      while (s < m) { dd += t(s)(codes(s)); s += 1 }
-      dd
-    }
+    val pq = ProductQuantizer(model.codebooks)
+    val probed = Nearest.probe(model.centroids, queryVec, nprobe)
+    val tables = probed.map(cell =>
+      cell -> pq.table(residual(queryVec, model.centroids(cell)))).toMap
     val shortlist = model.encoded
       .filter(col("cell").isin(probed.toSeq: _*))
-      .select(col(idCol), adc(col("cell"), col("codes")).as("adc_d2"))
+      .select(col(idCol), pq.adc(tables, col("cell"), col("codes")).as("adc_d2"))
       .orderBy(col("adc_d2"), col(idCol)).limit(k * refine)
-    val q = array(queryVec.map(lit): _*)
-    val vd = Similarity.asDouble(col(vecCol))
-    val cos = graft.functions.VectorExpressions.dotNative(vd, q) /
-      (sqrt(graft.functions.VectorExpressions.dotNative(vd, vd)) *
-        math.sqrt(queryVec.map(x => x * x).sum))
-    emb.join(broadcast(shortlist.select(idCol)), idCol)
-      .select(col(idCol), round(cos, 6).as("cos_r"))
-      .orderBy(desc("cos_r"), col(idCol)).limit(k)
+    Similarity.cosineTopK(emb.join(broadcast(shortlist.select(idCol)), idCol),
+      idCol, Similarity.asDouble(col(vecCol)), typedLit(queryVec), k)
   }
+
+  private def residual(v: collection.Seq[Double],
+      c: Array[Double]): Array[Double] =
+    Array.tabulate(c.length)(i => v(i) - c(i))
+
+  /** (idCol, cell, _r): each vector's [[Nearest]] cell and its residual
+    * from that cell's centroid.
+    */
+  private def residuals(cents: Array[Array[Double]], df: DataFrame,
+      vecCol: String, idCol: String): DataFrame = {
+    val coarse = udf { (v: Seq[Double]) =>
+      val cell = Nearest(cents, v)
+      (cell, residual(v, cents(cell)))
+    }
+    df.select(col(idCol), coarse(Similarity.asDouble(col(vecCol))).as("_c"))
+      .select(col(idCol), col("_c._1").as("cell"), col("_c._2").as("_r"))
+  }
+
+  private def encode(pq: ProductQuantizer, resid: DataFrame,
+      idCol: String): DataFrame =
+    resid.select(col(idCol), col("cell"), pq.encode(col("_r")).as("codes"))
 }

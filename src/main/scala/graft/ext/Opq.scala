@@ -191,24 +191,6 @@ object Opq {
     }
   }
 
-  /** Decode a [[PqIndex.Model]]'s codes back to reconstructed vectors —
-    * (idCol, q) with q = concat of the m chosen codebook centroids.
-    */
-  private def reconstruct(model: PqIndex.Model, idCol: String): DataFrame = {
-    val cb = model.codebooks
-    val dec = udf { (codes: Seq[Int]) =>
-      val out = new Array[Double](model.m * model.dsub)
-      var sIdx = 0
-      while (sIdx < model.m) {
-        System.arraycopy(cb(sIdx)(codes(sIdx)), 0, out,
-          sIdx * model.dsub, model.dsub)
-        sIdx += 1
-      }
-      out
-    }
-    model.encoded.select(col(idCol), dec(col("codes")).as("q"))
-  }
-
   /** Learn the OPQ rotation: `alternations` rounds of rotate → PQ →
     * Procrustes starting from the identity. Returns the d×d row-major R
     * (apply with [[rotate]], then feed [[PqIndex.build]]/[[IvfPq.build]]
@@ -226,7 +208,9 @@ object Opq {
     (1 to alternations).foreach { _ =>
       val pq = PqIndex.build(rotate(x, "x", idCol, r), "y", idCol, m,
         ksub, seed, maxIter)
-      r = procrustes(crossSums(x, "x", reconstruct(pq, idCol), "q", idCol))
+      val q = pq.encoded.select(col(idCol),
+        ProductQuantizer(pq.codebooks).decode(col("codes")).as("q"))
+      r = procrustes(crossSums(x, "x", q, "q", idCol))
     }
     r
   }
@@ -240,20 +224,9 @@ object Opq {
       maxIter: Int = 10): Double = {
     val rot = rotate(emb, vecCol, idCol, r)
     val pq = PqIndex.build(rot, "y", idCol, m, ksub, seed, maxIter)
-    val cb = pq.codebooks
-    val err = udf { (v: Seq[Double], codes: Seq[Int]) =>
-      var acc = 0.0; var sIdx = 0
-      while (sIdx < pq.m) {
-        var i = 0
-        while (i < pq.dsub) {
-          val diff = v(sIdx * pq.dsub + i) - cb(sIdx)(codes(sIdx))(i)
-          acc += diff * diff; i += 1
-        }
-        sIdx += 1
-      }
-      acc
-    }
-    pq.encoded.select(err(col("_v"), col("codes")).as("e"))
+    val diff = zip_with(col("_v"),
+      ProductQuantizer(pq.codebooks).decode(col("codes")), _ - _)
+    pq.encoded.select(Similarity.dot(diff, diff).as("e"))
       .agg(avg("e")).head().getDouble(0)
   }
 }

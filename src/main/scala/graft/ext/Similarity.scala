@@ -30,16 +30,27 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
+  /** The exact re-rank every single-query top-k ends in: the `k`
+    * `candidates` rows with the highest cosine between `vec` and `query`,
+    * rounded to 6 places (`cos_r`), ties broken by `idCol` — a total
+    * order, so the answer is deterministic across engines. Each search
+    * only chooses the candidates: brute force every row, the sign-bucket
+    * LSH one bucket, IVF the probed cells, PQ and IVF-PQ the ADC
+    * shortlist.
+    */
+  def cosineTopK(candidates: DataFrame, idCol: String, vec: Column,
+      query: Column, k: Int): DataFrame =
+    candidates.select(col(idCol), round(cosine(vec, query), 6).as("cos_r"))
+      .orderBy(desc("cos_r"), col(idCol))
+      .limit(k)
+
   /** Exact top-k by cosine against the single query vector in `queryDf`
     * (one row, column `qv`); the query side is broadcast.
     */
   def bruteForceTopK(emb: DataFrame, vecCol: String, idCol: String,
       queryDf: DataFrame, k: Int): DataFrame =
-    emb.crossJoin(broadcast(queryDf))
-      .select(col(idCol),
-        round(cosine(asDouble(col(vecCol)), col("qv")), 6).as("cos_r"))
-      .orderBy(desc("cos_r"), col(idCol))
-      .limit(k)
+    cosineTopK(emb.crossJoin(broadcast(queryDf)), idCol,
+      asDouble(col(vecCol)), col("qv"), k)
 
   /** Sign-pattern bucket of the first `bits` dimensions: Σ 2^i·[v_i > 0].
     * A deterministic LSH for cosine similarity (random-hyperplane LSH with
@@ -58,11 +69,8 @@ object Similarity {
       queryDf: DataFrame, bits: Int, k: Int): DataFrame = {
     val bucketed = emb.withColumn("bucket", signBucket(col(vecCol), bits))
     val q = queryDf.withColumn("qbucket", signBucket(col("qv"), bits))
-    bucketed.join(broadcast(q), col("bucket") === col("qbucket"))
-      .select(col(idCol),
-        round(cosine(asDouble(col(vecCol)), asDouble(col("qv"))), 6).as("cos_r"))
-      .orderBy(desc("cos_r"), col(idCol))
-      .limit(k)
+    cosineTopK(bucketed.join(broadcast(q), col("bucket") === col("qbucket")),
+      idCol, asDouble(col(vecCol)), asDouble(col("qv")), k)
   }
 
   /** k-NN join: for EVERY row of `queries` (id `qidCol`, vector `qvCol`),

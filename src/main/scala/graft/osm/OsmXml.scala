@@ -1,6 +1,6 @@
 package graft.osm
 
-import java.io.StringReader
+import java.io.{BufferedInputStream, InputStream}
 import java.sql.Timestamp
 import java.time.Instant
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
@@ -33,8 +33,10 @@ case class OsmTables(nodes: DataFrame, ways: DataFrame, relations: DataFrame)
   * many regional extracts (or PBF blocks), so file granularity is the
   * natural 100 TB sharding; a single giant XML would need element-boundary
   * splitting (documented future path, SURVEY §7 risks). The XML never
-  * touches the driver: `binaryFiles` streams each file to an executor and
-  * the three element kinds are split from ONE cached pass.
+  * touches the driver: `binaryFiles` hands each file to an executor, whose
+  * task streams it straight into the StAX reader (never a whole-file byte
+  * array or string), and the three element kinds are split from ONE
+  * cached pass.
   */
 object OsmXml {
 
@@ -43,7 +45,8 @@ object OsmXml {
     val raw: Dataset[OsmRaw] = spark.sparkContext
       .binaryFiles(path)
       .flatMap { case (_, stream) =>
-        parseElements(new String(stream.toArray(), "UTF-8"))
+        val in = new BufferedInputStream(stream.open())
+        try parseElements(in) finally in.close()
       }
       .toDS()
       .cache()
@@ -58,12 +61,14 @@ object OsmXml {
     OsmTables(nodes, ways, relations)
   }
 
-  /** Pull-parse one document's worth of XML into element rows. */
-  private[osm] def parseElements(xml: String): Iterator[OsmRaw] = {
+  /** Pull-parse one document's worth of XML into element rows; the caller
+    * owns (and closes) `in`.
+    */
+  private[osm] def parseElements(in: InputStream): Iterator[OsmRaw] = {
     val factory = XMLInputFactory.newInstance()
     factory.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
     factory.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    val r = factory.createXMLStreamReader(new StringReader(xml))
+    val r = factory.createXMLStreamReader(in)
     val out = mutable.ArrayBuffer.empty[OsmRaw]
 
     var kind: String = null

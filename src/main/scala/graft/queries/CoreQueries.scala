@@ -279,8 +279,7 @@ object CoreQueries {
     */
   val q107 = OracleQuery(
     "q107_imageio_raster",
-    (s, d) => {
-      val dir = java.nio.file.Files.createTempDirectory("graft_png_")
+    (s, d) => Scratch.withTempDir("graft_png_") { dir =>
       for (x <- 0 until 4; y <- 0 until 4) {
         val img = new java.awt.image.BufferedImage(
           256, 256, java.awt.image.BufferedImage.TYPE_INT_RGB)
@@ -304,17 +303,9 @@ object CoreQueries {
         col("c_nationkey").cast("long").as("gid"),
         ((col("c_custkey") % 347).cast("double") * 1.0371 - 179.9).as("lng"),
         ((col("c_custkey") % 161).cast("double") * 1.0133 - 80.9).as("lat"))
-      val out = graft.raster.RasterSampler
+      Scratch.collectLocal(graft.raster.RasterSampler
         .medianPass(coords, store, 2, graft.raster.ValueFns.strava, "vn")
-        .select(col("gid"), round(col("vn"), 6).as("v_norm"))
-      val rows = out.collect().toSeq
-      val cleaned = s.createDataFrame(
-        s.sparkContext.parallelize(rows, 1), out.schema)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      cleaned
+        .select(col("gid"), round(col("vn"), 6).as("v_norm")))
     },
     Some("""WITH pts AS (
               SELECT CAST(c_nationkey AS BIGINT) AS gid,

@@ -456,32 +456,19 @@ object CurationQueries {
     * (id, distance) is correct against the raw vectors. Top-k optimality
     * (recall) is pinned separately in IvfIndexSpec.
     */
-  private object IvfCert { @volatile var ids: Option[Seq[Long]] = None }
+  private val IvfCert = new AnnCert
   val q74 = OracleQuery(
     "q74_ivf_ann",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
-      val qv = emb.filter(col("vec_id") === 0)
-        .select(graft.ext.Similarity.asDouble(col("embedding")))
-        .head().getSeq[Double](0).toArray
+      val qv = IvfCert.queryVec(emb)
       val model = graft.ext.IvfIndex.build(emb, "embedding", "vec_id",
         nlist = 16, maxIter = 5)
-      val res = graft.ext.IvfIndex.search(model, qv, "embedding", "vec_id",
-        nprobe = 4, k = 5)
-      // k rows: collect once so the certificate describes exactly what
-      // the driver writes, then return a local relation.
-      val rows = res.collect().toSeq
-      IvfCert.ids = Some(rows.map(_.getLong(0)))
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), res.schema)
+      IvfCert.record(graft.ext.IvfIndex.search(model, qv, "embedding",
+        "vec_id", nprobe = 4, k = 5))
     },
     None,
-    dynOracle = () => IvfCert.ids.map(ids =>
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-               q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-          SELECT vec_id,
-                 round(list_dot_product(v, qv) /
-                       (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))), 6) AS cos_r
-          FROM e, q WHERE vec_id IN (${ids.mkString(", ")})"""),
+    dynOracle = IvfCert.oracle,
   )
 
   /** Q164 [X]: the FULL Gopher duplicated-n-gram profile

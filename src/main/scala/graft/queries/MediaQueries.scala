@@ -100,23 +100,14 @@ object MediaQueries {
     */
   val q177 = OracleQuery(
     "q177_phash_index_store",
-    (s, d) => {
+    (s, d) => Scratch.withTempDir("graft_phsig_") { outPath =>
       val media = Multimodal.asMedia(Tables.documents(s, d), "doc_id", "text")
-      val outPath = java.nio.file.Files.createTempDirectory("graft_phsig_")
       val out = outPath.toString
       graft.ext.IndexStore.writeSignatures(
         Multimodal.frameHashes(media, Seq(0)).toDF(), out)
-      val probed = Multimodal.incrementalPhashPairs(
+      Scratch.collectLocal(Multimodal.incrementalPhashPairs(
         graft.ext.IndexStore.loadSignatures(s, out), media,
-        maxDist = 4, frame = 1)
-      val rows = probed.collect().toSeq
-      val cleaned = s.createDataFrame(
-        s.sparkContext.parallelize(rows, 1), probed.schema)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(outPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      cleaned
+        maxDist = 4, frame = 1))
     },
     Some(phashProbeSql),
   )

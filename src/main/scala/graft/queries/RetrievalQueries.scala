@@ -118,29 +118,18 @@ object RetrievalQueries {
     * recomputes the exact cosine for the returned ids — the hash match
     * proves the reported distances; recall is pinned in the PQ spec.
     */
-  private object PqCert { @volatile var ids: Option[Seq[Long]] = None }
+  private val PqCert = new AnnCert
   val q91 = OracleQuery(
     "q91_pq_ann",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
-      val qv = emb.filter(col("vec_id") === 0)
-        .select(Similarity.asDouble(col("embedding"))).head()
-        .getSeq[Double](0).toArray
+      val qv = PqCert.queryVec(emb)
       val model = PqIndex.build(emb.filter(col("vec_id") >= 5),
         "embedding", "vec_id", m = 8, ksub = 16, maxIter = 5)
-      val res = PqIndex.search(model, qv, "vec_id", k = 5)
-      val rows = res.collect().toSeq // k rows
-      PqCert.ids = Some(rows.map(_.getLong(0)))
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), res.schema)
+      PqCert.record(PqIndex.search(model, qv, "vec_id", k = 5))
     },
     None,
-    dynOracle = () => PqCert.ids.map(ids =>
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-               q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-          SELECT vec_id,
-                 round(list_dot_product(v, qv) /
-                       (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))), 6) AS cos_r
-          FROM e, q WHERE vec_id IN (${ids.mkString(", ")})"""),
+    dynOracle = PqCert.oracle,
   )
 
   /** Q92 [X]: partitioned sink + pruned scan — write documents
@@ -152,26 +141,18 @@ object RetrievalQueries {
     */
   val q92 = OracleQuery(
     "q92_partition_prune",
-    (s, d) => {
-      val outPath = java.nio.file.Files.createTempDirectory("graft_part_")
+    (s, d) => Scratch.withTempDir("graft_part_") { outPath =>
       val out = outPath.toString
       Tables.documents(s, d).write.partitionBy("lang")
         .mode("overwrite").parquet(out)
       val agg = s.read.parquet(out).filter(col("lang") === "en")
         .groupBy("source").agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("chars"))
-      // Materialize the (tiny: one row per source) aggregate, then delete
-      // the roundtrip directory — otherwise every Verify/Bench invocation
+      // Materialize the (tiny: one row per source) aggregate before the
+      // roundtrip directory goes — otherwise every Verify/Bench invocation
       // leaks a parquet copy of the corpus into /tmp. The returned frame
       // is a local relation, so later writes don't re-read the dead path.
-      val rows = agg.collect().toSeq
-      val cleaned = s.createDataFrame(
-        s.sparkContext.parallelize(rows, 1), agg.schema)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(outPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      cleaned
+      Scratch.collectLocal(agg)
     },
     Some("""SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
                    CAST(sum(n_chars) AS BIGINT) AS chars

@@ -1368,26 +1368,22 @@ object ScaleQueries {
       val k = 64
       val docs = Tables.documents(s, d).select(col("source"), col("doc_id"),
         length(col("text")).cast("long").as("v"))
-      val outPath = java.nio.file.Files.createTempDirectory("graft_rsk_")
-      val store = outPath.toString + "/rs"
-      graft.ext.IndexStore.writeRankSketch(
-        graft.ops.Sketches.rankSketch(
-          docs.filter(col("doc_id") % 10 =!= 0), "source", "v", k),
-        k, store)
-      val (loaded, kLoaded) = graft.ext.IndexStore.loadRankSketch(s, store)
-      val merged = graft.ops.Sketches.rankSketchMerge(loaded,
-        graft.ops.Sketches.rankSketch(
-          docs.filter(col("doc_id") % 10 === 0), "source", "v", kLoaded),
-        "source", kLoaded)
-      val ladder = graft.ops.Sketches.quantilesFromRankSketch(
-        merged, "source", Seq(10, 50, 90))
-      val rows = ladder.collect()
-        .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
+      val rows = Scratch.withTempDir("graft_rsk_") { outPath =>
+        val store = outPath.toString + "/rs"
+        graft.ext.IndexStore.writeRankSketch(
+          graft.ops.Sketches.rankSketch(
+            docs.filter(col("doc_id") % 10 =!= 0), "source", "v", k),
+          k, store)
+        val (loaded, kLoaded) = graft.ext.IndexStore.loadRankSketch(s, store)
+        val merged = graft.ops.Sketches.rankSketchMerge(loaded,
+          graft.ops.Sketches.rankSketch(
+            docs.filter(col("doc_id") % 10 === 0), "source", "v", kLoaded),
+          "source", kLoaded)
+        graft.ops.Sketches.quantilesFromRankSketch(
+          merged, "source", Seq(10, 50, 90)).collect()
+          .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSeq
+      }
       RankSketchState.ladder = Some(rows)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(outPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
       import s.implicits._
       val lit3 = rows.toDF("source", "pct", "v_q")
       val rex = lit3.join(docs, Seq("source"))

@@ -161,30 +161,19 @@ object SimilarityQueries {
     * it, exact re-rank fixes the top. Certificate oracle like q74/q91:
     * DuckDB recomputes exact cosines for the returned ids.
     */
-  private object IvfPqCert { @volatile var ids: Option[Seq[Long]] = None }
+  private val IvfPqCert = new AnnCert
   val q108 = OracleQuery(
     "q108_ivfpq_ann",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
-      val qv = emb.filter(col("vec_id") === 0)
-        .select(Similarity.asDouble(col("embedding"))).head()
-        .getSeq[Double](0).toArray
+      val qv = IvfPqCert.queryVec(emb)
       val model = graft.ext.IvfPq.build(emb, "embedding", "vec_id",
         nlist = 16, m = 8, ksub = 16, maxIter = 5)
-      val res = graft.ext.IvfPq.search(model, emb, "embedding", "vec_id",
-        qv, nprobe = 4, k = 5)
-      val rows = res.collect().toSeq // k rows
-      IvfPqCert.ids = Some(rows.map(_.getLong(0)))
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), res.schema)
+      IvfPqCert.record(graft.ext.IvfPq.search(model, emb, "embedding",
+        "vec_id", qv, nprobe = 4, k = 5))
     },
     None,
-    dynOracle = () => IvfPqCert.ids.map(ids =>
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-               q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-          SELECT vec_id,
-                 round(list_dot_product(v, qv) /
-                       (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(qv, qv))), 6) AS cos_r
-          FROM e, q WHERE vec_id IN (${ids.mkString(", ")})"""),
+    dynOracle = IvfPqCert.oracle,
   )
 
   /** Q109 [X]: simhash Hamming near-dup pairs (Manku et al. WWW'07) —
@@ -447,21 +436,12 @@ object SimilarityQueries {
     */
   val q116 = OracleQuery(
     "q116_gram_index_store",
-    (s, d) => {
-      val outPath = java.nio.file.Files.createTempDirectory("graft_gidx_")
+    (s, d) => Scratch.withTempDir("graft_gidx_") { outPath =>
       val out = outPath.toString
       graft.ext.IndexStore.writeGramIndex(
         Dedup.gramIndex(Tables.documents(s, d), "doc_id", "text", n = 2), out)
-      val joined = Dedup.jaccardSimilarityJoin(
-        graft.ext.IndexStore.loadGramIndex(s, out), tauNum = 1, tauDen = 2)
-      val rows = joined.collect().toSeq
-      val cleaned = s.createDataFrame(
-        s.sparkContext.parallelize(rows, 1), joined.schema)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(outPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      cleaned
+      Scratch.collectLocal(Dedup.jaccardSimilarityJoin(
+        graft.ext.IndexStore.loadGramIndex(s, out), tauNum = 1, tauDen = 2))
     },
     Some("""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
             bg AS (SELECT DISTINCT doc_id, g FROM

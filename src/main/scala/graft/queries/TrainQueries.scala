@@ -564,11 +564,10 @@ object TrainQueries {
       val qv = emb.filter(col("vec_id") === 0)
         .select(Similarity.asDouble(col("embedding")))
         .head().getSeq[Double](0).toArray
-      val res = Similarity.mmrRerank(emb.filter(col("vec_id") =!= 0),
-        "embedding", "vec_id", qv, shortlist = 50, k = 10, lambda = 0.7)
-      val rows = res.collect().toSeq
-      MmrCert.sel = Some(rows.map(r => (r.getLong(0), r.getInt(2))))
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), res.schema)
+      Scratch.collectLocal(
+        Similarity.mmrRerank(emb.filter(col("vec_id") =!= 0),
+          "embedding", "vec_id", qv, shortlist = 50, k = 10, lambda = 0.7),
+        rows => MmrCert.sel = Some(rows.map(r => (r.getLong(0), r.getInt(2)))))
     },
     None,
     dynOracle = () => MmrCert.sel.map(sel =>
@@ -669,22 +668,14 @@ object TrainQueries {
     */
   val q130 = OracleQuery(
     "q130_jsonl_roundtrip",
-    (s, d) => {
-      val p = java.nio.file.Files.createTempDirectory("graft_jsonl_")
+    (s, d) => Scratch.withTempDir("graft_jsonl_") { p =>
       val docs = Tables.documents(s, d)
       graft.ops.JsonlCorpus.write(docs, p.toString, 4)
       val agg = graft.ops.JsonlCorpus.read(s, p.toString, docs.schema)
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("chars"),
           max("doc_id").as("max_id"))
-      val rows = agg.collect().toSeq
-      val cleaned = s.createDataFrame(
-        s.sparkContext.parallelize(rows, 1), agg.schema)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      cleaned
+      Scratch.collectLocal(agg)
     },
     Some("""SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
                    CAST(sum(n_chars) AS BIGINT) AS chars,

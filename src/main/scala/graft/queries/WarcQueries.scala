@@ -359,8 +359,7 @@ object WarcQueries {
     */
   val q246 = OracleQuery(
     "q246_wet_export_import",
-    (s, d) => {
-      val outPath = java.nio.file.Files.createTempDirectory("graft_wet_")
+    (s, d) => Scratch.withTempDir("graft_wet_") { outPath =>
       val out = outPath.toString + "/wet"
       graft.ops.WarcCorpus.writeWet(
         Tables.documents(s, d).select(
@@ -382,14 +381,7 @@ object WarcQueries {
         max("doc_id").as("max_doc"),
         sum(length(col("text"))).cast("long").as("total_bytes"),
         sum(size(split(col("text"), " "))).cast("long").as("total_toks"))
-      val rows = agg.collect().toSeq
-      val cleaned = s.createDataFrame(
-        s.sparkContext.parallelize(rows, 1), agg.schema)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(outPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      cleaned
+      Scratch.collectLocal(agg)
     },
     Some("""SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
               min(doc_id) AS min_doc, max(doc_id) AS max_doc,
@@ -413,9 +405,8 @@ object WarcQueries {
     */
   val q254 = OracleQuery(
     "q254_tfrecord_roundtrip",
-    (s, d) => {
+    (s, d) => Scratch.withTempDir("graft_tfr_") { outPath =>
       import org.apache.spark.sql.types._
-      val outPath = java.nio.file.Files.createTempDirectory("graft_tfr_")
       val out = outPath.toString + "/tfr"
       graft.ops.TfRecord.write(
         Tables.documents(s, d).select(
@@ -430,18 +421,10 @@ object WarcQueries {
         StructField("source", StringType), StructField("n_chars", LongType),
         StructField("toks", ArrayType(LongType)),
         StructField("f", ArrayType(FloatType))))
-      val back = graft.ops.TfRecord.read(s, out, schema)
+      Scratch.collectLocal(graft.ops.TfRecord.read(s, out, schema)
         .select(col("doc_id"), col("text"), col("source"), col("n_chars"),
           aggregate(col("toks"), lit(0L), (a, x) => a + x).as("tok_sum"),
-          element_at(col("f"), 1).cast("double").as("f0"))
-      val rows = back.collect().toSeq
-      val cleaned = s.createDataFrame(
-        s.sparkContext.parallelize(rows, 1), back.schema)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(outPath).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      cleaned
+          element_at(col("f"), 1).cast("double").as("f0")))
     },
     Some("""SELECT doc_id, text, source, n_chars,
               CAST(list_sum(list_transform(string_split(text, ' '),

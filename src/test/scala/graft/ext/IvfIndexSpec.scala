@@ -59,8 +59,8 @@ class IvfIndexSpec extends SparkSpec {
     appended.encoded.count() shouldBe nAll
     appended.centroids should be theSameInstanceAs model.centroids
     // determinism: re-encoding the BUILD vectors against the frozen model
-    // reproduces the build-time encoding (same residual arithmetic; cell
-    // assignment may differ only on exact distance ties)
+    // reproduces the build-time encoding exactly — build encodes through
+    // the same cell pick and residual encode
     val reEnc = IvfPq.encodeBatch(
       model.copy(encoded = model.encoded.limit(0)),
       base, "embedding", "vec_id").encoded
@@ -69,7 +69,7 @@ class IvfIndexSpec extends SparkSpec {
       .filter(col("x.cell") === col("y.cell") &&
         col("x.codes") === col("y.codes"))
       .count()
-    agree.toDouble / nBase should be >= 0.95
+    agree shouldBe nBase
     // recall parity: searching the appended index is within tolerance of a
     // full rebuild over the same corpus (both vs the exact top-k)
     val qv = emb.filter(col("vec_id") === 0)
@@ -102,5 +102,25 @@ class IvfIndexSpec extends SparkSpec {
         array((0 until 64).map(_ => lit(0.1)): _*).as("qv")), 5)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     all.toSeq shouldBe brute.toSeq
+  }
+
+  test("PQ and IVF-PQ equal brute force exactly when the shortlist is the corpus") {
+    val emb = Tables.embeddings(spark, TestSpark.Sf0001).limit(100)
+    val qv = Array.fill(64)(0.1)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val brute = rows(Similarity.bruteForceTopK(
+      emb, "embedding", "vec_id",
+      spark.range(1).select(
+        array((0 until 64).map(_ => lit(0.1)): _*).as("qv")), 5))
+    // k·refine = 5·20 ≥ 100 rows: the ADC shortlist keeps every vector
+    val pq = PqIndex.build(emb, "embedding", "vec_id", m = 8, ksub = 16,
+      maxIter = 5)
+    rows(PqIndex.search(pq, qv, "vec_id", k = 5, refine = 20)) shouldBe brute
+    // ... and with every cell probed, so does IVF-PQ's
+    val ivfpq = IvfPq.build(emb, "embedding", "vec_id",
+      nlist = 4, m = 8, ksub = 16, maxIter = 5)
+    rows(IvfPq.search(ivfpq, emb, "embedding", "vec_id", qv,
+      nprobe = 4, k = 5, refine = 20)) shouldBe brute
   }
 }

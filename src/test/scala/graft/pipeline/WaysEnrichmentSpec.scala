@@ -2,64 +2,12 @@ package graft.pipeline
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, TestSpark}
+import graft.{SparkSpec, StreetGrid, TestSpark}
 import graft.osm.{OsmXml, RoutingGraph}
 import graft.raster.Tile
 
-/** A street grid the spec writes itself: `Rows` horizontal residential
-  * ways (ids 10 + r) with a shape node between each pair of intersections,
-  * `Cols` vertical footways (ids 100 + c), and one non-routable way across
-  * the grid that shares two intersections. Every intersection is a vertex,
-  * so the expected edges, gids and polylines are known without Spark.
-  */
-object StreetGrid {
-  val Rows = 6
-  val Cols = 6
-  private val (lng0, lat0, dLng, dLat) = (-118.16, 34.12, 0.0041, 0.0033)
-
-  private def crossing(r: Int, c: Int): (Long, Double, Double) =
-    (1L + r * Cols + c, lng0 + c * dLng, lat0 + r * dLat)
-
-  /** The shape node between crossings (r, c) and (r, c + 1). */
-  private def shape(r: Int, c: Int): (Long, Double, Double) =
-    (1000L + r * Cols + c, lng0 + (c + 0.5) * dLng, lat0 + r * dLat + 0.0004)
-
-  /** gid → polyline (lng, lat), as `RoutingGraph.edges` must split it. */
-  val edges: Map[Long, Seq[(Double, Double)]] = {
-    def pt(n: (Long, Double, Double)) = (n._2, n._3)
-    val horizontal = for (r <- 0 until Rows; s <- 1 until Cols) yield
-      ((10L + r) * 65536 + s) -> Seq(crossing(r, s - 1), shape(r, s - 1), crossing(r, s)).map(pt)
-    val vertical = for (c <- 0 until Cols; s <- 1 until Rows) yield
-      ((100L + c) * 65536 + s) -> Seq(crossing(s - 1, c), crossing(s, c)).map(pt)
-    (horizontal ++ vertical).toMap
-  }
-
-  /** Write the grid as OSM XML v0.6 to `dir/grid.osm`; returns its path. */
-  def write(dir: java.nio.file.Path): String = {
-    val sb = new StringBuilder("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<osm version=\"0.6\">\n")
-    def node(n: (Long, Double, Double)): Unit =
-      sb ++= s"""  <node id="${n._1}" lat="${n._3}" lon="${n._2}" version="1"/>\n"""
-    def way(id: Long, nds: Seq[Long], highway: String): Unit = {
-      sb ++= s"""  <way id="$id" version="1">\n"""
-      nds.foreach(nd => sb ++= s"""    <nd ref="$nd"/>\n""")
-      sb ++= s"""    <tag k="highway" v="$highway"/>\n  </way>\n"""
-    }
-    for (r <- 0 until Rows; c <- 0 until Cols) node(crossing(r, c))
-    for (r <- 0 until Rows; c <- 0 until Cols - 1) node(shape(r, c))
-    for (r <- 0 until Rows) way(10L + r,
-      (0 until Cols).flatMap(c => crossing(r, c)._1 +: (if (c < Cols - 1) Seq(shape(r, c)._1) else Nil)),
-      "residential")
-    for (c <- 0 until Cols) way(100L + c, (0 until Rows).map(r => crossing(r, c)._1), "footway")
-    way(500L, Seq(crossing(0, 0)._1, crossing(Rows - 1, Cols - 1)._1), "proposed")
-    sb ++= "</osm>\n"
-    val f = dir.resolve("grid.osm")
-    java.nio.file.Files.write(f, sb.toString.getBytes("UTF-8"))
-    f.toString
-  }
-}
-
-/** Golden end-to-end: the §3.1 enrichment pipeline on a spec-written
-  * street grid with deterministic synthetic tiles → `ways_metadata`
+/** Golden end-to-end: the §3.1 enrichment pipeline on the spec-written
+  * [[graft.StreetGrid]] with deterministic synthetic tiles → `ways_metadata`
   * semantics (popularity + greenery, normalized, FK-closed, highres pass
   * disabled — update_ways_metadata.py:128-144), checked against a
   * driver-side oracle. The reference sample extract, when present, keeps
