@@ -1,28 +1,28 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.Files
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, DedupCluster, Packing, PqIndex, Retrieval, Sampling, SemDedup, Similarity, TextAnalysis}
 import graft.ops.{Graph, RangeJoin}
+import graft.queries.Scratch
+import graft.streaming.EventStreams.MergeState
 
-/** Opt-in large-synthetic soak (SURVEY §5.6): generates corpora 100-1000×
-  * the sf0.1 tables WITH SPARK ITSELF (spark.range + deterministic column
-  * exprs — no driver-side data, no testdata modification) and pushes the
-  * LLM-pipeline operators through them. The point is scale evidence, not
-  * correctness (the oracle owns correctness): no collect of large results,
-  * timings printed per stage.
+/** Large-synthetic soak (SURVEY §5.6): generates corpora WITH SPARK
+  * ITSELF (spark.range + deterministic column exprs — no driver-side
+  * data, no testdata modification) and pushes the LLM-pipeline operators
+  * through them. The point is scale evidence, not correctness (the
+  * oracle owns correctness): no collect of large results, one timing per
+  * stage, and each stage's bound is a function of the shape.
   *
   *   sbt "runMain graft.Soak [nDocs] [nVecs]"   (defaults 1M / 200k)
+  *
+  * [[run]] is the whole program at any shape; `SoakSpec` runs it at
+  * 10k / 2k in the test suite.
   */
 object Soak {
-
-  private def time[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"[soak] $label%-36s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    r
-  }
 
   /** Rows in each partition of `df`, EMPTY partitions included (grouping
     * by `spark_partition_id()` skips them: a few-hot / rest-empty exchange
@@ -61,28 +61,136 @@ object Soak {
 
   /** Deterministic 64-dim embeddings in [-1, 1]. */
   def syntheticVecs(spark: SparkSession, n: Long): DataFrame =
-    spark.range(n).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(63)),
-        i => (pmod(xxhash64(col("id") * 64 + i), lit(2000)).cast("double") - 1000.0)
-          / 1000.0).as("embedding"))
+    vecsOf(spark.range(n).select(col("id").as("vec_id"), col("id").as("seed")))
+
+  /** [[syntheticVecs]] with every 100th vector re-derived from its
+    * predecessor's seed: exact-copy pairs at Hamming distance 0.
+    */
+  private def plantedVecs(spark: SparkSession, n: Long): DataFrame =
+    vecsOf(spark.range(n).select(col("id").as("vec_id"),
+      when(col("id") % 100 === 99, col("id") - 1).otherwise(col("id"))
+        .as("seed")))
+
+  private def vecsOf(seeds: DataFrame): DataFrame =
+    seeds.select(col("vec_id"), transform(sequence(lit(0), lit(63)),
+      i => (pmod(xxhash64(col("seed") * 64 + i), lit(2000)).cast("double")
+        - 1000.0) / 1000.0).as("embedding"))
+
+  /** The 1% arrival batch of a generator: its first n/100 rows — the
+    * corpus head's seeds, so every batch row has a corpus twin — with ids
+    * moved to `slot`·n, clear of the corpus and of every other slot.
+    */
+  private def batchOf(gen: Long => DataFrame, idCol: String, n: Long,
+      slot: Int): DataFrame =
+    gen(n / 100).withColumn(idCol, col(idCol) + slot * n)
+
+  /** Assert lo ≤ v ≤ hi and print the measured `v` next to its bound
+    * (an upper bound of `Long.MaxValue` or +∞ is open). A strict double
+    * bound passes `Math.nextUp(lo)` / `Math.nextDown(hi)`.
+    */
+  private def check[N](label: String, v: N, lo: N, hi: N)(
+      implicit num: Numeric[N]): Unit = {
+    def fmt(x: N) = x match { case d: Double => f"$d%.6g"; case _ => s"$x" }
+    val bound =
+      if (hi == Long.MaxValue || hi == Double.PositiveInfinity) s">= ${fmt(lo)}"
+      else s"in [${fmt(lo)}, ${fmt(hi)}]"
+    println(s"[soak] $label ${fmt(v)} ($bound)")
+    assert(num.lteq(lo, v) && num.lteq(v, hi), s"$label ${fmt(v)} is not $bound")
+  }
+
+  /** `a` and `b` hold the same rows with the same multiplicities: one
+    * signed count per distinct row, so each side is computed once.
+    */
+  private def sameRows(a: DataFrame, b: DataFrame, what: String): Unit =
+    assert(a.withColumn("__n", lit(1L))
+      .unionByName(b.withColumn("__n", lit(-1L)))
+      .groupBy(a.columns.toSeq.map(col): _*).agg(sum("__n").as("__n"))
+      .filter(col("__n") =!= 0).isEmpty, what)
+
+  /** The merge law of a persisted streaming state at soak shape:
+    * merging the summaries of `history`'s corpus rows and its `isBatch`
+    * rows must equal one cold summary of the whole history, row for row.
+    * Returns the merged state, checkpointed for the caller's reads.
+    */
+  private def mergeLaw(state: MergeState, history: DataFrame,
+      isBatch: Column): DataFrame = {
+    val merged = state.merge(state.summarize(history.filter(!isBatch)),
+      state.summarize(history.filter(isBatch))).localCheckpoint()
+    sameRows(merged, state.summarize(history),
+      s"$state: merge != cold rebuild (merge law broken)")
+    merged
+  }
+
+  /** The largest (band, key) bucket of 64-bit fingerprints `sig`
+    * (`__id`, `sh`) banded for Hamming radius `r`.
+    */
+  private def maxBandBucket(sig: DataFrame, r: Int): Long =
+    Dedup.hammingBandKeys(sig, 64, r).groupBy("band", "bk").count()
+      .agg(max("count")).head().getLong(0)
+
+  /** `df`'s (doc_id, text) rows as per-record-gzip WARC conversion
+    * shards, one per value of `shard`, records in id order.
+    */
+  private def warcShards(df: DataFrame,
+      shard: Column): Dataset[(Long, Array[Byte])] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(shard.cast("long"), col("doc_id"), col("text"))
+      .as[(Long, Long, String)]
+      .groupByKey(_._1)
+      .mapGroups { (sh, it) =>
+        (sh, ext.Warc.writeWarcGz(it.toSeq.sortBy(_._2).map {
+          case (_, id, t) => ext.Warc.WarcRecord(Seq(
+            "WARC-Type" -> "conversion",
+            "WARC-Target-URI" -> s"http://graft.test/$id",
+            "WARC-Date" -> "2026-01-01T00:00:00Z",
+            "Content-Type" -> "text/plain"), t.getBytes("US-ASCII"))
+        }))
+      }
+  }
+
+  /** A row count as a stage label: 1M, 500k, 2k, or the digits. */
+  private def shape(n: Long): String =
+    if (n % 1000000 == 0) s"${n / 1000000}M"
+    else if (n % 1000 == 0) s"${n / 1000}k" else n.toString
 
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(1000000L)
     val nVecs = args.drop(1).headOption.map(_.toLong).getOrElse(200000L)
     val spark = Harness.session()
     spark.sparkContext.setLogLevel("WARN")
-
     println(s"[soak] docs=$nDocs vecs=$nVecs cores=${Harness.cpus}")
+    val stages = run(spark, nDocs, nVecs)
+    println(f"[soak] ${stages.size} stages, ${stages.map(_._2).sum}%.1f s")
+    spark.stop()
+  }
+
+  /** Every soak stage at `nDocs` documents and `nVecs` vectors, in order;
+    * each stage's line prints as it finishes (so a crash shows where).
+    * Returns each stage's label and seconds. Releases every Dataset it
+    * caches and every temp dir it makes.
+    */
+  def run(spark: SparkSession, nDocs: Long,
+      nVecs: Long): Seq[(String, Double)] = {
+    import spark.implicits._
+    val stages = scala.collection.mutable.ArrayBuffer[(String, Double)]()
+    def time[T](label: String)(f: => T): T = {
+      val t0 = System.nanoTime()
+      val r = f
+      val s = (System.nanoTime() - t0) / 1e9
+      println(f"[soak] $label%-36s $s%8.2f s")
+      stages += label -> s
+      r
+    }
+    val nBatch = nDocs / 100
     val docs = syntheticDocs(spark, nDocs).cache()
     time("materialize docs")(docs.count())
 
     time("exact dedup")(
       Dedup.exactByHash(docs, "doc_id", "text")
         .filter(col("dup_cnt") > 1).count())
-    time("minhash signatures")(
-      Dedup.minHashSignature(docs, "doc_id", "text").count())
     val sig = Dedup.minHashSignature(docs, "doc_id", "text").cache()
-    sig.count()
+    time("minhash signatures")(sig.count())
     val lshPairCount = time("lsh candidate pairs")(
       Dedup.lshCandidatePairs(sig, "doc_id",
         Seq(Seq("mh0", "mh1"), Seq("mh2", "mh3"))).count())
@@ -140,12 +248,10 @@ object Soak {
     time("chunk-level dedup (width 8)")(
       ext.Chunker.dedupChunks(docs, "doc_id", "text", 8)
         .agg(sum("n_kept")).count())
-    time("incremental chunk dedup (1% batch)")({
-      val batch = syntheticDocs(spark, nDocs / 100)
-        .withColumn("doc_id", col("doc_id") + 3 * nDocs)
-      ext.Chunker.incrementalDedupChunks(docs, batch, "doc_id", "text", 8)
-        .count()
-    })
+    time("incremental chunk dedup (1% batch)")(
+      ext.Chunker.incrementalDedupChunks(docs,
+        batchOf(syntheticDocs(spark, _), "doc_id", nDocs, 3),
+        "doc_id", "text", 8).count())
 
     // round-6 (cont.): the frozen bigram LM — train once on the corpus
     // (count tables checkpoint), then scoring a 1% batch is an O(batch)
@@ -153,9 +259,7 @@ object Soak {
     // time. The batch reuses corpus-head seeds, so its docs are
     // corpus-typical: the p10 gate must admit the large majority.
     {
-      val nBatch = nDocs / 100
-      val batch = syntheticDocs(spark, nBatch)
-        .withColumn("doc_id", col("doc_id") + 4 * nDocs)
+      val batch = batchOf(syntheticDocs(spark, _), "doc_id", nDocs, 4)
       val lm = time("bigram LM train (corpus pass)")({
         val m = TextAnalysis.trainBigramLm(docs, "doc_id", "text")
         m.cbg.count(); m.cu.count(); m.vocab.count()
@@ -164,16 +268,11 @@ object Soak {
       time("bigram LM score (1% batch)")({
         val n = TextAnalysis.scoreBigramLm(lm, batch, "doc_id", "text").count()
         assert(n == nBatch, s"LM scored $n of $nBatch batch docs")
-        n
       })
-      time("calibrated LM gate (p10, 1% batch)")({
-        val admits = TextAnalysis.calibratedLmGate(docs, batch,
-          "doc_id", "text").filter(col("admit") === 1).count()
-        assert(admits >= nBatch * 7 / 10 && admits <= nBatch,
-          s"p10 gate admitted $admits of $nBatch corpus-typical docs")
-        println(s"[soak] lm gate admits $admits / $nBatch")
-        admits
-      })
+      time("calibrated LM gate (p10, 1% batch)")(
+        check("lm gate admits", TextAnalysis.calibratedLmGate(docs, batch,
+          "doc_id", "text").filter(col("admit") === 1).count(),
+          nBatch * 7 / 10, nBatch))
     }
 
     val vecs = syntheticVecs(spark, nVecs).cache()
@@ -267,73 +366,53 @@ object Soak {
     // fan-out must stay LINEAR in the corpus (candidates ≈ true dup pairs
     // + rare collisions), never quadratic. A silent filter regression
     // would pass correctness (verification re-checks pairs) but melt at
-    // 100 TB; this assertion catches it at the soak shape.
+    // 100 TB; this bound catches it at the soak shape.
     // The three exact joins share ONE GramIndex — the session shape the
     // index exists for: the 50M-gram dictionary pipeline (the dominant
     // cost of every exact join at this scale) runs once, not three times.
     val gramIdx = Dedup.gramIndex(docs, "doc_id", "text", n = 2)
     time("gram index build (shared)")(gramIdx.sets.count())
-    time("jaccard join candidates (fan-out bound)")({
-      val nCand = Dedup.candidates(Dedup.Jaccard, gramIdx, gramIdx,
-        tauNum = 1, tauDen = 2).count()
-      assert(nCand <= nDocs,
-        s"prefix-filter fan-out broke: $nCand candidate pairs exceed the " +
-          s"linear bound $nDocs (true dups ~${nDocs / 100})")
-      println(s"[soak] jaccard candidates $nCand <= bound $nDocs " +
-        s"(true dups ~${nDocs / 100})")
-      nCand
-    })
+    time("jaccard join candidates (fan-out bound)")(
+      check(s"jaccard candidates (true dups ~$nBatch)",
+        Dedup.candidates(Dedup.Jaccard, gramIdx, gramIdx, 1, 2).count(),
+        0L, nDocs))
     // round-17: the pinned exchanges' SKEW posture. atFullWidth's explicit
     // repartition (REPARTITION_BY_NUM) opts those exchanges out of AQE's
     // OptimizeSkewedJoin, so a hot gid / hot doc_a would become an
     // unsplittable straggler task. Assert the post-pin partition-row
-    // distribution stays balanced at the 1M shape: the gid probes are
-    // rarest-first prefix grams (structurally small buckets) and the
-    // candidate-pair dedup partitions by hash(doc_a) over ~corpus-many
-    // distinct doc_a values — both should hash near-uniform. max/median
-    // ≤ 4 is a loose straggler bound (uniform hashing measures ~1.0-1.1).
+    // distribution stays balanced: the gid probes are rarest-first prefix
+    // grams (structurally small buckets) and the candidate-pair dedup
+    // partitions by hash(doc_a) over ~corpus-many distinct doc_a values —
+    // both should hash near-uniform. max/median ≤ 4 is a loose straggler
+    // bound (uniform hashing measures ~1.0-1.1); past it, salt the keys.
     time("pinned exchange skew (gid probes / doc_a pairs)")({
-      def maxMed(df: org.apache.spark.sql.DataFrame, label: String): Unit = {
-        val counts = partitionRows(df)
-        val ratio = partitionSkew(counts)
-        assert(ratio <= 4.0,
-          s"pinned $label exchange skewed: max/median partition rows " +
-            s"$ratio > 4 over ${counts.length} partitions — salt the pin keys")
-        println(f"[soak] pinned $label partitions: n=${counts.length} " +
-          f"max=${counts.max} ratio=$ratio%.2f (bound 4.0)")
-      }
-      maxMed(Dedup.probeRows(Dedup.Jaccard, gramIdx, 1, 2), "gid-probe")
-      maxMed(Dedup.candidates(Dedup.Jaccard, gramIdx, gramIdx, 1, 2),
-        "doc_a-pair")
+      check("pinned gid-probe max/median partition rows",
+        partitionSkew(partitionRows(
+          Dedup.probeRows(Dedup.Jaccard, gramIdx, 1, 2))), 0.0, 4.0)
+      check("pinned doc_a-pair max/median partition rows",
+        partitionSkew(partitionRows(
+          Dedup.candidates(Dedup.Jaccard, gramIdx, gramIdx, 1, 2))), 0.0, 4.0)
     })
 
-    // round-6: the incremental exact joins — probing the FROZEN 1M-doc
+    // round-6: the incremental exact joins — probing the FROZEN corpus
     // index with a 1% batch must be O(batch), and match volume must be
     // the planted twins (each batch doc regenerates a corpus text from
     // the same seed), not a quadratic fan-out. The corpus-side pipeline
     // is reused as-is (the index's checkpoints), so these stages time
     // ONLY the batch encode + probe — the ingest path's real cost.
+    // Every-100th-dup seeds mean a handful of docs match TWO corpus
+    // twins, hence the 2× upper bound.
     {
-      val nBatch = nDocs / 100
-      // same seeds 0..nBatch-1 as the corpus head → identical texts;
-      // every-100th-dup seeds mean a handful of docs match TWO corpus
-      // twins, hence the 2× upper bound.
-      val batch = syntheticDocs(spark, nBatch)
-        .withColumn("doc_id", col("doc_id") + nDocs)
-      def boundCheck(label: String, n: Long): Long = {
-        assert(n >= nBatch - nBatch / 50 && n <= 2 * nBatch,
-          s"$label match count $n outside [${nBatch - nBatch / 50}, " +
-            s"${2 * nBatch}] for $nBatch planted twins")
-        println(s"[soak] $label matches $n (planted twins $nBatch)")
-        n
-      }
-      time("incremental jaccard (1% batch)")(boundCheck("inc-jaccard",
+      val batch = batchOf(syntheticDocs(spark, _), "doc_id", nDocs, 1)
+      def twins(label: String, n: Long): Unit =
+        check(s"$label matches", n, nBatch - nBatch / 50, 2 * nBatch)
+      time("incremental jaccard (1% batch)")(twins("inc-jaccard",
         Dedup.incrementalJaccardJoin(gramIdx, batch, "doc_id", "text",
           9, 10).count()))
-      time("incremental containment (1% batch)")(boundCheck("inc-containment",
+      time("incremental containment (1% batch)")(twins("inc-containment",
         Dedup.incrementalContainmentJoin(gramIdx, batch, "doc_id", "text",
           9, 10).count()))
-      time("incremental cosine (1% batch)")(boundCheck("inc-cosine",
+      time("incremental cosine (1% batch)")(twins("inc-cosine",
         Dedup.incrementalCosineJoin(gramIdx, batch, "doc_id", "text",
           9, 10).count()))
     }
@@ -341,28 +420,21 @@ object Soak {
     // round-6: the 64-bit simhash guardrail — the whole point of the wide
     // fingerprint is that 16-bit band keys (65536 buckets) keep bucket
     // occupancy near corpus/65536, so candidate generation stays linear.
-    // Assert the max bucket across all bands is within a small multiple of
-    // that mean (Poisson tails + the planted dup pairs); a hot bucket here
-    // means fingerprint bit bias — the 16-bit variant's Θ(n²/16) failure
-    // reappearing in disguise.
-    time("simhash64 band buckets + pairs")({
-      val sig = Dedup.simHash64Signature(docs, "doc_id", "text")
-        .select(col("doc_id").as("__id"), col("sh")).localCheckpoint()
-      val maxBucket = Dedup.hammingBandKeys(sig, 64, 3)
-        .groupBy("band", "bk").count()
-        .agg(max("count")).head().getLong(0)
-      val bound = math.max(64L, 32L * nDocs / 65536L)
-      assert(maxBucket <= bound,
-        s"simhash64 band bucket $maxBucket exceeds $bound (~32× the " +
-          s"uniform mean ${nDocs / 65536L}) — fingerprint bits are biased")
-      println(s"[soak] simhash64 max band bucket $maxBucket <= bound $bound")
-      // pairs at radius 3: planted exact dups (every 100th doc) must all
-      // surface; volume must stay linear in the corpus
-      val nPairs = Dedup.simHash64NearDupPairs(docs, "doc_id", "text", 3).count()
-      assert(nPairs >= nDocs / 100 && nPairs <= 2 * nDocs,
-        s"simhash64 pair count $nPairs outside [${nDocs / 100}, ${2 * nDocs}]")
-      println(s"[soak] simhash64 pairs $nPairs (planted dups ${nDocs / 100})")
-      nPairs
+    // The max bucket across all bands must stay within a small multiple
+    // of that mean (Poisson tails + the planted dup pairs); a hot bucket
+    // here means fingerprint bit bias — the 16-bit variant's Θ(n²/16)
+    // failure reappearing in disguise. Pairs at radius 3: planted exact
+    // dups (every 100th doc) must all surface; volume stays linear.
+    val sh64 = time("simhash64 band buckets + pairs")({
+      val sh = Dedup.simHash64Signature(docs, "doc_id", "text")
+        .localCheckpoint()
+      check("simhash64 max band bucket",
+        maxBandBucket(sh.select(col("doc_id").as("__id"), col("sh")), 3),
+        0L, math.max(64L, 32L * nDocs / 65536L))
+      check("simhash64 pairs",
+        Dedup.simHash64NearDupPairs(docs, "doc_id", "text", 3).count(),
+        nDocs / 100, 2 * nDocs)
+      sh
     })
 
     // round-5 widening: the weighted/asymmetric exact joins and the JL
@@ -376,58 +448,31 @@ object Soak {
         .agg(sum("value")).count())
 
     // round-10: SRP embedding fingerprints — the vector-space simhash.
-    // A dup-planted clone of the vec corpus (every 100th vector re-derives
-    // from its predecessor's seed → exact-copy pairs at Hamming 0) must
-    // surface all planted pairs at radius 3 with linear pair volume, and
-    // the 16-bit band buckets must hold the same 32×-mean occupancy bound
-    // as simhash64 (fingerprint-bias canary). The incremental probe then
-    // clones the corpus head as a 1% batch: every batch vector has an
-    // identical corpus twin, and the probe must stay O(batch).
+    // A dup-planted clone of the vec corpus must surface all planted
+    // pairs at radius 3 with linear pair volume, and the 16-bit band
+    // buckets must hold the same 32×-mean occupancy bound as simhash64
+    // (fingerprint-bias canary). The incremental probe then clones the
+    // corpus head as a 1% batch: every batch vector has an identical
+    // corpus twin, and the probe must stay O(batch).
     val srpSig = time("srp fingerprints (dup-planted vecs)")({
-      val dv = spark.range(nVecs).select(col("id").as("vec_id"),
-        when(col("id") % 100 === 99, col("id") - 1).otherwise(col("id"))
-          .as("seed"))
-        .select(col("vec_id"), transform(sequence(lit(0), lit(63)),
-          i => (pmod(xxhash64(col("seed") * 64 + i), lit(2000))
-            .cast("double") - 1000.0) / 1000.0).as("embedding"))
-      val s = Similarity.srpSignature(dv, "embedding", "vec_id")
-        .localCheckpoint()
+      val s = Similarity.srpSignature(plantedVecs(spark, nVecs), "embedding",
+        "vec_id").localCheckpoint()
       s.count()
       s
     })
     time("srp band buckets + pairs (radius 3)")({
       val sigR = srpSig.select(col("vec_id").as("__id"), col("sh"))
-      val maxBucket = Dedup.hammingBandKeys(sigR, 64, 3)
-        .groupBy("band", "bk").count()
-        .agg(max("count")).head().getLong(0)
-      val bound = math.max(64L, 32L * nVecs / 65536L)
-      assert(maxBucket <= bound,
-        s"srp band bucket $maxBucket exceeds $bound (~32× the uniform " +
-          s"mean ${nVecs / 65536L}) — fingerprint bits are biased")
-      println(s"[soak] srp max band bucket $maxBucket <= bound $bound")
-      val nPairs = Dedup.hammingNearDupPairs(sigR, 64, 3).count()
-      assert(nPairs >= nVecs / 100 && nPairs <= 2 * nVecs,
-        s"srp pair count $nPairs outside [${nVecs / 100}, ${2 * nVecs}]")
-      println(s"[soak] srp pairs $nPairs (planted dups ${nVecs / 100})")
-      nPairs
+      check("srp max band bucket", maxBandBucket(sigR, 3),
+        0L, math.max(64L, 32L * nVecs / 65536L))
+      check("srp pairs", Dedup.hammingNearDupPairs(sigR, 64, 3).count(),
+        nVecs / 100, 2 * nVecs)
     })
-    time("incremental srp (1% batch)")({
-      val nBatch = nVecs / 100
-      val batch = spark.range(nBatch).select(col("id").as("vec_id"),
-        when(col("id") % 100 === 99, col("id") - 1).otherwise(col("id"))
-          .as("seed"))
-        .select((col("vec_id") + nVecs).as("vec_id"),
-          transform(sequence(lit(0), lit(63)),
-            i => (pmod(xxhash64(col("seed") * 64 + i), lit(2000))
-              .cast("double") - 1000.0) / 1000.0).as("embedding"))
-      val n = Similarity.incrementalSrpPairs(srpSig, batch, "embedding",
-        "vec_id", 3).count()
-      assert(n >= nBatch && n <= 2 * nBatch,
-        s"incremental srp match count $n outside [$nBatch, ${2 * nBatch}] " +
-          s"for $nBatch planted twins")
-      println(s"[soak] incremental srp matches $n (planted twins $nBatch)")
-      n
-    })
+    time("incremental srp (1% batch)")(
+      check("incremental srp matches",
+        Similarity.incrementalSrpPairs(srpSig,
+          batchOf(plantedVecs(spark, _), "vec_id", nVecs, 1), "embedding",
+          "vec_id", 3).count(),
+        nVecs / 100, 2 * (nVecs / 100)))
 
     // round-6 (cont.): incremental SemDeDup — the corpus assignment is the
     // one-off build (persistable); the batch probe compares each arriving
@@ -436,7 +481,6 @@ object Soak {
     // a cos=1 corpus twin in its own cluster: dropped count must be
     // exactly the batch size (random 64-dim vectors never reach τ=0.9).
     {
-      val nBatch = nVecs / 100
       val cents = vecs.filter(col("vec_id") < 256)
         .select(col("vec_id").as("cid"),
           Similarity.asDouble(col("embedding")).as("cv"))
@@ -446,13 +490,11 @@ object Soak {
         a.count(); a
       })
       time("incremental semdedup (1% batch)")({
-        val batch = syntheticVecs(spark, nBatch)
-          .withColumn("vec_id", col("vec_id") + 2 * nVecs)
-        val dropped = SemDedup.incrementalDropList(corpusAssigned, batch,
+        val dropped = SemDedup.incrementalDropList(corpusAssigned,
+          batchOf(syntheticVecs(spark, _), "vec_id", nVecs, 2),
           "embedding", "vec_id", cents, 0.9).count()
-        assert(dropped == nBatch,
-          s"incremental semdedup dropped $dropped of $nBatch planted twins")
-        dropped
+        assert(dropped == nVecs / 100,
+          s"incremental semdedup dropped $dropped of ${nVecs / 100} planted twins")
       })
     }
 
@@ -469,49 +511,42 @@ object Soak {
     val ivfpqModel = time("ivfpq build (nlist=16, m=8)")(
       ext.IvfPq.build(vecs, "embedding", "vec_id",
         nlist = 16, m = 8, ksub = 16, maxIter = 3))
-    time("ivfpq encodeBatch (1% ingest)")({
-      val batch = syntheticVecs(spark, nVecs / 100)
-        .withColumn("vec_id", col("vec_id") + nVecs)
-      ext.IvfPq.encodeBatch(ivfpqModel, batch, "embedding", "vec_id")
-        .encoded.filter(col("vec_id") >= nVecs).count()
-    })
+    time("ivfpq encodeBatch (1% ingest)")(
+      ext.IvfPq.encodeBatch(ivfpqModel,
+        batchOf(syntheticVecs(spark, _), "vec_id", nVecs, 1), "embedding",
+        "vec_id").encoded.filter(col("vec_id") >= nVecs).count())
     // round-6: persisted-index probe latency — the stored layouts must
     // make probes partition-pruned reads, so probe time is O(read
     // partitions), decoupled from index size.
-    val idxDir = java.nio.file.Files.createTempDirectory("soak_idx_").toString
-    time("ivfpq code store write (by cell)")({
-      ext.IndexStore.writeIvfPqCodes(ivfpqModel, s"$idxDir/ivfpq"); 1L
-    })
-    time("ivfpq probe from store (nprobe=4)")({
-      val loaded = ext.IndexStore.loadIvfPqCodes(ivfpqModel, spark,
-        s"$idxDir/ivfpq")
-      ext.IvfPq.search(loaded, vecs, "embedding", "vec_id",
-        Array.tabulate(64)(i => (i % 7 - 3) / 3.0), nprobe = 4, k = 10).count()
-    })
-    // round-6: gram-index persistence — the write is the one-off corpus
-    // cost; the loaded probe must stay O(batch) with zero pipeline rebuild
-    time("gram index store write")({
-      ext.IndexStore.writeGramIndex(gramIdx, s"$idxDir/gram"); 1L
-    })
-    time("gram index probe from store (1% batch)")({
-      val loaded = ext.IndexStore.loadGramIndex(spark, s"$idxDir/gram")
-      val batch = syntheticDocs(spark, nDocs / 100)
-        .withColumn("doc_id", col("doc_id") + 2 * nDocs)
-      Dedup.incrementalJaccardJoin(loaded, batch, "doc_id", "text",
-        9, 10).count()
-    })
-    time("postings store write (64 buckets)")({
+    Scratch.withTempDir("soak_idx_") { idxDir =>
+      time("ivfpq code store write (by cell)")(
+        ext.IndexStore.writeIvfPqCodes(ivfpqModel, s"$idxDir/ivfpq"))
+      time("ivfpq probe from store (nprobe=4)")({
+        val loaded = ext.IndexStore.loadIvfPqCodes(ivfpqModel, spark,
+          s"$idxDir/ivfpq")
+        ext.IvfPq.search(loaded, vecs, "embedding", "vec_id",
+          Array.tabulate(64)(i => (i % 7 - 3) / 3.0), nprobe = 4, k = 10).count()
+      })
+      // round-6: gram-index persistence — the write is the one-off corpus
+      // cost; the loaded probe must stay O(batch) with zero pipeline rebuild
+      time("gram index store write")(
+        ext.IndexStore.writeGramIndex(gramIdx, s"$idxDir/gram"))
+      time("gram index probe from store (1% batch)")(
+        Dedup.incrementalJaccardJoin(
+          ext.IndexStore.loadGramIndex(spark, s"$idxDir/gram"),
+          batchOf(syntheticDocs(spark, _), "doc_id", nDocs, 2),
+          "doc_id", "text", 9, 10).count())
       // minDf scales with the corpus (1000 at the 1M default) so reduced
       // soaks keep a non-empty index — mean gram df here is ~nDocs/125
-      ext.IndexStore.writePostings(
-        Retrieval.invertedIndex(docs, "doc_id", "text",
-          minDf = math.max(1L, nDocs / 1000L), postingCap = 5),
-        s"$idxDir/postings")
-      1L
-    })
-    time("postings probe from store (3 terms)")(
-      ext.IndexStore.readPostings(spark, s"$idxDir/postings",
-        Seq("w17", "w4242", "w9001")).count())
+      time("postings store write (64 buckets)")(
+        ext.IndexStore.writePostings(
+          Retrieval.invertedIndex(docs, "doc_id", "text",
+            minDf = math.max(1L, nDocs / 1000L), postingCap = 5),
+          s"$idxDir/postings"))
+      time("postings probe from store (3 terms)")(
+        ext.IndexStore.readPostings(spark, s"$idxDir/postings",
+          Seq("w17", "w4242", "w9001")).count())
+    }
 
     // round-9: sequence packing — the two-phase cumsum must tile the token
     // stream exactly (last doc's end == corpus token total); the phase-1
@@ -526,12 +561,11 @@ object Soak {
       assert(r.getAs[Long]("mx") == r.getAs[Long]("tot"),
         s"cumsum is not a perfect tiling: max end ${r.getAs[Long]("mx")}" +
           s" != token total ${r.getAs[Long]("tot")}")
-      r
     })
     // round-9: leakage audit — the combinatorial path never materializes a
     // pair, but its cell counts must still SUM to the DISTINCT pairs the
     // materializing LSH path finds over the same bands: C(c,2) + cross
-    // products + inclusion-exclusion ≡ distinct pairs, at 1M docs.
+    // products + inclusion-exclusion ≡ distinct pairs.
     // (lshPairCount above carries band multiplicity — a pair colliding in
     // both bands counts twice there, once here.)
     time("split leakage audit (hash split)")({
@@ -544,7 +578,6 @@ object Soak {
       val tot = cells.map(_.getAs[Long]("n_pairs")).sum
       assert(tot == distinctPairs,
         s"audit cells sum to $tot, LSH distinct pairs are $distinctPairs")
-      cells.length
     })
     // round-9: epoch mixing is pure map-side — the plan must carry NO
     // exchange (the 100-TB property: output is recipe-sized, shuffle-free).
@@ -554,11 +587,9 @@ object Soak {
         "doc_id", "src", Map("0" -> 2.5, "1" -> 0.3, "2" -> 1.0))
       val plan = mixed.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"epochMix plan shuffles:\n$plan")
-      val n = mixed.count()
       val expect = (nDocs / 4.0 * (2.5 + 0.3 + 1.0)).toLong
-      assert(math.abs(n - expect) <= expect / 20,
-        s"epoch mix emitted $n rows, recipe expects ~$expect")
-      n
+      check("epoch mix rows", mixed.count(), expect - expect / 20,
+        expect + expect / 20)
     })
     // round-9: decontamination by excision at corpus scale — a 1k-doc
     // benchmark broadcasts; corpus docs sharing its seeds (the first 1k,
@@ -571,33 +602,27 @@ object Soak {
         sum(when(col("n_removed") > 0, 1L).otherwise(0L)).as("hit")).head()
       assert(r.getAs[Long]("n") == nDocs,
         s"excision emitted ${r.getAs[Long]("n")} of $nDocs docs")
-      assert(r.getAs[Long]("hit") >= 1000,
-        s"only ${r.getAs[Long]("hit")} docs hit — benchmark seeds overlap 1k+")
-      r
+      check("excision hit docs (benchmark seeds overlap 1k+)",
+        r.getAs[Long]("hit"), 1000L, Long.MaxValue)
     })
     // round-10: edit-distance join (PassJoin) over 24-char prefixes at
     // k=2 — segment equi-join + verify, never all-pairs; the planted
     // every-100th exact dups guarantee >= nDocs/100 dist-0 pairs.
     val edStrings = docs.select(col("doc_id"),
       substring(col("text"), 1, 24).as("s")).cache()
-    time("edit-distance join (24-char, k=2)")({
-      val n = ext.Fuzzy.editDistanceJoin(edStrings, "doc_id", "s", 2).count()
-      assert(n >= nDocs / 100,
-        s"edit join found $n pairs, planted dups alone are ${nDocs / 100}")
-      n
-    })
+    time("edit-distance join (24-char, k=2)")(
+      check("edit join pairs",
+        ext.Fuzzy.editDistanceJoin(edStrings, "doc_id", "s", 2).count(),
+        nDocs / 100, Long.MaxValue))
+    // batch seeds reuse the corpus head: every batch doc has its seed
+    // twin (and that twin's planted dup) in the corpus at dist 0
     time("incremental edit distance (1% batch)")({
-      val batch = syntheticDocs(spark, nDocs / 100)
-        .withColumn("doc_id", col("doc_id") + 6 * nDocs)
+      val batch = batchOf(syntheticDocs(spark, _), "doc_id", nDocs, 6)
         .select(col("doc_id"), substring(col("text"), 1, 24).as("s"))
       val idx = ext.Fuzzy.segmentIndex(edStrings, "doc_id", "s", 2)
-      val n = ext.Fuzzy.incrementalEditDistanceJoin(idx, edStrings, batch,
-        "doc_id", "s", 2).count()
-      // batch seeds reuse the corpus head: every batch doc has its seed
-      // twin (and that twin's planted dup) in the corpus at dist 0
-      assert(n >= nDocs / 100,
-        s"incremental edit join found $n matches for ${nDocs / 100} batch docs")
-      n
+      check("incremental edit join matches",
+        ext.Fuzzy.incrementalEditDistanceJoin(idx, edStrings, batch,
+          "doc_id", "s", 2).count(), nBatch, Long.MaxValue)
     })
     edStrings.unpersist()
 
@@ -612,30 +637,22 @@ object Soak {
       s
     })
     time("phash band pairs (radius 4)")({
-      val sigIn = phSig.select(col("media_id").as("__id"), col("ph").as("sh"))
-      val bb = Dedup.hammingBandKeys(sigIn, 64, 4)
-        .groupBy("band", "bk").count()
-      val maxBucket = bb.agg(max("count")).head().getLong(0)
       // 5 bands of ~13 bits → ~8k buckets/band; identical planted-dup
       // hashes stack one bucket with nDocs/100, the honest floor
-      assert(maxBucket <= math.max(nDocs / 50, 64L),
-        s"phash band bucket $maxBucket exceeds the planted-dup bound")
-      val n = ext.Multimodal.phashNearDupPairs(media, Seq(0), 4).count()
-      assert(n >= nDocs / 100 - nDocs / 10000,
-        s"phash pairs $n below the planted-dup floor ${nDocs / 100}")
-      n
+      check("phash max band bucket", maxBandBucket(
+        phSig.select(col("media_id").as("__id"), col("ph").as("sh")), 4),
+        0L, math.max(nDocs / 50, 64L))
+      check("phash pairs",
+        ext.Multimodal.phashNearDupPairs(media, Seq(0), 4).count(),
+        nDocs / 100 - nDocs / 10000, Long.MaxValue)
     })
-    time("incremental phash (1% batch)")({
-      val batch = ext.Multimodal.asMedia(
-        syntheticDocs(spark, nDocs / 100)
-          .withColumn("doc_id", col("doc_id") + 7 * nDocs), "doc_id", "text")
-      val n = ext.Multimodal.incrementalPhashPairs(phSig, batch, 4).count()
-      // every batch doc's seed twin (and its planted dup) sit in the
-      // corpus at dist 0; O(batch) probe, bounded fan-out
-      assert(n >= nDocs / 100 && n <= 8 * nDocs / 100,
-        s"incremental phash matches $n outside the planted band")
-      n
-    })
+    // every batch doc's seed twin (and its planted dup) sit in the
+    // corpus at dist 0; O(batch) probe, bounded fan-out
+    time("incremental phash (1% batch)")(
+      check("incremental phash matches",
+        ext.Multimodal.incrementalPhashPairs(phSig, ext.Multimodal.asMedia(
+          batchOf(syntheticDocs(spark, _), "doc_id", nDocs, 7), "doc_id",
+          "text"), 4).count(), nDocs / 100, 8 * nDocs / 100))
     phSig.unpersist()
 
     // round-11: the audio-fingerprint family THROUGH REAL WAV containers —
@@ -645,17 +662,16 @@ object Soak {
     // delta is scale-invariant, truncation flips near-ties only), so each
     // batch stream MUST land on its original within radius 6.
     {
-      import spark.implicits._
-      def wavRows(ids: org.apache.spark.sql.Dataset[java.lang.Long],
-          half: Boolean) = ids.map { idBoxed =>
-        val id = idBoxed.longValue()
-        val samples = Array.tabulate(65 * 48) { j =>
-          val raw = (((id + 1) * 2654435761L +
-            j.toLong * (40503L + 2L * id)) % 65536L).toInt - 32768
-          if (half) raw / 2 else raw
+      def wavRows(ids: Dataset[java.lang.Long], half: Boolean) =
+        ids.map { idBoxed =>
+          val id = idBoxed.longValue()
+          val samples = Array.tabulate(65 * 48) { j =>
+            val raw = (((id + 1) * 2654435761L +
+              j.toLong * (40503L + 2L * id)) % 65536L).toInt - 32768
+            if (half) raw / 2 else raw
+          }
+          ext.Multimodal.MediaRow(id, ext.Containers.wavBytes(samples))
         }
-        ext.Multimodal.MediaRow(id, ext.Containers.wavBytes(samples))
-      }
       val nAud = math.max(nVecs, 10000L)
       val corpusIds = spark.range(nAud).select(col("id").as[java.lang.Long])
       val afp = time(s"audio fp (real WAV encode+parse, $nAud streams)")({
@@ -665,18 +681,17 @@ object Soak {
         f.count()
         f
       })
+      // truncation flips near-tie windows only — the large majority of
+      // re-encodes must land on their original within the radius
       time("incremental audio fp (1% half-amplitude batch)")({
         val batchIds = spark.range(nAud / 100)
           .select((col("id") * 100).as[java.lang.Long]) // every 100th stream
         val pairs = ext.Multimodal.incrementalAudioPairs(afp,
           wavRows(batchIds, half = true), window = 48, maxDist = 6,
           decode = ext.Containers.decodeWav)
-        val selfHits = pairs.filter(col("doc_a") === col("doc_b")).count()
-        // truncation flips near-tie windows only — the large majority of
-        // re-encodes must land on their original within the radius
-        assert(selfHits >= nAud / 100 * 9 / 10,
-          s"audio fp: only $selfHits of ${nAud / 100} re-encodes found their original")
-        selfHits
+        check("audio re-encodes that found their original",
+          pairs.filter(col("doc_a") === col("doc_b")).count(),
+          nAud / 100 * 9 / 10, Long.MaxValue)
       })
       afp.unpersist()
     }
@@ -722,66 +737,38 @@ object Soak {
       ops.Timeseries.gapReport(sevents, "user_id", "ts", 21600000000L)
         .count())
 
-    // round-10c: sorted-neighborhood linkage at 1M strings — the
-    // two-phase rank (never a one-partition window) + the banded
-    // rank-cell join give exactly n·(w−1) candidates; the planted
-    // every-100th dups guarantee dist-0 pairs (duplicate keys rank
-    // adjacently by construction).
-    time("sorted-neighborhood join (w=8, k=2)")({
-      val sn = ext.Fuzzy.sortedNeighborhoodJoin(
+    // round-10c: sorted-neighborhood linkage — the two-phase rank (never
+    // a one-partition window) + the banded rank-cell join give exactly
+    // n·(w−1) candidates; the planted every-100th dups guarantee dist-0
+    // pairs (duplicate keys rank adjacently by construction).
+    time("sorted-neighborhood join (w=8, k=2)")(
+      check("SN join pairs", ext.Fuzzy.sortedNeighborhoodJoin(
         docs.select(col("doc_id"), substring(col("text"), 1, 24).as("s")),
-        "doc_id", "s", window = 8, k = 2)
-      val n = sn.count()
-      assert(n >= nDocs / 100,
-        s"SN join found $n pairs; adjacent planted dups alone are ${nDocs / 100}")
-      n
-    })
+        "doc_id", "s", window = 8, k = 2).count(), nDocs / 100,
+        Long.MaxValue))
 
     // round-10c: covariance sketch over the vector corpus — the d²·n/2
     // product fan-out is the documented cost shape; the merge path then
-    // prices a 1% ingest at O(batch) against the frozen sketch.
-    val covSums = time("covariance sums (64 dims)")({
-      val sdf = ext.Similarity.covarianceSums(vecs, "embedding", "vec_id")
-        .cache()
-      sdf.count()
-      sdf
-    })
-    time("incremental covariance (1% batch, merge ≡ recompute)")({
-      val batch = syntheticVecs(spark, nVecs / 100)
-        .withColumn("vec_id", col("vec_id") + 8 * nVecs)
-        .localCheckpoint() // feeds the batch sketch AND the union recompute
-      val merged = ext.Similarity.finalizeCovariance(
-        ext.Similarity.mergeCovarianceSums(covSums,
-          ext.Similarity.covarianceSums(batch, "embedding", "vec_id")))
-      // mergeability asserted WHERE n is large enough to stress the
-      // integer sums' 2^63 headroom: the merged sketch must finalize to
-      // the BIT-identical matrix a full corpus+batch recompute yields
-      // (integer sums are order-free; the finalize expression is
-      // fixed-shape — any divergence is overflow or a broken merge).
-      val full = ext.Similarity.finalizeCovariance(
-        ext.Similarity.covarianceSums(
-          vecs.unionByName(batch), "embedding", "vec_id"))
-      def cells(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(r => ((r.getInt(0), r.getInt(1)),
-          java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toMap
-      val m = cells(merged)
-      val f = cells(full)
-      assert(m == f,
-        s"incremental covariance: merged finalize != full recompute " +
-          s"(${m.size} vs ${f.size} cells, " +
-          s"${m.count { case (k, v) => f.get(k).contains(v) }} equal)")
-      m.size
-    })
-    covSums.unpersist()
+    // prices a 1% ingest against the frozen sketch. The law holds on the
+    // integer sums, where n is large enough to stress their 2^63
+    // headroom (sums are order-free; any divergence is overflow or a
+    // broken merge), so the finalized matrices are bit-identical too.
+    time("covariance sums (64 dims)")(
+      ext.Similarity.covarianceSums(vecs, "embedding", "vec_id").count())
+    time("incremental covariance (1% batch, merge ≡ recompute)")(
+      ext.Similarity.finalizeCovariance(mergeLaw(
+        MergeState.Covariance("embedding", "vec_id"),
+        vecs.unionByName(batchOf(syntheticVecs(spark, _), "vec_id", nVecs, 8)),
+        col("vec_id") >= 8 * nVecs)).count())
 
-    // round-12: quantized-ECDF drift at 1M CONTINUOUS values — the
+    // round-12: quantized-ECDF drift over CONTINUOUS values — the
     // operator form of the "quantize upstream" caveat, proven at soak
     // shape: the corpus table is GRID-bounded (≤ range/step cells, here
-    // 2000, forever — a raw ecdfTable would carry ~1M distinct doubles),
-    // and the 1% probe against the frozen table is bit-identical to the
-    // full two-sample recompute over combined quantized rows. The probe
-    // pays O(batch + |grid|); only the recompute (the checker, not the
-    // monitor) re-touches the corpus.
+    // 2000, forever — a raw ecdfTable would carry ~nDocs distinct
+    // doubles), and the 1% probe against the frozen table is
+    // bit-identical to the full two-sample recompute over combined
+    // quantized rows. The probe pays O(batch + |grid|); only the
+    // recompute (the checker, not the monitor) re-touches the corpus.
     val contVals = spark.range(nDocs).select(
       (pmod(xxhash64(col("id")), lit(100000)).cast("double") / 1000.0)
         .as("value")).cache()
@@ -789,10 +776,7 @@ object Soak {
     val ecdfQ = time("quantized ecdf table (step 0.05)")({
       val q = ops.Drift.quantizedEcdfTable(contVals, "value", step)
         .localCheckpoint()
-      val cells = q.count()
-      assert(cells <= (100.0 / step).toLong + 1,
-        s"quantized ecdf: $cells cells exceeds the grid bound")
-      println(s"[soak] quantized ecdf cells $cells (grid bound ${(100.0 / step).toLong + 1})")
+      check("quantized ecdf cells", q.count(), 0L, (100.0 / step).toLong + 1)
       q
     })
     time("incremental KS+W1 drift (1% batch)")({
@@ -834,13 +818,9 @@ object Soak {
       val nTerms = topics.valuesIterator.map(_.size).sum
       val distinctToks = docs.select(
         explode(split(col("text"), " ")).as("w")).distinct().count()
-      assert(distinctToks <= 10000L,
-        s"maxsim: $distinctToks distinct tokens exceeds the 10k vocab")
-      val dotRows = distinctToks * nTerms
-      assert(dotRows <= 10000L * nTerms,
-        s"maxsim: dot table $dotRows rows exceeds vocab x terms bound")
-      println(s"[soak] maxsim dot table $dotRows rows " +
-        s"(= $distinctToks tokens x $nTerms terms; docs=$nDocs)")
+      check("maxsim distinct tokens", distinctToks, 0L, 10000L)
+      check(s"maxsim dot table rows ($nTerms terms)", distinctToks * nTerms,
+        0L, 10000L * nTerms)
       val routed = Retrieval.maxSimRoute(docs, "doc_id", "text", topics)
       assert(routed.count() == nDocs,
         "maxsim route must assign every document exactly once")
@@ -849,25 +829,25 @@ object Soak {
       assert(top.count() == 10, "maxsim topk must return k rows")
     })
 
-    // round-12: training-prep example generators at 1M docs — span
-    // corruption (the only generator with per-doc reassembly state),
-    // FIM (pure projection — the plan IS the scale argument), and the
-    // packed-window segment table (one running-sum shuffle per group +
-    // bounded fan-out). Assertions are the row-conservation contracts.
-    time("span corruption (1M example pairs)")({
+    // round-12: training-prep example generators — span corruption (the
+    // only generator with per-doc reassembly state), FIM (pure projection
+    // — the plan IS the scale argument), and the packed-window segment
+    // table (one running-sum shuffle per group + bounded fan-out).
+    // Assertions are the row-conservation contracts.
+    val corpusToks = docs.select(sum(size(split(col("text"), " "))))
+      .head().getLong(0)
+    time(s"span corruption (${shape(nDocs)} example pairs)")({
       val sc = ext.Packing.spanCorrupt(docs, "doc_id", "text")
       assert(sc.count() == nDocs,
         "spanCorrupt must emit exactly one example per document")
     })
-    time("fim transform (1M example pairs)")({
+    time(s"fim transform (${shape(nDocs)} example pairs)")({
       val f = ext.Packing.fimTransform(docs, "doc_id", "text")
       val r = f.agg(count(lit(1)),
         sum(col("n_prefix") + col("n_middle") + col("n_suffix"))).head()
       assert(r.getLong(0) == nDocs, "fim must emit one row per doc")
-      val totTok = docs.select(sum(size(split(col("text"), " "))))
-        .head().getLong(0)
-      assert(r.getLong(1) == totTok,
-        s"fim segment lengths ${r.getLong(1)} != corpus tokens $totTok")
+      assert(r.getLong(1) == corpusToks,
+        s"fim segment lengths ${r.getLong(1)} != corpus tokens $corpusToks")
     })
     time("window segments (2048-token windows, 64 groups)")({
       val seg = ext.Packing.windowSegments(
@@ -877,93 +857,63 @@ object Soak {
       val r = seg.agg(sum(col("end_tok") - col("start_tok")),
         sum(col("is_doc_start").cast("long")),
         sum(col("is_doc_end").cast("long"))).head()
-      val totTok = docs.select(sum(size(split(col("text"), " "))))
-        .head().getLong(0)
-      assert(r.getLong(0) == totTok,
-        s"segment spans ${r.getLong(0)} != corpus tokens $totTok")
+      assert(r.getLong(0) == corpusToks,
+        s"segment spans ${r.getLong(0)} != corpus tokens $corpusToks")
       assert(r.getLong(1) == nDocs && r.getLong(2) == nDocs,
         "doc boundaries must fire exactly once per document")
     })
 
-    // round-12: bottom-k (KMV) sketch merge law at 1M docs — the
-    // deterministic distinct sketch (q213/q214, ST25) at soak shape.
-    // The frozen corpus state is ≤ k rows PER GROUP forever; the 1%
-    // batch probe pays its own tokens plus an O(k·groups) merge, never
-    // re-reading the corpus; and unlike HLL the merged sketch must be
-    // BIT-EQUAL to a cold rebuild over the full history — asserted,
-    // with the KMV estimate checked against the exact distinct count.
+    // round-12: bottom-k (KMV) sketch merge law — the deterministic
+    // distinct sketch (q213/q214, ST25) at soak shape. The state is ≤ k
+    // rows PER GROUP forever; the 1% batch pays its own tokens plus an
+    // O(k·groups) merge, never re-reading the corpus; and unlike HLL the
+    // merged sketch must be BIT-EQUAL to a cold rebuild over the full
+    // history, with the KMV estimate checked against the exact distinct
+    // count (0.25 is past 3σ = 3/√k).
     time("bottom-k sketch merge (k=256, 16 groups)")({
       val k = 256
-      val grpDocs = docs.select(col("doc_id"),
-        (col("doc_id") % 16).cast("string").as("grp"), col("text"))
-      def toks(df: DataFrame) =
-        df.select(col("grp"), explode(split(col("text"), " ")).as("tok"))
-      val corpusSk = ops.Sketches.bottomK(
-        toks(grpDocs.filter(col("doc_id") % 100 =!= 0)), "grp", "tok", k)
-        .localCheckpoint()
-      val skRows = corpusSk.count()
-      assert(skRows <= 16L * k,
-        s"bottom-k: corpus sketch $skRows rows exceeds k x groups")
-      val batchSk = ops.Sketches.bottomK(
-        toks(grpDocs.filter(col("doc_id") % 100 === 0)), "grp", "tok", k)
-      val merged = ops.Sketches.merge(corpusSk, batchSk, "grp", k)
-        .localCheckpoint()
-      val full = ops.Sketches.bottomK(toks(grpDocs), "grp", "tok", k)
-      assert(merged.exceptAll(full).count() == 0 &&
-        full.exceptAll(merged).count() == 0,
-        "bottom-k: streamed merge != cold rebuild (merge law broken)")
-      val exact = toks(grpDocs).distinct()
+      val toks = docs.select(col("doc_id"),
+        (col("doc_id") % 16).cast("string").as("grp"),
+        explode(split(col("text"), " ")).as("tok"))
+      val merged = mergeLaw(MergeState.BottomK("grp", "tok", k), toks,
+        col("doc_id") % 100 === 0)
+      check("bottom-k state rows", merged.count(), 0L, 16L * k)
+      val exact = toks.select("grp", "tok").distinct()
         .groupBy("grp").agg(count(lit(1)).as("exact"))
-      val worst = ops.Sketches.distinctEstimate(merged, "grp", k)
-        .join(exact, "grp")
-        .select(max(abs(col("est_distinct") - col("exact")) /
-          col("exact"))).head().getDouble(0)
-      assert(worst < 0.25,
-        f"bottom-k: KMV estimate off by $worst%.3f (> 3 sigma for k=$k)")
-      println(f"[soak] bottom-k merge == rebuild; worst est err $worst%.3f")
+      check("bottom-k worst KMV est err",
+        ops.Sketches.distinctEstimate(merged, "grp", k).join(exact, "grp")
+          .select(max(abs(col("est_distinct") - col("exact")) /
+            col("exact"))).head().getDouble(0), 0.0, Math.nextDown(0.25))
     })
 
-    // round-12: shard manifest at 1M docs — one scan + one group-by;
-    // the order-free checksum must be invariant under a repartition
-    // (parallel shard writers have no stable row order).
+    // round-12: shard manifest — one scan + one group-by; the order-free
+    // checksum must be invariant under a repartition (parallel shard
+    // writers have no stable row order).
     time("shard manifest (32 shards)")({
       val m1 = ops.Manifest.shardManifest(docs, "doc_id", "text", 32)
         .localCheckpoint()
       assert(m1.agg(sum("n_docs")).head().getLong(0) == nDocs,
         "manifest rows must sum to the corpus")
-      // checkpoint: m2 feeds BOTH exceptAll sides (multi-use-subplan rule)
-      val m2 = ops.Manifest.shardManifest(
-        docs.repartition(97), "doc_id", "text", 32)
-        .localCheckpoint()
-      assert(m1.exceptAll(m2).count() == 0 &&
-        m2.exceptAll(m1).count() == 0,
+      sameRows(m1, ops.Manifest.shardManifest(
+        docs.repartition(97), "doc_id", "text", 32),
         "manifest must be row-order invariant")
     })
 
     // round-13: incremental manifest — the additive merge must equal a
-    // cold recompute EXACTLY at 1M docs (q217's law at soak shape): an
-    // appended 1% batch costs O(batch + shards), never a corpus re-read.
-    time("manifest merge (1% append)")({
-      val full = ops.Manifest.shardManifest(docs, "doc_id", "text", 32)
-        .localCheckpoint()
-      val merged = ops.Manifest.mergeManifests(
-        ops.Manifest.shardManifest(
-          docs.filter(col("doc_id") % 100 =!= 0), "doc_id", "text", 32),
-        ops.Manifest.shardManifest(
-          docs.filter(col("doc_id") % 100 === 0), "doc_id", "text", 32))
-        .localCheckpoint()
-      assert(merged.exceptAll(full).count() == 0 &&
-        full.exceptAll(merged).count() == 0,
-        "manifest merge != cold recompute (additive law broken)")
-    })
+    // cold recompute EXACTLY (q217's law at soak shape): an appended 1%
+    // batch costs O(batch + shards), never a corpus re-read.
+    time("manifest merge (1% append)")(
+      mergeLaw(MergeState.Manifest("doc_id", "text", 32), docs,
+        col("doc_id") % 100 === 0))
 
-    // round-13: retrieval-expansion family at 1M docs — PRF (RM3) and
-    // DPR hard-negative mining. The scale guard is the scored-relation
-    // bound: both ops restrict the (id, token) stream to the broadcast
-    // term list BEFORE any aggregate, so the per-term work is the
-    // MATCHING rows only — asserted against an independent count —
-    // and the outputs are k- and (topics × band)-bounded.
-    time("prf + hard negatives (1M docs)")({
+    // round-13: retrieval-expansion family — PRF (RM3) and DPR
+    // hard-negative mining. The scale guard is the scored-relation bound:
+    // both ops restrict the (id, token) stream to the broadcast term list
+    // BEFORE any aggregate, so the per-term work is the MATCHING rows
+    // only — a vocab-share of the corpus tokens, far under 1% (the
+    // pre-aggregate filter is what keeps BM25 scoring off the full token
+    // stream) — and the outputs are k- and (topics × band)-bounded.
+    time(s"prf + hard negatives (${shape(nDocs)} docs)")({
       val seeds = Seq("w11", "w222")
       val prf = Retrieval.prfExpandedBm25(docs, "doc_id", "text", seeds,
         kFb = 8, mExp = 8, k = 20)
@@ -977,112 +927,90 @@ object Soak {
       assert(perTopic.values.forall(_ == 20L),
         s"hard negatives must fill the kNeg band per topic: $perTopic")
       val allTerms = (seeds ++ topics.values.flatten).distinct
-      val matching = docs.select(explode(split(col("text"), " ")).as("w"))
-        .filter(col("w").isin(allTerms: _*)).count()
-      val corpusToks = docs.select(sum(size(split(col("text"), " "))))
-        .head().getLong(0)
-      assert(matching < corpusToks / 100,
-        s"term-restricted relation $matching rows should be ~vocab-share " +
-          s"of $corpusToks corpus tokens — the pre-aggregate filter is " +
-          "what keeps BM25 scoring off the full token stream")
-      println(s"[soak] retrieval scored relation $matching rows " +
-        s"(corpus tokens $corpusToks)")
+      check(s"retrieval scored relation rows ($corpusToks corpus tokens)",
+        docs.select(explode(split(col("text"), " ")).as("w"))
+          .filter(col("w").isin(allTerms: _*)).count(),
+        0L, corpusToks / 100 - 1)
     })
 
     // round-13: the production-width KMV sketch at HIGH cardinality —
-    // 20M distinct ids in ONE group, where the 1e8-space estimator's
-    // collision bias is structural (expected distinct HASHES at m=2e7:
-    // 1e8·(1−e^−0.2) ≈ 1.81e7, a ~9% under-count) while the 2^63 space
-    // stays unbiased within KMV noise. Deterministic md5 hashes → the
-    // measured errors are fixed constants; 3σ = 3/√k.
-    time("bottom-k 2^63 space at 20M distinct")({
+    // m = 20·nDocs distinct ids in ONE group. The 2^63 space stays
+    // unbiased within KMV noise at every shape. The 1e8-space
+    // estimator's collision bias is structural (expected distinct HASHES
+    // at m=2e7: 1e8·(1−e^−0.2) ≈ 1.81e7, a ~9% under-count, ≈ m/2e8), so
+    // it only clears 3σ once m ≥ 2e7; below that its check is off.
+    // Deterministic md5 hashes → the measured errors are fixed constants;
+    // 3σ = 3/√k.
+    val kmvM = 20 * nDocs
+    time(s"bottom-k 2^63 space at ${shape(kmvM)} distinct")({
       val k = 1024
-      val m = 20000000L
-      val ids = spark.range(m).select(lit("g").as("grp"),
+      val ids = spark.range(kmvM).select(lit("g").as("grp"),
         concat(lit("u"), col("id")).as("e"))
       val est63 = ops.Sketches.distinctEstimate64(
         ops.Sketches.bottomK64(ids, "grp", "e", k), "grp", k)
         .head().getAs[Double]("est_distinct")
-      val est8 = ops.Sketches.distinctEstimate(
-        ops.Sketches.bottomK(ids, "grp", "e", k), "grp", k)
-        .head().getAs[Double]("est_distinct")
       val sigma = 1.0 / math.sqrt(k.toDouble)
-      val err63 = math.abs(est63 - m) / m
-      val bias8 = (m - est8) / m
-      println(f"[soak] kmv at m=2e7: est63=$est63%.0f (err $err63%.4f) " +
-        f"est8=$est8%.0f (bias $bias8%.4f) sigma=$sigma%.4f")
-      assert(err63 < 3 * sigma,
-        f"2^63-space KMV err $err63%.4f exceeds 3 sigma ($sigma%.4f x 3)")
-      assert(bias8 > 3 * sigma,
-        f"1e8-space bias $bias8%.4f should be visible (> 3 sigma) at 2e7 " +
-          "distinct — if not, the hash space assumption changed")
-      assert(err63 < bias8,
-        "the 2^63 space must beat the 1e8 space at this cardinality")
+      val err63 = math.abs(est63 - kmvM) / kmvM
+      check("kmv 2^63-space rel err (3 sigma)", err63, 0.0,
+        Math.nextDown(3 * sigma))
+      if (kmvM >= 20000000L) {
+        val est8 = ops.Sketches.distinctEstimate(
+          ops.Sketches.bottomK(ids, "grp", "e", k), "grp", k)
+          .head().getAs[Double]("est_distinct")
+        val bias8 = (kmvM - est8) / kmvM
+        check("kmv 1e8-space bias (3 sigma)", bias8, Math.nextUp(3 * sigma),
+          Double.PositiveInfinity)
+        assert(err63 < bias8,
+          "the 2^63 space must beat the 1e8 space at this cardinality")
+      }
     })
 
     // round-13: the LINEAR sketch family (CMS / AMS / feature hashing,
     // q222-q224, ST28) — merge ≡ cold rebuild must hold BIT-FOR-BIT
     // (element-wise integer addition, the strongest mergeability class)
     // and state stays ≤ depth·width (or dim) rows per group. Run on a
-    // 200k-doc subset: the law is row-count-independent, and each salted
+    // 1-in-5 subset: the law is row-count-independent, and each salted
     // hash row costs one md5 per token on the portable-hash discipline.
+    // AMS and feature hashing have no streaming state, so their laws
+    // are spelled out here.
     time("linear sketches merge law (CMS/AMS/FH)")({
-      val sub = docs.filter(col("doc_id") % 5 === 0)
-      val grpDocs = sub.select(col("doc_id"),
-        (col("doc_id") % 16).cast("string").as("grp"), col("text"))
-      def toks(df: DataFrame) =
-        df.select(col("grp"), explode(split(col("text"), " ")).as("tok"))
+      val toks = docs.filter(col("doc_id") % 5 === 0).select(col("doc_id"),
+        (col("doc_id") % 16).cast("string").as("grp"),
+        explode(split(col("text"), " ")).as("tok"))
+      val isBatch = col("doc_id") % 100 === 0
+      val (corpus, batch) = (toks.filter(!isBatch), toks.filter(isBatch))
       val depth = 3; val width = 256
-      val corpus = toks(grpDocs.filter(col("doc_id") % 100 =!= 0))
-      val batch = toks(grpDocs.filter(col("doc_id") % 100 === 0))
-      val full = toks(grpDocs)
-      val cmsMerged = ops.LinearSketches.cmsMerge(
-        ops.LinearSketches.cmsSketch(corpus, "grp", "tok", depth, width),
-        ops.LinearSketches.cmsSketch(batch, "grp", "tok", depth, width),
+      check("cms state rows", mergeLaw(MergeState.Cms("grp", "tok", depth,
+        width), toks, isBatch).count(), 0L, 16L * depth * width)
+      def ams(df: DataFrame) =
+        ops.LinearSketches.amsSketch(df, "grp", "tok", depth, width)
+      val amsMerged = ops.LinearSketches.amsMerge(ams(corpus), ams(batch),
         "grp").localCheckpoint()
-      val cmsFull = ops.LinearSketches.cmsSketch(full, "grp", "tok",
-        depth, width)
-      assert(cmsMerged.exceptAll(cmsFull).count() == 0 &&
-        cmsFull.exceptAll(cmsMerged).count() == 0,
-        "CMS merge != cold rebuild (linear law broken)")
-      assert(cmsMerged.count() <= 16L * depth * width,
-        "CMS state exceeds depth x width per group")
-      val amsMerged = ops.LinearSketches.amsMerge(
-        ops.LinearSketches.amsSketch(corpus, "grp", "tok", depth, width),
-        ops.LinearSketches.amsSketch(batch, "grp", "tok", depth, width),
-        "grp").localCheckpoint()
-      val amsFull = ops.LinearSketches.amsSketch(full, "grp", "tok",
-        depth, width)
-      assert(amsMerged.exceptAll(amsFull).count() == 0 &&
-        amsFull.exceptAll(amsMerged).count() == 0,
+      sameRows(amsMerged, ams(toks),
         "AMS merge != cold rebuild (signed linear law broken)")
       // F2 estimator accuracy against the exact second moment: per-row
       // rel std ~ sqrt(2/width) = 8.8%, median of 3 rows, worst of 16
       // groups — 0.5 is a loose deterministic bound (hashes are fixed)
-      val exactF2 = full.groupBy("grp", "tok").agg(count(lit(1)).as("f"))
+      val exactF2 = toks.groupBy("grp", "tok").agg(count(lit(1)).as("f"))
         .groupBy("grp").agg(sum(col("f") * col("f")).as("f2"))
-      val worst = ops.LinearSketches.amsF2Estimate(amsMerged, "grp", depth)
-        .join(exactF2, "grp")
-        .select(max(abs(col("f2_est") - col("f2")).cast("double") /
-          col("f2").cast("double"))).head().getDouble(0)
-      assert(worst < 0.5, f"AMS F2 worst rel err $worst%.3f exceeds bound")
-      println(f"[soak] cms/ams merge == rebuild; ams f2 worst err $worst%.3f")
+      check("ams f2 worst rel err",
+        ops.LinearSketches.amsF2Estimate(amsMerged, "grp", depth)
+          .join(exactF2, "grp")
+          .select(max(abs(col("f2_est") - col("f2")).cast("double") /
+            col("f2").cast("double"))).head().getDouble(0), 0.0,
+        Math.nextDown(0.5))
       // feature hashing is linear too, and the vector stays dim-bounded
-      val fhMerged = ops.LinearSketches.featureHash(corpus, "grp", "tok", 1024)
-        .unionByName(
-          ops.LinearSketches.featureHash(batch, "grp", "tok", 1024))
+      def fh(df: DataFrame) =
+        ops.LinearSketches.featureHash(df, "grp", "tok", 1024)
+      val fhMerged = fh(corpus).unionByName(fh(batch))
         .groupBy("grp", "j").agg(sum("v").as("v")).localCheckpoint()
-      val fhFull = ops.LinearSketches.featureHash(full, "grp", "tok", 1024)
-      assert(fhMerged.exceptAll(fhFull).count() == 0 &&
-        fhFull.exceptAll(fhMerged).count() == 0,
-        "feature-hash vectors must add exactly")
-      assert(fhMerged.count() <= 16L * 1024,
-        "feature-hash state exceeds dim per group")
+      sameRows(fhMerged, fh(toks), "feature-hash vectors must add exactly")
+      check("feature-hash state rows", fhMerged.count(), 0L, 16L * 1024)
     })
 
-    // round-13: mergeable grid quantiles at 1M values (q228) — shard
-    // tables ADD to the global table (cells stay grid-bounded), and the
-    // inverse-CDF probe answers in O(cells) without re-reading values.
+    // round-13: mergeable grid quantiles (q228) — shard tables ADD to the
+    // global table (cells stay grid-bounded), and the inverse-CDF probe
+    // answers in O(cells) without re-reading values.
     time("grid quantiles off merged tables")({
       val step = 0.25
       val vals = spark.range(nDocs).select(
@@ -1092,69 +1020,43 @@ object Soak {
         ops.Drift.quantizedEcdfTable(vals.filter(col("v") < 50), "v", step),
         ops.Drift.quantizedEcdfTable(vals.filter(col("v") >= 50), "v", step))
         .localCheckpoint()
-      val cells = merged.count()
-      assert(cells <= (100.0 / step).toLong + 1,
-        s"grid cells $cells exceed the range/step bound")
+      check("grid cells", merged.count(), 0L, (100.0 / step).toLong + 1)
       val q = ops.Drift.quantilesFromEcdf(merged, Seq(1, 50, 99))
         .collect().map(r => r.getInt(0) -> r.getDouble(3)).toMap
-      assert(q(50) > 45 && q(50) < 55,
-        s"p50 ${q(50)} of a uniform [0,100) sample should be near 50")
+      check("grid p50 of a uniform [0,100) sample", q(50), Math.nextUp(45.0),
+        Math.nextDown(55.0))
       assert(q(1) < q(50) && q(50) < q(99), "percentile ladder must be monotone")
-      println(f"[soak] grid quantiles cells=$cells p50=${q(50)}%.2f")
     })
 
-    // round-14: the GRID-FREE rank sketch at 1M values (q242) — merge of
-    // two shard sketches must equal the cold rebuild BIT-FOR-BIT (the
-    // value-set is {k smallest hashes}, counts are linear — the proof in
+    // round-14: the GRID-FREE rank sketch (q242) — merge of two shard
+    // sketches must equal the cold rebuild BIT-FOR-BIT (the value-set is
+    // {k smallest hashes}, counts are linear — the proof in
     // rankSketchMerge), state stays ≤ k rows per group forever, and the
     // self-normalized quantile read tracks the true uniform percentiles
     // with no pre-declared grid/range.
-    time("rank sketch merge law + quantiles (1M)")({
+    time(s"rank sketch merge law + quantiles (${shape(nDocs)})")({
       val k = 1024
       val vs = spark.range(nDocs).select(col("id"),
         (col("id") % 4).cast("string").as("g"),
         pmod(xxhash64(col("id")), lit(1000000)).cast("long").as("v"))
-      val merged = ops.Sketches.rankSketchMerge(
-        ops.Sketches.rankSketch(vs.filter(col("id") % 7 === 0), "g", "v", k),
-        ops.Sketches.rankSketch(vs.filter(col("id") % 7 =!= 0), "g", "v", k),
-        "g", k).localCheckpoint()
-      val cold = ops.Sketches.rankSketch(vs, "g", "v", k)
-      assert(merged.exceptAll(cold).count() == 0 &&
-        cold.exceptAll(merged).count() == 0,
-        "rank sketch merge != cold rebuild")
-      assert(merged.count() <= 4L * k, "rank sketch state exceeds k per group")
+      val merged = mergeLaw(MergeState.RankSketch("g", "v", k), vs,
+        col("id") % 7 === 0)
+      check("rank sketch state rows", merged.count(), 0L, 4L * k)
       val q = ops.Sketches.quantilesFromRankSketch(merged, "g", Seq(50))
         .agg(min("v_q"), max("v_q")).head()
       // uniform on [0, 1e6) -> p50 near 5e5 within the O(1/sqrt(k)) band
-      assert(q.getLong(0) > 400000 && q.getLong(1) < 600000,
-        s"grid-free p50 off a uniform [0,1e6) sample out of band: $q")
-      println(s"[soak] rank sketch p50 band [${q.getLong(0)}, ${q.getLong(1)}]")
+      check("rank sketch lowest group p50", q.getLong(0), 400001L, 599999L)
+      check("rank sketch highest group p50", q.getLong(1), 400001L, 599999L)
     })
 
-    // round-14: WARC/WET ingestion at corpus scale — 1M docs serialized
+    // round-14: WARC/WET ingestion at corpus scale — the corpus serialized
     // into 256 per-record-gzip shards (the Common Crawl layout the
     // WarcCorpus reader maps to tasks) and parsed back by the
     // record-boundary walker; parsed record/byte totals must equal the
-    // corpus totals exactly. Shards are ~4k docs (the mapGroups holds
-    // one shard, never the corpus), and records STREAM out of the parse.
+    // corpus totals exactly. Each mapGroups holds one shard, never the
+    // corpus, and records STREAM out of the parse.
     time("warc shard round-trip (256 gz shards)")({
-      import spark.implicits._
-      val parsed = docs
-        .select((col("doc_id") % 256).cast("string").as("shard"),
-          col("doc_id"), col("text"))
-        .as[(String, Long, String)]
-        .groupByKey(_._1)
-        .mapGroups { (sh, it) =>
-          val ds = it.toSeq.sortBy(_._2)
-          val recs = ds.map { case (_, id, t) =>
-            ext.Warc.WarcRecord(Seq(
-              "WARC-Type" -> "conversion",
-              "WARC-Target-URI" -> s"http://graft.test/$id",
-              "WARC-Date" -> "2026-01-01T00:00:00Z",
-              "Content-Type" -> "text/plain"), t.getBytes("US-ASCII"))
-          }
-          (sh, ext.Warc.writeWarcGz(recs))
-        }
+      val parsed = warcShards(docs, col("doc_id") % 256)
         .flatMap { case (_, bytes) =>
           ext.Warc.parseWarcGz(bytes).map(r => (1L, r.payload.length.toLong))
         }
@@ -1168,44 +1070,38 @@ object Soak {
         s"warc round-trip lost records/bytes: parsed $parsed vs $expected")
     })
 
-    // round-14: the hypothesis family at 1M docs (q226/q231 shape) —
-    // the moment-stats table is LINEAR (merge ≡ cold rebuild
-    // bit-for-bit), its state is ≤ groups rows forever, and the Welch
-    // probe reads only the two tables, never corpus rows.
-    time("welch from merged stats (1M docs)")({
+    // round-14: the hypothesis family (q226/q231 shape) — the
+    // moment-stats table is LINEAR (merge ≡ cold rebuild bit-for-bit),
+    // its state is ≤ groups rows forever, and the Welch probe reads only
+    // the two tables, never corpus rows.
+    time(s"welch from merged stats (${shape(nDocs)} docs)")({
       val ev = docs.select((col("doc_id") % 16).cast("string").as("g"),
         size(split(col("text"), " ")).cast("long").as("x"), col("doc_id"))
       // split modulus 101 is COPRIME with the 16 groups (the q231
       // lesson, re-learned here: a %100 batch over %16 groups covers
       // only the {0,4,8,12} residues — gcd 4)
-      val corpusT = ops.Hypothesis.statsTable(
-        ev.filter(col("doc_id") % 101 =!= 0), "g", col("x"))
-      val batchT = ops.Hypothesis.statsTable(
-        ev.filter(col("doc_id") % 101 === 0), "g", col("x"))
-        .localCheckpoint()
-      val merged = ops.Hypothesis.mergeStatsTables(corpusT, batchT)
-        .localCheckpoint()
-      val cold = ops.Hypothesis.statsTable(ev, "g", col("x"))
-      assert(merged.exceptAll(cold).count() == 0 &&
-        cold.exceptAll(merged).count() == 0,
-        "moment-stats merge != cold rebuild (linear law broken)")
+      val isBatch = col("doc_id") % 101 === 0
+      val stats = MergeState.Stats("g", "x")
+      val merged = mergeLaw(stats, ev, isBatch)
       assert(merged.count() == 16, "stats state must be = groups rows")
-      assert(ops.Hypothesis.welchFromStats(merged, batchT, "g").count() == 16,
+      assert(ops.Hypothesis.welchFromStats(merged,
+        stats.summarize(ev.filter(isBatch)), "g").count() == 16,
         "welch probe must yield one test per group")
     })
 
-    // round-14: the unigram-LM tokenizer at 1M docs — EM runs on the
-    // DISTINCT-WORD table (10k words: the corpus contributes exactly one
-    // pass), the trained vocab persists and reloads through IndexStore,
-    // and the encode conserves words and chars EXACTLY over the ~80M
-    // corpus tokens (the lossless-segmentation invariant — every piece
-    // sequence concatenates back to its word).
-    time("unigram-lm train + encode (1M docs)")({
+    // round-14: the unigram-LM tokenizer — EM runs on the DISTINCT-WORD
+    // table (10k words: the corpus contributes exactly one pass), the
+    // trained vocab persists and reloads through IndexStore, and the
+    // encode conserves words and chars EXACTLY over the corpus tokens
+    // (the lossless-segmentation invariant — every piece sequence
+    // concatenates back to its word).
+    time(s"unigram-lm train + encode (${shape(nDocs)} docs)")({
       val vocab = ext.UnigramLm.train(docs, "text", vocabSize = 512,
         rounds = 2, maxPieceLen = 4)
-      val dir = java.nio.file.Files.createTempDirectory("soak_uni_")
-      ext.IndexStore.writeUnigramVocab(spark, vocab, 4, s"$dir/v")
-      val (loaded, m) = ext.IndexStore.loadUnigramVocab(spark, s"$dir/v")
+      val (loaded, m) = Scratch.withTempDir("soak_uni_") { dir =>
+        ext.IndexStore.writeUnigramVocab(spark, vocab, 4, s"$dir/v")
+        ext.IndexStore.loadUnigramVocab(spark, s"$dir/v")
+      }
       assert(loaded == vocab && m == 4, "unigram vocab store round-trip")
       val counts = ext.UnigramLm.tokenCounts(docs, "doc_id", "text",
         loaded, m)
@@ -1216,17 +1112,16 @@ object Soak {
       assert(counts.getLong(0) == truth.getLong(0) &&
         counts.getLong(1) == truth.getLong(1),
         "word/char conservation through the unigram encode broke")
-      assert(counts.getLong(2) >= counts.getLong(0), "pieces >= words")
-      println(s"[soak] unigram vocab=${loaded.size} " +
-        s"words=${counts.getLong(0)} pieces=${counts.getLong(2)}")
+      check(s"unigram pieces (vocab ${loaded.size}, >= words)",
+        counts.getLong(2), counts.getLong(0), Long.MaxValue)
     })
 
-    // round-14: exact ROC-AUC at 1M rows (q232/q233 shape) — the rank
-    // identity's heavy relation is per-DISTINCT-(group, score), never
-    // the n₊·n₋ pair materialization (asserted), and an independent
-    // label lands the AUC at 0.5 within the 1M-sample band. The
-    // confusion ladder stays |groups|·|thresholds| rows.
-    time("roc-auc at 1M (rank identity)")({
+    // round-14: exact ROC-AUC (q232/q233 shape) — the rank identity's
+    // heavy relation is per-DISTINCT-(group, score), never the n₊·n₋
+    // pair materialization (asserted), and an independent label lands
+    // the AUC at 0.5 within the sample band. The confusion ladder stays
+    // |groups|·|thresholds| rows.
+    time(s"roc-auc at ${shape(nDocs)} (rank identity)")({
       val ev = docs.select((col("doc_id") % 8).cast("string").as("g"),
         (pmod(xxhash64(col("doc_id")), lit(2)) === 0).as("y"),
         size(split(col("text"), " ")).cast("double").as("s"))
@@ -1234,16 +1129,15 @@ object Soak {
         .localCheckpoint()
       assert(auc.count() == 8, "one AUC per group")
       val mm = auc.agg(min("auc"), max("auc")).head()
-      assert(mm.getDouble(0) > 0.45 && mm.getDouble(1) < 0.55,
-        s"independent label must give AUC ~ 0.5, got $mm")
-      val distinctVals = ev.select("g", "s").distinct().count()
-      assert(distinctVals <= 8L * 121,
-        s"rank machinery must stay per-distinct-value ($distinctVals)")
+      check("roc-auc lowest group", mm.getDouble(0), Math.nextUp(0.45),
+        Math.nextDown(0.55))
+      check("roc-auc highest group", mm.getDouble(1), Math.nextUp(0.45),
+        Math.nextDown(0.55))
+      check("roc-auc distinct (g, s) rows",
+        ev.select("g", "s").distinct().count(), 0L, 8L * 121)
       assert(ops.Hypothesis.confusionAtThresholds(ev, "g", col("y"),
         col("s"), Seq(60.0, 80.0, 100.0)).count() == 24,
         "confusion ladder must be groups x thresholds")
-      println(f"[soak] roc-auc band [${mm.getDouble(0)}%.4f, " +
-        f"${mm.getDouble(1)}%.4f], distinct (g,s) = $distinctVals")
     })
 
     // round-15: ST32 — the streaming crawl door at scale. 1% of the
@@ -1251,16 +1145,15 @@ object Soak {
     // dir (half exact corpus dups, half guaranteed-novel seeds), drains
     // through the file stream in 4-shard micro-batches, and every batch
     // renders the 4-signal gate verdict against the FROZEN structures
-    // (the shared gramIdx + simhash signatures + segment index the
-    // corpus paid for once). Bounded per-batch cost is structural —
-    // each batch parses ≤ maxFilesPerTrigger shards and probes frozen
-    // state — and asserted: per-batch rows never exceed the 4-shard
-    // ceiling, the dup arm is rejected to a doc, the novel arm admits.
-    time("streaming warc gate (16 shards, 4-shard batches)")({
-      import spark.implicits._
+    // (the shared gramIdx and simhash64 signatures the corpus paid for
+    // once, plus the prefix segment index). Bounded per-batch cost is
+    // structural — each batch parses ≤ maxFilesPerTrigger shards and
+    // probes frozen state — and asserted: per-batch rows never exceed the
+    // 4-shard ceiling, the dup arm is rejected to a doc, the novel arm
+    // admits.
+    time("streaming warc gate (16 shards, 4-shard batches)")(
+        Scratch.withTempDir("soak_st32_") { dir =>
       val nArr = nDocs / 200 // per arm
-      val sig = Dedup.simHash64Signature(docs, "doc_id", "text")
-        .localCheckpoint()
       val keyed = docs.select(col("doc_id"),
         substring(col("text"), 1, 24).as("pfx"))
       val editIdx = ext.Fuzzy.segmentIndex(keyed, "doc_id", "pfx", 2)
@@ -1268,30 +1161,15 @@ object Soak {
       val arrive = syntheticDocs(spark, nArr) // seeds ⊂ corpus → dups
         .unionByName(syntheticDocs(spark, nArr, seedOffset = 7 * nDocs)
           .withColumn("doc_id", col("doc_id") + nDocs)) // novel seeds
-      val dir = java.nio.file.Files.createTempDirectory("soak_st32_")
-      arrive.select((col("doc_id") % 16).as("sh"), col("doc_id"),
-          col("text"))
-        .as[(Long, Long, String)]
-        .groupByKey(_._1)
-        .mapGroups { (sh, it) =>
-          (sh, ext.Warc.writeWarcGz(it.map { case (_, id, t) =>
-            ext.Warc.WarcRecord(Seq(
-              "WARC-Type" -> "conversion",
-              "WARC-Target-URI" -> s"http://t/$id",
-              "WARC-Date" -> "2026-01-01T00:00:00Z",
-              "Content-Type" -> "text/plain"), t.getBytes("US-ASCII"))
-          }.toSeq))
-        }
-        .collect()
-        .foreach { case (sh, b) =>
-          java.nio.file.Files.write(dir.resolve(f"s$sh%02d.warc.gz"), b)
-        }
+      warcShards(arrive, col("doc_id") % 16).collect().foreach {
+        case (s, b) => Files.write(dir.resolve(f"s$s%02d.warc.gz"), b)
+      }
       val perBatch =
         scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Double)]()
       val q = streaming.EventStreams.onArrival(
         streaming.EventStreams.readWarcShardStream(spark, dir.toString,
           maxFilesPerTrigger = 4))(
-        streaming.EventStreams.warcGateBatch(_, gramIdx, sig, docs, editIdx,
+        streaming.EventStreams.warcGateBatch(_, gramIdx, sh64, docs, editIdx,
           keyed, editKeyLen = 24, k = 2, tauNum = 4, tauDen = 5)) { v =>
         val t0 = System.nanoTime()
         val agg = v.select(
@@ -1308,31 +1186,28 @@ object Soak {
       }
       q.processAllAvailable()
       q.stop()
-      val (rows, dupAdmits, novelAdmits) =
-        (perBatch.map(_._1).sum, perBatch.map(_._2).sum,
-          perBatch.map(_._3).sum)
-      assert(rows == 2 * nArr, s"gate saw $rows of ${2 * nArr} arriving docs")
-      // 16 shards / 4 per trigger → multiple bounded batches; ceiling =
-      // 4 shards × (2·nArr/16 docs per shard, ±1 on the modulus)
-      assert(perBatch.size >= 4 && perBatch.forall(_._1 <= 4 * (nArr / 8 + 1)),
-        s"per-batch rows exceeded the 4-shard ceiling: ${perBatch.map(_._1)}")
-      assert(dupAdmits == 0, s"exact-dup arm leaked $dupAdmits admits")
-      assert(novelAdmits >= (nArr * 4) / 5,
-        s"novel arm admitted only $novelAdmits of $nArr")
       perBatch.zipWithIndex.foreach { case ((n, _, _, s), i) =>
         println(f"[soak]   st32 batch $i: $n%5d docs ${s}%6.2f s")
       }
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
+      assert(perBatch.map(_._1).sum == 2 * nArr,
+        s"gate saw ${perBatch.map(_._1).sum} of ${2 * nArr} arriving docs")
+      // 16 shards / 4 per trigger → multiple bounded batches. Each arm
+      // puts at most ⌈nArr/16⌉ docs in a shard, so a 4-shard batch holds
+      // at most 4 × 2 × ⌈nArr/16⌉ docs
+      assert(perBatch.size >= 4, s"only ${perBatch.size} micro-batches")
+      check("st32 largest batch rows", perBatch.map(_._1).max, 0L,
+        8 * ((nArr + 15) / 16))
+      assert(perBatch.map(_._2).sum == 0,
+        s"exact-dup arm leaked ${perBatch.map(_._2).sum} admits")
+      check("st32 novel admits", perBatch.map(_._3).sum, (nArr * 4) / 5,
+        Long.MaxValue)
     })
 
-    // round-15: dictionary tagging at 1M docs — ONE automaton pass per
-    // doc for a 300-entry dictionary (the scan form would re-walk each
-    // doc 300×); correctness spot-checked against the relational form
-    // on a 1/97 sample, throughput on the full corpus.
-    time("aho-corasick tagging (1M docs, 300 patterns)")({
+    // round-15: dictionary tagging — ONE automaton pass per doc for a
+    // 300-entry dictionary (the scan form would re-walk each doc 300×);
+    // correctness spot-checked against the relational form on a 1/97
+    // sample, throughput on the full corpus.
+    time(s"aho-corasick tagging (${shape(nDocs)} docs, 300 patterns)")({
       val dict = (0 until 295).map(k => s"w${k * 37 % 10000}") ++
         Seq("w1 w2", "w33 w44", "w555 w666", "w7 w8 w9", "w12 w34")
       val tags = ext.Tagger.tagCountsAuto(docs, "doc_id", "text", dict)
@@ -1340,115 +1215,98 @@ object Soak {
       assert(n.getLong(0) > 0L && n.getLong(1) > n.getLong(0),
         s"tagger found no multi-hit mass: $n")
       val sample = docs.filter(col("doc_id") % 97 === 0)
-      val a = ext.Tagger.tagCountsAuto(sample, "doc_id", "text", dict)
-      val b = ext.Tagger.tagCountsScan(sample, "doc_id", "text", dict)
-      assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
+      sameRows(ext.Tagger.tagCountsAuto(sample, "doc_id", "text", dict),
+        ext.Tagger.tagCountsScan(sample, "doc_id", "text", dict),
         "automaton ≠ relational scan on the sample")
     })
 
-    // round-15: Bloom frontier at 1M keys (m = 2^24 bits → ≤ 266k state
-    // rows): zero false negatives by law; novel-key FP rate must sit
-    // near the analytic (1 − e^{−kn/m})^k ≈ 0.0014, far below 1%.
-    time("bloom frontier (1M build, 2M probe)")({
-      val p = ext.Bloom.Params(mBits = 1L << 24, k = 5)
-      val crawled = spark.range(nDocs).select(col("id"),
-        concat(lit("http://h"), (col("id") % 50021).cast("string"),
-          lit(".test/p/"), col("id").cast("string")).as("url"))
-      val words = ext.Bloom.build(crawled, "url", p).cache()
-      assert(words.count() <= p.mBits / 63 + 1, "word table exceeded bound")
-      val novel = spark.range(nDocs).select((col("id") + nDocs).as("id"),
-        concat(lit("http://h"), (col("id") % 50021).cast("string"),
-          lit(".test/NOVEL/"), col("id").cast("string")).as("url"))
-      // production probe shape: the filter densifies to a 2 MB array
-      // literal and the 2M-key probe is ONE narrow codegen'd pass — no
-      // explode, no join, no shuffle (the relational probe exists for
-      // the SQL twin; it pays a 15M-row shuffle here)
-      val dense = ext.Bloom.denseWords(words, p)
-      val probed = ext.Bloom.probeDense(crawled.unionByName(novel), "url",
-        "id", dense, p)
-      val spot = crawled.filter(col("id") % 4999 === 0)
-      val sa = ext.Bloom.probe(spot, "url", "id", words, p)
-      val sb = ext.Bloom.probeDense(spot, "url", "id", dense, p)
-      assert(sa.exceptAll(sb).count() == 0 && sb.exceptAll(sa).count() == 0,
-        "dense probe ≠ relational probe on the spot sample")
+    // The crawled and novel URL sets of the two Bloom stages: nDocs each.
+    def urls(from: Long, path: String) = spark.range(nDocs).select(
+      (col("id") + from).as("id"),
+      concat(lit("http://h"), (col("id") % 50021).cast("string"),
+        lit(s".test/$path/"), col("id").cast("string")).as("url"))
+    val (crawled, novel) = (urls(0L, "p"), urls(nDocs, "NOVEL"))
+    // Zero false negatives by law; novel-key FP rate under 1%.
+    def bloomLaws(probed: DataFrame): Unit = {
       val r = probed.agg(
         sum(when(col("id") < nDocs && !col("maybe_present"), 1L)
           .otherwise(0L)).as("fn"),
         sum(when(col("id") >= nDocs && col("maybe_present"), 1L)
           .otherwise(0L)).as("fp")).head()
       assert(r.getLong(0) == 0L, s"${r.getLong(0)} false negatives (LAW)")
-      assert(r.getLong(1) < nDocs / 100,
-        s"fp rate ${r.getLong(1)}/$nDocs above 1%")
+      check("bloom novel false positives", r.getLong(1), 0L,
+        nDocs / 100 - 1)
+    }
+
+    // round-15: Bloom frontier (m = 2^24 bits → ≤ 266k state rows): zero
+    // false negatives by law; novel-key FP rate must sit near the
+    // analytic (1 − e^{−kn/m})^k ≈ 0.0014 at 1M keys, far below 1%.
+    time(s"bloom frontier (${shape(nDocs)} build, ${shape(2 * nDocs)} probe)")({
+      val p = ext.Bloom.Params(mBits = 1L << 24, k = 5)
+      val words = ext.Bloom.build(crawled, "url", p).cache()
+      check("bloom word rows", words.count(), 0L, p.mBits / 63 + 1)
+      // production probe shape: the filter densifies to a 2 MB array
+      // literal and the 2M-key probe is ONE narrow codegen'd pass — no
+      // explode, no join, no shuffle (the relational probe exists for
+      // the SQL twin; it pays a 15M-row shuffle here)
+      val dense = ext.Bloom.denseWords(words, p)
+      val spot = crawled.filter(col("id") % 4999 === 0)
+      sameRows(ext.Bloom.probe(spot, "url", "id", words, p),
+        ext.Bloom.probeDense(spot, "url", "id", dense, p),
+        "dense probe ≠ relational probe on the spot sample")
+      bloomLaws(ext.Bloom.probeDense(crawled.unionByName(novel), "url",
+        "id", dense, p))
       words.unpersist()
     })
 
     // round-16: SHARDED Bloom frontier at m = 2^32 total bits (16
     // shards × 2^28) — past the single-broadcast dense cap, the
     // billions-of-URLs form. The probe is ONE co-partitioned cogroup
-    // shuffle of the 2M probe rows (each carrying its k positions —
+    // shuffle of the probe rows (each carrying its k positions —
     // never the k-exploded join), and each task densifies only its own
     // 34 MB shard. Laws: word rows bounded by inserted positions (not
     // by m), zero false negatives, novel FP ≈ 0 at this density, and
     // the cogroup's task-local arithmetic ≡ the per-shard relational
     // probe on a spot sample.
-    time("sharded bloom frontier (2^32 bits, 16 shards, 1M/2M)")({
+    time("sharded bloom frontier (2^32 bits, 16 shards, " +
+        s"${shape(nDocs)}/${shape(2 * nDocs)})")({
       val S = 16
       val p = ext.Bloom.Params(mBits = 1L << 28, k = 5)
-      val crawled = spark.range(nDocs).select(col("id"),
-        concat(lit("http://h"), (col("id") % 50021).cast("string"),
-          lit(".test/p/"), col("id").cast("string")).as("url"))
       val words = ext.Bloom.buildSharded(crawled, "url", S, p).cache()
-      val wc = words.count()
-      assert(wc <= nDocs * p.k,
-        s"sharded word table $wc exceeds the inserted-position bound")
-      val novel = spark.range(nDocs).select((col("id") + nDocs).as("id"),
-        concat(lit("http://h"), (col("id") % 50021).cast("string"),
-          lit(".test/NOVEL/"), col("id").cast("string")).as("url"))
-      val probed = ext.Bloom.probeSharded(
-        crawled.unionByName(novel), "url", "id", words, S, p)
-      val r = probed.agg(
-        sum(when(col("id") < nDocs && !col("maybe_present"), 1L)
-          .otherwise(0L)).as("fn"),
-        sum(when(col("id") >= nDocs && col("maybe_present"), 1L)
-          .otherwise(0L)).as("fp")).head()
-      assert(r.getLong(0) == 0L, s"${r.getLong(0)} false negatives (LAW)")
-      assert(r.getLong(1) < nDocs / 100,
-        s"fp rate ${r.getLong(1)}/$nDocs above 1%")
-      // spot sample: cogroup verdicts ≡ per-shard relational probes
+      check("sharded bloom word rows", words.count(), 0L, nDocs * p.k)
+      bloomLaws(ext.Bloom.probeSharded(
+        crawled.unionByName(novel), "url", "id", words, S, p))
       val spot = crawled.filter(col("id") % 4999 === 0)
         .withColumn("s", ext.Bloom.shardOf(col("url"), S)).cache()
-      val sa = ext.Bloom.probeSharded(spot, "url", "id", words, S, p)
-        .select("id", "maybe_present")
-      val sb = (0 until S).map { sh =>
-        ext.Bloom.probe(spot.filter(col("s") === sh), "url", "id",
-          words.filter(col("s") === sh).drop("s"), p)
-          .select("id", "maybe_present")
-      }.reduce(_.unionByName(_))
-      assert(sa.exceptAll(sb).count() == 0 && sb.exceptAll(sa).count() == 0,
+      sameRows(ext.Bloom.probeSharded(spot, "url", "id", words, S, p)
+          .select("id", "maybe_present"),
+        (0 until S).map { sh =>
+          ext.Bloom.probe(spot.filter(col("s") === sh), "url", "id",
+            words.filter(col("s") === sh).drop("s"), p)
+            .select("id", "maybe_present")
+        }.reduce(_.unionByName(_)),
         "sharded cogroup probe ≠ per-shard relational probe on the sample")
       spot.unpersist(); words.unpersist()
     })
 
-    // round-16: the ST36 streaming crawl door at 2 × 500k-doc waves —
+    // round-16: the ST36 streaming crawl door at 2 waves of nDocs/2 —
     // all four gates per batch against persisted state. Wave 2
-    // re-presents 50k wave-1 URLs under new ids: every one whose
+    // re-presents a tenth of wave 1's URLs under new ids: every one whose
     // original was ADMITTED must come back novel=false (the frontier's
     // no-false-negative law, across a real state swap). Cap state stays
     // O(hosts); per-wave wall time printed.
-    time("streaming crawl door (2 waves x 500k)")({
+    time(s"streaming crawl door (2 waves x ${shape(nDocs / 2)})")(
+        Scratch.withTempDir("soak_st36_") { dir =>
       val nArr = nDocs / 2
       val p = ext.Bloom.Params(mBits = 1L << 24, k = 5)
-      val cap = 300
       val rules = ext.Robots.ruleTable(
-        spark.createDataFrame(
-          Seq(("hblock", "User-agent: *\nDisallow: /\n")))
-          .toDF("host", "content"),
+        Seq(("hblock", "User-agent: *\nDisallow: /\n")).toDF("host", "content"),
         "host", "content", "graftbot").localCheckpoint()
       // (round-17 fix: this stage shipped in the interrupted round-16
       // build with `src` dropped by the select before the payload
       // withColumn referenced it — an unresolved-column crash on first
       // execution; the soak had not been run since the stage landed.)
-      def mkWave(ids: org.apache.spark.sql.DataFrame) = ids.select(
+      def mkWave(ids: DataFrame) = ids.select(
         col("id"), col("src"),
         when(col("src") % 97 === 0, lit("hblock"))
           .otherwise(concat(lit("h"), (col("src") % 1009).cast("string")))
@@ -1462,31 +1320,29 @@ object Soak {
             .otherwise(concat(lit("text "), col("src").cast("string"))
               .cast("binary")))
         .drop("src")
-      val dir = java.nio.file.Files
-        .createTempDirectory("soak_st36_").toString
+      def door(wave: DataFrame, batchId: Long) =
+        streaming.EventStreams.crawlDoorMergeBatch(wave, "id", "host",
+          "path", "url", "payload", rules, p, 300,
+          s"$dir/frontier", s"$dir/cap", batchId)
       val w1 = mkWave(spark.range(nArr)
         .select(col("id"), col("id").as("src")))
       val t1 = System.nanoTime()
-      val v1 = streaming.EventStreams.crawlDoorMergeBatch(w1, "id", "host",
-        "path", "url", "payload", rules, p, cap,
-        s"$dir/frontier", s"$dir/cap", 0L).get.cache()
+      val v1 = door(w1, 0L).get.cache()
       val adm1 = v1.filter(col("admitted"))
         .select((col("id")).as("src0")).cache()
       println(f"[soak]   st36 wave 1: ${v1.count()}%d verdicts, " +
         f"${adm1.count()}%d admitted, ${(System.nanoTime() - t1) / 1e9}%.2f s")
-      val capRows = spark.read.parquet(s"$dir/cap").count()
-      assert(capRows <= 1011L, s"cap state $capRows rows exceeds O(hosts)")
-      val fRows = spark.read.parquet(s"$dir/frontier").count()
-      assert(fRows <= p.mBits / 63 + 1, s"frontier $fRows rows over bound")
-      // wave 2: fresh half + 50k re-presented wave-1 urls under new ids
+      check("st36 cap state rows (O(hosts))",
+        spark.read.parquet(s"$dir/cap").count(), 0L, 1011L)
+      check("st36 frontier rows",
+        spark.read.parquet(s"$dir/frontier").count(), 0L, p.mBits / 63 + 1)
+      // wave 2: fresh half + a tenth of wave 1's urls under new ids
       val w2 = mkWave(
         spark.range(nArr, nDocs).select(col("id"), col("id").as("src"))
           .unionByName(spark.range(nArr / 10)
             .select((col("id") + 2 * nDocs).as("id"), col("id").as("src"))))
       val t2 = System.nanoTime()
-      val v2 = streaming.EventStreams.crawlDoorMergeBatch(w2, "id", "host",
-        "path", "url", "payload", rules, p, cap,
-        s"$dir/frontier", s"$dir/cap", 1L).get.cache()
+      val v2 = door(w2, 1L).get.cache()
       println(f"[soak]   st36 wave 2: ${v2.count()}%d verdicts, " +
         f"${(System.nanoTime() - t2) / 1e9}%.2f s")
       // law: a re-presented url whose original was admitted is never
@@ -1496,40 +1352,25 @@ object Soak {
         .join(adm1, "src0").count()
       assert(leaked == 0L, s"$leaked admitted wave-1 urls came back novel")
       // replay refused on the cap guard; both states untouched
-      assert(streaming.EventStreams.crawlDoorMergeBatch(w2, "id", "host",
-        "path", "url", "payload", rules, p, cap,
-        s"$dir/frontier", s"$dir/cap", 1L).isEmpty, "replay not refused")
+      assert(door(w2, 1L).isEmpty, "replay not refused")
       v1.unpersist(); v2.unpersist(); adm1.unpersist()
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator()
-        .asScala.toSeq.sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     })
 
-    // round-15: TFRecord sink/source at 1M records × 64 shards — the
+    // round-15: TFRecord sink/source at nDocs records × 64 shards — the
     // framed-proto codec at volume; conservation checked on count and
     // the exact id-sum (any dropped/duplicated/corrupt record breaks it).
-    time("tfrecord round-trip (1M records, 64 shards)")({
-      val dir = java.nio.file.Files.createTempDirectory("soak_tfr_")
-      val out = dir.toString + "/t"
-      ops.TfRecord.write(docs.select(col("doc_id"), col("text")), out, 64)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      val back = ops.TfRecord.read(spark, out, schema)
-        .agg(count(lit(1)).as("n"), sum("doc_id").as("ids"),
-          sum(length(col("text"))).as("chars")).head()
-      val want = docs.agg(count(lit(1)), sum("doc_id"),
+    time(s"tfrecord round-trip (${shape(nDocs)} records, 64 shards)")(
+        Scratch.withTempDir("soak_tfr_") { dir =>
+      val docsIn = docs.select(col("doc_id"), col("text"))
+      ops.TfRecord.write(docsIn, s"$dir/t", 64)
+      def totals(df: DataFrame) = df.agg(count(lit(1)), sum("doc_id"),
         sum(length(col("text")))).head()
+      val (back, want) = (totals(ops.TfRecord.read(spark, s"$dir/t",
+        docsIn.schema)), totals(docsIn))
       assert(back == want, s"tfrecord round-trip drifted: $back vs $want")
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     })
 
-    spark.stop()
+    Seq(docs, sig, vecs).foreach(_.unpersist())
+    stages.toSeq
   }
 }

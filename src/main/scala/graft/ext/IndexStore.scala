@@ -90,8 +90,7 @@ object IndexStore {
   }
 
   /** Persist IVF-PQ codes partitioned by coarse cell. */
-  def writeIvfPqCodes(model: IvfPq.Model, path: String,
-      idCol: String = "vec_id"): Unit =
+  def writeIvfPqCodes(model: IvfPq.Model, path: String): Unit =
     model.encoded.write.partitionBy("cell").mode("overwrite").parquet(path)
 
   /** Reload persisted codes into the model. [[IvfPq.search]]'s nprobe

@@ -39,7 +39,7 @@ object QualityModel {
     * coefficient vector in feature order (n_tokens, n_distinct,
     * n_chars) plus the intercept.
     */
-  def fit(df: DataFrame, idCol: String, textCol: String,
+  def fit(df: DataFrame, textCol: String,
       label: org.apache.spark.sql.Column, maxIter: Int = 50,
       regParam: Double = 0.01): LrModel = {
     val data = df.select(

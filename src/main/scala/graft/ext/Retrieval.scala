@@ -599,7 +599,7 @@ object Retrieval {
       k1: Double = 1.2, b: Double = 0.75): String = {
     val termList =
       seedTerms.map(t => s"'${t.replace("'", "''")}'").mkString(", ")
-    def contrib(tf: String, df: String) =
+    def contrib(tf: String) =
       s"""CAST(round(wt *
             ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) *
             (($tf * ($k1 + 1.0)) /
@@ -618,7 +618,7 @@ object Retrieval {
                    FROM tok WHERE w IN ($termList) GROUP BY 1, 2, 3),
             df1 AS (SELECT w, CAST(count(*) AS BIGINT) AS df
                    FROM tf1 GROUP BY 1),
-            c1 AS (SELECT doc_id, ${contrib("tf", "df")} AS c
+            c1 AS (SELECT doc_id, ${contrib("tf")} AS c
                    FROM tf1 JOIN df1 USING (w) JOIN dl USING (doc_id), ad, nd),
             fb AS MATERIALIZED (
               SELECT doc_id, round(CAST(sum(c) AS DOUBLE), 6) AS score,
@@ -647,7 +647,7 @@ object Retrieval {
                    FROM tok JOIN terms t USING (w) GROUP BY 1, 2, 3),
             df2 AS (SELECT w, CAST(count(*) AS BIGINT) AS df
                    FROM tf2 GROUP BY 1),
-            c2 AS (SELECT doc_id, ${contrib("tf", "df")} AS c
+            c2 AS (SELECT doc_id, ${contrib("tf")} AS c
                    FROM tf2 JOIN df2 USING (w) JOIN dl USING (doc_id), ad, nd)
        SELECT doc_id, round(CAST(sum(c) AS DOUBLE), 6) AS score,
               CAST(row_number() OVER (

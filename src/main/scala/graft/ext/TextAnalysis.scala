@@ -70,13 +70,6 @@ object TextAnalysis {
     aggregate(contribs, lit(0L), (acc, x) => acc + x) % lit(P)
   }
 
-  /** Proportion of punctuation/symbol characters (non-alphanumeric,
-    * non-space) — high values flag markup/boilerplate.
-    */
-  def punctRatio(text: Column): Column =
-    round(regexp_count(text, lit("[^a-z0-9 ]")).cast("double") /
-      length(text).cast("double"), 6)
-
   /** Quality flag string, one character per rule ('-' = rule passed):
     * S = too short (< minTok tokens), U = low distinct-token ratio
     * (repetitive/boilerplate), L = over-long average token. A flags

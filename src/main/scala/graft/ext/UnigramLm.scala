@@ -235,8 +235,7 @@ object UnigramLm {
     * bit-identical operands on both engines. Produces CTEs ending in
     * `seg(w, np)` — the per-word Viterbi piece count.
     */
-  def viterbiSqlCtes(vocab: Seq[Piece], maxWordLen: Int,
-      maxPieceLen: Int): String = {
+  def viterbiSqlCtes(vocab: Seq[Piece], maxWordLen: Int): String = {
     require(vocab.nonEmpty && maxWordLen >= 1)
     def q(s: String) = "'" + s.replace("'", "''") + "'"
     val values = vocab.map(p =>

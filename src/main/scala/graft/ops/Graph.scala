@@ -196,7 +196,6 @@ object Graph {
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).distinct().localCheckpoint()
     val hubs0 = e.select(col("src").as("node")).distinct().localCheckpoint()
-    val auths0 = e.select(col("dst").as("node")).distinct().localCheckpoint()
     val nh = hubs0.count()
     var h = hubs0.select(col("node"), lit(1.0 / nh).as("score"))
     var a: DataFrame = null

@@ -3,7 +3,7 @@ package graft.osm
 import java.io.{BufferedInputStream, InputStream}
 import java.sql.Timestamp
 import java.time.Instant
-import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
+import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
 import scala.collection.mutable
 

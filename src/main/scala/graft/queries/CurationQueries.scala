@@ -618,7 +618,7 @@ object CurationQueries {
     "q195_logistic_gate",
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val m = graft.ext.QualityModel.fit(docs, "doc_id", "text",
+      val m = graft.ext.QualityModel.fit(docs, "text",
         col("lang") === "en")
       LrCert.m = Some(m)
       graft.ext.QualityModel.score(docs, "doc_id", "text", m)
@@ -832,7 +832,7 @@ object CurationQueries {
     "q252_isotonic_calibration",
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val m = graft.ext.QualityModel.fit(docs, "doc_id", "text",
+      val m = graft.ext.QualityModel.fit(docs, "text",
         col("lang") === "en")
       val scored = graft.ext.QualityModel.score(docs, "doc_id", "text", m)
         .join(docs.select(col("doc_id"), col("source"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.Tables
-import graft.ext.{Opq, PqIndex, Retrieval, Similarity, TextAnalysis}
+import graft.ext.{Opq, PqIndex, Retrieval, TextAnalysis}
 import graft.ops.Graph
 import graft.syntax.round6z
 

@@ -1447,7 +1447,7 @@ object TrainQueries {
     dynOracle = () => UnigramState.encodeVocab.map { case (vocab, maxW) =>
       s"""WITH $UniToksCte,
             wds AS (SELECT DISTINCT w FROM toks),
-            ${UnigramLm.viterbiSqlCtes(vocab, maxW, UniMaxPieceLen)}
+            ${UnigramLm.viterbiSqlCtes(vocab, maxW)}
          SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_words,
                 CAST(sum(length(t.w)) AS BIGINT) AS n_chars,
                 CAST(sum(s2.np) AS BIGINT) AS n_pieces
@@ -1480,7 +1480,7 @@ object TrainQueries {
     dynOracle = () => UnigramState.packVocab.map { case (vocab, maxW) =>
       s"""WITH $UniToksCte,
             wds AS (SELECT DISTINCT w FROM toks),
-            ${UnigramLm.viterbiSqlCtes(vocab, maxW, UniMaxPieceLen)},
+            ${UnigramLm.viterbiSqlCtes(vocab, maxW)},
             cnt AS (SELECT t.doc_id, CAST(sum(s2.np) AS BIGINT) AS n
                     FROM toks t JOIN seg s2 USING (w) GROUP BY 1),
             d AS (SELECT dd.source AS grp, c.doc_id, c.n

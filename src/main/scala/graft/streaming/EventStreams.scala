@@ -993,7 +993,7 @@ object EventStreams {
     * state swap (the verdict plan reads the state parquet the swap
     * replaces). Run on a stream with [[mergeOnArrival]].
     */
-  def hostCapMergeBatch(batch: DataFrame, idCol: String, urlCol: String,
+  def hostCapMergeBatch(batch: DataFrame, urlCol: String,
       orderCol: String, cap: Int, targetPath: String, batchId: Long)
       : Option[DataFrame] = {
     require(cap >= 1, s"hostCapMergeBatch: cap=$cap")

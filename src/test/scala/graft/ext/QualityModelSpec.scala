@@ -18,7 +18,7 @@ class QualityModelSpec extends SparkSpec {
       (i.toLong, Seq.fill(30)("verbose filler words").mkString(" "))) ++
       (40 until 80).map(i => (i.toLong, "tiny doc")))
       .toDF("doc_id", "text")
-    val m = QualityModel.fit(docs, "doc_id", "text", col("doc_id") < 40)
+    val m = QualityModel.fit(docs, "text", col("doc_id") < 40)
     m.weights.length shouldBe 3
     val scored = QualityModel.score(docs, "doc_id", "text", m)
       .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getInt(2)))).toMap

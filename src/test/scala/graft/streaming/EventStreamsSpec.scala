@@ -1498,7 +1498,7 @@ class EventStreamsSpec extends SparkSpec {
     def run(): Unit = {
       val q = EventStreams.mergeOnArrival(
         mem.toDF().toDF("doc_id", "url"), s"$dir/cp") { (b, id) =>
-        EventStreams.hostCapMergeBatch(b, "doc_id", "url", "doc_id",
+        EventStreams.hostCapMergeBatch(b, "url", "doc_id",
           cap = 3, s"$dir/t", id).foreach { v =>
           admitted.synchronized {
             admitted ++= v.filter(col("admit")).select("doc_id")
@@ -1520,13 +1520,13 @@ class EventStreamsSpec extends SparkSpec {
     state.keySet shouldBe Set("", "host0.test", "host1.test")
     state.values.foreach(_ shouldBe 3L)
     // replay guard: a re-applied batch id is refused, state unchanged
-    EventStreams.hostCapMergeBatch(b2.toDF("doc_id", "url"), "doc_id",
+    EventStreams.hostCapMergeBatch(b2.toDF("doc_id", "url"),
       "url", "doc_id", 3, s"$dir/t", 0L) shouldBe None
     EventStreams.readState(spark, s"$dir/t")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe state
     // empty batch: no write, no verdicts
     EventStreams.hostCapMergeBatch(b1.take(0).toDF("doc_id", "url"),
-      "doc_id", "url", "doc_id", 3, s"$dir/t", 99L) shouldBe None
+      "url", "doc_id", 3, s"$dir/t", 99L) shouldBe None
   }
 
   test("ST36 streaming crawl door: stream ≡ wave-by-wave batch composition; cross-wave novelty; replay refused") {
