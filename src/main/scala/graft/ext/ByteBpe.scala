@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   * boundaries, which char-level BPE cannot express at all.
   *
   * Scale shape is [[Bpe]]'s: the corpus contributes one tokenize +
-  * word-count pass; the byte remap runs as a typed map on the
-  * DISTINCT-WORD relation (vocab-sized, never per corpus token).
+  * word-count pass; the byte remap runs as a UDF on the DISTINCT-WORD
+  * relation (vocab-sized, never per corpus token).
   */
 object ByteBpe {
 
@@ -65,23 +65,17 @@ object ByteBpe {
     new String(bytes, "UTF-8")
   }
 
-  private def symExpr(w: String): String =
-    " " + remap(w).map(_.toString).mkString(" ") + " "
+  /** A word's byte-level base symbols: " b y t e s " over the remap. */
+  private val byteSymbols = udf((w: String) =>
+    " " + remap(w).map(_.toString).mkString(" ") + " ")
 
   /** One corpus pass: distinct words with frequencies, symbols
     * initialized to remapped BYTES. Output (sym, f) — the shape
     * [[Bpe.trainFromVocab]] consumes.
     */
-  def initialVocab(docs: DataFrame, textCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .select(explode(Dedup.tokens(col(textCol))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("f"))
-      .as[(String, Long)]
-      .map { case (w, f) => (symExpr(w), f) }
-      .toDF("sym", "f")
-  }
+  def initialVocab(docs: DataFrame, textCol: String): DataFrame =
+    Bpe.wordCounts(docs, textCol)
+      .select(byteSymbols(col("w")).as("sym"), col("f"))
 
   /** Learn the top `k` byte-level merges: (rank, s1, s2, merged, cnt)
     * in merge order.
@@ -90,26 +84,9 @@ object ByteBpe {
     Bpe.trainFromVocab(initialVocab(docs, textCol), k)
 
   /** Per-document byte-BPE token counts under a learned merge list —
-    * [[Bpe.tokenCounts]] with the byte-symbol initialization; the
-    * merge application runs once on the distinct-word table and joins
-    * back aggregated.
+    * [[Bpe.tokenCounts]] with the byte-symbol initialization.
     */
   def tokenCounts(docs: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val words = docs.select(col(idCol),
-      explode(Dedup.tokens(col(textCol))).as("w"))
-    val enc = Bpe.applyMerges(
-      words.groupBy("w").agg(count(lit(1)).as("f"))
-        .as[(String, Long)]
-        .map { case (w, _) => (w, symExpr(w)) }
-        .toDF("w", "sym"),
-      merges)
-      .select(col("w"), size(split(trim(col("sym")), " ")).as("__n_sym"))
-    words.join(enc, "w")
-      .groupBy(idCol)
-      .agg(count(lit(1)).as("n_words"),
-        sum(col("__n_sym")).as("n_bpe_tokens"))
-  }
+      merges: Seq[(String, String)]): DataFrame =
+    Bpe.mergeTokenCounts(docs, idCol, textCol, byteSymbols(_), merges)
 }

@@ -319,15 +319,14 @@ object Packing {
           .as("is_doc_end"))
   }
 
-  /** DuckDB twin of [[windowSegments]] over the documents table with
-    * `nTokExpr` as the token count — cumulative-sum window +
-    * generate_series fan-out.
+  /** DuckDB twin of [[windowSegments]] — cumulative-sum window +
+    * generate_series fan-out. `ctes` must end in a `d(grp, doc_id, n)`
+    * CTE of per-document token counts (the [[ffdPackSql]] `itemsCte`
+    * seam); documents with n ≤ 0 are dropped as on the Spark side.
     */
-  def windowSegmentsSql(groupCol: String, nTokExpr: String,
+  def windowSegmentsSql(ctes: String, groupCol: String,
       budget: Long): String =
-    s"""WITH d AS (SELECT $groupCol AS grp, doc_id,
-                    CAST($nTokExpr AS BIGINT) AS n
-                  FROM documents),
+    s"""WITH $ctes,
             o AS (SELECT grp, doc_id, n,
                     CAST(sum(n) OVER (PARTITION BY grp ORDER BY doc_id
                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)

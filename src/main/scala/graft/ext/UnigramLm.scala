@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale discipline (the [[Bpe.train]] rules, restated for EM):
   *  - The corpus contributes exactly ONE pass: tokenize → distinct-word
-  *    frequency table (one shuffle). Everything after runs on the
-  *    vocab-sized relation.
+  *    frequency table ([[Bpe.wordCounts]], one shuffle). Everything after
+  *    runs on the vocab-sized relation.
   *  - The candidate piece table is capped at `seedSize` (+ all single
   *    characters, which are never pruned — they guarantee every word
   *    segments), so the broadcast piece-score map is O(seedSize) — the
@@ -35,11 +35,6 @@ object UnigramLm {
 
   /** A learned vocabulary piece: the string and its log-probability. */
   final case class Piece(piece: String, score: Double)
-
-  /** One corpus pass: distinct words with frequencies — (w, f). */
-  def wordCounts(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(Dedup.tokens(col(textCol))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("f"))
 
   /** Candidate pieces: ALL substrings of length 1..maxPieceLen of every
     * distinct word, position-counted (overlapping occurrences count
@@ -159,7 +154,7 @@ object UnigramLm {
     require(seedSize >= vocabSize && seedSize <= 2000000,
       s"UnigramLm.train: seedSize=$seedSize must be in [vocabSize, 2e6] " +
         "(the piece table is broadcast driver state)")
-    val words = wordCounts(docs, textCol).localCheckpoint()
+    val words = Bpe.wordCounts(docs, textCol).localCheckpoint()
     val seed = seedPieces(words, maxPieceLen).localCheckpoint()
     val chars = seed.filter(length(col("piece")) === 1)
     val top = seed.filter(length(col("piece")) >= 2)
@@ -265,27 +260,18 @@ object UnigramLm {
             seg AS (SELECT w, np FROM u$maxWordLen WHERE pos = length(w))"""
   }
 
-  /** Per-document unigram-LM token counts under a learned vocab — the
-    * encode-side corpus pass ([[Bpe.tokenCounts]]'s shape): Viterbi runs
-    * once per DISTINCT word with the broadcast score map; the join-back
-    * is an aggregated build side. Output: (idCol, n_words, n_chars,
-    * n_pieces).
+  /** Per-document unigram-LM token counts under a learned vocab —
+    * [[Bpe.countTokens]] with the Viterbi encoder and the broadcast score
+    * map. Output: (idCol, n_words, n_chars, n_pieces).
     */
   def tokenCounts(docs: DataFrame, idCol: String, textCol: String,
       vocab: Seq[Piece], maxPieceLen: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val b = spark.sparkContext.broadcast(
+    require(vocab.nonEmpty && maxPieceLen >= 1,
+      s"UnigramLm.tokenCounts: vocab size ${vocab.size}, " +
+        s"maxPieceLen=$maxPieceLen (need a non-empty vocab and >= 1)")
+    val b = docs.sparkSession.sparkContext.broadcast(
       vocab.map(p => p.piece -> p.score).toMap)
-    val words = docs.select(col(idCol),
-      explode(Dedup.tokens(col(textCol))).as("w"))
-    val enc = words.select("w").distinct().as[String]
-      .map(w => (w, viterbi(w, b.value, maxPieceLen).size))
-      .toDF("w", "__n_pieces")
-    words.join(enc, "w")
-      .groupBy(idCol)
-      .agg(count(lit(1)).as("n_words"),
-        sum(length(col("w"))).cast("long").as("n_chars"),
-        sum(col("__n_pieces")).cast("long").as("n_pieces"))
+    Bpe.pieceCounts(docs, idCol, textCol)(w =>
+      viterbi(w, b.value, maxPieceLen).size)
   }
 }

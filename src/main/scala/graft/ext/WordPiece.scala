@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** WordPiece tokenizer — the third production family next to BPE
@@ -13,14 +13,15 @@ import org.apache.spark.sql.functions._
   * longest-match-first with `##` continuation pieces (the BERT encode
   * rule; a word with any unmatched position becomes one `[UNK]`).
   *
-  * Scale discipline (the [[Bpe.train]] rules verbatim): the corpus
+  * Scale discipline: training IS [[Bpe.trainFromVocab]] — the corpus
   * contributes exactly ONE pass (tokenize → distinct-word frequency
   * table, one shuffle); each merge round is two vocab-sized aggregates
   * (pair counts + symbol counts), one broadcast join, one 1-row argmax
   * collect, and one codegen'd two-pass `replace` projection with the
-  * vocab frame checkpointed per round. Encode runs once per DISTINCT
-  * word against a broadcast piece set and joins back aggregated —
-  * O(len · maxPieceLen) per distinct word, never per corpus token.
+  * vocab frame lazily checkpointed per round. Encode
+  * ([[Bpe.countTokens]]) runs once per DISTINCT word against a
+  * broadcast piece set and joins back aggregated — O(len · maxPieceLen)
+  * per distinct word, never per corpus token.
   *
   * Symbols ride the [[Bpe]] space-separated representation, with
   * non-initial symbols carrying their `##` prefix INSIDE the symbol
@@ -40,17 +41,15 @@ object WordPiece {
   val Unk = "[UNK]"
   val Cont = "##"
 
-  /** One corpus pass: distinct words with frequencies, symbols
-    * initialized to position-classed characters — (w, sym, f) with
+  /** One corpus pass: distinct non-empty words with frequencies,
+    * symbols initialized to position-classed characters — (sym, f) with
     * sym = " h ##u ##g ".
     */
   def initialVocab(docs: DataFrame, textCol: String): DataFrame = {
     val chars = split(col("w"), "")
     val tail = slice(chars, lit(2), size(chars) - 1)
-    docs.select(explode(Dedup.tokens(col(textCol))).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy("w").agg(count(lit(1)).as("f"))
-      .select(col("w"),
+    Bpe.wordCounts(docs, textCol).filter(nonEmpty)
+      .select(
         concat(lit(" "), element_at(chars, 1),
           when(size(tail) > 0,
             concat(lit(" " + Cont), array_join(tail, " " + Cont)))
@@ -59,6 +58,9 @@ object WordPiece {
         col("f"))
   }
 
+  /** WordPiece's word filter: the empty token has no first character. */
+  private def nonEmpty: Column = col("w") =!= ""
+
   /** Frequency-weighted symbol counts over a (sym, f) vocab — the
     * denominator table of the merge score. Alphabet-sized output.
     */
@@ -66,46 +68,28 @@ object WordPiece {
     vocab.select(col("f"), explode(split(trim(col("sym")), " ")).as("s"))
       .groupBy("s").agg(sum("f").as("c"))
 
-  /** Learn the top `k` merges. Returns (rank, s1, s2, merged, cnt) in
-    * merge order (cnt = the winning pair's frequency-weighted count);
-    * stops early if the vocab runs out of pairs.
+  /** The likelihood-ratio pick: pair counts joined to both parts' symbol
+    * counts, score = cnt / (c1·c2) (c1·c2 stays exact in LONG, ≤ ~1e16,
+    * and divides once as double).
     */
-  def train(docs: DataFrame, textCol: String, k: Int): DataFrame = {
-    require(k > 0, s"WordPiece.train: k=$k")
-    val spark = docs.sparkSession
-    var vocab = initialVocab(docs, textCol).localCheckpoint()
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, String, String, Long)]
-    var exhausted = false
-    var r = 1
-    while (r <= k && !exhausted) {
-      val sc = symCounts(vocab)
-      val top = Bpe.pairCounts(vocab)
-        .join(broadcast(sc.select(col("s").as("s1"), col("c").as("c1"))), "s1")
-        .join(broadcast(sc.select(col("s").as("s2"), col("c").as("c2"))), "s2")
-        // c1·c2 stays exact in LONG (≤ ~1e16), divides once as double
-        .withColumn("score",
-          col("cnt").cast("double") / (col("c1") * col("c2")).cast("double"))
-        .orderBy(desc("score"), col("s1"), col("s2")).limit(1)
-        .select("s1", "s2", "cnt").collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (s1, s2, cnt) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        val merged = s1 + s2.stripPrefix(Cont)
-        merges += ((r, s1, s2, merged, cnt))
-        // two-pass replace = exact left-to-right non-overlapping
-        // application (proof in Bpe.train)
-        val (pat, rep) = (lit(s" $s1 $s2 "), lit(s" $merged "))
-        vocab = vocab
-          .withColumn("sym", replace(replace(col("sym"), pat, rep), pat, rep))
-          .localCheckpoint()
-        r += 1
-      }
-    }
-    import spark.implicits._
-    merges.toSeq.toDF("rank", "s1", "s2", "merged", "cnt")
+  private def byLikelihood(vocab: DataFrame): DataFrame = {
+    val sc = symCounts(vocab)
+    Bpe.pairCounts(vocab)
+      .join(broadcast(sc.select(col("s").as("s1"), col("c").as("c1"))), "s1")
+      .join(broadcast(sc.select(col("s").as("s2"), col("c").as("c2"))), "s2")
+      .withColumn("score",
+        col("cnt").cast("double") / (col("c1") * col("c2")).cast("double"))
   }
+
+  /** Learn the top `k` merges — [[Bpe.trainFromVocab]] with the
+    * likelihood-ratio pick and `s1 + strip##(s2)` as the merged symbol.
+    * Returns (rank, s1, s2, merged, cnt) in merge order (cnt = the
+    * winning pair's frequency-weighted count); stops early if the vocab
+    * runs out of pairs.
+    */
+  def train(docs: DataFrame, textCol: String, k: Int): DataFrame =
+    Bpe.trainFromVocab(initialVocab(docs, textCol), k, byLikelihood,
+      (s1, s2) => s1 + s2.stripPrefix(Cont))
 
   /** The full learned piece inventory: the initial position-classed
     * alphabet of the corpus plus the merged pieces, deduplicated,
@@ -146,27 +130,17 @@ object WordPiece {
   }
 
   /** Per-document WordPiece token counts under a learned vocabulary —
-    * the encode-side corpus pass ([[Bpe.tokenCounts]]'s shape). Output:
-    * (idCol, n_words, n_chars, n_pieces).
+    * [[Bpe.countTokens]] with the greedy encoder, empty words dropped.
+    * Output: (idCol, n_words, n_chars, n_pieces).
     */
   def tokenCounts(docs: DataFrame, idCol: String, textCol: String,
       vocab: Seq[String]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+    require(vocab.nonEmpty, "WordPiece.tokenCounts: empty vocab")
     val maxPieceLen = vocab.iterator
       .map(p => p.stripPrefix(Cont).length).max
-    val b = spark.sparkContext.broadcast(vocab.toSet)
-    val words = docs.select(col(idCol),
-        explode(Dedup.tokens(col(textCol))).as("w"))
-      .filter(col("w") =!= "")
-    val enc = words.select("w").distinct().as[String]
-      .map(w => (w, encodeWord(w, b.value, maxPieceLen).size))
-      .toDF("w", "__n_pieces")
-    words.join(enc, "w")
-      .groupBy(idCol)
-      .agg(count(lit(1)).as("n_words"),
-        sum(length(col("w"))).cast("long").as("n_chars"),
-        sum(col("__n_pieces")).cast("long").as("n_pieces"))
+    val b = docs.sparkSession.sparkContext.broadcast(vocab.toSet)
+    Bpe.pieceCounts(docs, idCol, textCol, nonEmpty)(w =>
+      encodeWord(w, b.value, maxPieceLen).size)
   }
 
   /** DuckDB CTE chain replaying the GREEDY encode over a `wds(w)`

@@ -19,14 +19,16 @@ private[graft] object Scratch {
     */
   def withTempDir[T](prefix: String)(body: Path => T): T = {
     val dir = Files.createTempDirectory(prefix)
-    try body(dir)
-    finally {
-      import scala.jdk.CollectionConverters._
-      val tree = Files.walk(dir)
-      try tree.iterator().asScala.toSeq.sortBy(-_.getNameCount)
-        .foreach(Files.deleteIfExists(_))
-      finally tree.close()
-    }
+    try body(dir) finally deleteTree(dir)
+  }
+
+  /** Delete a directory tree, deepest entries first. */
+  def deleteTree(dir: Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    val tree = Files.walk(dir)
+    try tree.iterator().asScala.toSeq.sortBy(-_.getNameCount)
+      .foreach(Files.deleteIfExists(_))
+    finally tree.close()
   }
 
   /** Collect a small result and return it as a one-partition relation;

@@ -1,9 +1,10 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ext.{DedupCluster, Packing, Sampling, TextAnalysis, UnigramLm, WordPiece}
+import graft.ext.{Bpe, DedupCluster, Packing, Sampling, TextAnalysis, UnigramLm, WordPiece}
 import graft.ext.TextHash.tokenHashSql
 
 /** Training-data pipeline operators beyond the per-document signatures in
@@ -729,8 +730,7 @@ object TrainQueries {
     "q132_bpe_pairs",
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.ext.Bpe.pairCounts(
-        graft.ext.Bpe.initialVocab(Tables.documents(s, d), "text"))
+      Bpe.pairCounts(Bpe.initialVocab(Tables.documents(s, d), "text"))
         .withColumn("rnk", row_number().over(
           Window.orderBy(desc("cnt"), col("s1"), col("s2"))).cast("int"))
         .filter(col("rnk") <= 20)
@@ -1281,8 +1281,32 @@ object TrainQueries {
       Tables.documents(s, d), "doc_id", "source",
       size(graft.ext.Dedup.tokens(col("text"))), budget = 512L),
     Some(graft.ext.Packing.windowSegmentsSql(
-      "source", "len(string_split(text, ' '))", budget = 512L)),
+      """d AS (SELECT source AS grp, doc_id,
+                 CAST(len(string_split(text, ' ')) AS BIGINT) AS n
+               FROM documents)""", "source", budget = 512L)),
   )
+
+  /** The pack capstones' (q218, q241, q251) Spark side: per-doc token
+    * counts (doc_id, …) laid into 512-token windows per source.
+    */
+  private def packBySource(docs: DataFrame, counts: DataFrame,
+      nTok: String): DataFrame =
+    Packing.windowSegments(
+      docs.select(col("doc_id"), col("source")).join(counts, "doc_id"),
+      "doc_id", "source", col(nTok), budget = 512L)
+
+  /** ...and their twin: `ctes` must end in a per-doc `cnt(doc_id, n)`. */
+  private def packTwin(ctes: String): String =
+    Packing.windowSegmentsSql(
+      s"""$ctes,
+            d AS (SELECT dd.source AS grp, c.doc_id, c.n
+                  FROM cnt c JOIN documents dd USING (doc_id))""",
+      "source", budget = 512L)
+
+  /** The twins' token stream: one row per (doc_id, w). */
+  private val ToksCte =
+    "toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w\n" +
+      "                  FROM documents)"
 
   /** Q218 [X capstone]: the BPE-TOKENIZED training-prep chain — the
     * composition a trainer actually runs, in ONE certified plan: learn
@@ -1307,49 +1331,21 @@ object TrainQueries {
     "q218_bpe_pack_capstone",
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val ms = graft.ext.Bpe.train(docs, "text", k = 16).collect()
+      val ms = Bpe.train(docs, "text", k = 16).collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq
       BpeCapstone.merges = Some(ms)
-      Packing.windowSegments(
-        docs.select(col("doc_id"), col("source"))
-          .join(graft.ext.Bpe.tokenCounts(docs, "doc_id", "text", ms),
-            "doc_id"),
-        "doc_id", "source", col("n_bpe_tokens"), budget = 512L)
+      packBySource(docs, Bpe.tokenCounts(docs, "doc_id", "text", ms),
+        "n_bpe_tokens")
     },
     None,
     dynOracle = () => BpeCapstone.merges.map { ms =>
-      def q(lit: String) = "'" + lit.replace("'", "''") + "'"
-      val chain = ms.foldLeft(
-        "' ' || array_to_string(string_split(w, ''), ' ') || ' '") {
-        case (e, (s1, s2)) =>
-          val (pat, rep) = (q(s" $s1 $s2 "), q(s" $s1$s2 "))
-          s"replace(replace($e, $pat, $rep), $pat, $rep)"
-      }
-      s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-                  FROM documents),
+      val chain = Bpe.mergeChainSql("w", ms)
+      packTwin(s"""$ToksCte,
             wds AS (SELECT DISTINCT w FROM toks),
             enc AS MATERIALIZED (SELECT w,
                   len(string_split(trim($chain), ' ')) AS n_sym FROM wds),
             cnt AS (SELECT t.doc_id, CAST(sum(e.n_sym) AS BIGINT) AS n
-                  FROM toks t JOIN enc e USING (w) GROUP BY 1),
-            d AS (SELECT dd.source AS grp, c.doc_id, c.n
-                  FROM cnt c JOIN documents dd USING (doc_id)
-                  WHERE c.n > 0),
-            o AS (SELECT grp, doc_id, n,
-                    CAST(sum(n) OVER (PARTITION BY grp ORDER BY doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      - n AS BIGINT) AS off
-                  FROM d),
-            f AS (SELECT grp, doc_id, n, off,
-                    unnest(generate_series(off // 512,
-                      (off + n - 1) // 512)) AS window_id
-                  FROM o)
-       SELECT grp AS source, doc_id, window_id,
-              greatest(off - window_id * 512, 0) AS start_tok,
-              least(off + n - window_id * 512, 512) AS end_tok,
-              off >= window_id * 512 AS is_doc_start,
-              off + n <= (window_id + 1) * 512 AS is_doc_end
-       FROM f"""
+                  FROM toks t JOIN enc e USING (w) GROUP BY 1)""")
     },
   )
 
@@ -1365,18 +1361,17 @@ object TrainQueries {
     @volatile var packVocab: Option[(Seq[UnigramLm.Piece], Int)] = None
   }
   private val UniMaxPieceLen = 4
-  private val UniToksCte =
-    "toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w\n" +
-      "                  FROM documents)"
+
+  /** The corpus max word length: the twins' DP unroll depth. */
+  private def maxWordLen(docs: DataFrame): Int =
+    Bpe.wordCounts(docs, "text").agg(max(length(col("w")))).head().getInt(0)
 
   private def uniTrain(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, Seq[UnigramLm.Piece], Int) = {
     val docs = Tables.documents(s, d)
     val vocab = UnigramLm.train(docs, "text", vocabSize = 40, rounds = 3,
       maxPieceLen = UniMaxPieceLen)
-    val maxW = UnigramLm.wordCounts(docs, "text")
-      .agg(max(length(col("w")))).head().getInt(0)
-    (docs, vocab, maxW)
+    (docs, vocab, maxWordLen(docs))
   }
 
   /** Q239 [X tokenizer]: unigram-LM (SentencePiece) vocabulary induction
@@ -1401,7 +1396,7 @@ object TrainQueries {
       val ranks = vocab.zipWithIndex
         .map { case (p, i) => (i + 1, p.piece) }.toDF("rank", "piece")
       ranks.join(
-          UnigramLm.seedPieces(UnigramLm.wordCounts(docs, "text"),
+          UnigramLm.seedPieces(Bpe.wordCounts(docs, "text"),
             UniMaxPieceLen), "piece")
         .select(col("rank"), col("piece"), col("cnt").as("pat_cnt"))
     },
@@ -1445,7 +1440,7 @@ object TrainQueries {
     },
     None,
     dynOracle = () => UnigramState.encodeVocab.map { case (vocab, maxW) =>
-      s"""WITH $UniToksCte,
+      s"""WITH $ToksCte,
             wds AS (SELECT DISTINCT w FROM toks),
             ${UnigramLm.viterbiSqlCtes(vocab, maxW)}
          SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_words,
@@ -1469,38 +1464,16 @@ object TrainQueries {
     (s, d) => {
       val (docs, vocab, maxW) = uniTrain(s, d)
       UnigramState.packVocab = Some((vocab, maxW))
-      Packing.windowSegments(
-        docs.select(col("doc_id"), col("source"))
-          .join(UnigramLm.tokenCounts(docs, "doc_id", "text", vocab,
-            UniMaxPieceLen), "doc_id")
-          .select(col("doc_id"), col("source"), col("n_pieces")),
-        "doc_id", "source", col("n_pieces"), budget = 512L)
+      packBySource(docs, UnigramLm.tokenCounts(docs, "doc_id", "text", vocab,
+        UniMaxPieceLen), "n_pieces")
     },
     None,
     dynOracle = () => UnigramState.packVocab.map { case (vocab, maxW) =>
-      s"""WITH $UniToksCte,
+      packTwin(s"""$ToksCte,
             wds AS (SELECT DISTINCT w FROM toks),
             ${UnigramLm.viterbiSqlCtes(vocab, maxW)},
             cnt AS (SELECT t.doc_id, CAST(sum(s2.np) AS BIGINT) AS n
-                    FROM toks t JOIN seg s2 USING (w) GROUP BY 1),
-            d AS (SELECT dd.source AS grp, c.doc_id, c.n
-                  FROM cnt c JOIN documents dd USING (doc_id)
-                  WHERE c.n > 0),
-            o AS (SELECT grp, doc_id, n,
-                    CAST(sum(n) OVER (PARTITION BY grp ORDER BY doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      - n AS BIGINT) AS off
-                  FROM d),
-            f AS (SELECT grp, doc_id, n, off,
-                    unnest(generate_series(off // 512,
-                      (off + n - 1) // 512)) AS window_id
-                  FROM o)
-         SELECT grp AS source, doc_id, window_id,
-                greatest(off - window_id * 512, 0) AS start_tok,
-                least(off + n - window_id * 512, 512) AS end_tok,
-                off >= window_id * 512 AS is_doc_start,
-                off + n <= (window_id + 1) * 512 AS is_doc_end
-         FROM f"""
+                    FROM toks t JOIN seg s2 USING (w) GROUP BY 1)""")
     },
   )
 
@@ -1519,6 +1492,12 @@ object TrainQueries {
     @volatile var packVocab: Option[(Seq[String], Int)] = None
   }
 
+  /** The WordPiece twins' token stream: [[ToksCte]] without empty words. */
+  private val WpToksCte =
+    """toks AS (SELECT doc_id, w FROM (
+                  SELECT doc_id, unnest(string_split(text, ' ')) AS w
+                  FROM documents) WHERE w <> '')"""
+
   private def wpTrain(s: org.apache.spark.sql.SparkSession, d: String)
       : (Seq[(Int, String, String, String, Long)], Seq[String], Int) =
     WpState.cache.getOrElseUpdate(d, {
@@ -1528,9 +1507,7 @@ object TrainQueries {
           r.getString(3), r.getLong(4))).toSeq
       val vocab = WordPiece.vocabulary(docs, "text",
         merges.map(m => (m._2, m._3, m._4)))
-      val maxW = UnigramLm.wordCounts(docs, "text")
-        .agg(max(length(col("w")))).head().getInt(0)
-      (merges, vocab, maxW)
+      (merges, vocab, maxWordLen(docs))
     })
 
   /** Q249 [X tokenizer]: WordPiece vocabulary induction
@@ -1555,10 +1532,8 @@ object TrainQueries {
         (r, merged, raw, raw.length,
           merged.startsWith(graft.ext.WordPiece.Cont))
       }.toDF("rank", "piece", "raw", "ls", "cont")
-      val words = Tables.documents(s, d)
-        .select(explode(graft.ext.Dedup.tokens(col("text"))).as("w"))
+      val words = Bpe.wordCounts(Tables.documents(s, d), "text")
         .filter(col("w") =!= "")
-        .groupBy("w").agg(count(lit(1)).as("f"))
       val pos = words.select(col("w"), col("f"),
         explode(sequence(lit(1), length(col("w")))).as("i"))
       pos.join(broadcast(m),
@@ -1610,9 +1585,7 @@ object TrainQueries {
     },
     None,
     dynOracle = () => WpState.encodeVocab.map { case (vocab, maxW) =>
-      s"""WITH toks AS (SELECT doc_id, w FROM (
-                  SELECT doc_id, unnest(string_split(text, ' ')) AS w
-                  FROM documents) WHERE w <> ''),
+      s"""WITH $WpToksCte,
             wds AS (SELECT DISTINCT w FROM toks),
             ${WordPiece.greedySqlCtes(vocab, maxW)}
          SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_words,
@@ -1634,41 +1607,17 @@ object TrainQueries {
       val (_, vocab, maxW) = wpTrain(s, d)
       WpState.packVocab = Some((vocab, maxW))
       val docs = Tables.documents(s, d)
-      Packing.windowSegments(
-        docs.select(col("doc_id"), col("source"))
-          .join(WordPiece.tokenCounts(docs, "doc_id", "text", vocab),
-            "doc_id")
-          .select(col("doc_id"), col("source"), col("n_pieces")),
-        "doc_id", "source", col("n_pieces"), budget = 512L)
+      packBySource(docs, WordPiece.tokenCounts(docs, "doc_id", "text", vocab),
+        "n_pieces")
     },
     None,
     dynOracle = () => WpState.packVocab.map { case (vocab, maxW) =>
-      s"""WITH toks AS (SELECT doc_id, w FROM (
-                  SELECT doc_id, unnest(string_split(text, ' ')) AS w
-                  FROM documents) WHERE w <> ''),
+      packTwin(s"""$WpToksCte,
             wds AS (SELECT DISTINCT w FROM toks),
             ${WordPiece.greedySqlCtes(vocab, maxW)},
             cnt AS (SELECT t.doc_id,
                       CAST(sum(coalesce(s2.np, 1)) AS BIGINT) AS n
-                    FROM toks t LEFT JOIN seg s2 USING (w) GROUP BY 1),
-            d AS (SELECT dd.source AS grp, c.doc_id, c.n
-                  FROM cnt c JOIN documents dd USING (doc_id)
-                  WHERE c.n > 0),
-            o AS (SELECT grp, doc_id, n,
-                    CAST(sum(n) OVER (PARTITION BY grp ORDER BY doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      - n AS BIGINT) AS off
-                  FROM d),
-            f AS (SELECT grp, doc_id, n, off,
-                    unnest(generate_series(off // 512,
-                      (off + n - 1) // 512)) AS window_id
-                  FROM o)
-         SELECT grp AS source, doc_id, window_id,
-                greatest(off - window_id * 512, 0) AS start_tok,
-                least(off + n - window_id * 512, 512) AS end_tok,
-                off >= window_id * 512 AS is_doc_start,
-                off + n <= (window_id + 1) * 512 AS is_doc_end
-         FROM f"""
+                    FROM toks t LEFT JOIN seg s2 USING (w) GROUP BY 1)""")
     },
   )
 
@@ -1710,15 +1659,9 @@ object TrainQueries {
     },
     None,
     dynOracle = () => ByteBpeCert.merges.map { ms =>
-      def q(lit: String) = "'" + lit.replace("'", "''") + "'"
       val remapped = "replace(replace(replace(w, 'é', 'Ã©'), " +
         "'ñ', 'Ã±'), '中', 'ä¸Ń')"
-      val chain = ms.foldLeft(
-        s"' ' || array_to_string(string_split($remapped, ''), ' ') || ' '") {
-        case (e, (s1, s2)) =>
-          val (pat, rep) = (q(s" $s1 $s2 "), q(s" $s1$s2 "))
-          s"replace(replace($e, $pat, $rep), $pat, $rep)"
-      }
+      val chain = Bpe.mergeChainSql(remapped, ms)
       s"""WITH aug AS (SELECT doc_id, $ByteBpeAugSql AS t FROM documents),
             toks AS (SELECT doc_id, unnest(string_split(t, ' ')) AS w
                      FROM aug),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.queries.Scratch
 
 /** [X] edit-distance similarity joins (PassJoin segment pigeonhole) vs a
   * brute-force `levenshtein` cross join — over a k grid, including the
@@ -173,21 +174,23 @@ class FuzzySpec extends SparkSpec {
   }
 
   test("incremental index survives an IndexStore round-trip") {
-    val tmp = java.nio.file.Files.createTempDirectory("fuzzyidx").toString
-    val corpus = df.filter($"id" % 4 =!= 0L)
-    val batch = df.filter($"id" % 4 === 0L)
-    IndexStore.writeSegmentIndex(
-      Fuzzy.segmentIndex(corpus, "id", "s", 2), corpus, 2, tmp)
-    val (loadedIdx, loadedCorpus, k) = IndexStore.loadSegmentIndex(spark, tmp)
-    k shouldBe 2
-    val got = Fuzzy.incrementalEditDistanceJoin(
-        loadedIdx, loadedCorpus, batch, "id", "s", k)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val idx = Fuzzy.segmentIndex(corpus, "id", "s", 2)
-    val direct = Fuzzy.incrementalEditDistanceJoin(idx, corpus, batch, "id", "s", 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    got shouldBe direct
-    direct should not be empty
+    Scratch.withTempDir("fuzzyidx") { d =>
+      val tmp = d.toString
+      val corpus = df.filter($"id" % 4 =!= 0L)
+      val batch = df.filter($"id" % 4 === 0L)
+      IndexStore.writeSegmentIndex(
+        Fuzzy.segmentIndex(corpus, "id", "s", 2), corpus, 2, tmp)
+      val (loadedIdx, loadedCorpus, k) = IndexStore.loadSegmentIndex(spark, tmp)
+      k shouldBe 2
+      val got = Fuzzy.incrementalEditDistanceJoin(
+          loadedIdx, loadedCorpus, batch, "id", "s", k)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      val idx = Fuzzy.segmentIndex(corpus, "id", "s", 2)
+      val direct = Fuzzy.incrementalEditDistanceJoin(idx, corpus, batch, "id", "s", 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      got shouldBe direct
+      direct should not be empty
+    }
   }
 
   test("sortedNeighborhoodJoin ≡ naive sorted-window reference; window bound is the contract") {

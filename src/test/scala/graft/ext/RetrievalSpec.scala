@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.ops.Graph
+import graft.queries.Scratch
 
 /** [X] retrieval & structure ops: BM25, slice KL, BFS, PQ-ANN. */
 class RetrievalSpec extends SparkSpec {
@@ -470,16 +471,18 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("partitioned write prunes partitions at read (plan-level)") {
-    val dir = java.nio.file.Files.createTempDirectory("part_spec_").toString
-    Seq((0L, "en"), (1L, "de"), (2L, "en"), (3L, "fr"))
-      .toDF("id", "lang").write.partitionBy("lang").mode("overwrite")
-      .parquet(dir)
-    val pruned = spark.read.parquet(dir).filter($"lang" === "en")
-    val scan = pruned.queryExecution.executedPlan.collectLeaves().head
-      .toString()
-    // partition predicate must land in PartitionFilters, not PushedFilters
-    scan should include regex "PartitionFilters: \\[.*lang.*\\]"
-    pruned.count() shouldBe 2
+    Scratch.withTempDir("part_spec_") { tmp =>
+      val dir = tmp.toString
+      Seq((0L, "en"), (1L, "de"), (2L, "en"), (3L, "fr"))
+        .toDF("id", "lang").write.partitionBy("lang").mode("overwrite")
+        .parquet(dir)
+      val pruned = spark.read.parquet(dir).filter($"lang" === "en")
+      val scan = pruned.queryExecution.executedPlan.collectLeaves().head
+        .toString()
+      // partition predicate must land in PartitionFilters, not PushedFilters
+      scan should include regex "PartitionFilters: \\[.*lang.*\\]"
+      pruned.count() shouldBe 2
+    }
   }
 
   test("dsirLogRatio: target-like docs score above off-target docs") {

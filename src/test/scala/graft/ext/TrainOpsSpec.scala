@@ -1,8 +1,10 @@
 package graft.ext
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
+import graft.queries.Scratch
 
 /** [X] training-data pipeline operators: near-dup clustering (connected
   * components), deterministic sampling/splits, shard packing, quality
@@ -774,6 +776,34 @@ class TrainOpsSpec extends SparkSpec {
     out(2L) shouldBe ((2L, 6L, 2L))
   }
 
+  test("WordPiece.tokenCounts: an empty vocab fails at the call") {
+    val df = Seq((1L, "hug")).toDF("doc_id", "text")
+    an[IllegalArgumentException] should be thrownBy
+      WordPiece.tokenCounts(df, "doc_id", "text", Seq.empty)
+  }
+
+  test("merge loop job count: 2k+2 for both BPEs, at most 4k+2 for WordPiece") {
+    // one eager checkpoint of the initial vocab (a shuffle: 2 jobs), then
+    // per round the argmax query; the round's vocab checkpoint is lazy, so
+    // it rides in the next round's first job instead of costing its own.
+    val df = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "quick brown dogs jump over lazy foxes")).toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    def jobs(name: String, k: Int)(train: => DataFrame): Int = {
+      val group = s"merge-loop-$name-$k"
+      sc.setJobGroup(group, group)
+      val merges = try train finally sc.clearJobGroup()
+      merges.collect().length shouldBe k // no early exhaustion
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    for (k <- Seq(2, 6)) {
+      jobs("bpe", k)(Bpe.train(df, "text", k)) shouldBe 2 * k + 2
+      jobs("bytebpe", k)(ByteBpe.train(df, "text", k)) shouldBe 2 * k + 2
+      jobs("wordpiece", k)(WordPiece.train(df, "text", k)) should be <=
+        4 * k + 2
+    }
+  }
+
   test("Bpe.tokenCounts: encode under learned merges is self-consistent") {
     val df = Seq((1L, "aaaa ab aaaa"), (2L, "ab c")).toDF("doc_id", "text")
     val merges = Bpe.train(df, "text", 2).orderBy("rank").collect()
@@ -850,8 +880,7 @@ class TrainOpsSpec extends SparkSpec {
 
   test("JsonlCorpus: explicit-schema round-trip preserves rows and shards") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val p = java.nio.file.Files.createTempDirectory("jsonl_spec_")
-    try {
+    Scratch.withTempDir("jsonl_spec_") { p =>
       graft.ops.JsonlCorpus.write(docs, p.toString, 3)
       val back = graft.ops.JsonlCorpus.read(spark, p.toString, docs.schema)
       back.schema shouldBe docs.schema
@@ -861,11 +890,6 @@ class TrainOpsSpec extends SparkSpec {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.list(p).iterator().asScala
         .count(_.toString.endsWith(".json")) shouldBe 3
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 

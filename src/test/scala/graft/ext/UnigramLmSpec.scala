@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
+import graft.queries.Scratch
 
 /** Unigram-LM tokenizer: hand-computed EM fixture (the forward-backward
   * posterior masses of a 2-char lattice, worked by hand below), the
@@ -63,6 +64,16 @@ class UnigramLmSpec extends SparkSpec {
       UnigramLm.viterbi("ax", Map("a" -> -1.0), 2)
   }
 
+  test("tokenCounts: empty vocab or maxPieceLen < 1 fails at the call") {
+    import spark.implicits._
+    val docs = Seq((1L, "ab")).toDF("doc_id", "text")
+    an[IllegalArgumentException] should be thrownBy
+      UnigramLm.tokenCounts(docs, "doc_id", "text", Seq.empty, 2)
+    an[IllegalArgumentException] should be thrownBy
+      UnigramLm.tokenCounts(docs, "doc_id", "text",
+        Seq(UnigramLm.Piece("a", -1.0), UnigramLm.Piece("b", -1.0)), 0)
+  }
+
   test("seedPieces counts positions (overlaps included), weighted by f") {
     import spark.implicits._
     // "aaa" f=2: substrings a×3, aa×2, aaa×1 -> weighted 6, 4, 2
@@ -107,15 +118,16 @@ class UnigramLmSpec extends SparkSpec {
     val docs = Seq((1L, "abab cd abab"), (2L, "cd cd")).toDF("doc_id", "text")
     val vocab = UnigramLm.train(docs, "text", vocabSize = 6, rounds = 2,
       maxPieceLen = 4)
-    val dir = java.nio.file.Files.createTempDirectory("uni-store")
-    graft.ext.IndexStore.writeUnigramVocab(spark, vocab, 4, s"$dir/v")
-    val (loaded, m) = graft.ext.IndexStore.loadUnigramVocab(spark, s"$dir/v")
-    m shouldBe 4
-    loaded shouldBe vocab // rank order AND scores byte-for-byte
-    // a fresh session encodes identically off the loaded vocab
-    val a = UnigramLm.tokenCounts(docs, "doc_id", "text", vocab, 4)
-    val b = UnigramLm.tokenCounts(docs, "doc_id", "text", loaded, m)
-    a.exceptAll(b).count() shouldBe 0L
-    b.exceptAll(a).count() shouldBe 0L
+    Scratch.withTempDir("uni-store") { dir =>
+      graft.ext.IndexStore.writeUnigramVocab(spark, vocab, 4, s"$dir/v")
+      val (loaded, m) = graft.ext.IndexStore.loadUnigramVocab(spark, s"$dir/v")
+      m shouldBe 4
+      loaded shouldBe vocab // rank order AND scores byte-for-byte
+      // a fresh session encodes identically off the loaded vocab
+      val a = UnigramLm.tokenCounts(docs, "doc_id", "text", vocab, 4)
+      val b = UnigramLm.tokenCounts(docs, "doc_id", "text", loaded, m)
+      a.exceptAll(b).count() shouldBe 0L
+      b.exceptAll(a).count() shouldBe 0L
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.queries.Scratch
 
 /** Bottom-k sketches, shard manifests, and rater agreement. */
 class SketchesSpec extends SparkSpec {
@@ -229,15 +230,16 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("rankSketch persists and reloads through IndexStore (k rides along)") {
-    val dir = java.nio.file.Files.createTempDirectory("rsk-spec")
-    val sk = Sketches.rankSketch(vals, "grp", "v", 32)
-    graft.ext.IndexStore.writeRankSketch(sk, 32, s"$dir/rs")
-    val (loaded, k) = graft.ext.IndexStore.loadRankSketch(spark, s"$dir/rs")
-    k shouldBe 32
-    loaded.exceptAll(sk).count() shouldBe 0L
-    sk.exceptAll(loaded).count() shouldBe 0L
-    // and a second write over the same path swaps atomically
-    graft.ext.IndexStore.writeRankSketch(sk, 32, s"$dir/rs")
-    graft.ext.IndexStore.loadRankSketch(spark, s"$dir/rs")._2 shouldBe 32
+    Scratch.withTempDir("rsk-spec") { dir =>
+      val sk = Sketches.rankSketch(vals, "grp", "v", 32)
+      graft.ext.IndexStore.writeRankSketch(sk, 32, s"$dir/rs")
+      val (loaded, k) = graft.ext.IndexStore.loadRankSketch(spark, s"$dir/rs")
+      k shouldBe 32
+      loaded.exceptAll(sk).count() shouldBe 0L
+      sk.exceptAll(loaded).count() shouldBe 0L
+      // and a second write over the same path swaps atomically
+      graft.ext.IndexStore.writeRankSketch(sk, 32, s"$dir/rs")
+      graft.ext.IndexStore.loadRankSketch(spark, s"$dir/rs")._2 shouldBe 32
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables, TestSpark}
+import graft.queries.Scratch
 
 /** Partitioned storage layout (SURVEY §4): hive-style partition columns
   * must prune at the scan — at 100 TB a predicate on the partition key
@@ -12,21 +13,23 @@ import graft.{SparkSpec, Tables, TestSpark}
 class StorageLayoutSpec extends SparkSpec {
 
   test("partitionBy layout prunes partitions for a key predicate") {
-    val dir = java.nio.file.Files.createTempDirectory("layout").toString
-    Tables.lineitem(spark, TestSpark.Sf0001)
-      .write.partitionBy("l_returnflag").parquet(s"$dir/li")
-    val read = spark.read.parquet(s"$dir/li").filter(col("l_returnflag") === "R")
-    val scan = read.queryExecution.executedPlan.toString
-    scan should include("PartitionFilters")
-    scan should include("l_returnflag")
-    // counts agree with the unpartitioned source
-    val want = Tables.lineitem(spark, TestSpark.Sf0001)
-      .filter(col("l_returnflag") === "R").count()
-    read.count() shouldBe want
-    // only the matching partition directory is listed in the scan's files
-    val dirs = new java.io.File(s"$dir/li").listFiles()
-      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("l_returnflag="))
-    dirs.length should be > 1 // layout actually partitioned
+    Scratch.withTempDir("layout") { tmp =>
+      val dir = tmp.toString
+      Tables.lineitem(spark, TestSpark.Sf0001)
+        .write.partitionBy("l_returnflag").parquet(s"$dir/li")
+      val read = spark.read.parquet(s"$dir/li").filter(col("l_returnflag") === "R")
+      val scan = read.queryExecution.executedPlan.toString
+      scan should include("PartitionFilters")
+      scan should include("l_returnflag")
+      // counts agree with the unpartitioned source
+      val want = Tables.lineitem(spark, TestSpark.Sf0001)
+        .filter(col("l_returnflag") === "R").count()
+      read.count() shouldBe want
+      // only the matching partition directory is listed in the scan's files
+      val dirs = new java.io.File(s"$dir/li").listFiles()
+        .filter(_.isDirectory).map(_.getName).filter(_.startsWith("l_returnflag="))
+      dirs.length should be > 1 // layout actually partitioned
+    }
   }
 
   test("zValue matches a bit-by-bit reference interleave (property)") {
@@ -72,17 +75,19 @@ class StorageLayoutSpec extends SparkSpec {
           (st.getLong(1) - st.getLong(0) + 1).toDouble *
             (st.getLong(3) - st.getLong(2) + 1).toDouble
         }.sum
-    val base = java.nio.file.Files.createTempDirectory("zorder").toString
-    li.repartition(8).write.parquet(s"$base/plain")
-    StorageLayout.zorderWrite(li, "l_partkey", "l_suppkey", s"$base/z", 8)
-    val plainArea = totalArea(s"$base/plain")
-    val zArea = totalArea(s"$base/z")
-    // Row-order files each span ~the whole key plane; z-clustered files
-    // cover disjoint-ish quadrants. Demand at least a 2× win (observed
-    // far larger) so the assertion survives sampling noise.
-    zArea should be < plainArea / 2.0
-    // and the clustered write still round-trips every row
-    spark.read.parquet(s"$base/z").count() shouldBe li.count()
+    Scratch.withTempDir("zorder") { tmp =>
+      val base = tmp.toString
+      li.repartition(8).write.parquet(s"$base/plain")
+      StorageLayout.zorderWrite(li, "l_partkey", "l_suppkey", s"$base/z", 8)
+      val plainArea = totalArea(s"$base/plain")
+      val zArea = totalArea(s"$base/z")
+      // Row-order files each span ~the whole key plane; z-clustered files
+      // cover disjoint-ish quadrants. Demand at least a 2× win (observed
+      // far larger) so the assertion survives sampling noise.
+      zArea should be < plainArea / 2.0
+      // and the clustered write still round-trips every row
+      spark.read.parquet(s"$base/z").count() shouldBe li.count()
+    }
   }
 
   test("rendezvousShard: balanced-ish, and resharding moves only winners") {
@@ -108,15 +113,17 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("repartition by write key bounds file count per partition") {
-    val dir = java.nio.file.Files.createTempDirectory("layout2").toString
-    Tables.lineitem(spark, TestSpark.Sf0001)
-      .repartition(col("l_returnflag"))
-      .write.partitionBy("l_returnflag").parquet(s"$dir/li")
-    // one task per key → one file per partition dir (plus markers)
-    val parts = new java.io.File(s"$dir/li").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("l_returnflag="))
-    parts.foreach { p =>
-      p.listFiles().count(_.getName.endsWith(".parquet")) shouldBe 1
+    Scratch.withTempDir("layout2") { tmp =>
+      val dir = tmp.toString
+      Tables.lineitem(spark, TestSpark.Sf0001)
+        .repartition(col("l_returnflag"))
+        .write.partitionBy("l_returnflag").parquet(s"$dir/li")
+      // one task per key → one file per partition dir (plus markers)
+      val parts = new java.io.File(s"$dir/li").listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("l_returnflag="))
+      parts.foreach { p =>
+        p.listFiles().count(_.getName.endsWith(".parquet")) shouldBe 1
+      }
     }
   }
 

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
+import graft.queries.Scratch
 
 /** [X] TFRecord interchange: proto wire format pinned byte-for-byte,
   * CRC framing, full type-mapped round trip, and the ShardSink commit
@@ -89,66 +90,70 @@ class TfRecordSpec extends SparkSpec {
     schema)
 
   test("DataFrame round trip: shards + manifest + every type") {
-    val dir = Files.createTempDirectory("graft_tfr_").toString
-    TfRecord.write(sampleDf, dir, shards = 2)
-    val names = Files.list(Paths.get(dir)).iterator()
-    val listed = scala.jdk.CollectionConverters.IteratorHasAsScala(names)
-      .asScala.map(_.getFileName.toString)
-      .filterNot(_.startsWith(".")) // Hadoop local-FS .crc sidecars
-      .toSet
-    listed shouldBe Set("_SUCCESS", "part-00000.tfrecord", "part-00001.tfrecord")
-    new String(Files.readAllBytes(Paths.get(dir, "_SUCCESS")), "UTF-8") shouldBe
-      "part-00000.tfrecord\npart-00001.tfrecord\n"
-    val back = TfRecord.read(spark, dir, schema)
-      .collect().sortBy(_.getLong(0))
-    back.length shouldBe 3
-    val r1 = back(0)
-    r1.getString(1) shouldBe "alpha"
-    r1.getBoolean(2) shouldBe true
-    r1.getSeq[Long](3) shouldBe Seq(1L, -2L, 3L)
-    r1.getSeq[Float](4) shouldBe Seq(0.5f, -1.25f)
-    r1.getAs[Array[Byte]](5).toSeq shouldBe Seq[Byte](0, 1, 2)
-    val r2 = back(1)
-    r2.getString(1) shouldBe "héllo ☃"
-    r2.getSeq[Long](3) shouldBe Seq.empty
-    r2.getSeq[Float](4) shouldBe Seq.empty
-    r2.getAs[Array[Byte]](5).length shouldBe 0
-    back(2).getSeq[Long](3) shouldBe Seq(Long.MaxValue)
+    Scratch.withTempDir("graft_tfr_") { tmp =>
+      val dir = tmp.toString
+      TfRecord.write(sampleDf, dir, shards = 2)
+      val names = Files.list(Paths.get(dir)).iterator()
+      val listed = scala.jdk.CollectionConverters.IteratorHasAsScala(names)
+        .asScala.map(_.getFileName.toString)
+        .filterNot(_.startsWith(".")) // Hadoop local-FS .crc sidecars
+        .toSet
+      listed shouldBe Set("_SUCCESS", "part-00000.tfrecord", "part-00001.tfrecord")
+      new String(Files.readAllBytes(Paths.get(dir, "_SUCCESS")), "UTF-8") shouldBe
+        "part-00000.tfrecord\npart-00001.tfrecord\n"
+      val back = TfRecord.read(spark, dir, schema)
+        .collect().sortBy(_.getLong(0))
+      back.length shouldBe 3
+      val r1 = back(0)
+      r1.getString(1) shouldBe "alpha"
+      r1.getBoolean(2) shouldBe true
+      r1.getSeq[Long](3) shouldBe Seq(1L, -2L, 3L)
+      r1.getSeq[Float](4) shouldBe Seq(0.5f, -1.25f)
+      r1.getAs[Array[Byte]](5).toSeq shouldBe Seq[Byte](0, 1, 2)
+      val r2 = back(1)
+      r2.getString(1) shouldBe "héllo ☃"
+      r2.getSeq[Long](3) shouldBe Seq.empty
+      r2.getSeq[Float](4) shouldBe Seq.empty
+      r2.getAs[Array[Byte]](5).length shouldBe 0
+      back(2).getSeq[Long](3) shouldBe Seq(Long.MaxValue)
+    }
   }
 
   test("read refuses partial corpora; write refuses doubles; scalar misuse is loud") {
-    val dir = Files.createTempDirectory("graft_tfr_bad_").toString
-    TfRecord.write(sampleDf, dir, shards = 1)
-    // leftover temp -> refuse
-    val tmp = Paths.get(dir, ShardSink.TmpPrefix + "00000-99")
-    Files.write(tmp, Array[Byte](1))
-    intercept[IllegalArgumentException] {
-      TfRecord.read(spark, dir, schema).collect()
-    }.getMessage should include("uncommitted")
-    Files.delete(tmp)
-    // manifest-listed shard missing -> refuse
-    Files.move(Paths.get(dir, "part-00000.tfrecord"),
-      Paths.get(dir, "part-00000.tfrecord.bak"))
-    intercept[IllegalArgumentException] {
-      TfRecord.read(spark, dir, schema).collect()
-    }.getMessage should include("absent")
-    Files.move(Paths.get(dir, "part-00000.tfrecord.bak"),
-      Paths.get(dir, "part-00000.tfrecord"))
-    // double column -> driver-side refusal before any job runs
-    intercept[IllegalArgumentException] {
-      TfRecord.write(sampleDf.withColumn("bad", lit(1.0)), dir, 1)
-    }.getMessage should include("float32")
-    // schema asks scalar where the feature is a list -> loud
-    val scalarToks = StructType(Seq(StructField("doc_id", LongType),
-      StructField("toks", LongType)))
-    val err = intercept[org.apache.spark.SparkException] {
-      TfRecord.read(spark, dir, scalarToks).collect()
+    Scratch.withTempDir("graft_tfr_bad_") { d =>
+      val dir = d.toString
+      TfRecord.write(sampleDf, dir, shards = 1)
+      // leftover temp -> refuse
+      val tmp = Paths.get(dir, ShardSink.TmpPrefix + "00000-99")
+      Files.write(tmp, Array[Byte](1))
+      intercept[IllegalArgumentException] {
+        TfRecord.read(spark, dir, schema).collect()
+      }.getMessage should include("uncommitted")
+      Files.delete(tmp)
+      // manifest-listed shard missing -> refuse
+      Files.move(Paths.get(dir, "part-00000.tfrecord"),
+        Paths.get(dir, "part-00000.tfrecord.bak"))
+      intercept[IllegalArgumentException] {
+        TfRecord.read(spark, dir, schema).collect()
+      }.getMessage should include("absent")
+      Files.move(Paths.get(dir, "part-00000.tfrecord.bak"),
+        Paths.get(dir, "part-00000.tfrecord"))
+      // double column -> driver-side refusal before any job runs
+      intercept[IllegalArgumentException] {
+        TfRecord.write(sampleDf.withColumn("bad", lit(1.0)), dir, 1)
+      }.getMessage should include("float32")
+      // schema asks scalar where the feature is a list -> loud
+      val scalarToks = StructType(Seq(StructField("doc_id", LongType),
+        StructField("toks", LongType)))
+      val err = intercept[org.apache.spark.SparkException] {
+        TfRecord.read(spark, dir, scalarToks).collect()
+      }
+      err.getMessage should include("scalar")
+      // missing feature -> loud
+      val extra = StructType(Seq(StructField("nope", LongType)))
+      intercept[org.apache.spark.SparkException] {
+        TfRecord.read(spark, dir, extra).collect()
+      }.getMessage should include("missing feature")
     }
-    err.getMessage should include("scalar")
-    // missing feature -> loud
-    val extra = StructType(Seq(StructField("nope", LongType)))
-    intercept[org.apache.spark.SparkException] {
-      TfRecord.read(spark, dir, extra).collect()
-    }.getMessage should include("missing feature")
   }
 }

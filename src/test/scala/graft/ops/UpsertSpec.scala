@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.queries.Scratch
 
 /** S4/J1 — ON CONFLICT DO UPDATE semantics (update_ways_metadata.py:50-54)
   * as a join-based upsert.
@@ -50,53 +51,61 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("writeAtomic: target readable and replaced atomically") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert").toString
-    val path = s"$dir/t"
-    Upsert.writeAtomic(base, path)
-    spark.read.parquet(path).count() shouldBe 3
-    Upsert.writeAtomic(base.filter($"k" =!= 1L), path)
-    spark.read.parquet(path).count() shouldBe 2
-    assert(!new java.io.File(path + ".staging").exists())
+    Scratch.withTempDir("upsert") { tmp =>
+      val dir = tmp.toString
+      val path = s"$dir/t"
+      Upsert.writeAtomic(base, path)
+      spark.read.parquet(path).count() shouldBe 3
+      Upsert.writeAtomic(base.filter($"k" =!= 1L), path)
+      spark.read.parquet(path).count() shouldBe 2
+      assert(!new java.io.File(path + ".staging").exists())
+    }
   }
 
   test("recover: crash between the two renames restores the table from .old") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert2").toString
-    val path = s"$dir/t"
-    Upsert.writeAtomic(base, path)
-    // Simulate a writer that crashed AFTER moving the live table aside but
-    // BEFORE installing the staging dir: the only copy is <path>.old.
-    assert(new java.io.File(path).renameTo(new java.io.File(path + ".old")))
-    assert(Upsert.recover(spark, path))
-    spark.read.parquet(path).count() shouldBe 3 // state not lost
-    assert(!new java.io.File(path + ".old").exists())
-    assert(!Upsert.recover(spark, path)) // idempotent no-op when healthy
+    Scratch.withTempDir("upsert2") { tmp =>
+      val dir = tmp.toString
+      val path = s"$dir/t"
+      Upsert.writeAtomic(base, path)
+      // Simulate a writer that crashed AFTER moving the live table aside but
+      // BEFORE installing the staging dir: the only copy is <path>.old.
+      assert(new java.io.File(path).renameTo(new java.io.File(path + ".old")))
+      assert(Upsert.recover(spark, path))
+      spark.read.parquet(path).count() shouldBe 3 // state not lost
+      assert(!new java.io.File(path + ".old").exists())
+      assert(!Upsert.recover(spark, path)) // idempotent no-op when healthy
+    }
   }
 
   test("writeAtomic after a crashed swap keeps .old's data visible, not lost") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert3").toString
-    val path = s"$dir/t"
-    Upsert.writeAtomic(base, path)
-    assert(new java.io.File(path).renameTo(new java.io.File(path + ".old")))
-    // Next writeAtomic restores .old first (never deletes the sole copy),
-    // then swaps the new table in over it.
-    Upsert.writeAtomic(base.filter($"k" =!= 1L), path)
-    spark.read.parquet(path).count() shouldBe 2
-    assert(!new java.io.File(path + ".old").exists())
-    assert(!new java.io.File(path + ".staging").exists())
+    Scratch.withTempDir("upsert3") { tmp =>
+      val dir = tmp.toString
+      val path = s"$dir/t"
+      Upsert.writeAtomic(base, path)
+      assert(new java.io.File(path).renameTo(new java.io.File(path + ".old")))
+      // Next writeAtomic restores .old first (never deletes the sole copy),
+      // then swaps the new table in over it.
+      Upsert.writeAtomic(base.filter($"k" =!= 1L), path)
+      spark.read.parquet(path).count() shouldBe 2
+      assert(!new java.io.File(path + ".old").exists())
+      assert(!new java.io.File(path + ".staging").exists())
+    }
   }
 
   test("writeAtomic: .old debris alongside a live target is cleared") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert4").toString
-    val path = s"$dir/t"
-    Upsert.writeAtomic(base, path)
-    // Debris from a crash after a COMPLETED swap: target exists, .old too.
-    val stale = new java.io.File(path + ".old")
-    stale.mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path + ".old", "junk"), "stale")
-    Upsert.writeAtomic(base.filter($"k" =!= 1L), path)
-    spark.read.parquet(path).count() shouldBe 2
-    assert(!stale.exists())
-    assert(!new java.io.File(path + ".staging").exists())
+    Scratch.withTempDir("upsert4") { tmp =>
+      val dir = tmp.toString
+      val path = s"$dir/t"
+      Upsert.writeAtomic(base, path)
+      // Debris from a crash after a COMPLETED swap: target exists, .old too.
+      val stale = new java.io.File(path + ".old")
+      stale.mkdirs()
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(path + ".old", "junk"), "stale")
+      Upsert.writeAtomic(base.filter($"k" =!= 1L), path)
+      spark.read.parquet(path).count() shouldBe 2
+      assert(!stale.exists())
+      assert(!new java.io.File(path + ".staging").exists())
+    }
   }
 }

@@ -3,7 +3,8 @@ package graft.osm
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, StreetGrid, TestSpark}
+import graft.{SparkSpec, StreetGrid, SuiteTempDir, TestSpark}
+import graft.queries.Scratch
 
 /** S1 source contract. Against the reference's sample extract when it is
   * present (osm/example.osm: 6,223 nodes / 1,091 ways / 32 relations —
@@ -11,13 +12,13 @@ import graft.{SparkSpec, StreetGrid, TestSpark}
   * otherwise against the spec-written [[graft.StreetGrid]], with exact
   * expectations taken from the grid's own element lists.
   */
-class OsmXmlSpec extends SparkSpec {
+class OsmXmlSpec extends SparkSpec with SuiteTempDir {
 
   private def haveSample = new java.io.File(TestSpark.ExampleOsm).exists()
 
   private lazy val tables = OsmXml.parse(spark,
     if (haveSample) TestSpark.ExampleOsm
-    else StreetGrid.write(java.nio.file.Files.createTempDirectory("grid_")))
+    else StreetGrid.write(suiteTempDir("grid_")))
 
   private def members(r: Row): Seq[StreetGrid.Member] =
     r.getAs[scala.collection.Seq[Row]]("members").toSeq
@@ -100,18 +101,19 @@ class OsmXmlSpec extends SparkSpec {
   }
 
   test("parses a directory of regional extracts in parallel (S1 sharding)") {
-    val dir = java.nio.file.Files.createTempDirectory("osmshards")
-    def shard(name: String, body: String): Unit =
-      java.nio.file.Files.write(dir.resolve(name),
-        s"""<?xml version="1.0"?><osm version="0.6">$body</osm>""".getBytes)
-    shard("region_a.osm",
-      """<node id="1" lat="1.0" lon="2.0"/><way id="10"><nd ref="1"/></way>""")
-    shard("region_b.osm",
-      """<node id="2" lat="3.0" lon="4.0"/><relation id="20"><tag k="t" v="v"/></relation>""")
-    val t = OsmXml.parse(spark, dir.toString)
-    t.nodes.count() shouldBe 2L
-    t.ways.count() shouldBe 1L
-    t.relations.count() shouldBe 1L
+    Scratch.withTempDir("osmshards") { dir =>
+      def shard(name: String, body: String): Unit =
+        java.nio.file.Files.write(dir.resolve(name),
+          s"""<?xml version="1.0"?><osm version="0.6">$body</osm>""".getBytes)
+      shard("region_a.osm",
+        """<node id="1" lat="1.0" lon="2.0"/><way id="10"><nd ref="1"/></way>""")
+      shard("region_b.osm",
+        """<node id="2" lat="3.0" lon="4.0"/><relation id="20"><tag k="t" v="v"/></relation>""")
+      val t = OsmXml.parse(spark, dir.toString)
+      t.nodes.count() shouldBe 2L
+      t.ways.count() shouldBe 1L
+      t.relations.count() shouldBe 1L
+    }
   }
 
   test("parseElements handles a minimal synthetic document") {

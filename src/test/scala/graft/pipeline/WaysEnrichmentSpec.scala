@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, StreetGrid, TestSpark}
+import graft.{SparkSpec, StreetGrid, SuiteTempDir, TestSpark}
 import graft.osm.{OsmXml, RoutingGraph}
 import graft.raster.Tile
 
@@ -13,10 +13,9 @@ import graft.raster.Tile
   * driver-side oracle. The reference sample extract, when present, keeps
   * its pinned checksum.
   */
-class WaysEnrichmentSpec extends SparkSpec {
+class WaysEnrichmentSpec extends SparkSpec with SuiteTempDir {
 
-  private lazy val osm =
-    StreetGrid.write(java.nio.file.Files.createTempDirectory("grid_"))
+  private lazy val osm = StreetGrid.write(suiteTempDir("grid_"))
 
   private lazy val result = WaysEnrichment.runDefault(spark, osm).cache()
 

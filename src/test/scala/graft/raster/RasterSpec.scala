@@ -3,6 +3,7 @@ package graft.raster
 import org.apache.spark.util.LongAccumulator
 
 import graft.SparkSpec
+import graft.queries.Scratch
 
 /** Cheap L tiles, pixel i of tile (x, y) = (7x + 3y + i mod 256 + salt)
   * mod 256; every fetch adds 1 to `fetches`, and the tiles in `dead` fail
@@ -228,56 +229,60 @@ class RasterSpec extends SparkSpec {
   }
 
   test("FileTileStore decodes PNG bytes identical to the source pixels (RGB)") {
-    val dir = java.nio.file.Files.createTempDirectory("tiles_")
-    val synth = new SyntheticTileStore(256, "RGB", seed = 42)
-    writePng(dir, synth, 1, 1, 1)
-    val fetched = new FileTileStore(dir.toString).fetch(1, 1, 1).get
-    fetched.width shouldBe 256
-    fetched.mode shouldBe "RGB"
-    fetched.pixels.toSeq shouldBe synth.fetch(1, 1, 1).get.pixels.toSeq
+    Scratch.withTempDir("tiles_") { dir =>
+      val synth = new SyntheticTileStore(256, "RGB", seed = 42)
+      writePng(dir, synth, 1, 1, 1)
+      val fetched = new FileTileStore(dir.toString).fetch(1, 1, 1).get
+      fetched.width shouldBe 256
+      fetched.mode shouldBe "RGB"
+      fetched.pixels.toSeq shouldBe synth.fetch(1, 1, 1).get.pixels.toSeq
+    }
   }
 
   test("FileTileStore mode L matches PIL's ITU-R 601-2 fixed-point luma") {
-    val dir = java.nio.file.Files.createTempDirectory("tiles_")
-    val img = new java.awt.image.BufferedImage(
-      2, 1, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    img.setRGB(0, 0, 0xff8040) // r=255 g=128 b=64
-    img.setRGB(1, 0, 0xffffff)
-    val f = dir.resolve("1/0/0.png")
-    java.nio.file.Files.createDirectories(f.getParent)
-    javax.imageio.ImageIO.write(img, "png", f.toFile)
-    val t = new FileTileStore(dir.toString, tileSize = 2, mode = "L")
-      .fetch(0, 0, 1).get
-    t.pixels(0) shouldBe ((255 * 19595 + 128 * 38470 + 64 * 7471 + 0x8000) >> 16)
-    t.pixels(1) shouldBe 255
+    Scratch.withTempDir("tiles_") { dir =>
+      val img = new java.awt.image.BufferedImage(
+        2, 1, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      img.setRGB(0, 0, 0xff8040) // r=255 g=128 b=64
+      img.setRGB(1, 0, 0xffffff)
+      val f = dir.resolve("1/0/0.png")
+      java.nio.file.Files.createDirectories(f.getParent)
+      javax.imageio.ImageIO.write(img, "png", f.toFile)
+      val t = new FileTileStore(dir.toString, tileSize = 2, mode = "L")
+        .fetch(0, 0, 1).get
+      t.pixels(0) shouldBe ((255 * 19595 + 128 * 38470 + 64 * 7471 + 0x8000) >> 16)
+      t.pixels(1) shouldBe 255
+    }
   }
 
   test("FileTileStore: missing file and corrupt bytes both yield None (F6)") {
-    val dir = java.nio.file.Files.createTempDirectory("tiles_")
-    val store = new FileTileStore(dir.toString)
-    store.fetch(5, 5, 5) shouldBe None // no file
-    val f = dir.resolve("2/3/4.png")
-    java.nio.file.Files.createDirectories(f.getParent)
-    java.nio.file.Files.write(f, "not a png".getBytes)
-    store.fetch(3, 4, 2) shouldBe None // undecodable bytes
+    Scratch.withTempDir("tiles_") { dir =>
+      val store = new FileTileStore(dir.toString)
+      store.fetch(5, 5, 5) shouldBe None // no file
+      val f = dir.resolve("2/3/4.png")
+      java.nio.file.Files.createDirectories(f.getParent)
+      java.nio.file.Files.write(f, "not a png".getBytes)
+      store.fetch(3, 4, 2) shouldBe None // undecodable bytes
+    }
   }
 
   test("enrichment pass over real PNGs matches the synthetic store exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("tiles_")
-    val synth = new SyntheticTileStore(256, "RGB", seed = 7)
-    // z=1 has 4 tiles; materialize them all as PNGs.
-    for (x <- 0L to 1L; y <- 0L to 1L) writePng(dir, synth, x, y, 1)
-    val file = new FileTileStore(dir.toString)
-    val coords = Seq(
-      (1L, -90.0, 40.0), (1L, 90.0, 40.0), (2L, 90.0, -40.0), (2L, 91.0, -41.0)
-    ).toDF("gid", "lng", "lat")
-    val viaPng = RasterSampler
-      .medianPass(coords, file, 1, ValueFns.greeneryAbsolute, "v")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val viaSynth = RasterSampler
-      .medianPass(coords, synth, 1, ValueFns.greeneryAbsolute, "v")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    viaPng shouldBe viaSynth // identical medians: decode is lossless
+    Scratch.withTempDir("tiles_") { dir =>
+      val synth = new SyntheticTileStore(256, "RGB", seed = 7)
+      // z=1 has 4 tiles; materialize them all as PNGs.
+      for (x <- 0L to 1L; y <- 0L to 1L) writePng(dir, synth, x, y, 1)
+      val file = new FileTileStore(dir.toString)
+      val coords = Seq(
+        (1L, -90.0, 40.0), (1L, 90.0, 40.0), (2L, 90.0, -40.0), (2L, 91.0, -41.0)
+      ).toDF("gid", "lng", "lat")
+      val viaPng = RasterSampler
+        .medianPass(coords, file, 1, ValueFns.greeneryAbsolute, "v")
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val viaSynth = RasterSampler
+        .medianPass(coords, synth, 1, ValueFns.greeneryAbsolute, "v")
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      viaPng shouldBe viaSynth // identical medians: decode is lossless
+    }
   }
 
   test("address() agrees with Mercator on tile/pixel keys") {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.queries.Scratch
 
 case class Ev(event_id: Long, user_id: Long, event_type: String,
     ts: Timestamp, value: Double, props: String)
@@ -439,28 +440,30 @@ class EventStreamsSpec extends SparkSpec {
 
   test("ST5 incremental upsert sink: stream result == batch aggregate") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("st5").toString
-    val mem = MemoryStream[Ev]
-    mem.addData(rows.take(3))
-    val q = EventStreams.incrementalUpsert(
-      mem.toDF(), s"$dir/t", s"$dir/cp")
-    q.processAllAvailable()
-    q.stop()
-    // later data arrives; a restarted query resumes from the checkpoint and
-    // must MERGE into the table, not replace it
-    mem.addData(rows.drop(3))
-    val q2 = EventStreams.incrementalUpsert(
-      mem.toDF(), s"$dir/t", s"$dir/cp")
-    q2.processAllAvailable()
-    q2.stop()
-    val got = spark.read.parquet(s"$dir/t")
-      .orderBy("user_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val want = rows.toDF().groupBy("user_id")
-      .agg(count(lit(1)).as("n_events"), sum("value").as("val_sum"))
-      .orderBy("user_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    got.toSeq shouldBe want.toSeq
+    Scratch.withTempDir("st5") { tmp =>
+      val dir = tmp.toString
+      val mem = MemoryStream[Ev]
+      mem.addData(rows.take(3))
+      val q = EventStreams.incrementalUpsert(
+        mem.toDF(), s"$dir/t", s"$dir/cp")
+      q.processAllAvailable()
+      q.stop()
+      // later data arrives; a restarted query resumes from the checkpoint and
+      // must MERGE into the table, not replace it
+      mem.addData(rows.drop(3))
+      val q2 = EventStreams.incrementalUpsert(
+        mem.toDF(), s"$dir/t", s"$dir/cp")
+      q2.processAllAvailable()
+      q2.stop()
+      val got = spark.read.parquet(s"$dir/t")
+        .orderBy("user_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      val want = rows.toDF().groupBy("user_id")
+        .agg(count(lit(1)).as("n_events"), sum("value").as("val_sum"))
+        .orderBy("user_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      got.toSeq shouldBe want.toSeq
+    }
   }
 
   test("curation ops apply unchanged to a stream (flags/split parity)") {
@@ -533,40 +536,42 @@ class EventStreamsSpec extends SparkSpec {
     def vec() = Array.fill(4)((rnd.nextDouble() * 2 - 1).toFloat)
     val b1 = (0L until 20L).map(i => ArrivingVec(i, vec()))
     val b2 = (20L until 35L).map(i => ArrivingVec(i, vec()))
-    val dir = java.nio.file.Files.createTempDirectory("st16_").toString
-    val mem = MemoryStream[ArrivingVec]
-    mem.addData(b1)
-    val cov = EventStreams.MergeState.Covariance("embedding", "vec_id")
-    val q1 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
-      EventStreams.mergeBatch(cov, _, s"$dir/t", _))
-    q1.awaitTermination()
-    mem.addData(b2)
-    val q2 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
-      EventStreams.mergeBatch(cov, _, s"$dir/t", _))
-    q2.awaitTermination()
-    def cells(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val stored = spark.read.parquet(s"$dir/t")
-      .filter(!(col("i") === -2 && col("j") === -2)) // batchId marker row
-      .select("i", "j", "s")
-    cells(stored) shouldBe cells(Similarity.covarianceSums(
-      (b1 ++ b2).toDF("vec_id", "embedding"), "embedding", "vec_id"))
-    // at-least-once replay guard: re-merging an already-applied batchId
-    // is a no-op (foreachBatch can redeliver after a crash between the
-    // atomic swap and the checkpoint commit — an additive merge would
-    // silently double-count without the marker)
-    EventStreams.mergeBatch(cov, b2.toDF("vec_id", "embedding"),
-      s"$dir/t", 1L) shouldBe false
-    cells(spark.read.parquet(s"$dir/t")
-      .filter(!(col("i") === -2 && col("j") === -2))
-      .select("i", "j", "s")) shouldBe cells(Similarity.covarianceSums(
-      (b1 ++ b2).toDF("vec_id", "embedding"), "embedding", "vec_id"))
-    // and the finalized matrix equals a full batch recompute exactly
-    Similarity.finalizeCovariance(stored).collect()
-      .map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2))).toMap shouldBe
-      Similarity.covarianceMatrix((b1 ++ b2).toDF("vec_id", "embedding"),
-        "embedding", "vec_id").collect()
-        .map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2))).toMap
+    Scratch.withTempDir("st16_") { tmp =>
+      val dir = tmp.toString
+      val mem = MemoryStream[ArrivingVec]
+      mem.addData(b1)
+      val cov = EventStreams.MergeState.Covariance("embedding", "vec_id")
+      val q1 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+        EventStreams.mergeBatch(cov, _, s"$dir/t", _))
+      q1.awaitTermination()
+      mem.addData(b2)
+      val q2 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+        EventStreams.mergeBatch(cov, _, s"$dir/t", _))
+      q2.awaitTermination()
+      def cells(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
+      val stored = spark.read.parquet(s"$dir/t")
+        .filter(!(col("i") === -2 && col("j") === -2)) // batchId marker row
+        .select("i", "j", "s")
+      cells(stored) shouldBe cells(Similarity.covarianceSums(
+        (b1 ++ b2).toDF("vec_id", "embedding"), "embedding", "vec_id"))
+      // at-least-once replay guard: re-merging an already-applied batchId
+      // is a no-op (foreachBatch can redeliver after a crash between the
+      // atomic swap and the checkpoint commit — an additive merge would
+      // silently double-count without the marker)
+      EventStreams.mergeBatch(cov, b2.toDF("vec_id", "embedding"),
+        s"$dir/t", 1L) shouldBe false
+      cells(spark.read.parquet(s"$dir/t")
+        .filter(!(col("i") === -2 && col("j") === -2))
+        .select("i", "j", "s")) shouldBe cells(Similarity.covarianceSums(
+        (b1 ++ b2).toDF("vec_id", "embedding"), "embedding", "vec_id"))
+      // and the finalized matrix equals a full batch recompute exactly
+      Similarity.finalizeCovariance(stored).collect()
+        .map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2))).toMap shouldBe
+        Similarity.covarianceMatrix((b1 ++ b2).toDF("vec_id", "embedding"),
+          "embedding", "vec_id").collect()
+          .map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2))).toMap
+    }
   }
 
   test("ST18 streaming cluster assignment: copies adopt, novel payloads found clusters") {
@@ -758,35 +763,37 @@ class EventStreamsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val b1 = (0L until 500L).map(i => ArrivingDoc(i, s"u${i % 300}"))
     val b2 = (500L until 900L).map(i => ArrivingDoc(i, s"u${i % 450}"))
-    val dir = java.nio.file.Files.createTempDirectory("st22_").toString
-    val mem = MemoryStream[ArrivingDoc]
-    mem.addData(b1)
-    val hll = EventStreams.MergeState.Hll("text")
-    val q1 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
-      EventStreams.mergeBatch(hll, _, s"$dir/t", _))
-    q1.awaitTermination()
-    mem.addData(b2)
-    val q2 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
-      EventStreams.mergeBatch(hll, _, s"$dir/t", _))
-    q2.awaitTermination()
-    def estimate() = EventStreams.readState(spark, s"$dir/t")
-      .select(hll_sketch_estimate(col("sketch"))).head().getLong(0)
-    val streamed = estimate()
-    // HLL union is per-register max → the streamed chain of unions must
-    // equal one DIRECT union over the same two batch sketches (a direct
-    // single build can differ by a hair: HIP is discarded on union)
-    val unioned = Seq(b1, b2).map(b =>
-      b.toDF("doc_id", "text").agg(hll_sketch_agg(col("text")).as("sketch")))
-      .reduce(_ unionByName _)
-      .agg(hll_sketch_estimate(hll_union_agg(col("sketch")))).head().getLong(0)
-    streamed shouldBe unioned
-    // and the estimate is in the right neighborhood of the exact count
-    val exact = (b1 ++ b2).map(_.text).distinct.size.toLong
-    math.abs(streamed - exact).toDouble / exact should be < 0.05
-    // at-least-once replay: re-merging an applied batchId is a no-op
-    EventStreams.mergeBatch(hll, b2.toDF("doc_id", "text"),
-      s"$dir/t", 1L) shouldBe false
-    estimate() shouldBe streamed
+    Scratch.withTempDir("st22_") { tmp =>
+      val dir = tmp.toString
+      val mem = MemoryStream[ArrivingDoc]
+      mem.addData(b1)
+      val hll = EventStreams.MergeState.Hll("text")
+      val q1 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+        EventStreams.mergeBatch(hll, _, s"$dir/t", _))
+      q1.awaitTermination()
+      mem.addData(b2)
+      val q2 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+        EventStreams.mergeBatch(hll, _, s"$dir/t", _))
+      q2.awaitTermination()
+      def estimate() = EventStreams.readState(spark, s"$dir/t")
+        .select(hll_sketch_estimate(col("sketch"))).head().getLong(0)
+      val streamed = estimate()
+      // HLL union is per-register max → the streamed chain of unions must
+      // equal one DIRECT union over the same two batch sketches (a direct
+      // single build can differ by a hair: HIP is discarded on union)
+      val unioned = Seq(b1, b2).map(b =>
+        b.toDF("doc_id", "text").agg(hll_sketch_agg(col("text")).as("sketch")))
+        .reduce(_ unionByName _)
+        .agg(hll_sketch_estimate(hll_union_agg(col("sketch")))).head().getLong(0)
+      streamed shouldBe unioned
+      // and the estimate is in the right neighborhood of the exact count
+      val exact = (b1 ++ b2).map(_.text).distinct.size.toLong
+      math.abs(streamed - exact).toDouble / exact should be < 0.05
+      // at-least-once replay: re-merging an applied batchId is a no-op
+      EventStreams.mergeBatch(hll, b2.toDF("doc_id", "text"),
+        s"$dir/t", 1L) shouldBe false
+      estimate() shouldBe streamed
+    }
   }
 
   test("ST25 streaming bottom-k sketch: streamed merge ≡ cold rebuild bit-for-bit, replay no-op") {
@@ -794,79 +801,83 @@ class EventStreamsSpec extends SparkSpec {
     // two groups (doc_id parity), overlapping token spaces across batches
     val b1 = (0L until 400L).map(i => ArrivingDoc(i, s"u${i % 90}"))
     val b2 = (400L until 700L).map(i => ArrivingDoc(i, s"u${(i % 130) + 40}"))
-    val dir = java.nio.file.Files.createTempDirectory("st25_").toString
-    def withGrp(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("grp", (col("doc_id") % 2).cast("string"))
-    val mem = MemoryStream[ArrivingDoc]
-    mem.addData(b1)
-    val bk = EventStreams.MergeState.BottomK("grp", "text", 32)
-    val q1 = EventStreams.mergeOnArrival(withGrp(mem.toDF()), s"$dir/cp")(
-      EventStreams.mergeBatch(bk, _, s"$dir/t", _))
-    q1.awaitTermination()
-    mem.addData(b2)
-    val q2 = EventStreams.mergeOnArrival(withGrp(mem.toDF()), s"$dir/cp")(
-      EventStreams.mergeBatch(bk, _, s"$dir/t", _))
-    q2.awaitTermination()
-    // the merge law is exact: streamed state == one direct build over
-    // the full history (not merely estimate-equal, row-for-row equal)
-    val streamedSketch = spark.read.parquet(s"$dir/t")
-      .select("grp", "rn", "h")
-    val direct = graft.ops.Sketches.bottomK(
-      withGrp((b1 ++ b2).toDF("doc_id", "text")), "grp", "text", 32)
-    streamedSketch.exceptAll(direct).count() shouldBe 0L
-    direct.exceptAll(streamedSketch).count() shouldBe 0L
-    // the estimate reader matches a direct estimate over the same sketch
-    val est = graft.ops.Sketches.distinctEstimate(
-      EventStreams.readState(spark, s"$dir/t"), "grp", 32).collect()
-    est.length shouldBe 2
-    val exactByGrp = (b1 ++ b2).groupBy(_.doc_id % 2)
-      .map { case (g, docs) => g.toString -> docs.map(_.text).distinct.size }
-    est.foreach { r =>
-      val exact = exactByGrp(r.getString(0)).toDouble
-      math.abs(r.getDouble(3) - exact) / exact should be < 0.5
+    Scratch.withTempDir("st25_") { tmp =>
+      val dir = tmp.toString
+      def withGrp(df: org.apache.spark.sql.DataFrame) =
+        df.withColumn("grp", (col("doc_id") % 2).cast("string"))
+      val mem = MemoryStream[ArrivingDoc]
+      mem.addData(b1)
+      val bk = EventStreams.MergeState.BottomK("grp", "text", 32)
+      val q1 = EventStreams.mergeOnArrival(withGrp(mem.toDF()), s"$dir/cp")(
+        EventStreams.mergeBatch(bk, _, s"$dir/t", _))
+      q1.awaitTermination()
+      mem.addData(b2)
+      val q2 = EventStreams.mergeOnArrival(withGrp(mem.toDF()), s"$dir/cp")(
+        EventStreams.mergeBatch(bk, _, s"$dir/t", _))
+      q2.awaitTermination()
+      // the merge law is exact: streamed state == one direct build over
+      // the full history (not merely estimate-equal, row-for-row equal)
+      val streamedSketch = spark.read.parquet(s"$dir/t")
+        .select("grp", "rn", "h")
+      val direct = graft.ops.Sketches.bottomK(
+        withGrp((b1 ++ b2).toDF("doc_id", "text")), "grp", "text", 32)
+      streamedSketch.exceptAll(direct).count() shouldBe 0L
+      direct.exceptAll(streamedSketch).count() shouldBe 0L
+      // the estimate reader matches a direct estimate over the same sketch
+      val est = graft.ops.Sketches.distinctEstimate(
+        EventStreams.readState(spark, s"$dir/t"), "grp", 32).collect()
+      est.length shouldBe 2
+      val exactByGrp = (b1 ++ b2).groupBy(_.doc_id % 2)
+        .map { case (g, docs) => g.toString -> docs.map(_.text).distinct.size }
+      est.foreach { r =>
+        val exact = exactByGrp(r.getString(0)).toDouble
+        math.abs(r.getDouble(3) - exact) / exact should be < 0.5
+      }
+      // at-least-once replay: re-merging an applied batchId is a no-op
+      EventStreams.mergeBatch(bk, withGrp(b2.toDF("doc_id", "text")),
+        s"$dir/t", 1L) shouldBe false
+      // empty batch: no write, no marker advance
+      EventStreams.mergeBatch(bk,
+        withGrp(b1.take(0).toDF("doc_id", "text")),
+        s"$dir/t", 99L) shouldBe false
     }
-    // at-least-once replay: re-merging an applied batchId is a no-op
-    EventStreams.mergeBatch(bk, withGrp(b2.toDF("doc_id", "text")),
-      s"$dir/t", 1L) shouldBe false
-    // empty batch: no write, no marker advance
-    EventStreams.mergeBatch(bk,
-      withGrp(b1.take(0).toDF("doc_id", "text")),
-      s"$dir/t", 99L) shouldBe false
   }
 
   test("ST26 streaming shard manifest: streamed merge ≡ cold recompute; replay guard is load-bearing") {
     implicit val sqlCtx = spark.sqlContext
     val b1 = (0L until 300L).map(i => ArrivingDoc(i, s"alpha w${i % 13} x${i % 7}"))
     val b2 = (300L until 500L).map(i => ArrivingDoc(i, s"beta w${i % 17}"))
-    val dir = java.nio.file.Files.createTempDirectory("st26_").toString
-    val mem = MemoryStream[ArrivingDoc]
-    mem.addData(b1)
-    val man = EventStreams.MergeState.Manifest("doc_id", "text", shards = 4)
-    val q1 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
-      EventStreams.mergeBatch(man, _, s"$dir/t", _))
-    q1.awaitTermination()
-    mem.addData(b2)
-    val q2 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
-      EventStreams.mergeBatch(man, _, s"$dir/t", _))
-    q2.awaitTermination()
-    // the additive merge is exact: streamed dataset card == one direct
-    // manifest over the full history, row-for-row (counts, id ranges,
-    // AND the mod-P content checksum)
-    val streamed = EventStreams.readState(spark, s"$dir/t")
-    val direct = graft.ops.Manifest.shardManifest(
-      (b1 ++ b2).toDF("doc_id", "text"), "doc_id", "text", 4)
-    streamed.exceptAll(direct).count() shouldBe 0L
-    direct.exceptAll(streamed).count() shouldBe 0L
-    // at-least-once replay: the additive merge is NOT idempotent, so the
-    // batch-id guard must refuse a re-applied batch (a double-merge
-    // would double every count)
-    EventStreams.mergeBatch(man, b2.toDF("doc_id", "text"),
-      s"$dir/t", 1L) shouldBe false
-    val after = EventStreams.readState(spark, s"$dir/t")
-    after.exceptAll(direct).count() shouldBe 0L
-    // empty batch: no write, no marker advance
-    EventStreams.mergeBatch(man, b1.take(0).toDF("doc_id", "text"),
-      s"$dir/t", 99L) shouldBe false
+    Scratch.withTempDir("st26_") { tmp =>
+      val dir = tmp.toString
+      val mem = MemoryStream[ArrivingDoc]
+      mem.addData(b1)
+      val man = EventStreams.MergeState.Manifest("doc_id", "text", shards = 4)
+      val q1 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+        EventStreams.mergeBatch(man, _, s"$dir/t", _))
+      q1.awaitTermination()
+      mem.addData(b2)
+      val q2 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+        EventStreams.mergeBatch(man, _, s"$dir/t", _))
+      q2.awaitTermination()
+      // the additive merge is exact: streamed dataset card == one direct
+      // manifest over the full history, row-for-row (counts, id ranges,
+      // AND the mod-P content checksum)
+      val streamed = EventStreams.readState(spark, s"$dir/t")
+      val direct = graft.ops.Manifest.shardManifest(
+        (b1 ++ b2).toDF("doc_id", "text"), "doc_id", "text", 4)
+      streamed.exceptAll(direct).count() shouldBe 0L
+      direct.exceptAll(streamed).count() shouldBe 0L
+      // at-least-once replay: the additive merge is NOT idempotent, so the
+      // batch-id guard must refuse a re-applied batch (a double-merge
+      // would double every count)
+      EventStreams.mergeBatch(man, b2.toDF("doc_id", "text"),
+        s"$dir/t", 1L) shouldBe false
+      val after = EventStreams.readState(spark, s"$dir/t")
+      after.exceptAll(direct).count() shouldBe 0L
+      // empty batch: no write, no marker advance
+      EventStreams.mergeBatch(man, b1.take(0).toDF("doc_id", "text"),
+        s"$dir/t", 99L) shouldBe false
+    }
   }
 
   test("ST28 streaming count-min sketch: streamed merge ≡ cold rebuild bit-for-bit, replay refused") {
@@ -874,44 +885,46 @@ class EventStreamsSpec extends SparkSpec {
     // two groups (doc_id parity), token frequencies skewed per batch
     val b1 = (0L until 400L).map(i => ArrivingDoc(i, s"w${i % 25}"))
     val b2 = (400L until 700L).map(i => ArrivingDoc(i, s"w${i % 40}"))
-    val dir = java.nio.file.Files.createTempDirectory("st28_").toString
-    def withGrp(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("grp", (col("doc_id") % 2).cast("string"))
-    val mem = MemoryStream[ArrivingDoc]
-    mem.addData(b1)
-    val cms = EventStreams.MergeState.Cms("grp", "text", depth = 3,
-      width = 64)
-    val q1 = EventStreams.mergeOnArrival(withGrp(mem.toDF()), s"$dir/cp")(
-      EventStreams.mergeBatch(cms, _, s"$dir/t", _))
-    q1.awaitTermination()
-    mem.addData(b2)
-    val q2 = EventStreams.mergeOnArrival(withGrp(mem.toDF()), s"$dir/cp")(
-      EventStreams.mergeBatch(cms, _, s"$dir/t", _))
-    q2.awaitTermination()
-    // LINEAR merge law: streamed counters == one sketch over the full
-    // history, bit-for-bit (integer addition commutes exactly)
-    val streamed = spark.read.parquet(s"$dir/t").select("grp", "r", "b", "cnt")
-    val direct = graft.ops.LinearSketches.cmsSketch(
-      withGrp((b1 ++ b2).toDF("doc_id", "text")), "grp", "text", 3, 64)
-    streamed.exceptAll(direct).count() shouldBe 0L
-    direct.exceptAll(streamed).count() shouldBe 0L
-    // the probe reader: every estimate >= the true count (CMS one-sided)
-    val truth = withGrp((b1 ++ b2).toDF("doc_id", "text"))
-      .groupBy("grp", "text").count()
-    val est = graft.ops.LinearSketches.cmsEstimate(
-      EventStreams.readState(spark, s"$dir/t"),
-      truth.select("grp", "text"), "grp", "text", 3, 64)
-    est.join(truth, Seq("grp", "text")).collect()
-      .foreach(r => r.getLong(2) should be >= r.getLong(3))
-    // at-least-once replay: counter addition is NOT idempotent — the
-    // batch-id guard must refuse a re-applied batch
-    EventStreams.mergeBatch(cms, withGrp(b2.toDF("doc_id", "text")),
-      s"$dir/t", 1L) shouldBe false
-    spark.read.parquet(s"$dir/t").select("grp", "r", "b", "cnt")
-      .exceptAll(direct).count() shouldBe 0L
-    // empty batch: no write, no marker advance
-    EventStreams.mergeBatch(cms, withGrp(b1.take(0).toDF("doc_id", "text")),
-      s"$dir/t", 99L) shouldBe false
+    Scratch.withTempDir("st28_") { tmp =>
+      val dir = tmp.toString
+      def withGrp(df: org.apache.spark.sql.DataFrame) =
+        df.withColumn("grp", (col("doc_id") % 2).cast("string"))
+      val mem = MemoryStream[ArrivingDoc]
+      mem.addData(b1)
+      val cms = EventStreams.MergeState.Cms("grp", "text", depth = 3,
+        width = 64)
+      val q1 = EventStreams.mergeOnArrival(withGrp(mem.toDF()), s"$dir/cp")(
+        EventStreams.mergeBatch(cms, _, s"$dir/t", _))
+      q1.awaitTermination()
+      mem.addData(b2)
+      val q2 = EventStreams.mergeOnArrival(withGrp(mem.toDF()), s"$dir/cp")(
+        EventStreams.mergeBatch(cms, _, s"$dir/t", _))
+      q2.awaitTermination()
+      // LINEAR merge law: streamed counters == one sketch over the full
+      // history, bit-for-bit (integer addition commutes exactly)
+      val streamed = spark.read.parquet(s"$dir/t").select("grp", "r", "b", "cnt")
+      val direct = graft.ops.LinearSketches.cmsSketch(
+        withGrp((b1 ++ b2).toDF("doc_id", "text")), "grp", "text", 3, 64)
+      streamed.exceptAll(direct).count() shouldBe 0L
+      direct.exceptAll(streamed).count() shouldBe 0L
+      // the probe reader: every estimate >= the true count (CMS one-sided)
+      val truth = withGrp((b1 ++ b2).toDF("doc_id", "text"))
+        .groupBy("grp", "text").count()
+      val est = graft.ops.LinearSketches.cmsEstimate(
+        EventStreams.readState(spark, s"$dir/t"),
+        truth.select("grp", "text"), "grp", "text", 3, 64)
+      est.join(truth, Seq("grp", "text")).collect()
+        .foreach(r => r.getLong(2) should be >= r.getLong(3))
+      // at-least-once replay: counter addition is NOT idempotent — the
+      // batch-id guard must refuse a re-applied batch
+      EventStreams.mergeBatch(cms, withGrp(b2.toDF("doc_id", "text")),
+        s"$dir/t", 1L) shouldBe false
+      spark.read.parquet(s"$dir/t").select("grp", "r", "b", "cnt")
+        .exceptAll(direct).count() shouldBe 0L
+      // empty batch: no write, no marker advance
+      EventStreams.mergeBatch(cms, withGrp(b1.take(0).toDF("doc_id", "text")),
+        s"$dir/t", 99L) shouldBe false
+    }
   }
 
   test("ST29 streaming moment stats: streamed merge ≡ cold rebuild; live Welch probe") {
@@ -925,39 +938,41 @@ class EventStreamsSpec extends SparkSpec {
     val b2 = (300L until 500L).map(i =>
       ev(i, if (i % 2 == 0) "A" else "B",
         (i % 20).toDouble + (if (i % 2 == 0) 0 else 30)))
-    val dir = java.nio.file.Files.createTempDirectory("st29_").toString
-    val mem = MemoryStream[Ev]
-    mem.addData(b1)
-    val stats = EventStreams.MergeState.Stats("event_type", "value")
-    val q1 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
-      EventStreams.mergeBatch(stats, _, s"$dir/t", _))
-    q1.awaitTermination()
-    mem.addData(b2)
-    val q2 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
-      EventStreams.mergeBatch(stats, _, s"$dir/t", _))
-    q2.awaitTermination()
-    // linear merge law: streamed table == one build over full history
-    val streamed = spark.read.parquet(s"$dir/t").select("g", "n", "s1", "s2")
-    val direct = graft.ops.Hypothesis.statsTable(
-      (b1 ++ b2).toDF(), "event_type", col("value"))
-    streamed.exceptAll(direct).count() shouldBe 0L
-    direct.exceptAll(streamed).count() shouldBe 0L
-    // live A/B probe: a +50-shifted arriving cohort shows a strongly
-    // negative t against the corpus stats, per group, no corpus re-read
-    val shifted = (0L until 100L).map(i =>
-      ev(9000 + i, if (i % 2 == 0) "A" else "B",
-        (i % 20).toDouble + (if (i % 2 == 0) 0 else 30) + 50))
-    val probe = graft.ops.Hypothesis.welchFromStats(
-      EventStreams.readState(spark, s"$dir/t"),
-      graft.ops.Hypothesis.statsTable(shifted.toDF(), "event_type",
-        col("value")), "event_type")
-      .collect().map(r => r.getString(0) -> r.getDouble(5)).toMap
-    probe.keySet shouldBe Set("A", "B")
-    probe.values.foreach(_ should be < -10.0)
-    // replay refused (addition is not idempotent); empty batch skipped
-    EventStreams.mergeBatch(stats, b2.toDF(), s"$dir/t", 1L) shouldBe false
-    EventStreams.mergeBatch(stats, b1.take(0).toDF(), s"$dir/t",
-      99L) shouldBe false
+    Scratch.withTempDir("st29_") { tmp =>
+      val dir = tmp.toString
+      val mem = MemoryStream[Ev]
+      mem.addData(b1)
+      val stats = EventStreams.MergeState.Stats("event_type", "value")
+      val q1 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+        EventStreams.mergeBatch(stats, _, s"$dir/t", _))
+      q1.awaitTermination()
+      mem.addData(b2)
+      val q2 = EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+        EventStreams.mergeBatch(stats, _, s"$dir/t", _))
+      q2.awaitTermination()
+      // linear merge law: streamed table == one build over full history
+      val streamed = spark.read.parquet(s"$dir/t").select("g", "n", "s1", "s2")
+      val direct = graft.ops.Hypothesis.statsTable(
+        (b1 ++ b2).toDF(), "event_type", col("value"))
+      streamed.exceptAll(direct).count() shouldBe 0L
+      direct.exceptAll(streamed).count() shouldBe 0L
+      // live A/B probe: a +50-shifted arriving cohort shows a strongly
+      // negative t against the corpus stats, per group, no corpus re-read
+      val shifted = (0L until 100L).map(i =>
+        ev(9000 + i, if (i % 2 == 0) "A" else "B",
+          (i % 20).toDouble + (if (i % 2 == 0) 0 else 30) + 50))
+      val probe = graft.ops.Hypothesis.welchFromStats(
+        EventStreams.readState(spark, s"$dir/t"),
+        graft.ops.Hypothesis.statsTable(shifted.toDF(), "event_type",
+          col("value")), "event_type")
+        .collect().map(r => r.getString(0) -> r.getDouble(5)).toMap
+      probe.keySet shouldBe Set("A", "B")
+      probe.values.foreach(_ should be < -10.0)
+      // replay refused (addition is not idempotent); empty batch skipped
+      EventStreams.mergeBatch(stats, b2.toDF(), s"$dir/t", 1L) shouldBe false
+      EventStreams.mergeBatch(stats, b1.take(0).toDF(), s"$dir/t",
+        99L) shouldBe false
+    }
   }
 
   test("ST30 streaming confusion matrix: streamed merge ≡ cold rebuild; live ratios") {
@@ -973,39 +988,41 @@ class EventStreamsSpec extends SparkSpec {
     val thr = Seq(10.0, 20.0, 30.0)
     def labeled(df: org.apache.spark.sql.DataFrame) =
       df.withColumn("y", col("event_id") % 3 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("st30_").toString
-    val mem = MemoryStream[Ev]
-    mem.addData(b1)
-    val conf = EventStreams.MergeState.Confusion("event_type", "y", "value",
-      thr)
-    val q1 = EventStreams.mergeOnArrival(labeled(mem.toDF()), s"$dir/cp")(
-      EventStreams.mergeBatch(conf, _, s"$dir/t", _))
-    q1.awaitTermination()
-    mem.addData(b2)
-    val q2 = EventStreams.mergeOnArrival(labeled(mem.toDF()), s"$dir/cp")(
-      EventStreams.mergeBatch(conf, _, s"$dir/t", _))
-    q2.awaitTermination()
-    // linear merge law: streamed table == one count over full history
-    val streamed = spark.read.parquet(s"$dir/t")
-      .select("event_type", "thr", "tp", "fp", "fn", "tn")
-    val direct = graft.ops.Hypothesis.confusionCounts(
-      labeled((b1 ++ b2).toDF()), "event_type", col("y"), col("value"), thr)
-    streamed.exceptAll(direct).count() shouldBe 0L
-    direct.exceptAll(streamed).count() shouldBe 0L
-    // state bound: groups × thresholds rows, forever
-    streamed.count() shouldBe 2L * thr.size
-    // live gate-tuning read == the q233 batch surface over full history
-    val live = graft.ops.Hypothesis.confusionRatios(
-      EventStreams.readState(spark, s"$dir/t"), "event_type")
-    val batchSurface = graft.ops.Hypothesis.confusionAtThresholds(
-      labeled((b1 ++ b2).toDF()), "event_type", col("y"), col("value"), thr)
-    live.exceptAll(batchSurface).count() shouldBe 0L
-    batchSurface.exceptAll(live).count() shouldBe 0L
-    // replay refused (addition is not idempotent); empty batch skipped
-    EventStreams.mergeBatch(conf, labeled(b2.toDF()), s"$dir/t",
-      1L) shouldBe false
-    EventStreams.mergeBatch(conf, labeled(b1.take(0).toDF()), s"$dir/t",
-      99L) shouldBe false
+    Scratch.withTempDir("st30_") { tmp =>
+      val dir = tmp.toString
+      val mem = MemoryStream[Ev]
+      mem.addData(b1)
+      val conf = EventStreams.MergeState.Confusion("event_type", "y", "value",
+        thr)
+      val q1 = EventStreams.mergeOnArrival(labeled(mem.toDF()), s"$dir/cp")(
+        EventStreams.mergeBatch(conf, _, s"$dir/t", _))
+      q1.awaitTermination()
+      mem.addData(b2)
+      val q2 = EventStreams.mergeOnArrival(labeled(mem.toDF()), s"$dir/cp")(
+        EventStreams.mergeBatch(conf, _, s"$dir/t", _))
+      q2.awaitTermination()
+      // linear merge law: streamed table == one count over full history
+      val streamed = spark.read.parquet(s"$dir/t")
+        .select("event_type", "thr", "tp", "fp", "fn", "tn")
+      val direct = graft.ops.Hypothesis.confusionCounts(
+        labeled((b1 ++ b2).toDF()), "event_type", col("y"), col("value"), thr)
+      streamed.exceptAll(direct).count() shouldBe 0L
+      direct.exceptAll(streamed).count() shouldBe 0L
+      // state bound: groups × thresholds rows, forever
+      streamed.count() shouldBe 2L * thr.size
+      // live gate-tuning read == the q233 batch surface over full history
+      val live = graft.ops.Hypothesis.confusionRatios(
+        EventStreams.readState(spark, s"$dir/t"), "event_type")
+      val batchSurface = graft.ops.Hypothesis.confusionAtThresholds(
+        labeled((b1 ++ b2).toDF()), "event_type", col("y"), col("value"), thr)
+      live.exceptAll(batchSurface).count() shouldBe 0L
+      batchSurface.exceptAll(live).count() shouldBe 0L
+      // replay refused (addition is not idempotent); empty batch skipped
+      EventStreams.mergeBatch(conf, labeled(b2.toDF()), s"$dir/t",
+        1L) shouldBe false
+      EventStreams.mergeBatch(conf, labeled(b1.take(0).toDF()), s"$dir/t",
+        99L) shouldBe false
+    }
   }
 
   test("ST31 streaming rank sketch: streamed merge ≡ cold rebuild; live quantiles") {
@@ -1017,34 +1034,36 @@ class EventStreamsSpec extends SparkSpec {
       ev(i, if (i % 2 == 0) "A" else "B", (i % 97).toDouble))
     val b2 = (400L until 700L).map(i =>
       ev(i, if (i % 2 == 0) "A" else "B", (i % 97).toDouble))
-    val dir = java.nio.file.Files.createTempDirectory("st31_").toString
-    val mem = MemoryStream[Ev]
-    mem.addData(b1)
-    val rank = EventStreams.MergeState.RankSketch("event_type", "value", 32)
-    EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
-      EventStreams.mergeBatch(rank, _, s"$dir/t", _)).awaitTermination()
-    mem.addData(b2)
-    EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
-      EventStreams.mergeBatch(rank, _, s"$dir/t", _)).awaitTermination()
-    // merge law live: streamed table == one sketch over full history
-    val streamed = spark.read.parquet(s"$dir/t")
-      .select("event_type", "v", "cnt", "h")
-    val direct = graft.ops.Sketches.rankSketch(
-      (b1 ++ b2).toDF(), "event_type", "value", 32)
-    streamed.exceptAll(direct).count() shouldBe 0L
-    direct.exceptAll(streamed).count() shouldBe 0L
-    streamed.count() should be <= 64L // ≤ k per group forever
-    // live ladder == batch ladder off the same (cold) sketch
-    val live = graft.ops.Sketches.quantilesFromRankSketch(
-      EventStreams.readState(spark, s"$dir/t"), "event_type", Seq(50))
-    val batchLadder = graft.ops.Sketches.quantilesFromRankSketch(
-      direct, "event_type", Seq(50))
-    live.exceptAll(batchLadder).count() shouldBe 0L
-    batchLadder.exceptAll(live).count() shouldBe 0L
-    // replay refused (counts add); empty batch skipped
-    EventStreams.mergeBatch(rank, b2.toDF(), s"$dir/t", 1L) shouldBe false
-    EventStreams.mergeBatch(rank, b1.take(0).toDF(), s"$dir/t",
-      99L) shouldBe false
+    Scratch.withTempDir("st31_") { tmp =>
+      val dir = tmp.toString
+      val mem = MemoryStream[Ev]
+      mem.addData(b1)
+      val rank = EventStreams.MergeState.RankSketch("event_type", "value", 32)
+      EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+        EventStreams.mergeBatch(rank, _, s"$dir/t", _)).awaitTermination()
+      mem.addData(b2)
+      EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+        EventStreams.mergeBatch(rank, _, s"$dir/t", _)).awaitTermination()
+      // merge law live: streamed table == one sketch over full history
+      val streamed = spark.read.parquet(s"$dir/t")
+        .select("event_type", "v", "cnt", "h")
+      val direct = graft.ops.Sketches.rankSketch(
+        (b1 ++ b2).toDF(), "event_type", "value", 32)
+      streamed.exceptAll(direct).count() shouldBe 0L
+      direct.exceptAll(streamed).count() shouldBe 0L
+      streamed.count() should be <= 64L // ≤ k per group forever
+      // live ladder == batch ladder off the same (cold) sketch
+      val live = graft.ops.Sketches.quantilesFromRankSketch(
+        EventStreams.readState(spark, s"$dir/t"), "event_type", Seq(50))
+      val batchLadder = graft.ops.Sketches.quantilesFromRankSketch(
+        direct, "event_type", Seq(50))
+      live.exceptAll(batchLadder).count() shouldBe 0L
+      batchLadder.exceptAll(live).count() shouldBe 0L
+      // replay refused (counts add); empty batch skipped
+      EventStreams.mergeBatch(rank, b2.toDF(), s"$dir/t", 1L) shouldBe false
+      EventStreams.mergeBatch(rank, b1.take(0).toDF(), s"$dir/t",
+        99L) shouldBe false
+    }
   }
 
   test("ST34 streaming drift: streamed merge ≡ cold rebuild; live PSI vs frozen reference") {
@@ -1059,43 +1078,45 @@ class EventStreamsSpec extends SparkSpec {
     val b2 = (1300L until 1500L).map(i =>
       ev(i, if (i % 2 == 0) "A" else "B", (i % 50).toDouble + 20.0))
     val thr = Seq(10L, 20L, 30L, 40L)
-    val dir = java.nio.file.Files.createTempDirectory("st34_").toString
-    val mem = MemoryStream[Ev]
-    mem.addData(b1)
-    val drift = EventStreams.MergeState.DriftCounts("event_type", "value", thr)
-    EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
-      EventStreams.mergeBatch(drift, _, s"$dir/t", _)).awaitTermination()
-    mem.addData(b2)
-    EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
-      EventStreams.mergeBatch(drift, _, s"$dir/t", _)).awaitTermination()
-    // linear merge law: streamed counts == one count over full history
-    val streamed = spark.read.parquet(s"$dir/t")
-      .select("event_type", "bucket", "n_live")
-    val direct = (b1 ++ b2).toDF()
-      .groupBy(col("event_type"),
-        graft.ops.Drift.bucketOf(col("value"), thr).as("bucket"))
-      .agg(count(lit(1)).as("n_live"))
-    streamed.exceptAll(direct).count() shouldBe 0L
-    direct.exceptAll(streamed).count() shouldBe 0L
-    // state bound: groups × (|thresholds|+1) rows, forever
-    streamed.count() should be <= (2L * (thr.size + 1))
-    // live alarm read == the batch psiOfCounts over full history
-    val ref = graft.ops.Drift.referenceCounts(refRows.toDF(), "event_type",
-      graft.ops.Drift.bucketOf(col("value"), thr))
-    val live = graft.ops.Drift.psiOfCounts(ref,
-      EventStreams.readState(spark, s"$dir/t"), "event_type")
-    val batchPsi = graft.ops.Drift.psiOfCounts(ref, direct, "event_type")
-    live.exceptAll(batchPsi).count() shouldBe 0L
-    batchPsi.exceptAll(live).count() shouldBe 0L
-    // the drift is actually visible: some per-group PSI sum is large
-    val alarm = live.groupBy("event_type")
-      .agg(sum("psi_term").as("psi")).collect()
-      .map(r => r.getDouble(1)).max
-    alarm should be > 0.1
-    // replay refused (addition is not idempotent); empty batch skipped
-    EventStreams.mergeBatch(drift, b2.toDF(), s"$dir/t", 1L) shouldBe false
-    EventStreams.mergeBatch(drift, b1.take(0).toDF(), s"$dir/t",
-      99L) shouldBe false
+    Scratch.withTempDir("st34_") { tmp =>
+      val dir = tmp.toString
+      val mem = MemoryStream[Ev]
+      mem.addData(b1)
+      val drift = EventStreams.MergeState.DriftCounts("event_type", "value", thr)
+      EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+        EventStreams.mergeBatch(drift, _, s"$dir/t", _)).awaitTermination()
+      mem.addData(b2)
+      EventStreams.mergeOnArrival(mem.toDF(), s"$dir/cp")(
+        EventStreams.mergeBatch(drift, _, s"$dir/t", _)).awaitTermination()
+      // linear merge law: streamed counts == one count over full history
+      val streamed = spark.read.parquet(s"$dir/t")
+        .select("event_type", "bucket", "n_live")
+      val direct = (b1 ++ b2).toDF()
+        .groupBy(col("event_type"),
+          graft.ops.Drift.bucketOf(col("value"), thr).as("bucket"))
+        .agg(count(lit(1)).as("n_live"))
+      streamed.exceptAll(direct).count() shouldBe 0L
+      direct.exceptAll(streamed).count() shouldBe 0L
+      // state bound: groups × (|thresholds|+1) rows, forever
+      streamed.count() should be <= (2L * (thr.size + 1))
+      // live alarm read == the batch psiOfCounts over full history
+      val ref = graft.ops.Drift.referenceCounts(refRows.toDF(), "event_type",
+        graft.ops.Drift.bucketOf(col("value"), thr))
+      val live = graft.ops.Drift.psiOfCounts(ref,
+        EventStreams.readState(spark, s"$dir/t"), "event_type")
+      val batchPsi = graft.ops.Drift.psiOfCounts(ref, direct, "event_type")
+      live.exceptAll(batchPsi).count() shouldBe 0L
+      batchPsi.exceptAll(live).count() shouldBe 0L
+      // the drift is actually visible: some per-group PSI sum is large
+      val alarm = live.groupBy("event_type")
+        .agg(sum("psi_term").as("psi")).collect()
+        .map(r => r.getDouble(1)).max
+      alarm should be > 0.1
+      // replay refused (addition is not idempotent); empty batch skipped
+      EventStreams.mergeBatch(drift, b2.toDF(), s"$dir/t", 1L) shouldBe false
+      EventStreams.mergeBatch(drift, b1.take(0).toDF(), s"$dir/t",
+        99L) shouldBe false
+    }
   }
 
   test("ST35 streaming frontier: OR-merge ≡ cold build; replay is a no-op by algebra") {
@@ -1103,40 +1124,42 @@ class EventStreamsSpec extends SparkSpec {
     val p = graft.ext.Bloom.Params(mBits = 1L << 12, k = 4)
     val b1 = (0L until 150L).map(i => ArrivingDoc(i, s"http://h${i % 9}.test/p/$i"))
     val b2 = (150L until 300L).map(i => ArrivingDoc(i, s"http://h${i % 9}.test/p/$i"))
-    val dir = java.nio.file.Files.createTempDirectory("st35_").toString
-    val mem = MemoryStream[ArrivingDoc]
-    mem.addData(b1)
-    val frontier = EventStreams.MergeState.Frontier("url", p)
-    EventStreams.mergeOnArrival(mem.toDF().withColumnRenamed("text", "url"),
-      s"$dir/cp")(EventStreams.mergeBatch(frontier, _, s"$dir/t", _))
-      .awaitTermination()
-    mem.addData(b2)
-    EventStreams.mergeOnArrival(mem.toDF().withColumnRenamed("text", "url"),
-      s"$dir/cp")(EventStreams.mergeBatch(frontier, _, s"$dir/t", _))
-      .awaitTermination()
-    val all = (b1 ++ b2).toDF("doc_id", "url")
-    // streamed state == one cold build over full history
-    val streamed = spark.read.parquet(s"$dir/t")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val cold = graft.ext.Bloom.build(all, "url", p)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    streamed shouldBe cold
-    // an applied batch id is refused by the shared guard; REPLAYING the
-    // batch under a new id is a no-op by the ∨ law
-    EventStreams.mergeBatch(frontier, b2.toDF("doc_id", "url"), s"$dir/t",
-      1L) shouldBe false
-    spark.read.parquet(s"$dir/t")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe cold
-    EventStreams.mergeBatch(frontier, b2.toDF("doc_id", "url"), s"$dir/t",
-      2L) shouldBe true
-    spark.read.parquet(s"$dir/t")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe cold
-    // live probe: every merged key present, empty batch skipped
-    graft.ext.Bloom.probe(all, "url", "doc_id",
-      EventStreams.readState(spark, s"$dir/t"), p)
-      .filter(!col("maybe_present")).count() shouldBe 0L
-    EventStreams.mergeBatch(frontier, b1.take(0).toDF("doc_id", "url"),
-      s"$dir/t", 99L) shouldBe false
+    Scratch.withTempDir("st35_") { tmp =>
+      val dir = tmp.toString
+      val mem = MemoryStream[ArrivingDoc]
+      mem.addData(b1)
+      val frontier = EventStreams.MergeState.Frontier("url", p)
+      EventStreams.mergeOnArrival(mem.toDF().withColumnRenamed("text", "url"),
+        s"$dir/cp")(EventStreams.mergeBatch(frontier, _, s"$dir/t", _))
+        .awaitTermination()
+      mem.addData(b2)
+      EventStreams.mergeOnArrival(mem.toDF().withColumnRenamed("text", "url"),
+        s"$dir/cp")(EventStreams.mergeBatch(frontier, _, s"$dir/t", _))
+        .awaitTermination()
+      val all = (b1 ++ b2).toDF("doc_id", "url")
+      // streamed state == one cold build over full history
+      val streamed = spark.read.parquet(s"$dir/t")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val cold = graft.ext.Bloom.build(all, "url", p)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      streamed shouldBe cold
+      // an applied batch id is refused by the shared guard; REPLAYING the
+      // batch under a new id is a no-op by the ∨ law
+      EventStreams.mergeBatch(frontier, b2.toDF("doc_id", "url"), s"$dir/t",
+        1L) shouldBe false
+      spark.read.parquet(s"$dir/t")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe cold
+      EventStreams.mergeBatch(frontier, b2.toDF("doc_id", "url"), s"$dir/t",
+        2L) shouldBe true
+      spark.read.parquet(s"$dir/t")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe cold
+      // live probe: every merged key present, empty batch skipped
+      graft.ext.Bloom.probe(all, "url", "doc_id",
+        EventStreams.readState(spark, s"$dir/t"), p)
+        .filter(!col("maybe_present")).count() shouldBe 0L
+      EventStreams.mergeBatch(frontier, b1.take(0).toDF("doc_id", "url"),
+        s"$dir/t", 99L) shouldBe false
+    }
   }
 
   test("ST17 streaming CDC byte-delta: exact copy reports zero new bytes") {
@@ -1399,22 +1422,24 @@ class EventStreamsSpec extends SparkSpec {
 
   test("ST5: unreadable existing target fails the batch, never wipes it") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("st5bad").toString
-    // Target EXISTS but is unreadable (corrupt footer). The sink must fail
-    // the batch — treating a read failure as "first run" would replace the
-    // accumulated table with just this micro-batch.
-    val tgt = new java.io.File(s"$dir/t")
-    tgt.mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/t", "part-00000.parquet"), "not parquet")
-    val mem = MemoryStream[Ev]
-    mem.addData(rows.take(3))
-    val q = EventStreams.incrementalUpsert(mem.toDF(), s"$dir/t", s"$dir/cp")
-    intercept[Exception] { q.processAllAvailable() }
-    q.stop()
-    // the corrupt-but-existing table was left for an operator to inspect
-    java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$dir/t", "part-00000.parquet")) shouldBe "not parquet"
+    Scratch.withTempDir("st5bad") { tmp =>
+      val dir = tmp.toString
+      // Target EXISTS but is unreadable (corrupt footer). The sink must fail
+      // the batch — treating a read failure as "first run" would replace the
+      // accumulated table with just this micro-batch.
+      val tgt = new java.io.File(s"$dir/t")
+      tgt.mkdirs()
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$dir/t", "part-00000.parquet"), "not parquet")
+      val mem = MemoryStream[Ev]
+      mem.addData(rows.take(3))
+      val q = EventStreams.incrementalUpsert(mem.toDF(), s"$dir/t", s"$dir/cp")
+      intercept[Exception] { q.processAllAvailable() }
+      q.stop()
+      // the corrupt-but-existing table was left for an operator to inspect
+      java.nio.file.Files.readString(
+        java.nio.file.Paths.get(s"$dir/t", "part-00000.parquet")) shouldBe "not parquet"
+    }
   }
 
   test("ST32 streaming WARC ingestion: shard files -> 4-signal gate ≡ batch") {
@@ -1443,44 +1468,45 @@ class EventStreamsSpec extends SparkSpec {
           "WARC-Target-URI" -> url,
           "WARC-Date" -> "2026-01-01T00:00:00Z",
           "Content-Type" -> "text/plain"), text.getBytes("UTF-8")) })
-    val dir = java.nio.file.Files.createTempDirectory("st32_")
-    java.nio.file.Files.write(dir.resolve("s0.warc.gz"), shard(Seq(
-      // near-dup of corpus doc 1 (jaccard signal), and a novel doc
-      "http://t/a" -> "alpha beta gam q1 q2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12",
-      "http://t/b" -> "z1 z2 z3 z4 z5 z6 z7 z8 z9 z10 z11 z12 z13 z14")))
-    val got = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-    val q = EventStreams.onArrival(
-      EventStreams.readWarcShardStream(spark, dir.toString,
-        maxFilesPerTrigger = 1))(
-      EventStreams.warcGateBatch(_, idx, sig, corpus, editIdx, editCorpus,
-        editKeyLen = 16, k = 2)) { v =>
-      got.synchronized { got ++= v.collect() }
-    }
-    q.processAllAvailable()
-    // second wave lands while the stream runs: an exact corpus dup
-    java.nio.file.Files.write(dir.resolve("s1.warc.gz"), shard(Seq(
-      "http://t/c" -> "k1 k2 k3 k4 k5 k6 k7 k8 k9 k10 k11 k12 k13 k14")))
-    q.processAllAvailable()
-    q.stop()
-    val byUrl = got.map(r => r.getAs[String]("url") ->
-      ((r.getAs[Boolean]("exact_dup"), r.getAs[Boolean]("jac_dup"),
-        r.getAs[Boolean]("admit"), r.getAs[String]("text")))).toMap
-    byUrl should have size 3
-    byUrl("http://t/a")._2 shouldBe true  // jaccard hit rejects
-    byUrl("http://t/a")._3 shouldBe false
-    byUrl("http://t/b") shouldBe ((false, false, true,
-      "z1 z2 z3 z4 z5 z6 z7 z8 z9 z10 z11 z12 z13 z14")) // novel admits, text intact
-    byUrl("http://t/c")._1 shouldBe true  // exact dup rejects
-    byUrl("http://t/c")._3 shouldBe false
-    // stream ≡ batch: one warcGateBatch over ALL landed shards agrees
-    val batchV = EventStreams.warcGateBatch(
-      spark.read.format("binaryFile").option("pathGlobFilter", "*.warc.gz")
-        .load(dir.toString),
-      idx, sig, corpus, editIdx, editCorpus, editKeyLen = 16, k = 2)
-      .collect().map(r => r.getAs[String]("url") ->
+    Scratch.withTempDir("st32_") { dir =>
+      java.nio.file.Files.write(dir.resolve("s0.warc.gz"), shard(Seq(
+        // near-dup of corpus doc 1 (jaccard signal), and a novel doc
+        "http://t/a" -> "alpha beta gam q1 q2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12",
+        "http://t/b" -> "z1 z2 z3 z4 z5 z6 z7 z8 z9 z10 z11 z12 z13 z14")))
+      val got = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
+      val q = EventStreams.onArrival(
+        EventStreams.readWarcShardStream(spark, dir.toString,
+          maxFilesPerTrigger = 1))(
+        EventStreams.warcGateBatch(_, idx, sig, corpus, editIdx, editCorpus,
+          editKeyLen = 16, k = 2)) { v =>
+        got.synchronized { got ++= v.collect() }
+      }
+      q.processAllAvailable()
+      // second wave lands while the stream runs: an exact corpus dup
+      java.nio.file.Files.write(dir.resolve("s1.warc.gz"), shard(Seq(
+        "http://t/c" -> "k1 k2 k3 k4 k5 k6 k7 k8 k9 k10 k11 k12 k13 k14")))
+      q.processAllAvailable()
+      q.stop()
+      val byUrl = got.map(r => r.getAs[String]("url") ->
         ((r.getAs[Boolean]("exact_dup"), r.getAs[Boolean]("jac_dup"),
           r.getAs[Boolean]("admit"), r.getAs[String]("text")))).toMap
-    byUrl shouldBe batchV
+      byUrl should have size 3
+      byUrl("http://t/a")._2 shouldBe true  // jaccard hit rejects
+      byUrl("http://t/a")._3 shouldBe false
+      byUrl("http://t/b") shouldBe ((false, false, true,
+        "z1 z2 z3 z4 z5 z6 z7 z8 z9 z10 z11 z12 z13 z14")) // novel admits, text intact
+      byUrl("http://t/c")._1 shouldBe true  // exact dup rejects
+      byUrl("http://t/c")._3 shouldBe false
+      // stream ≡ batch: one warcGateBatch over ALL landed shards agrees
+      val batchV = EventStreams.warcGateBatch(
+        spark.read.format("binaryFile").option("pathGlobFilter", "*.warc.gz")
+          .load(dir.toString),
+        idx, sig, corpus, editIdx, editCorpus, editKeyLen = 16, k = 2)
+        .collect().map(r => r.getAs[String]("url") ->
+          ((r.getAs[Boolean]("exact_dup"), r.getAs[Boolean]("jac_dup"),
+            r.getAs[Boolean]("admit"), r.getAs[String]("text")))).toMap
+      byUrl shouldBe batchV
+    }
   }
 
   test("ST33 streaming per-host cap: FCFS admits ≡ batch cap; replay refused; O(hosts) state") {
@@ -1492,41 +1518,43 @@ class EventStreamsSpec extends SparkSpec {
       else s"http://Host${i % 2}.Test:${8000 + i}/p/$i"
     val b1 = (0L until 12L).map(i => (i, urlOf(i)))
     val b2 = (12L until 20L).map(i => (i, urlOf(i)))
-    val dir = java.nio.file.Files.createTempDirectory("st33_").toString
-    val mem = MemoryStream[(Long, String)]
-    val admitted = scala.collection.mutable.ArrayBuffer[Long]()
-    def run(): Unit = {
-      val q = EventStreams.mergeOnArrival(
-        mem.toDF().toDF("doc_id", "url"), s"$dir/cp") { (b, id) =>
-        EventStreams.hostCapMergeBatch(b, "url", "doc_id",
-          cap = 3, s"$dir/t", id).foreach { v =>
-          admitted.synchronized {
-            admitted ++= v.filter(col("admit")).select("doc_id")
-              .collect().map(_.getLong(0))
+    Scratch.withTempDir("st33_") { tmp =>
+      val dir = tmp.toString
+      val mem = MemoryStream[(Long, String)]
+      val admitted = scala.collection.mutable.ArrayBuffer[Long]()
+      def run(): Unit = {
+        val q = EventStreams.mergeOnArrival(
+          mem.toDF().toDF("doc_id", "url"), s"$dir/cp") { (b, id) =>
+          EventStreams.hostCapMergeBatch(b, "url", "doc_id",
+            cap = 3, s"$dir/t", id).foreach { v =>
+            admitted.synchronized {
+              admitted ++= v.filter(col("admit")).select("doc_id")
+                .collect().map(_.getLong(0))
+            }
           }
         }
+        q.awaitTermination()
       }
-      q.awaitTermination()
+      mem.addData(b1); run()
+      mem.addData(b2); run()
+      val batchKeep = graft.ext.Curation.perHostCap(
+        (b1 ++ b2).toDF("doc_id", "url"), "url", "doc_id", cap = 3)
+        .select("doc_id").as[Long].collect().toSet
+      admitted.toSet shouldBe batchKeep
+      // state is O(hosts): 3 rows (host0, host1, garbage ""), counts at cap
+      val state = EventStreams.readState(spark, s"$dir/t")
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      state.keySet shouldBe Set("", "host0.test", "host1.test")
+      state.values.foreach(_ shouldBe 3L)
+      // replay guard: a re-applied batch id is refused, state unchanged
+      EventStreams.hostCapMergeBatch(b2.toDF("doc_id", "url"),
+        "url", "doc_id", 3, s"$dir/t", 0L) shouldBe None
+      EventStreams.readState(spark, s"$dir/t")
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe state
+      // empty batch: no write, no verdicts
+      EventStreams.hostCapMergeBatch(b1.take(0).toDF("doc_id", "url"),
+        "url", "doc_id", 3, s"$dir/t", 99L) shouldBe None
     }
-    mem.addData(b1); run()
-    mem.addData(b2); run()
-    val batchKeep = graft.ext.Curation.perHostCap(
-      (b1 ++ b2).toDF("doc_id", "url"), "url", "doc_id", cap = 3)
-      .select("doc_id").as[Long].collect().toSet
-    admitted.toSet shouldBe batchKeep
-    // state is O(hosts): 3 rows (host0, host1, garbage ""), counts at cap
-    val state = EventStreams.readState(spark, s"$dir/t")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    state.keySet shouldBe Set("", "host0.test", "host1.test")
-    state.values.foreach(_ shouldBe 3L)
-    // replay guard: a re-applied batch id is refused, state unchanged
-    EventStreams.hostCapMergeBatch(b2.toDF("doc_id", "url"),
-      "url", "doc_id", 3, s"$dir/t", 0L) shouldBe None
-    EventStreams.readState(spark, s"$dir/t")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap shouldBe state
-    // empty batch: no write, no verdicts
-    EventStreams.hostCapMergeBatch(b1.take(0).toDF("doc_id", "url"),
-      "url", "doc_id", 3, s"$dir/t", 99L) shouldBe None
   }
 
   test("ST36 streaming crawl door: stream ≡ wave-by-wave batch composition; cross-wave novelty; replay refused") {
@@ -1596,51 +1624,53 @@ class EventStreamsSpec extends SparkSpec {
       out.map(t => t._1 -> t._3).toMap
     }
 
-    val dir = java.nio.file.Files.createTempDirectory("st36_").toString
-    val mem = MemoryStream[(Long, String, String, String, Array[Byte])]
-    val got = scala.collection.mutable
-      .Map.empty[Long, (Boolean, Boolean, Boolean, Boolean)]
-    def run(): Unit = {
-      val q = EventStreams.mergeOnArrival(mem.toDF().toDF(cols: _*),
-        s"$dir/cp") { (b, id) =>
-        EventStreams.crawlDoorMergeBatch(b, "id", "host", "path", "url",
-          "payload", rules, p, cap, s"$dir/frontier", s"$dir/cap", id)
-          .foreach { v =>
-            got.synchronized {
-              v.collect().foreach(r => got(r.getLong(0)) =
-                (r.getBoolean(3), r.getBoolean(4), r.getBoolean(5),
-                  r.getBoolean(6)))
+    Scratch.withTempDir("st36_") { tmp =>
+      val dir = tmp.toString
+      val mem = MemoryStream[(Long, String, String, String, Array[Byte])]
+      val got = scala.collection.mutable
+        .Map.empty[Long, (Boolean, Boolean, Boolean, Boolean)]
+      def run(): Unit = {
+        val q = EventStreams.mergeOnArrival(mem.toDF().toDF(cols: _*),
+          s"$dir/cp") { (b, id) =>
+          EventStreams.crawlDoorMergeBatch(b, "id", "host", "path", "url",
+            "payload", rules, p, cap, s"$dir/frontier", s"$dir/cap", id)
+            .foreach { v =>
+              got.synchronized {
+                v.collect().foreach(r => got(r.getLong(0)) =
+                  (r.getBoolean(3), r.getBoolean(4), r.getBoolean(5),
+                    r.getBoolean(6)))
+              }
             }
-          }
+        }
+        q.awaitTermination()
       }
-      q.awaitTermination()
+      mem.addData(w1); run()
+      val ref1 = refWave(w1)
+      got.toMap shouldBe ref1
+      mem.addData(w2); run()
+      val ref2 = refWave(w2)
+      got.toMap shouldBe (ref1 ++ ref2)
+      // the pinned corners: robots kills h0 /private and all of h2;
+      // re-presented wave-1 admits come back NOT novel; cap holds at 2
+      got(0L)._1 shouldBe false // h0 /private
+      got(2L)._1 shouldBe false // h2 disallow all
+      got(101L)._2 shouldBe false // doc 1's url seen in the frontier
+      got(104L)._2 shouldBe false
+      got(10L)._3 shouldBe false // binary payload sniffed out (10 % 5 = 0)
+      got(7L)._4 shouldBe false // h1's third survivor, over the cap
+      got(1L)._4 shouldBe true
+      got(4L)._4 shouldBe true
+      // replay: an already-applied batch id is refused before any state
+      // read; both states unchanged
+      val stateBefore = spark.read.parquet(s"$dir/cap").collect().toSet
+      EventStreams.crawlDoorMergeBatch(w2.toDF(cols: _*), "id", "host",
+        "path", "url", "payload", rules, p, cap,
+        s"$dir/frontier", s"$dir/cap", 0L) shouldBe None
+      spark.read.parquet(s"$dir/cap").collect().toSet shouldBe stateBefore
+      // empty batch: no verdicts, no writes
+      EventStreams.crawlDoorMergeBatch(w1.take(0).toDF(cols: _*), "id",
+        "host", "path", "url", "payload", rules, p, cap,
+        s"$dir/frontier", s"$dir/cap", 99L) shouldBe None
     }
-    mem.addData(w1); run()
-    val ref1 = refWave(w1)
-    got.toMap shouldBe ref1
-    mem.addData(w2); run()
-    val ref2 = refWave(w2)
-    got.toMap shouldBe (ref1 ++ ref2)
-    // the pinned corners: robots kills h0 /private and all of h2;
-    // re-presented wave-1 admits come back NOT novel; cap holds at 2
-    got(0L)._1 shouldBe false // h0 /private
-    got(2L)._1 shouldBe false // h2 disallow all
-    got(101L)._2 shouldBe false // doc 1's url seen in the frontier
-    got(104L)._2 shouldBe false
-    got(10L)._3 shouldBe false // binary payload sniffed out (10 % 5 = 0)
-    got(7L)._4 shouldBe false // h1's third survivor, over the cap
-    got(1L)._4 shouldBe true
-    got(4L)._4 shouldBe true
-    // replay: an already-applied batch id is refused before any state
-    // read; both states unchanged
-    val stateBefore = spark.read.parquet(s"$dir/cap").collect().toSet
-    EventStreams.crawlDoorMergeBatch(w2.toDF(cols: _*), "id", "host",
-      "path", "url", "payload", rules, p, cap,
-      s"$dir/frontier", s"$dir/cap", 0L) shouldBe None
-    spark.read.parquet(s"$dir/cap").collect().toSet shouldBe stateBefore
-    // empty batch: no verdicts, no writes
-    EventStreams.crawlDoorMergeBatch(w1.take(0).toDF(cols: _*), "id",
-      "host", "path", "url", "payload", rules, p, cap,
-      s"$dir/frontier", s"$dir/cap", 99L) shouldBe None
   }
 }

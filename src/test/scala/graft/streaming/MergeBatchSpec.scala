@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.queries.Scratch
 import EventStreams.{MergeState, mergeBatch, readState}
 
 /** The shared crash contract of every persisted streaming state
@@ -43,15 +44,16 @@ class MergeBatchSpec extends SparkSpec {
 
   states.foreach { case (name, state) =>
     test(s"empty batch: $name is skipped, table row-for-row unchanged") {
-      val path = java.nio.file.Files.createTempDirectory("empty_").toString +
-        "/t"
-      mergeBatch(state, rows(0 until 40), path, 0L) shouldBe true
-      val before = snapshot(path)
-      mergeBatch(state, rows(0 until 0), path, 1L) shouldBe false
-      snapshot(path) shouldBe before
-      // the marker did not advance: a non-empty batch under the same id
-      // still merges
-      mergeBatch(state, rows(40 until 60), path, 1L) shouldBe true
+      Scratch.withTempDir("empty_") { tmp =>
+        val path = tmp.toString + "/t"
+        mergeBatch(state, rows(0 until 40), path, 0L) shouldBe true
+        val before = snapshot(path)
+        mergeBatch(state, rows(0 until 0), path, 1L) shouldBe false
+        snapshot(path) shouldBe before
+        // the marker did not advance: a non-empty batch under the same id
+        // still merges
+        mergeBatch(state, rows(40 until 60), path, 1L) shouldBe true
+      }
     }
   }
 
@@ -72,29 +74,31 @@ class MergeBatchSpec extends SparkSpec {
   }
 
   test("crash recovery: mergeBatch restores a table stranded at .old and merges into it") {
-    val path = java.nio.file.Files.createTempDirectory("recover_").toString +
-      "/t"
-    mergeBatch(stats, rows(0 until 30), path, 0L) shouldBe true
-    mergeBatch(stats, rows(30 until 50), path, 1L) shouldBe true
-    strand(path)
-    mergeBatch(stats, rows(50 until 80), path, 2L) shouldBe true
-    new java.io.File(path + ".old").exists() shouldBe false
-    // no accumulated state lost: the table is the cold build of all
-    // three batches, and the restored marker still refuses a replay
-    sameRows(readState(spark, path), cold(0 until 80))
-    mergeBatch(stats, rows(50 until 80), path, 2L) shouldBe false
-    sameRows(readState(spark, path), cold(0 until 80))
+    Scratch.withTempDir("recover_") { tmp =>
+      val path = tmp.toString + "/t"
+      mergeBatch(stats, rows(0 until 30), path, 0L) shouldBe true
+      mergeBatch(stats, rows(30 until 50), path, 1L) shouldBe true
+      strand(path)
+      mergeBatch(stats, rows(50 until 80), path, 2L) shouldBe true
+      new java.io.File(path + ".old").exists() shouldBe false
+      // no accumulated state lost: the table is the cold build of all
+      // three batches, and the restored marker still refuses a replay
+      sameRows(readState(spark, path), cold(0 until 80))
+      mergeBatch(stats, rows(50 until 80), path, 2L) shouldBe false
+      sameRows(readState(spark, path), cold(0 until 80))
+    }
   }
 
   test("crash recovery: readState alone restores a table stranded at .old") {
-    val path = java.nio.file.Files.createTempDirectory("recover_").toString +
-      "/t"
-    mergeBatch(stats, rows(0 until 30), path, 0L) shouldBe true
-    mergeBatch(stats, rows(30 until 50), path, 1L) shouldBe true
-    strand(path)
-    sameRows(readState(spark, path), cold(0 until 50))
-    new java.io.File(path).exists() shouldBe true
-    new java.io.File(path + ".old").exists() shouldBe false
-    readState(spark, path).columns should not contain "batch_id"
+    Scratch.withTempDir("recover_") { tmp =>
+      val path = tmp.toString + "/t"
+      mergeBatch(stats, rows(0 until 30), path, 0L) shouldBe true
+      mergeBatch(stats, rows(30 until 50), path, 1L) shouldBe true
+      strand(path)
+      sameRows(readState(spark, path), cold(0 until 50))
+      new java.io.File(path).exists() shouldBe true
+      new java.io.File(path + ".old").exists() shouldBe false
+      readState(spark, path).columns should not contain "batch_id"
+    }
   }
 }

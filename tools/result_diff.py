@@ -7,11 +7,21 @@ Oracle-green alone cannot show "same answers": certificate twins (q74,
 q91, q108, ...) accept whatever ids a run returns. This diff can: run
 Verify on two trees and compare the two output directories.
 
-Usage: result_diff.py <dirA> <dirB> [query ...]
-Prints one line per query (SAME / DIFF / ONLY-A / ONLY-B) and exits 1 if
-any query differs or exists on one side only.
+Usage:
+  result_diff.py <dirA> <dirB> [query ...]
+      Prints one line per query (SAME / DIFF / ONLY-A / ONLY-B) and exits 1
+      if any query differs or exists on one side only.
+  result_diff.py --digest <verifyDir> [query ...] > manifest.json
+      Writes an answer manifest: one bit-strict digest per query (sha256 of
+      the same canonical rows the diff compares), with the Spark version
+      (from the parquet footers) and the core count (SPARK_GRAFT_CPUS, else
+      this host's CPU count — run it in the environment Verify ran in).
+  result_diff.py --against <manifest.json> <verifyDir> [query ...]
+      Digests <verifyDir> and compares it with a committed manifest; one line
+      per query (SAME / DIFF / ONLY-MANIFEST / ONLY-DIR), exit 1 on any
+      difference.
 """
-import os, sys
+import hashlib, json, os, sys
 
 import duckdb
 
@@ -44,8 +54,68 @@ def queries(d):
     return {q for q in os.listdir(d) if os.path.isdir(os.path.join(d, q))}
 
 
+def digest(con, path):
+    """(row count, sha256 hex) of one query's canonical columns and rows."""
+    cols, rows = load(con, path)
+    return len(rows), hashlib.sha256(repr((cols, rows)).encode()).hexdigest()
+
+
+def spark_version(con, d, names):
+    for q in names:
+        meta = con.sql("SELECT value FROM parquet_kv_metadata("
+                       f"'{os.path.join(d, q)}/*.parquet') "
+                       "WHERE key = 'org.apache.spark.version'").fetchall()
+        if meta:
+            return meta[0][0].decode()
+    return None
+
+
+def manifest(d, only):
+    con = duckdb.connect()
+    names = sorted(queries(d) & only if only else queries(d))
+    return {
+        "spark": spark_version(con, d, names),
+        "cores": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count())),
+        "queries": {q: dict(zip(("rows", "digest"),
+                                digest(con, os.path.join(d, q))))
+                    for q in names},
+    }
+
+
+def against(path, d, only):
+    with open(path) as f:
+        want = json.load(f)["queries"]
+    got = manifest(d, only)["queries"]
+    if only:
+        want = {q: v for q, v in want.items() if q in only}
+    differing = []
+    for q in sorted(want.keys() | got.keys()):
+        if q not in got:
+            print(f"ONLY-MANIFEST {q}")
+        elif q not in want:
+            print(f"ONLY-DIR {q}")
+        elif got[q] != want[q]:
+            print(f"DIFF {q}: {want[q]['rows']} rows in the manifest, "
+                  f"{got[q]['rows']} in {d}")
+        else:
+            print(f"SAME {q} ({got[q]['rows']} rows)")
+            continue
+        differing.append(q)
+    total = len(want.keys() | got.keys())
+    print(f"\n{total - len(differing)} same, {len(differing)} differing"
+          + (": " + " ".join(differing) if differing else ""))
+    return 1 if differing else 0
+
+
 def main():
-    if len(sys.argv) < 3:
+    if len(sys.argv) >= 3 and sys.argv[1] == "--digest":
+        json.dump(manifest(sys.argv[2], set(sys.argv[3:])), sys.stdout,
+                  indent=1, sort_keys=True)
+        print()
+        return
+    if len(sys.argv) >= 4 and sys.argv[1] == "--against":
+        sys.exit(against(sys.argv[2], sys.argv[3], set(sys.argv[4:])))
+    if len(sys.argv) < 3 or sys.argv[1].startswith("--"):
         sys.exit(__doc__)
     a, b = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
