@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
 
+import graft.ops.Salting.atFullWidth
+
 import TextHash._
 
 /** Deduplication operators for large-scale document pipelines.
@@ -24,46 +26,6 @@ object Dedup {
   def exactByHash(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.groupBy(md5(col(textCol)).as("h"))
       .agg(min(col(idCol)).as("keeper"), count(lit(1)).as("dup_cnt"))
-
-  /** Candidate-pair dedup at FULL configured parallelism — the
-    * distinct-before-verify exchanges of every similarity join go through
-    * here. A plain `.distinct()` lets AQE coalesce the post-shuffle
-    * aggregate by BYTES (`parallelismFirst` target
-    * `max(total/parallelism, minPartitionSize=1m)`), and 16-byte long-pair
-    * rows compress so well that millions of raw matches collapse onto a
-    * handful of tasks: the q86 candidate dedup measured 4.3 s coalesced vs
-    * 0.87 s at full width (sf0.1, min-of-2 noop A/B), with the identical
-    * time when coalescing was disabled outright — the byte heuristic, not
-    * the work, was the bottleneck. An explicit
-    * `repartition(spark.sql.shuffle.partitions, keys)` pins the exchange
-    * width (AQE never coalesces a user-specified repartition), so the
-    * CPU-bound dedup keeps every core; `spark.sql.shuffle.partitions` is
-    * already the deployment's scale knob, so the pin is exactly as
-    * scale-adaptive as the rest of the plan. Deliberately NOT a session-
-    * wide `minPartitionSize` floor: that variant was measured to tax every
-    * small iterative query (~0.2-0.3 s per PageRank/HITS-shaped query —
-    * dozens of tiny stages each fragmenting into 32 tasks) while only
-    * these pair exchanges need the width.
-    *
-    * Tradeoff (round-17 note): a user-specified repartition
-    * (REPARTITION_BY_NUM) also opts the exchange out of AQE's
-    * `OptimizeSkewedJoin`, so a hot key cannot be runtime-split here. For
-    * the gid probes that risk is structurally bounded — rarest-first
-    * prefix filtering makes probe buckets the SMALLEST gram buckets — and
-    * the soak's "pinned exchange skew" stage asserts the post-pin
-    * max/median partition-row ratio stays ≤ 4 at the 1M-doc shape
-    * (measured: gid probes 1.00, doc_a pairs 1.19; see Soak.scala). If
-    * a future corpus breaks that
-    * assertion, salt the pin keys before reaching for the session knob.
-    */
-  private[graft] def atFullWidth(keys: String*)(df: DataFrame): DataFrame = {
-    // Try(...): the conf can be non-numeric on some platforms ("auto");
-    // fall back to the cluster's default parallelism rather than throw.
-    val p = scala.util.Try(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(df.sparkSession.sparkContext.defaultParallelism)
-    df.repartition(p, keys.map(col): _*)
-  }
 
   /** Pair dedup partitioned by `firstKey` ONLY (still a correct distinct —
     * hash(doc_a) co-locates every copy of (doc_a, doc_b)), so the verify
@@ -1072,8 +1034,9 @@ object Dedup {
 
   /** The pinned probe side of [[prefixJoin]] — the one place every join
     * and accessor validates its threshold. Both join inputs are pinned to
-    * full width ([[atFullWidth]]): the gid exchange the join would insert
-    * anyway, but at a user-specified partition count AQE cannot coalesce —
+    * full width ([[graft.ops.Salting.atFullWidth]]): the gid exchange the
+    * join would insert anyway, but at a user-specified partition count AQE
+    * cannot coalesce —
     * the merge-join's O(Σ bucket²) pair fan-out is CPU-bound, and AQE's
     * byte heuristic (probe rows are a few compressed MB) was squeezing it
     * onto a handful of tasks (the [[distinctPairs]] measurement). Same

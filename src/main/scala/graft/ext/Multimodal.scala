@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Salting.atFullWidth
+
 /** Multimodal-column plumbing: image/audio/video carried as opaque `binary`
   * columns with typed metadata structs, processed batch-at-a-time in
   * `mapPartitions` (the JVM analog of Python's `mapInPandas` — one iterator
@@ -34,17 +36,14 @@ object Multimodal {
     * 0.69 — worse than flat, pure contention). Repartitioning the 8-byte
     * id rows BEFORE payload generation spreads the CPU-bound codec work
     * across `spark.sql.shuffle.partitions` (the deployment's scale knob,
-    * same rule as [[Dedup.atFullWidth]]); the heavy payloads are generated
-    * AFTER the exchange and never shuffled (guide §8: decide/place with
+    * same rule as [[graft.ops.Salting.atFullWidth]]); the heavy payloads are
+    * generated AFTER the exchange and never shuffled (guide §8: decide/place with
     * small rows, create heavy bytes in place). Hash-partitioned by id
     * (deterministic, no round-robin pre-sort).
     */
   def idsAtFullWidth(df: DataFrame, idCol: String): Dataset[Long] = {
     import df.sparkSession.implicits._
-    val p = scala.util.Try(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(df.sparkSession.sparkContext.defaultParallelism)
-    df.select(col(idCol).cast("long")).as[Long].repartition(p, col(idCol))
+    atFullWidth(idCol)(df.select(col(idCol).cast("long"))).as[Long]
   }
   case class MediaFeature(media_id: Long, meta: MediaMeta,
       mean_px: Double, max_px: Int)

@@ -15,12 +15,57 @@ import org.apache.spark.sql.functions._
   *
   * saltedBroadcastJoin: replicates the (small) build side `buckets` times
   * so a salted probe side joins without concentrating a hot key.
+  *
+  * atFullWidth: the partitioning half — pins an exchange at
+  * `spark.sql.shuffle.partitions` so AQE cannot coalesce it onto a few
+  * tasks (the similarity joins' pair dedups and gid probes, the raster
+  * sampler's tile exchange, the media pipelines' id spread).
   */
 object Salting {
 
   /** Deterministic salt in [0, buckets) derived from stable row content. */
   private def salt(of: Column, buckets: Int): Column =
     pmod(xxhash64(of), lit(buckets))
+
+  /** Candidate-pair dedup at FULL configured parallelism — the
+    * distinct-before-verify exchanges of every similarity join go through
+    * here. A plain `.distinct()` lets AQE coalesce the post-shuffle
+    * aggregate by BYTES (`parallelismFirst` target
+    * `max(total/parallelism, minPartitionSize=1m)`), and 16-byte long-pair
+    * rows compress so well that millions of raw matches collapse onto a
+    * handful of tasks: the q86 candidate dedup measured 4.3 s coalesced vs
+    * 0.87 s at full width (sf0.1, min-of-2 noop A/B), with the identical
+    * time when coalescing was disabled outright — the byte heuristic, not
+    * the work, was the bottleneck. An explicit
+    * `repartition(spark.sql.shuffle.partitions, keys)` pins the exchange
+    * width (AQE never coalesces a user-specified repartition), so the
+    * CPU-bound dedup keeps every core; `spark.sql.shuffle.partitions` is
+    * already the deployment's scale knob, so the pin is exactly as
+    * scale-adaptive as the rest of the plan. Deliberately NOT a session-
+    * wide `minPartitionSize` floor: that variant was measured to tax every
+    * small iterative query (~0.2-0.3 s per PageRank/HITS-shaped query —
+    * dozens of tiny stages each fragmenting into 32 tasks) while only
+    * these pair exchanges need the width.
+    *
+    * Tradeoff (round-17 note): a user-specified repartition
+    * (REPARTITION_BY_NUM) also opts the exchange out of AQE's
+    * `OptimizeSkewedJoin`, so a hot key cannot be runtime-split here. For
+    * the gid probes that risk is structurally bounded — rarest-first
+    * prefix filtering makes probe buckets the SMALLEST gram buckets — and
+    * the soak's "pinned exchange skew" stage asserts the post-pin
+    * max/median partition-row ratio stays ≤ 4 at the 1M-doc shape
+    * (measured: gid probes 1.00, doc_a pairs 1.19; see Soak.scala). If
+    * a future corpus breaks that
+    * assertion, salt the pin keys before reaching for the session knob.
+    */
+  private[graft] def atFullWidth(keys: String*)(df: DataFrame): DataFrame = {
+    // Try(...): the conf can be non-numeric on some platforms ("auto");
+    // fall back to the cluster's default parallelism rather than throw.
+    val p = scala.util.Try(
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+      .getOrElse(df.sparkSession.sparkContext.defaultParallelism)
+    df.repartition(p, keys.map(col): _*)
+  }
 
   /** Two-phase sum/count aggregation over a (possibly skewed) key.
     * `aggs` maps output column name → (valueColumn, "sum" | "count").

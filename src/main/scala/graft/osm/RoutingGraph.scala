@@ -11,9 +11,10 @@ import graft.geo.Mercator
   * table + `ways_vertices_pgr` + POI snap.
   *
   * Noding semantics: a node is a graph vertex iff it is used by ≥ 2
-  * distinct ways OR is an endpoint of a way; each way is split into edges
-  * at its vertices. Everything is relational — degree counting is a
-  * groupBy, splitting is a running sum over positions — no driver loops.
+  * distinct ways OR is an endpoint of a way ([[vertexFlag]]); each way is
+  * split into edges at its vertices. Everything is relational — degree
+  * counting is an nd-keyed aggregate, splitting is a running sum over
+  * positions — no driver loops.
   */
 object RoutingGraph {
 
@@ -29,17 +30,30 @@ object RoutingGraph {
   def routableWays(ways: DataFrame): DataFrame =
     ways.filter(element_at(col("tags"), "highway").isin(RoutableHighway: _*))
 
-  /** Node-id → vertex flag: used by ≥2 ways, or an endpoint of any way. */
-  def vertexNodeIds(routable: DataFrame): DataFrame = {
-    val usage = routable
-      .select(col("id").as("way_id"), posexplode(col("nds")).as(Seq("pos", "nd")),
-        size(col("nds")).as("n"))
+  /** One row per (way, position): way_id, tags, pos, nd, and whether the
+    * position is one of the way's two ends.
+    */
+  private def wayNodes(routable: DataFrame): DataFrame =
+    routable
+      .select(col("id").as("way_id"), col("tags"),
+        posexplode(col("nds")).as(Seq("pos", "nd")), size(col("nds")).as("n"))
       .withColumn("is_end", col("pos") === 0 || col("pos") === col("n") - 1)
-    usage.groupBy("nd")
-      .agg(countDistinct("way_id").as("way_cnt"), max(col("is_end")).as("any_end"))
-      .filter(col("way_cnt") >= 2 || col("any_end"))
+      .drop("n")
+
+  /** The noding rule over one node's [[wayNodes]] rows, stated once:
+    * `agg` turns an aggregate into a per-node value (identity under a
+    * `groupBy(nd)`, `.over(nd window)` in [[edges]]). ≥ 2 distinct ways is
+    * min(way_id) ≠ max(way_id), so no `countDistinct`.
+    */
+  private def vertexFlag(agg: Column => Column): Column =
+    agg(min(col("way_id"))) =!= agg(max(col("way_id"))) || agg(max(col("is_end")))
+
+  /** Node-id → vertex flag: used by ≥2 ways, or an endpoint of any way. */
+  def vertexNodeIds(routable: DataFrame): DataFrame =
+    wayNodes(routable)
+      .groupBy("nd").agg(vertexFlag(identity).as("is_vertex"))
+      .filter(col("is_vertex"))
       .select(col("nd").as("vertex_nd"))
-  }
 
   /** `ways_vertices_pgr`: vertex nodes with coordinates. */
   def vertices(routable: DataFrame, nodes: DataFrame): DataFrame =
@@ -51,17 +65,19 @@ object RoutingGraph {
     *
     * gid = way_id·2^16 + segment_index (deterministic, join-free id —
     * documented cap of 65536 segments/way; OSM ways max out at 2000 nds).
-    * Window is per-way (partitioned, never global) so it scales.
+    *
+    * Plan shape: the way-node rows, joined to their coordinates, take the
+    * vertex flag from an nd-keyed window ([[vertexFlag]] over the node's
+    * rows), then the segment index from a way-keyed running sum. Two
+    * windows, both partitioned (never global), and no aggregate-and-join
+    * back: the flag over the joined rows equals the flag over all of the
+    * way's rows, because either every row of an nd survives the inner node
+    * join or none does (a duplicated node row duplicates all of them).
     */
   def edges(routable: DataFrame, nodes: DataFrame): DataFrame = {
-    val exploded = routable
-      .select(col("id").as("way_id"), col("tags"),
-        posexplode(col("nds")).as(Seq("pos", "nd")))
+    val exploded = wayNodes(routable)
       .join(nodes.select(col("id").as("nd"), col("lon"), col("lat")), Seq("nd"))
-      .join(vertexNodeIds(routable).withColumnRenamed("vertex_nd", "nd")
-          .withColumn("is_vertex", lit(true)),
-        Seq("nd"), "left")
-      .withColumn("is_vertex", coalesce(col("is_vertex"), lit(false)))
+      .withColumn("is_vertex", vertexFlag(_.over(Window.partitionBy("nd"))))
     val w = Window.partitionBy("way_id").orderBy("pos")
     // Segment index: how many vertices seen before this position. A vertex
     // node CLOSES one segment and OPENS the next, so it belongs to both —

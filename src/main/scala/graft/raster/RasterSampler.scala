@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.geo.Mercator
+import graft.ops.Salting.atFullWidth
 
 /** A sampled value (None = tile fetch failed, F6 null semantics). */
 case class Sampled(gid: Long, value: Option[Double])
@@ -32,13 +33,24 @@ case class RasterPass(
   *
   * Plan shape: derive tile/pixel addresses with native column math (T1/T2,
   * codegen'd), tag them with their pass index and union the passes →
-  * `repartition(pass, tx, ty)` so a tile's coordinates are co-located →
-  * `sortWithinPartitions(pass, tx, ty)` so they are also contiguous →
-  * `mapPartitions` holds one decoded tile and fetches the next only when
-  * (pass, tx, ty) changes. That is exactly one fetch per tile per pass,
-  * however many tiles a partition holds (no LRU to thrash). The shuffle is
-  * by tile key, so tile fetches scale with #tiles (bounded by 4^zoom),
-  * never with #coordinates.
+  * hash-repartition by (pass, tx, ty), pinned at
+  * `spark.sql.shuffle.partitions` ([[graft.ops.Salting.atFullWidth]]), so a
+  * tile's coordinates are co-located → `sortWithinPartitions(pass, tx, ty)`
+  * so they are also contiguous → `mapPartitions` holds one decoded tile and
+  * fetches the next only when (pass, tx, ty) changes. That is exactly one
+  * fetch per tile per pass, however many tiles a partition holds (no LRU to
+  * thrash). The shuffle is by tile key, so tile fetches scale with #tiles
+  * (bounded by 4^zoom), never with #coordinates.
+  *
+  * Why the pin: the exchange's rows are a few bytes of addresses each, so
+  * AQE's `AQEShuffleRead` coalesces an unpinned `repartition(pass, tx, ty)`
+  * to as few partitions as its bytes need — one, for a metro extract —
+  * while each tile key costs a full fetch and decode, so the sampler would
+  * run on one core (`enrich_metro`: a 1-task sampling stage, the tile
+  * store's fetch about half of all executor samples). The pinned exchange
+  * (REPARTITION_BY_NUM) keeps one task per shuffle partition. It also opts
+  * out of AQE's skew split, which costs nothing here: a tile's rows must
+  * stay in one partition for the one-fetch contract anyway.
   *
   * [[medians]] runs any number of passes through ONE such sampling shuffle
   * and ONE per-gid aggregate; [[medianPass]] is its one-pass call.
@@ -75,8 +87,7 @@ object RasterSampler {
       passes: IndexedSeq[RasterPass]): Dataset[PassSampled] = {
     val spark = keyed.sparkSession
     import spark.implicits._
-    keyed.as[PassKey]
-      .repartition(col("pass"), col("tx"), col("ty"))
+    atFullWidth("pass", "tx", "ty")(keyed).as[PassKey]
       .sortWithinPartitions("pass", "tx", "ty")
       .mapPartitions { it =>
         var pass = -1

@@ -1,7 +1,11 @@
 package graft.osm
 
+import org.apache.spark.sql.{DataFrame, Row, functions}
+import org.apache.spark.sql.execution.{ExpandExec, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -51,13 +55,125 @@ class RoutingGraphSpec extends SparkSpec {
     e.select("gid").distinct().count() shouldBe e.count()
   }
 
-  test("edges runs the noding window once: one branch, no union of two") {
-    val e = RoutingGraph.edges(RoutingGraph.routableWays(ways), nodes)
-    e.collect()
-    val windows = ExecutedPlan.collect(e.queryExecution.executedPlan) {
-      case w: WindowExec => w
+  /** Partition keys of each executed `WindowExec`, plus whether the plan
+    * has a union, an `Expand` or a distinct aggregate (`countDistinct`).
+    */
+  private def shape(df: DataFrame): (Seq[Seq[String]], Boolean, Boolean, Boolean) = {
+    df.collect()
+    val plan: SparkPlan = df.queryExecution.executedPlan
+    val windows = ExecutedPlan.collect(plan) {
+      case w: WindowExec => w.partitionSpec.flatMap(_.references.map(_.name))
     }
-    windows.size shouldBe 1
+    (windows.sortBy(_.mkString(",")),
+      ExecutedPlan.collect(plan) { case u: UnionExec => u }.nonEmpty,
+      ExecutedPlan.collect(plan) { case x: ExpandExec => x }.nonEmpty,
+      ExecutedPlan.collect(plan) {
+        case a: BaseAggregateExec => a.aggregateExpressions.filter(_.isDistinct)
+      }.flatten.nonEmpty)
+  }
+
+  test("edges runs the noding window once: one branch, no union of two") {
+    // One nd-keyed window for the vertex flag and one way-keyed running sum
+    // for the segment index, over one branch: no union, and no countDistinct
+    // aggregate joined back.
+    val e = RoutingGraph.edges(RoutingGraph.routableWays(ways), nodes)
+    shape(e) shouldBe ((Seq(Seq("nd"), Seq("way_id")), false, false, false))
+    val v = RoutingGraph.vertexNodeIds(RoutingGraph.routableWays(ways))
+    shape(v) shouldBe ((Nil, false, false, false))
+  }
+
+  // --- the noding rule against the aggregate-and-join-back oracle ---
+
+  /** The old vertex rule: a `countDistinct` aggregate over the way nodes. */
+  private def oracleVertexNodeIds(routable: DataFrame): DataFrame =
+    routable
+      .select(col("id").as("way_id"), posexplode(col("nds")).as(Seq("pos", "nd")),
+        functions.size(col("nds")).as("n"))
+      .withColumn("is_end", col("pos") === 0 || col("pos") === col("n") - 1)
+      .groupBy("nd")
+      .agg(countDistinct("way_id").as("way_cnt"), max(col("is_end")).as("any_end"))
+      .filter(col("way_cnt") >= 2 || col("any_end"))
+      .select(col("nd").as("vertex_nd"))
+
+  /** The old `edges`: the oracle's vertex ids left-joined back onto the
+    * node-joined way nodes, then the same way-keyed split.
+    */
+  private def oracleEdges(routable: DataFrame, nodes: DataFrame): DataFrame = {
+    val exploded = routable
+      .select(col("id").as("way_id"), col("tags"),
+        posexplode(col("nds")).as(Seq("pos", "nd")))
+      .join(nodes.select(col("id").as("nd"), col("lon"), col("lat")), Seq("nd"))
+      .join(oracleVertexNodeIds(routable).withColumnRenamed("vertex_nd", "nd")
+          .withColumn("is_vertex", lit(true)),
+        Seq("nd"), "left")
+      .withColumn("is_vertex", coalesce(col("is_vertex"), lit(false)))
+    val w = Window.partitionBy("way_id").orderBy("pos")
+    val vseen = sum(when(col("is_vertex"), 1L).otherwise(0L))
+      .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    exploded.withColumn("vseen", vseen)
+      .select(col("way_id"), col("tags"), col("pos"), col("nd"), col("lon"), col("lat"),
+        explode(when(col("is_vertex"), array(col("vseen") - 1, col("vseen")))
+          .otherwise(array(col("vseen")))).as("seg"))
+      .groupBy("way_id", "seg")
+      .agg(
+        first(col("tags")).as("tags"),
+        transform(
+          array_sort(collect_list(struct(col("pos"), col("lon").as("lng"), col("lat"), col("nd")))),
+          p => struct(p.getField("lng").as("lng"), p.getField("lat").as("lat"))).as("geom"),
+        min_by(col("nd"), col("pos")).as("source"),
+        max_by(col("nd"), col("pos")).as("target"),
+        count(lit(1)).as("n_pts"))
+      .filter(col("n_pts") >= 2)
+      .select((col("way_id") * lit(65536L) + col("seg")).as("gid"),
+        col("way_id").as("osm_way_id"),
+        col("source"), col("target"), col("geom"), col("tags"))
+  }
+
+  /** Rows in a canonical order, for a row-for-row compare. */
+  private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
+
+  // Each way is one noding corner case; node 99 is missing from `nodes`,
+  // and nodes 22 and 32 appear twice.
+  private val tricky = Seq(
+    (400L, Seq(10L, 11L, 12L, 10L)), // closed: first nd = last nd
+    (500L, Seq(20L, 21L, 22L, 21L, 23L)), // revisits interior node 21
+    (600L, Seq(30L, 31L, 32L, 33L)), // shares only interior nodes 31, 32
+    (700L, Seq(34L, 32L, 31L, 35L)), //   with this way
+    (800L, Seq(40L, 41L, 99L, 42L)), // interior nd 99 has no node row
+    (900L, Seq(99L, 43L, 41L)) // 99 again, as an end; 41 shared with 800
+  ).map { case (id, nds) => (id, nds, Map("highway" -> "residential")) }
+    .toDF("id", "nds", "tags")
+
+  private val trickyNodes = {
+    val ids = Seq(10L, 11L, 12L, 20L, 21L, 22L, 23L, 30L, 31L, 32L, 33L, 34L, 35L,
+      40L, 41L, 42L, 43L)
+    (ids ++ Seq(22L, 32L)).map(id => (id, id * 1e-4, -id * 1e-4, Map.empty[String, String]))
+      .toDF("id", "lon", "lat", "tags")
+  }
+
+  test("noding rule: vertex ids equal the countDistinct oracle on corner cases") {
+    val got = rows(RoutingGraph.vertexNodeIds(tricky))
+    got shouldBe rows(oracleVertexNodeIds(tricky))
+    // the cases bite: ends (closed way's 10, missing 99), shared interiors
+    // (31, 32, 41) are vertices; a same-way revisit (21) is not
+    got.map(_.getLong(0)).toSet shouldBe
+      Set(10L, 23L, 30L, 31L, 32L, 33L, 34L, 35L, 40L, 41L, 42L, 99L, 20L)
+  }
+
+  test("noding rule: edges equal the aggregate-and-join oracle row for row") {
+    val got = rows(RoutingGraph.edges(tricky, trickyNodes))
+    got shouldBe rows(oracleEdges(tricky, trickyNodes))
+    got.map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toSet shouldBe Set(
+      (400L, 10L, 10L), // closed way: one edge from its vertex back to it
+      (500L, 20L, 23L), // 21 revisited by its own way only: no split
+      // vertex 32 has two node rows: each closes a segment, so both plans
+      // also emit a two-point 32 → 32 edge between them
+      (600L, 30L, 31L), (600L, 31L, 32L), (600L, 32L, 32L), (600L, 32L, 33L),
+      (700L, 34L, 32L), (700L, 32L, 32L), (700L, 32L, 31L), (700L, 31L, 35L),
+      (800L, 40L, 41L), (800L, 41L, 42L), // 99's row dropped by the node join
+      (900L, 43L, 41L))
+    // the duplicated node rows duplicate their points in both plans
+    got.filter(_.getLong(1) == 500L).head.getAs[Seq[Any]]("geom").size shouldBe 6
   }
 
   test("POI snap: nearest edge within bound; distant POI stays null (J3/F5)") {

@@ -3,7 +3,9 @@ package graft.pipeline
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, StreetGrid, SuiteTempDir, TestSpark}
+import graft.ops.Upsert
 import graft.osm.{OsmXml, RoutingGraph}
+import graft.queries.Scratch
 import graft.raster.Tile
 
 /** Golden end-to-end: the §3.1 enrichment pipeline on the spec-written
@@ -99,6 +101,24 @@ class WaysEnrichmentSpec extends SparkSpec with SuiteTempDir {
 
   test("disabled highres pass contributes no column (reference :138)") {
     result.columns should not contain "popularity_highres"
+  }
+
+  test("one pass (run + writeAtomic) runs at most 15 Spark jobs") {
+    // parse, the noding (one nd window, one way window), one pinned
+    // sampling shuffle, the per-gid medians and their max, the write.
+    val sc = spark.sparkContext
+    val jobs = (1 to 3).map { i =>
+      val group = s"enrichment-pass-$i"
+      Scratch.withTempDir("enrich_") { dir =>
+        sc.setJobGroup(group, group)
+        try Upsert.writeAtomic(WaysEnrichment.runDefault(spark, osm),
+          dir.resolve("ways_metadata").toString)
+        finally sc.clearJobGroup()
+      }
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    jobs.distinct.size shouldBe 1 // the count is a property of the plan
+    jobs.head should be <= 15
   }
 
   test("run fails loudly when no pass is enabled") {

@@ -1,6 +1,7 @@
 package graft.raster
 
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.TaskContext
+import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
 
 import graft.SparkSpec
 import graft.queries.Scratch
@@ -17,6 +18,17 @@ final class CountingStore(fetches: LongAccumulator, salt: Int,
     if (dead((x, y))) None
     else Some(Tile(256, 256, "L",
       Array.tabulate(256 * 256)(i => ((7 * x + 3 * y + i % 256 + salt) % 256).toInt)))
+  }
+}
+
+/** `inner`, recording the (stage id, stage task count) of every fetch. */
+final class StageRecordingStore(inner: TileStore,
+    stages: CollectionAccumulator[(Int, Int)]) extends TileStore {
+  val tileSize = inner.tileSize
+  def fetch(x: Long, y: Long, z: Int): Option[Tile] = {
+    val tc = TaskContext.get()
+    stages.add((tc.stageId(), tc.numPartitions()))
+    inner.fetch(x, y, z)
   }
 }
 
@@ -165,6 +177,32 @@ class RasterSpec extends SparkSpec {
     ga.value shouldBe distinct
     gb.value shouldBe distinct
     both shouldBe a.map { case (g, v) => g -> (v ++ b(g)) }
+  }
+
+  test("medians: the sampling stage runs at full width, still one fetch per tile per pass") {
+    // Address rows are a few bytes each, so an unpinned tile exchange is
+    // coalesced by AQE onto one task; the sampler must keep one task per
+    // shuffle partition.
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val tiles = (0 until 4 * width).map(i => (5620L + i % 8, 13060L + i / 8))
+    val coords = (for (f <- Seq(0.25, 0.75); ((tx, ty), k) <- tiles.zipWithIndex) yield {
+      val (lng, lat) = inTile15(tx, ty, f, f)
+      (k.toLong, lng, lat)
+    }).toDF("gid", "lng", "lat")
+    val distinct = RasterSampler.address(coords, 15).select("tx", "ty").distinct().count()
+    distinct should be >= 2L * width
+    val fetches = spark.sparkContext.longAccumulator
+    val stages = spark.sparkContext.collectionAccumulator[(Int, Int)]
+    val passes = Seq(0, 57).zipWithIndex.map { case (salt, i) =>
+      RasterPass(s"p$i", new StageRecordingStore(new CountingStore(fetches, salt), stages),
+        15, ValueFns.strava)
+    }
+    RasterSampler.medians(coords, passes).collect().length shouldBe tiles.size
+    fetches.value shouldBe 2 * distinct // one per distinct (pass, tile) key
+    import scala.jdk.CollectionConverters._
+    val seen = stages.value.asScala.toSet
+    seen.map(_._1).size shouldBe 1 // every fetch ran in one sampling stage
+    seen.map(_._2) shouldBe Set(width) // of `shuffle.partitions` tasks
   }
 
   test("medians: a pass without samples reads null; a gid without any is absent (F6)") {
