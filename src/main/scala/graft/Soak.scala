@@ -464,7 +464,9 @@ object Soak {
       val sigR = srpSig.select(col("vec_id").as("__id"), col("sh"))
       check("srp max band bucket", maxBandBucket(sigR, 3),
         0L, math.max(64L, 32L * nVecs / 65536L))
-      check("srp pairs", Dedup.hammingNearDupPairs(sigR, 64, 3).count(),
+      check("srp pairs",
+        Dedup.hammingPairs(srpSig, srpSig, col("vec_id"), col("sh"), 64, 3)
+          .count(),
         nVecs / 100, 2 * nVecs)
     })
     time("incremental srp (1% batch)")(

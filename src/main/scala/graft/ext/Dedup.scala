@@ -281,14 +281,22 @@ object Dedup {
       .select(col("__id"), col("sh"), col("e.band"), col("e.bk"))
   }
 
-  /** Shared banding + verification behind both fingerprint widths (and
-    * `Similarity.srpNearDupPairs`, the embedding-space fingerprint):
-    * equi-join each band's keys, dedup candidate pairs, exact XOR-popcount
-    * verify. Only candidates pay the popcount; no false negatives
-    * (pigeonhole: maxDist flips cannot touch all maxDist+1 bands).
+  /** The one Hamming band join behind every fingerprint family (simhash
+    * 16/64, SRP, pHash, audio): `id` and `sh` pick each side's id and
+    * fingerprint columns. `a eq b` is the all-pairs self-join (adds the
+    * `a.__id < b.__id` pair rule); otherwise `a` is a batch probing a
+    * frozen corpus signature `b`. The self or probing side is cut here,
+    * once — it feeds both join sides, or the batch's own signature pass
+    * would re-run per consumer; `b` is read as given. Each side's band
+    * keys equi-join on (band, key), candidate pairs dedup across bands,
+    * and only candidates pay the exact XOR-popcount: no false negatives
+    * (pigeonhole — `maxDist` flips cannot touch all `maxDist + 1`
+    * bands). Output: (doc_a, doc_b, dist).
     */
-  private[graft] def hammingNearDupPairs(sig: DataFrame, totalBits: Int,
-      maxDist: Int): DataFrame = {
+  private[graft] def hammingPairs(a: DataFrame, b: DataFrame, id: Column,
+      sh: Column, totalBits: Int, maxDist: Int): DataFrame = {
+    require(maxDist >= 0 && maxDist < totalBits,
+      s"hammingPairs: 0 <= maxDist < $totalBits, got $maxDist")
     // Deliberately NO atFullWidth pin and a PLAIN distinct here (round-17
     // A/B, reverting the round-16 pin the driver measured as a ~0.91×
     // loss on q111/q117): unlike the gram-join family, the pair rows
@@ -300,14 +308,17 @@ object Dedup {
     // q117 3.47→3.23, q149 1.60→1.48, q150 2.44→2.24, q156 1.73→1.43,
     // q204 1.70→1.13; the gates (q118/q135/q139) were a wash across two
     // paired runs.
-    val banded = hammingBandKeys(sig, totalBits, maxDist)
-    val cand = banded.alias("a").join(banded.alias("b"),
-      col("a.band") === col("b.band") && col("a.bk") === col("b.bk") &&
-        col("a.__id") < col("b.__id"))
+    def sig(df: DataFrame): DataFrame = df.select(id.as("__id"), sh.as("sh"))
+    val aBand = hammingBandKeys(sig(a).localCheckpoint(), totalBits, maxDist)
+    val bBand =
+      if (a eq b) aBand else hammingBandKeys(sig(b), totalBits, maxDist)
+    val pairRule = if (a eq b) Seq(col("a.__id") < col("b.__id")) else Nil
+    aBand.alias("a").join(bBand.alias("b"),
+      ((col("a.band") === col("b.band")) +: (col("a.bk") === col("b.bk")) +:
+        pairRule).reduce(_ && _))
       .select(col("a.__id").as("doc_a"), col("b.__id").as("doc_b"),
         col("a.sh").as("sha"), col("b.sh").as("shb"))
       .distinct()
-    cand
       .withColumn("dist", bit_count(col("sha").bitwiseXOR(col("shb"))))
       .filter(col("dist") <= maxDist)
       .select(col("doc_a"), col("doc_b"), col("dist").cast("long").as("dist"))
@@ -330,14 +341,10 @@ object Dedup {
     */
   def simHashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 3): DataFrame = {
-    require(maxDist >= 0 && maxDist < 16, s"simHashNearDupPairs: 0 <= maxDist < 16")
-    // Relational signature (bit-identical to the simHash16 Column, 1/16th
-    // the hash work), checkpointed because it feeds BOTH self-join sides —
-    // the q86/DedupCluster multi-use-subplan lesson.
+    // Relational signature: bit-identical to the simHash16 Column, 1/16th
+    // the hash work.
     val sig = simHashSignature(df, idCol, textCol, nHashes = 1)
-      .select(col(idCol).as("__id"), col("sh"))
-      .localCheckpoint()
-    hammingNearDupPairs(sig, 16, maxDist)
+    hammingPairs(sig, sig, col(idCol), col("sh"), 16, maxDist)
   }
 
   /** [[simHashNearDupPairs]] at the production width: 64-bit
@@ -350,12 +357,8 @@ object Dedup {
     */
   def simHash64NearDupPairs(df: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 3): DataFrame = {
-    require(maxDist >= 0 && maxDist < 64, s"simHash64NearDupPairs: 0 <= maxDist < 64")
-    // Checkpoint: the 64-aggregate signature pass feeds both join sides.
     val sig = simHash64Signature(df, idCol, textCol)
-      .select(col(idCol).as("__id"), col("sh"))
-      .localCheckpoint()
-    hammingNearDupPairs(sig, 64, maxDist)
+    hammingPairs(sig, sig, col(idCol), col("sh"), 64, maxDist)
   }
 
   /** EXACT incremental SIMHASH probe: every (batch doc a, corpus doc b)
@@ -375,36 +378,9 @@ object Dedup {
     * @param corpusSig (idCol, sh) as produced by [[simHash64Signature]].
     */
   def incrementalSimHash64Pairs(corpusSig: DataFrame, batch: DataFrame,
-      idCol: String, textCol: String, maxDist: Int = 3): DataFrame = {
-    require(maxDist >= 0 && maxDist < 64,
-      s"incrementalSimHash64Pairs: 0 <= maxDist < 64")
-    val bSig = simHash64Signature(batch, idCol, textCol)
-      .select(col(idCol).as("__id"), col("sh"))
-      .localCheckpoint()
-    val cSig = corpusSig.select(col(idCol).as("__id"), col("sh"))
-    hammingProbePairs(bSig, cSig, 64, maxDist)
-  }
-
-  /** Asymmetric Hamming band probe behind [[incrementalSimHash64Pairs]]
-    * and `Similarity.incrementalSrpPairs`: batch fingerprints equi-join a
-    * frozen corpus signature table on (band, key), candidates pay the
-    * XOR-popcount. Both inputs are (`__id`, `sh`).
-    */
-  private[graft] def hammingProbePairs(bSig: DataFrame, cSig: DataFrame,
-      totalBits: Int, maxDist: Int): DataFrame = {
-    // No pins, plain distinct — same rationale and A/B as
-    // [[hammingNearDupPairs]].
-    val cand = hammingBandKeys(bSig, totalBits, maxDist).alias("a")
-      .join(hammingBandKeys(cSig, totalBits, maxDist).alias("b"),
-        col("a.band") === col("b.band") && col("a.bk") === col("b.bk"))
-      .select(col("a.__id").as("doc_a"), col("b.__id").as("doc_b"),
-        col("a.sh").as("sha"), col("b.sh").as("shb"))
-      .distinct()
-    cand
-      .withColumn("dist", bit_count(col("sha").bitwiseXOR(col("shb"))))
-      .filter(col("dist") <= maxDist)
-      .select(col("doc_a"), col("doc_b"), col("dist").cast("long").as("dist"))
-  }
+      idCol: String, textCol: String, maxDist: Int = 3): DataFrame =
+    hammingPairs(simHash64Signature(batch, idCol, textCol), corpusSig,
+      col(idCol), col("sh"), 64, maxDist)
 
   /** INGEST GATE: the per-batch admit/reject decision a production
     * pipeline renders at the door, combining the frozen-structure probes
@@ -981,6 +957,53 @@ object Dedup {
     def score: Column =
       round(col("dot").cast("double") /
         sqrt((col("na2") * col("nb2")).cast("double")), 6).as("cos")
+  }
+
+  /** DuckDB brute-force twin of the bigram joins over `documents`: every
+    * pair's exact overlap from one gram-level self-join — no prefix, no
+    * filter, nothing shared with [[prefixJoin]] but the measure's name.
+    * Pairs are each unordered pair once (`doc_b > doc_a`; containment
+    * keeps both orders, `!=`) or, with `batch`, the `doc_id % 10 = 0`
+    * batch as doc_a against every other doc as doc_b. Thresholds compare
+    * as integers, `tauDen·n_common ≥ tauNum·denom`, and cosine's squared
+    * form in HUGEINT. Output matches the Spark joins: (doc_a, doc_b,
+    * n_common, jac | containment) or (doc_a, doc_b, dot, cos).
+    */
+  private[graft] def gramJoinSql(m: Measure, tauNum: Int, tauDen: Int,
+      batch: Boolean = false): String = {
+    val pair =
+      if (batch) "a.doc_id % 10 = 0 AND b.doc_id % 10 != 0"
+      else if (m == Containment) "b.doc_id != a.doc_id"
+      else "b.doc_id > a.doc_id"
+    val grams = """SELECT doc_id, unnest([t[i] || ' ' || t[i+1]
+                          FOR i IN generate_series(1, len(t) - 1)]) AS g
+                   FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)"""
+    def setJoin(denom: String, score: String): String =
+      s"""WITH bg AS (SELECT DISTINCT doc_id, g FROM ($grams)),
+              n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nn FROM bg GROUP BY 1),
+              i AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                           CAST(count(*) AS BIGINT) AS n_common
+                    FROM bg a JOIN bg b ON b.g = a.g AND $pair GROUP BY 1, 2)
+         SELECT doc_a, doc_b, n_common,
+                round(CAST(n_common AS DOUBLE) / CAST($denom AS DOUBLE), 6) AS $score
+         FROM i JOIN n x ON x.doc_id = doc_a JOIN n y ON y.doc_id = doc_b
+         WHERE $tauDen * n_common >= $tauNum * ($denom)"""
+    m match {
+      case Jaccard => setJoin("x.nn + y.nn - n_common", "jac")
+      case Containment => setJoin("x.nn", "containment")
+      case Cosine =>
+        s"""WITH tf AS (SELECT doc_id, g, least(CAST(count(*) AS BIGINT), 65535) AS w
+                        FROM ($grams) GROUP BY 1, 2),
+                n2 AS (SELECT doc_id, CAST(sum(w * w) AS BIGINT) AS n2 FROM tf GROUP BY 1),
+                i AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                             CAST(sum(a.w * b.w) AS BIGINT) AS dot
+                      FROM tf a JOIN tf b ON b.g = a.g AND $pair GROUP BY 1, 2)
+           SELECT doc_a, doc_b, dot,
+                  round(CAST(dot AS DOUBLE) / sqrt(CAST(x.n2 * y.n2 AS DOUBLE)), 6) AS cos
+           FROM i JOIN n2 x ON x.doc_id = doc_a JOIN n2 y ON y.doc_id = doc_b
+           WHERE ${tauDen.toLong * tauDen} * CAST(dot AS HUGEINT) * dot >=
+                 ${tauNum.toLong * tauNum} * CAST(x.n2 AS HUGEINT) * y.n2"""
+    }
   }
 
   /** Probe-prefix length `nn − ⌈τ·nn⌉ + 1` of a sets relation. */

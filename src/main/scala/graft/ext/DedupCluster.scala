@@ -178,40 +178,37 @@ object DedupCluster {
       bands: Seq[Seq[String]] = Seq(Seq("mh0", "mh1"), Seq("mh2", "mh3")),
       localThreshold: Long = 100000L): DataFrame = {
     val sig = Dedup.minHashSignature(docs, idCol, textCol)
-    // Materialize the edge list ONCE: everything downstream (the size
-    // probe, contraction, the CC loop's own checkpoints, the final
-    // expansion) re-materializes its inputs several times, and without
-    // this cut each of those would recompute the full minhash + band-join
-    // pipeline. Every further eager materialization costs a fixed ~0.5-1 s
-    // of stage overhead regardless of row count, so the structure below
-    // adds NO other checkpoint on the small-graph path.
-    val edges = bandStarEdges(sig, idCol, bands).localCheckpoint()
-    clustersFromEdges(docs, idCol, edges, localThreshold)
+    clustersFromEdges(docs, idCol, bandStarEdges(sig, idCol, bands),
+      localThreshold)
   }
 
-  /** Components + keeper labels from an ALREADY-MATERIALIZED (src, dst)
-    * edge relation — the engine under [[dedupClusters]], factored so any
-    * similarity join's pairs close into clusters the same way (the
-    * edit-distance family uses it via `Fuzzy.editDistanceClusters`).
-    * Callers must checkpoint `edges` first: the size probe, contraction,
-    * the CC loop, and the expansion each re-materialize their input.
+  /** Components + keeper labels from a (src, dst) edge relation — the
+    * engine under [[dedupClusters]], factored so any similarity join's
+    * pairs close into clusters the same way (edit distance, SRP, pHash).
     * Output: (idCol, cluster_id = min reachable id, is_keeper).
     */
   def clustersFromEdges(docs: DataFrame, idCol: String, edges: DataFrame,
       localThreshold: Long = 100000L): DataFrame = {
+    // Materialize the edge list ONCE: everything downstream (the size
+    // probe, contraction, the CC loop's own checkpoints, the final
+    // expansion) re-materializes its inputs several times, and without
+    // this cut each of those would recompute the full pair pipeline. Every
+    // further eager materialization costs a fixed ~0.5-1 s of stage
+    // overhead regardless of row count, so the structure below adds NO
+    // other checkpoint on the small-graph path.
+    val cut = edges.localCheckpoint()
     val probe = math.min(localThreshold + 1, Int.MaxValue.toLong).toInt
     val labels =
-      if (edges.limit(probe).count() <= localThreshold) {
-        // Band-star edges are O(docs·bands) and already materialized —
-        // below the threshold, skip contraction AND the distributed loop:
+      if (cut.limit(probe).count() <= localThreshold) {
+        // Below the threshold, skip contraction AND the distributed loop:
         // one driver union-find + one broadcast join back.
-        localComponents(docs.select(col(idCol).as("node")), edges)
+        localComponents(docs.select(col(idCol).as("node")), cut)
       } else {
         // At-scale path: one star contraction shrinks the iterated label
         // state to surviving roots, then the O(log n)-round loop. The
         // contracted edges feed three consumers (node list, probe, solve);
         // cut once so the contraction joins run once.
-        val (parents, cEdges0) = contractStars(edges)
+        val (parents, cEdges0) = contractStars(cut)
         val cEdges = cEdges0.localCheckpoint()
         val cNodes = cEdges.select(col("src").as("node"))
           .unionByName(cEdges.select(col("dst").as("node"))).distinct()
@@ -259,17 +256,34 @@ object DedupCluster {
       .select(col(idCol).as("__bid"), col("band_id"), col("bk"))
     val cRows = corpusBandRows
       .select(col(idCol).as("__cid"), col("band_id"), col("bk"))
-    val adopted = bRows.join(cRows, Seq("band_id", "bk"))
-      .join(corpusLabels.select(col(idCol).as("__cid"),
-        col("cluster_id").as("__cl")), "__cid")
-      .groupBy("__bid").agg(min(col("__cl")).as("__cl"))
+    adopt(corpusLabels,
+      bRows.join(cRows, Seq("band_id", "bk")).select("__bid", "__cid"),
+      batch, idCol)
+  }
+
+  /** The adoption step of every online clustering member (LSH
+    * [[assignToClusters]], `Fuzzy.assignToEditClusters`,
+    * `Similarity.assignToSrpClusters`, `Multimodal.assignToPhashClusters`):
+    * the first two columns of `pairs` hold (batch id, corpus id) matches,
+    * whatever their names (each caller keeps its own — a rename would put
+    * an alias into the pair relation's plan); each batch id adopts the
+    * MINIMUM `cluster_id` of its matched corpus ids in `corpusLabels`
+    * (idCol, cluster_id) — bridged clusters are not merged — or founds its
+    * own cluster when nothing matched. Output: (idCol, cluster_id,
+    * is_keeper) for every row of `batch`.
+    */
+  def adopt(corpusLabels: DataFrame, pairs: DataFrame, batch: DataFrame,
+      idCol: String): DataFrame = {
+    val Seq(a, b) = pairs.columns.toSeq.take(2)
+    val adopted = pairs
+      .join(corpusLabels.select(col(idCol).as(b),
+        col("cluster_id").as("__cl")), b)
+      .groupBy(col(a)).agg(min(col("__cl")).as("__cl"))
     batch.select(col(idCol))
-      .join(adopted.select(col("__bid").as(idCol), col("__cl")),
+      .join(adopted.select(col(a).as(idCol), col("__cl")),
         Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("__cl"), col(idCol)).as("cluster_id"))
-      .withColumn("is_keeper",
-        (col("cluster_id") === col(idCol)).cast("int"))
+      .select(col(idCol), coalesce(col("__cl"), col(idCol)).as("cluster_id"))
+      .withColumn("is_keeper", (col("cluster_id") === col(idCol)).cast("int"))
   }
 
   /** Leakage-free train/val/test split: hash the near-dup CLUSTER id, not
@@ -348,16 +362,6 @@ object DedupCluster {
       .filter(col("n_pairs") =!= 0L)
   }
 
-  /** Per-group duplicate-rate dashboard — the number the ingest gate's
-    * per-signal flags ultimately feed: for each `groupCol` value (source,
-    * crawl, language…), how many documents sit in a non-singleton
-    * near-dup cluster, and the rate. The canonical curation monitor for
-    * "which feed is flooding us with copies".
-    *
-    * Scale: the clustering dominates (run once, reuse); on top of it this
-    * is one per-cluster count (|clusters| rows — AQE broadcasts it), one
-    * join back, one groupBy on `groupCol`.
-    */
   /** CROSS-SOURCE duplicate-FLOW matrix: for every (source_a ≤ source_b)
     * pair, how many exact-duplicate document pairs span them — the "who
     * copies whom" complement of [[dupRateByGroup]]'s per-source rate
@@ -399,6 +403,16 @@ object DedupCluster {
         coalesce(col("__p"), lit(0L)).as("n_pairs"))
   }
 
+  /** Per-group duplicate-rate dashboard — the number the ingest gate's
+    * per-signal flags ultimately feed: for each `groupCol` value (source,
+    * crawl, language…), how many documents sit in a non-singleton
+    * near-dup cluster, and the rate. The canonical curation monitor for
+    * "which feed is flooding us with copies".
+    *
+    * Scale: the clustering dominates (run once, reuse); on top of it this
+    * is one per-cluster count (|clusters| rows — AQE broadcasts it), one
+    * join back, one groupBy on `groupCol`.
+    */
   def dupRateByGroup(docs: DataFrame, idCol: String, textCol: String,
       groupCol: String): DataFrame = {
     val cl = dedupClusters(docs, idCol, textCol)

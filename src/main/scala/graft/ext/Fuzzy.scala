@@ -170,15 +170,11 @@ object Fuzzy {
     * Output: (idCol, cluster_id, is_keeper).
     */
   def editDistanceClusters(df: DataFrame, idCol: String, strCol: String,
-      k: Int, localThreshold: Long = 100000L): DataFrame = {
-    // Materialize the edge list once — the size probe, contraction, CC
-    // loop, and expansion each re-materialize their input (the
-    // checkpoint-the-loop-INPUT rule).
-    val edges = editDistanceJoin(df, idCol, strCol, k)
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .localCheckpoint()
-    DedupCluster.clustersFromEdges(df, idCol, edges, localThreshold)
-  }
+      k: Int, localThreshold: Long = 100000L): DataFrame =
+    DedupCluster.clustersFromEdges(df, idCol,
+      editDistanceJoin(df, idCol, strCol, k)
+        .select(col("id_a").as("src"), col("id_b").as("dst")),
+      localThreshold)
 
   /** Incremental edit-cluster ASSIGNMENT — the string member of the online
     * clustering family (`DedupCluster.assignToClusters` is the LSH
@@ -192,18 +188,10 @@ object Fuzzy {
     */
   def assignToEditClusters(corpusLabels: DataFrame, index: DataFrame,
       corpus: DataFrame, batch: DataFrame, idCol: String, strCol: String,
-      k: Int): DataFrame = {
-    val adopted = incrementalEditDistanceJoin(index, corpus, batch,
-        idCol, strCol, k)
-      .join(corpusLabels.select(col(idCol).as("id_b"),
-        col("cluster_id").as("__cl")), "id_b")
-      .groupBy(col("id_a")).agg(min(col("__cl")).as("__cl"))
-    batch.select(col(idCol))
-      .join(adopted.select(col("id_a").as(idCol), col("__cl")),
-        Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("__cl"), col(idCol)).as("cluster_id"))
-      .withColumn("is_keeper", (col("cluster_id") === col(idCol)).cast("int"))
-  }
+      k: Int): DataFrame =
+    DedupCluster.adopt(corpusLabels,
+      incrementalEditDistanceJoin(index, corpus, batch, idCol, strCol, k),
+      batch, idCol)
 
   /** Incremental probe: every (batch, corpus) pair with `levenshtein <= k`,
     * from a FROZEN corpus — `index` is [[segmentIndex]] output over

@@ -234,7 +234,7 @@ object Multimodal {
 
   /** IMAGE near-dup pairs via perceptual-hash band pigeonholing: aHash
     * fingerprints of the selected frames of every payload, then the
-    * shared Hamming machinery ([[graft.ext.Dedup.hammingNearDupPairs]] —
+    * shared Hamming machinery ([[graft.ext.Dedup.hammingPairs]] —
     * same banding as simhash/SRP: `maxDist + 1` bands, equi-join, only
     * candidates pay the XOR-popcount, no false negatives). The image
     * sibling of the token (simhash) and embedding (SRP) fingerprint
@@ -246,12 +246,9 @@ object Multimodal {
       maxDist: Int = 4): DataFrame = {
     require(frames.nonEmpty && frames.forall(f => f >= 0 && f < 16),
       "phashNearDupPairs: frame indices must be in [0, 16)")
-    // Checkpoint: the decode+hash pass feeds both self-join sides.
     val sig = frameHashes(media, frames).toDF()
-      .select((col("media_id") * 16 + col("frame_idx")).as("__id"),
-        col("ph").as("sh"))
-      .localCheckpoint()
-    Dedup.hammingNearDupPairs(sig, 64, maxDist)
+    Dedup.hammingPairs(sig, sig, col("media_id") * 16 + col("frame_idx"),
+      col("ph"), 64, maxDist)
   }
 
   /** IMAGE near-dup CLUSTERS: the frame-0 perceptual-hash pair graph
@@ -264,15 +261,13 @@ object Multimodal {
     */
   def phashClusters(media: Dataset[MediaRow], maxDist: Int = 4,
       localThreshold: Long = 100000L): DataFrame = {
-    val ids = media.toDF().select(col("media_id"))
     // unpacked frame-0 signatures (media_id itself is the node id)
     val sig = frameHashes(media, Seq(0)).toDF()
-      .select(col("media_id").as("__id"), col("ph").as("sh"))
-      .localCheckpoint()
-    val edges = Dedup.hammingNearDupPairs(sig, 64, maxDist)
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .localCheckpoint() // the checkpoint-the-loop-INPUT rule
-    DedupCluster.clustersFromEdges(ids, "media_id", edges, localThreshold)
+    DedupCluster.clustersFromEdges(media.toDF().select(col("media_id")),
+      "media_id",
+      Dedup.hammingPairs(sig, sig, col("media_id"), col("ph"), 64, maxDist)
+        .select(col("doc_a").as("src"), col("doc_b").as("dst")),
+      localThreshold)
   }
 
   /** Incremental IMAGE-cluster ASSIGNMENT — the image member of the
@@ -288,23 +283,14 @@ object Multimodal {
     * (media_id, cluster_id, is_keeper).
     */
   def assignToPhashClusters(corpusLabels: DataFrame, corpusSig: DataFrame,
-      batch: Dataset[MediaRow], maxDist: Int = 4): DataFrame = {
-    val adopted = incrementalPhashPairs(corpusSig, batch, maxDist)
-      .join(corpusLabels.select(col("media_id").as("doc_b"),
-        col("cluster_id").as("__cl")), "doc_b")
-      .groupBy(col("doc_a")).agg(min(col("__cl")).as("__cl"))
-    batch.toDF().select(col("media_id"))
-      .join(adopted.select(col("doc_a").as("media_id"), col("__cl")),
-        Seq("media_id"), "left")
-      .select(col("media_id"),
-        coalesce(col("__cl"), col("media_id")).as("cluster_id"))
-      .withColumn("is_keeper",
-        (col("cluster_id") === col("media_id")).cast("int"))
-  }
+      batch: Dataset[MediaRow], maxDist: Int = 4): DataFrame =
+    DedupCluster.adopt(corpusLabels,
+      incrementalPhashPairs(corpusSig, batch, maxDist), batch.toDF(),
+      "media_id")
 
   /** INCREMENTAL perceptual-hash probe: each arriving batch of payloads
     * is hashed and probed against a FROZEN corpus signature table with
-    * the asymmetric band join ([[graft.ext.Dedup.hammingProbePairs]]) —
+    * the asymmetric band join ([[graft.ext.Dedup.hammingPairs]]) —
     * the image member of the incremental ingest family (Jaccard /
     * containment / cosine / simhash / edit-distance / SRP). O(batch):
     * the corpus pays one decode+hash pass ever. Output (doc_a = batch
@@ -320,12 +306,8 @@ object Multimodal {
       maxDist: Int = 4, frame: Int = 0,
       decode: Array[Byte] => Frame = StubCodec.decode): DataFrame = {
     require(frame >= 0, "incrementalPhashPairs: frame index must be >= 0")
-    val bSig = frameHashes(batch, Seq(frame), decode).toDF()
-      .select(col("media_id").as("__id"), col("ph").as("sh"))
-      .localCheckpoint()
-    val cSig = corpusSig.select(col("media_id").as("__id"),
-      col("ph").as("sh"))
-    Dedup.hammingProbePairs(bSig, cSig, 64, maxDist)
+    Dedup.hammingPairs(frameHashes(batch, Seq(frame), decode).toDF(),
+      corpusSig, col("media_id"), col("ph"), 64, maxDist)
   }
 
   case class AudioChunk(media_id: Long, chunk_idx: Int, n_samples: Int,
@@ -419,14 +401,9 @@ object Multimodal {
     */
   def incrementalAudioPairs(corpusFp: DataFrame, batch: Dataset[MediaRow],
       window: Int, maxDist: Int = 6,
-      decode: Array[Byte] => Array[Int] = StubCodec.decodeAudio): DataFrame = {
-    val bFp = audioFingerprint(batch, window, decode)
-      .select(col("media_id").as("__id"), col("afp").as("sh"))
-      .localCheckpoint()
-    val cFp = corpusFp.select(col("media_id").as("__id"),
-      col("afp").as("sh"))
-    Dedup.hammingProbePairs(bFp, cFp, 64, maxDist)
-  }
+      decode: Array[Byte] => Array[Int] = StubCodec.decodeAudio): DataFrame =
+    Dedup.hammingPairs(audioFingerprint(batch, window, decode), corpusFp,
+      col("media_id"), col("afp"), 64, maxDist)
 
   case class CdcChunk(media_id: Long, chunk_idx: Int, start: Int, len: Int,
       chash: Long)

@@ -85,16 +85,6 @@ object Packing {
           .as("seq_last"))
   }
 
-  /** Rank-ordered top-k concatenation per group — the context-assembly
-    * step of a retrieval (RAG) pipeline: the k best payloads of each
-    * group, joined in rank order into one string. `order` must end in a
-    * total-order tiebreak (engine-stable ranking).
-    *
-    * Scale: `row_number() <= k` plans a partial WindowGroupLimit BEFORE
-    * the exchange (only k·groups rows shuffle), and the collected array is
-    * bounded by k — the interpreted per-group lambda touches k elements,
-    * never the corpus. Output: groupCol, `n_items`, `packed`.
-    */
   /** T5 SPAN-CORRUPTION example generation (the Raffel et al. 2020
     * denoising objective): per document, drop token spans and emit the
     * training pair — input with numbered `<extra_id_k>` sentinels in
@@ -444,6 +434,16 @@ object Packing {
        $unpivot"""
   }
 
+  /** Rank-ordered top-k concatenation per group — the context-assembly
+    * step of a retrieval (RAG) pipeline: the k best payloads of each
+    * group, joined in rank order into one string. `order` must end in a
+    * total-order tiebreak (engine-stable ranking).
+    *
+    * Scale: `row_number() <= k` plans a partial WindowGroupLimit BEFORE
+    * the exchange (only k·groups rows shuffle), and the collected array is
+    * bounded by k — the interpreted per-group lambda touches k elements,
+    * never the corpus. Output: groupCol, `n_items`, `packed`.
+    */
   def topKConcat(df: DataFrame, groupCol: String, order: Seq[Column],
       payload: Column, k: Int, sep: String): DataFrame = {
     val w = Window.partitionBy(groupCol).orderBy(order: _*)

@@ -394,11 +394,6 @@ object Retrieval {
       coalesce(round(lit(1.0) / col("__fr"), 6), lit(0.0)).as("mrr"))
   }
 
-  /** The DuckDB twin of [[bm25TopK]] (same stats, same rounding route, and
-    * the same operator association: idf · (tf·(k1+1) / denom), parenthesized
-    * so neither engine re-associates the product before the division —
-    * last-ulp double drift at the round-9 boundary is an ordering flip).
-    */
   /** PSEUDO-RELEVANCE-FEEDBACK query expansion (the RM3 family:
     * Lavrenko & Croft 2001 relevance models; Abdul-Jaleel et al. 2004):
     * run the seed BM25 query, treat its top `kFb` documents as
@@ -656,6 +651,11 @@ object Retrieval {
        FROM c2 GROUP BY doc_id QUALIFY rnk <= $k"""
   }
 
+  /** The DuckDB twin of [[bm25TopK]] (same stats, same rounding route, and
+    * the same operator association: idf · (tf·(k1+1) / denom), parenthesized
+    * so neither engine re-associates the product before the division —
+    * last-ulp double drift at the round-9 boundary is an ordering flip).
+    */
   def bm25OracleSql(queryTerms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75): String = {
     val termList =

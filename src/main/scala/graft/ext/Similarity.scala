@@ -442,13 +442,8 @@ object Similarity {
     */
   def srpNearDupPairs(emb: DataFrame, vecCol: String, idCol: String,
       maxDist: Int = 3): DataFrame = {
-    require(maxDist >= 0 && maxDist < 64, s"srpNearDupPairs: 0 <= maxDist < 64")
-    // Checkpoint: the signature pass feeds both self-join sides (the
-    // q86/DedupCluster multi-use-subplan lesson).
     val sig = srpSignature(emb, vecCol, idCol)
-      .select(col(idCol).as("__id"), col("sh"))
-      .localCheckpoint()
-    Dedup.hammingNearDupPairs(sig, 64, maxDist)
+    Dedup.hammingPairs(sig, sig, col(idCol), col("sh"), 64, maxDist)
       .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"), col("dist"))
   }
 
@@ -464,16 +459,10 @@ object Similarity {
     * @param corpusSig (idCol, sh) as produced by [[srpSignature]].
     */
   def incrementalSrpPairs(corpusSig: DataFrame, batch: DataFrame,
-      vecCol: String, idCol: String, maxDist: Int = 3): DataFrame = {
-    require(maxDist >= 0 && maxDist < 64,
-      s"incrementalSrpPairs: 0 <= maxDist < 64")
-    val bSig = srpSignature(batch, vecCol, idCol)
-      .select(col(idCol).as("__id"), col("sh"))
-      .localCheckpoint()
-    val cSig = corpusSig.select(col(idCol).as("__id"), col("sh"))
-    Dedup.hammingProbePairs(bSig, cSig, 64, maxDist)
+      vecCol: String, idCol: String, maxDist: Int = 3): DataFrame =
+    Dedup.hammingPairs(srpSignature(batch, vecCol, idCol), corpusSig,
+      col(idCol), col("sh"), 64, maxDist)
       .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"), col("dist"))
-  }
 
   /** Embedding near-dup CLUSTERS: [[srpNearDupPairs]]' pair graph closed
     * into connected components with min-id labels and keeper flags —
@@ -484,29 +473,22 @@ object Similarity {
     * (idCol, cluster_id, is_keeper).
     */
   def srpClusters(emb: DataFrame, vecCol: String, idCol: String,
-      maxDist: Int = 3, localThreshold: Long = 100000L): DataFrame = {
-    val sig = srpSignature(emb, vecCol, idCol)
-      .select(col(idCol).as("__id"), col("sh"))
-      .localCheckpoint()
-    srpClustersFromSig(emb, idCol, sig, maxDist, localThreshold)
-  }
+      maxDist: Int = 3, localThreshold: Long = 100000L): DataFrame =
+    srpClustersFromSig(emb, idCol, srpSignature(emb, vecCol, idCol), maxDist,
+      localThreshold)
 
-  /** [[srpClusters]] over a PRECOMPUTED (materialized) signature table
-    * (`__id`, `sh`) — a session that also probes the same corpus's frozen
-    * signatures (the q157 shape) computes the signature pass once and
-    * feeds both consumers.
+  /** [[srpClusters]] over a PRECOMPUTED (idCol, sh) signature table — a
+    * session that also probes the same corpus's frozen signatures (the
+    * q157 shape) computes the signature pass once and feeds both
+    * consumers.
     */
   private[graft] def srpClustersFromSig(emb: DataFrame, idCol: String,
       sig: DataFrame, maxDist: Int,
-      localThreshold: Long = 100000L): DataFrame = {
-    // Materialize the edge list once — the size probe, contraction, CC
-    // loop, and expansion each re-materialize their input (the
-    // checkpoint-the-loop-INPUT rule).
-    val edges = Dedup.hammingNearDupPairs(sig, 64, maxDist)
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .localCheckpoint()
-    DedupCluster.clustersFromEdges(emb, idCol, edges, localThreshold)
-  }
+      localThreshold: Long = 100000L): DataFrame =
+    DedupCluster.clustersFromEdges(emb, idCol,
+      Dedup.hammingPairs(sig, sig, col(idCol), col("sh"), 64, maxDist)
+        .select(col("doc_a").as("src"), col("doc_b").as("dst")),
+      localThreshold)
 
   /** Incremental SRP-cluster ASSIGNMENT — the embedding member of the
     * online clustering family (`DedupCluster.assignToClusters` / LSH,
@@ -521,47 +503,10 @@ object Similarity {
   def assignToSrpClusters(corpusLabels: DataFrame, corpusSig: DataFrame,
       batch: DataFrame, vecCol: String, idCol: String,
       maxDist: Int = 3): DataFrame =
-    adoptSrpClusters(corpusLabels,
+    DedupCluster.adopt(corpusLabels,
       incrementalSrpPairs(corpusSig, batch, vecCol, idCol, maxDist),
       batch, idCol)
 
-  /** The adoption back half of [[assignToSrpClusters]] over PRECOMPUTED
-    * probe pairs — exposed so a caller that already built the pairs (e.g.
-    * overlapped with the label build on another thread, the q157 shape)
-    * shares one body with the plain entry point.
-    */
-  private[graft] def adoptSrpClusters(corpusLabels: DataFrame,
-      pairs: DataFrame, batch: DataFrame, idCol: String): DataFrame = {
-    val adopted = pairs
-      .join(corpusLabels.select(col(idCol).as("id_b"),
-        col("cluster_id").as("__cl")), "id_b")
-      .groupBy(col("id_a")).agg(min(col("__cl")).as("__cl"))
-    batch.select(col(idCol))
-      .join(adopted.select(col("id_a").as(idCol), col("__cl")),
-        Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("__cl"), col(idCol)).as("cluster_id"))
-      .withColumn("is_keeper", (col("cluster_id") === col(idCol)).cast("int"))
-  }
-
-  /** Upper-triangle COVARIANCE MATRIX of an embedding column — the
-    * whitening/PCA-prep statistic every vector pipeline computes before
-    * decorrelating or reducing dimensions (the k×k input a driver-side
-    * eigensolver then factors; cf. the JL/PQ/IVF reducers that consume
-    * it). cov(i,j) = E[x_i·x_j] − E[x_i]·E[x_j].
-    *
-    * Cross-engine float discipline (the q104 rule): every float product
-    * x_i·x_j is EXACT in double (24-bit mantissas), and each term enters
-    * the sums as `trunc(t · 2^40)` — a power-of-two scale (exact) then
-    * truncation — so all three sums are integer arithmetic in any order
-    * on any engine; doubles reappear only in the final fixed-shape
-    * expression, rounded at 6.
-    *
-    * Scale shape: one posexplode to (vec, dim, x) and one same-vector
-    * self-join emitting the d(d+1)/2 upper-triangle terms per vector —
-    * d²-bounded fan-out (a config constant, not data), aggregated with
-    * map-side combine on (i, j) keys; the mean sums ride the same
-    * exploded relation. Output: (i, j, cov), j ≥ i.
-    */
   /** Top-`kComp` PRINCIPAL COMPONENTS via the classic split: the d×d
     * covariance is computed DISTRIBUTED ([[covarianceMatrix]] — the only
     * data-sized pass), then eigensolved ON THE DRIVER (power iteration
@@ -617,6 +562,25 @@ object Similarity {
         round(dot(asDouble(col(vecCol)), lit(w)), 6).as("proj"))
     }.reduce(_ unionByName _)
 
+  /** Upper-triangle COVARIANCE MATRIX of an embedding column — the
+    * whitening/PCA-prep statistic every vector pipeline computes before
+    * decorrelating or reducing dimensions (the k×k input a driver-side
+    * eigensolver then factors; cf. the JL/PQ/IVF reducers that consume
+    * it). cov(i,j) = E[x_i·x_j] − E[x_i]·E[x_j].
+    *
+    * Cross-engine float discipline (the q104 rule): every float product
+    * x_i·x_j is EXACT in double (24-bit mantissas), and each term enters
+    * the sums as `trunc(t · 2^40)` — a power-of-two scale (exact) then
+    * truncation — so all three sums are integer arithmetic in any order
+    * on any engine; doubles reappear only in the final fixed-shape
+    * expression, rounded at 6.
+    *
+    * Scale shape: one posexplode to (vec, dim, x) and one same-vector
+    * self-join emitting the d(d+1)/2 upper-triangle terms per vector —
+    * d²-bounded fan-out (a config constant, not data), aggregated with
+    * map-side combine on (i, j) keys; the mean sums ride the same
+    * exploded relation. Output: (i, j, cov), j ≥ i.
+    */
   def covarianceMatrix(df: DataFrame, vecCol: String, idCol: String): DataFrame =
     finalizeCovariance(covarianceSums(df, vecCol, idCol))
 

@@ -155,24 +155,6 @@ object Drift {
           .as("cramers_v"))
   }
 
-  /** TWO-SAMPLE KOLMOGOROV–SMIRNOV test: D = max over observed values of
-    * |F_A(v) − F_B(v)| — the distribution-free "did this cohort's whole
-    * SHAPE move" statistic that PSI's fixed buckets can miss (a shift
-    * inside one wide bucket is invisible to PSI; KS sees every quantile).
-    * Output one row: (n_a, n_b, d_stat, at_value) — the statistic plus
-    * the value where the ECDFs diverge most (min such value: rank
-    * argmaxes on doubles need a total-order tiebreak).
-    *
-    * Scale design: the ECDFs need a VALUE-ORDERED cumulative count — the
-    * q140 two-phase cumsum, but bucketed by value RANGE (floor((v−lo)/w)
-    * over nBuckets spans from one min/max pass) so bucket order IS value
-    * order: phase 1's single-partition window runs over ≤ nBuckets rows,
-    * never the data; phase 2 cumsums within buckets in parallel. Float
-    * parity: the per-value d is |cumA/nA − cumB/nB| on exact integers —
-    * identical IEEE ops on identical inputs give the identical double on
-    * both engines, so max/argmax/round introduce no drift (no cross-row
-    * float accumulation anywhere).
-    */
   /** Shared ECDF machinery for [[ksTest]] and [[wasserstein1]]: per
     * distinct value, |F_A(v) − F_B(v)| plus the value's global rank
     * among distinct values — every cumulative count built with the
@@ -188,6 +170,46 @@ object Drift {
       .groupBy("__v")
       .agg(sum(col("__a")).as("ca"), sum(lit(1L) - col("__a")).as("cb")),
       nBuckets)
+
+  /** DuckDB twin of [[ecdfDiff]] and its two statistics: `cohort` is a
+    * SELECT of (v, a) rows, `a` = 1 for cohort A and 0 for cohort B. The
+    * ECDF gap per distinct value comes from one window cumsum (fine at
+    * oracle scale), then either the KS finish (n_a, n_b, d_stat, at_value)
+    * or, with `w1`, the W₁ finish (n_a, n_b, w1): interval terms round(9)
+    * → DECIMAL(38,12) → an order-free sum.
+    */
+  def ecdfSql(cohort: String, w1: Boolean): String = {
+    val finish =
+      if (w1)
+        """tm AS (SELECT CAST(round(a.dv * (b.v - a.v), 9)
+                       AS DECIMAL(38,12)) AS tt
+                   FROM dd a JOIN dd b ON b.rv = a.rv + 1)
+         SELECT t.na AS n_a, t.nb AS n_b,
+                round(CAST(coalesce(sum(tt), 0) AS DOUBLE), 6) + 0.0 AS w1
+         FROM tm, t GROUP BY 1, 2"""
+      else
+        """m AS (SELECT max(dv) AS mx FROM dd)
+         SELECT t.na AS n_a, t.nb AS n_b,
+                round(m.mx, 6) + 0.0 AS d_stat,
+                (SELECT min(v) FROM dd WHERE dv = m.mx) AS at_value
+         FROM t, m"""
+    s"""WITH v AS ($cohort),
+              pv AS (SELECT v, CAST(sum(a) AS BIGINT) AS ca,
+                     CAST(sum(1 - a) AS BIGINT) AS cb
+                   FROM v GROUP BY 1),
+              t AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
+                     CAST(sum(cb) AS BIGINT) AS nb FROM pv),
+              c AS (SELECT v,
+                     sum(ca) OVER (ORDER BY v) AS cuma,
+                     sum(cb) OVER (ORDER BY v) AS cumb,
+                     row_number() OVER (ORDER BY v) AS rv
+                   FROM pv),
+              dd AS MATERIALIZED (SELECT v, rv,
+                     abs(CAST(cuma AS DOUBLE) / t.na -
+                         CAST(cumb AS DOUBLE) / t.nb) AS dv
+                   FROM c, t),
+              $finish"""
+  }
 
   /** [[ecdfDiff]] over an ALREADY per-value-aggregated `(\_\_v, ca, cb)`
     * relation — the seam the incremental probe enters through.
@@ -234,6 +256,24 @@ object Drift {
     (d, na, nb)
   }
 
+  /** TWO-SAMPLE KOLMOGOROV–SMIRNOV test: D = max over observed values of
+    * |F_A(v) − F_B(v)| — the distribution-free "did this cohort's whole
+    * SHAPE move" statistic that PSI's fixed buckets can miss (a shift
+    * inside one wide bucket is invisible to PSI; KS sees every quantile).
+    * Output one row: (n_a, n_b, d_stat, at_value) — the statistic plus
+    * the value where the ECDFs diverge most (min such value: rank
+    * argmaxes on doubles need a total-order tiebreak).
+    *
+    * Scale design: the ECDFs need a VALUE-ORDERED cumulative count — the
+    * q140 two-phase cumsum, but bucketed by value RANGE (floor((v−lo)/w)
+    * over nBuckets spans from one min/max pass) so bucket order IS value
+    * order: phase 1's single-partition window runs over ≤ nBuckets rows,
+    * never the data; phase 2 cumsums within buckets in parallel. Float
+    * parity: the per-value d is |cumA/nA − cumB/nB| on exact integers —
+    * identical IEEE ops on identical inputs give the identical double on
+    * both engines, so max/argmax/round introduce no drift (no cross-row
+    * float accumulation anywhere).
+    */
   def ksTest(df: DataFrame, valueCol: String, isA: Column,
       nBuckets: Int = 256): DataFrame = {
     val (d, na, nb) = ecdfDiff(df, valueCol, isA, nBuckets)

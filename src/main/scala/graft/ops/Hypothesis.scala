@@ -269,19 +269,6 @@ object Hypothesis {
        FROM g WHERE $se > 0.0"""
   }
 
-  /** Tie-corrected Mann-Whitney U between cohorts A (`isA`) and B, per
-    * group: ranks never materialize per row — per DISTINCT value the
-    * cohort counts and the prior cumulative give the tied-average rank,
-    * so the DOUBLED rank sum `2R_A = Σ na_v·(2·prev + t_v + 1)` is an
-    * exact integer (halves from tie-averaging cancel), as are
-    * `2U_A = 2R_A − n_a(n_a+1)` and the tie term `Σ(t³ − t)`. The
-    * normal-approximation z (no continuity correction — both engines
-    * would apply it identically anyway, it's omitted for simplicity)
-    * forms from those integers by one identical double sequence:
-    * `σ² = (n_a·n_b/12)·(N+1 − ties/(N(N−1)))`,
-    * `z = (2U_A − n_a·n_b) / (2σ)`. Groups where either cohort is empty
-    * or σ² = 0 (all values tied) drop on both sides.
-    */
   /** Shared rank aggregate of the rank family ([[mannWhitneyU]],
     * [[rocAuc]]): per group the cohort sizes, the DOUBLED tie-averaged
     * rank sum of cohort A, and the tie term — all exact integers (ranks
@@ -309,6 +296,19 @@ object Hypothesis {
       .filter(col("n_a") > 0 && col("n_b") > 0)
   }
 
+  /** Tie-corrected Mann-Whitney U between cohorts A (`isA`) and B, per
+    * group: ranks never materialize per row — per DISTINCT value the
+    * cohort counts and the prior cumulative give the tied-average rank,
+    * so the DOUBLED rank sum `2R_A = Σ na_v·(2·prev + t_v + 1)` is an
+    * exact integer (halves from tie-averaging cancel), as are
+    * `2U_A = 2R_A − n_a(n_a+1)` and the tie term `Σ(t³ − t)`. The
+    * normal-approximation z (no continuity correction — both engines
+    * would apply it identically anyway, it's omitted for simplicity)
+    * forms from those integers by one identical double sequence:
+    * `σ² = (n_a·n_b/12)·(N+1 − ties/(N(N−1)))`,
+    * `z = (2U_A − n_a·n_b) / (2σ)`. Groups where either cohort is empty
+    * or σ² = 0 (all values tied) drop on both sides.
+    */
   def mannWhitneyU(df: DataFrame, groupCol: String, isA: Column,
       value: Column): DataFrame = {
     val agg = rankAgg(df, groupCol, isA, value)

@@ -26,6 +26,23 @@ object FeatureTables {
         col("id").as("osm_id"), col("tags"),
         struct(col("lon").as("lng"), col("lat").as("lat")).as("geom"))
 
+  /** The node coordinates every way → coordinate join reads: (nd, lon,
+    * lat), one row per node id. An id with several rows (overlapping
+    * extracts, files that share boundary nodes) keeps its highest
+    * `version`, ties broken by the smallest (lon, lat), so a repeated row
+    * can neither close an extra segment nor repeat a point. A `nodes`
+    * table without a `version` column ranks by coordinates alone.
+    */
+  private[osm] def nodeCoords(nodes: DataFrame): DataFrame = {
+    val newestFirst =
+      if (nodes.columns.contains("version")) -col("version").cast("long")
+      else lit(null).cast("long")
+    nodes.groupBy(col("id").as("nd"))
+      .agg(min(struct(coalesce(newestFirst, lit(Long.MaxValue)).as("k"),
+        col("lon"), col("lat"))).as("c"))
+      .select(col("nd"), col("c.lon").as("lon"), col("c.lat").as("lat"))
+  }
+
   /** J2/A5/O1: resolve each way's ORDERED nd refs to coordinates.
     *
     * Plan shape (scale-reviewed): posexplode(nds) → shuffle join against
@@ -39,7 +56,7 @@ object FeatureTables {
     val exploded = ways.select(col("id").as("way_id"),
       posexplode(col("nds")).as(Seq("pos", "nd")))
     exploded
-      .join(nodes.select(col("id").as("nd"), col("lon"), col("lat")), Seq("nd"))
+      .join(nodeCoords(nodes), Seq("nd"))
       .groupBy("way_id")
       .agg(
         transform(

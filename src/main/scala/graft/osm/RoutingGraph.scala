@@ -58,7 +58,7 @@ object RoutingGraph {
   /** `ways_vertices_pgr`: vertex nodes with coordinates. */
   def vertices(routable: DataFrame, nodes: DataFrame): DataFrame =
     vertexNodeIds(routable)
-      .join(nodes, col("vertex_nd") === col("id"))
+      .join(FeatureTables.nodeCoords(nodes), col("vertex_nd") === col("nd"))
       .select(col("vertex_nd").as("vid"), col("lon").as("lng"), col("lat"))
 
   /** `ways` edge table: each routable way split at its vertices.
@@ -72,11 +72,12 @@ object RoutingGraph {
     * windows, both partitioned (never global), and no aggregate-and-join
     * back: the flag over the joined rows equals the flag over all of the
     * way's rows, because either every row of an nd survives the inner node
-    * join or none does (a duplicated node row duplicates all of them).
+    * join or none does. Coordinates come from
+    * [[FeatureTables.nodeCoords]], one row per node id.
     */
   def edges(routable: DataFrame, nodes: DataFrame): DataFrame = {
     val exploded = wayNodes(routable)
-      .join(nodes.select(col("id").as("nd"), col("lon"), col("lat")), Seq("nd"))
+      .join(FeatureTables.nodeCoords(nodes), Seq("nd"))
       .withColumn("is_vertex", vertexFlag(_.over(Window.partitionBy("nd"))))
     val w = Window.partitionBy("way_id").orderBy("pos")
     // Segment index: how many vertices seen before this position. A vertex

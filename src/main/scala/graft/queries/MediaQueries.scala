@@ -538,8 +538,8 @@ object MediaQueries {
     * batch samples: '' = corpus identity, the trunc form = the
     * half-amplitude re-encode (DuckDB trunc ≡ Java int division toward
     * zero — the CLAUDE.md cast discipline).
-    */
-  /** Energy CTE must be AS MATERIALIZED: it is referenced twice (windows
+    *
+    * Energy CTE must be AS MATERIALIZED: it is referenced twice (windows
     * b and b+1 self-join) and DuckDB 1.0 inlines multi-referenced CTEs
     * (the q165 lesson).
     */

@@ -585,16 +585,6 @@ object RetrievalQueries {
          FROM st GROUP BY user_id"""),
   )
 
-  /** Q161 [X]: regular-grid resampling with LOCF gap fill — every
-    * user's event series onto a 6-hour grid (`Timeseries.resampleLocf`),
-    * empty buckets carrying the last observation forward with a `filled`
-    * flag: the ragged-log → model-ready-series operator. The in-bucket
-    * representative is the LATEST event (ts, then value — a total
-    * order); no arithmetic touches the value, so the only parity surface
-    * is integer bucketing. The twin mirrors the dedup window, the
-    * per-user generate_series grid, and DuckDB's `last_value IGNORE
-    * NULLS` frame.
-    */
   /** q161's twin, shared with the q168/q169 smoothers that stack on the
     * same grid.
     */
@@ -621,6 +611,16 @@ object RetrievalQueries {
                 v IS NULL AS filled
          FROM j"""
 
+  /** Q161 [X]: regular-grid resampling with LOCF gap fill — every
+    * user's event series onto a 6-hour grid (`Timeseries.resampleLocf`),
+    * empty buckets carrying the last observation forward with a `filled`
+    * flag: the ragged-log → model-ready-series operator. The in-bucket
+    * representative is the LATEST event (ts, then value — a total
+    * order); no arithmetic touches the value, so the only parity surface
+    * is integer bucketing. The twin mirrors the dedup window, the
+    * per-user generate_series grid, and DuckDB's `last_value IGNORE
+    * NULLS` frame.
+    */
   val q161 = OracleQuery(
     "q161_resample_locf",
     (s, d) => graft.ops.Timeseries.resampleLocf(

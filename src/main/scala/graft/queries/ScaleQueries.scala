@@ -353,20 +353,7 @@ object ScaleQueries {
     "q86_jaccard_join",
     (s, d) => Dedup.jaccardSimilarityJoin(
       Tables.documents(s, d), "doc_id", "text", n = 2, tauNum = 1, tauDen = 2),
-    Some("""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-            bg AS (SELECT DISTINCT doc_id, g FROM
-                     (SELECT doc_id, unnest([t[i] || ' ' || t[i+1]
-                             FOR i IN generate_series(1, len(t) - 1)]) AS g FROM tok)),
-            n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nn FROM bg GROUP BY doc_id),
-            i AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                         CAST(count(*) AS BIGINT) AS n_common
-                  FROM bg a JOIN bg b ON b.g = a.g AND b.doc_id > a.doc_id
-                  GROUP BY 1, 2)
-            SELECT doc_a, doc_b, n_common,
-                   round(CAST(n_common AS DOUBLE) /
-                         CAST(x.nn + y.nn - n_common AS DOUBLE), 6) AS jac
-            FROM i JOIN n x ON x.doc_id = doc_a JOIN n y ON y.doc_id = doc_b
-            WHERE 2 * n_common >= (x.nn + y.nn - n_common)"""),
+    Some(Dedup.gramJoinSql(Dedup.Jaccard, 1, 2)),
   )
 
   /** Q133 [layout]: rendezvous sharding under a reshard — each document's
@@ -461,22 +448,7 @@ object ScaleQueries {
         .withColumn("recall",
           round(col("n_caught").cast("double") / col("n_true"), 6))
     },
-    Some(s"""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-              bg AS (SELECT DISTINCT doc_id, g FROM
-                      (SELECT doc_id, unnest([t[i] || ' ' || t[i+1]
-                              FOR i IN generate_series(1, len(t) - 1)]) AS g FROM tok)),
-              nn AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nn
-                     FROM bg GROUP BY doc_id),
-              iv AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                       CAST(count(*) AS BIGINT) AS n_common
-                     FROM bg a JOIN bg b ON b.g = a.g AND b.doc_id > a.doc_id
-                     GROUP BY 1, 2),
-              ex AS (SELECT doc_a, doc_b,
-                       round(CAST(n_common AS DOUBLE) /
-                             CAST(x.nn + y.nn - n_common AS DOUBLE), 6) AS jac
-                     FROM iv JOIN nn x ON x.doc_id = doc_a
-                          JOIN nn y ON y.doc_id = doc_b
-                     WHERE 5 * n_common >= 3 * (x.nn + y.nn - n_common)),
+    Some(s"""WITH ex AS (${Dedup.gramJoinSql(Dedup.Jaccard, 3, 5)}),
               sig AS (${ExtQueries.minhashSigSql}),
               cand AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
                        FROM sig x JOIN sig y
@@ -556,27 +528,10 @@ object ScaleQueries {
     (s, d) => graft.ops.Drift.ksTest(
       Tables.events(s, d).filter(col("event_type").isin("purchase", "click")),
       "value", col("event_type") === "purchase"),
-    Some("""WITH v AS (SELECT value AS v,
-                     CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS a
-                   FROM events WHERE event_type IN ('purchase', 'click')),
-              pv AS (SELECT v, CAST(sum(a) AS BIGINT) AS ca,
-                     CAST(sum(1 - a) AS BIGINT) AS cb
-                   FROM v GROUP BY 1),
-              t AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
-                     CAST(sum(cb) AS BIGINT) AS nb FROM pv),
-              c AS (SELECT v,
-                     sum(ca) OVER (ORDER BY v) AS cuma,
-                     sum(cb) OVER (ORDER BY v) AS cumb
-                   FROM pv),
-              dd AS MATERIALIZED (SELECT v,
-                     abs(CAST(cuma AS DOUBLE) / t.na -
-                         CAST(cumb AS DOUBLE) / t.nb) AS dv
-                   FROM c, t),
-              m AS (SELECT max(dv) AS mx FROM dd)
-         SELECT t.na AS n_a, t.nb AS n_b,
-                round(m.mx, 6) + 0.0 AS d_stat,
-                (SELECT min(v) FROM dd WHERE dv = m.mx) AS at_value
-         FROM t, m"""),
+    Some(graft.ops.Drift.ecdfSql(
+      """SELECT value AS v,
+                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS a
+         FROM events WHERE event_type IN ('purchase', 'click')""", w1 = false)),
   )
 
   /** Q197 [X]: 1-D Wasserstein (earth mover's) drift distance
@@ -591,29 +546,10 @@ object ScaleQueries {
     (s, d) => graft.ops.Drift.wasserstein1(
       Tables.events(s, d).filter(col("event_type").isin("purchase", "click")),
       "value", col("event_type") === "purchase"),
-    Some("""WITH v AS (SELECT value AS v,
-                     CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS a
-                   FROM events WHERE event_type IN ('purchase', 'click')),
-              pv AS (SELECT v, CAST(sum(a) AS BIGINT) AS ca,
-                     CAST(sum(1 - a) AS BIGINT) AS cb
-                   FROM v GROUP BY 1),
-              t AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
-                     CAST(sum(cb) AS BIGINT) AS nb FROM pv),
-              c AS (SELECT v,
-                     sum(ca) OVER (ORDER BY v) AS cuma,
-                     sum(cb) OVER (ORDER BY v) AS cumb,
-                     row_number() OVER (ORDER BY v) AS rv
-                   FROM pv),
-              dd AS MATERIALIZED (SELECT v, rv,
-                     abs(CAST(cuma AS DOUBLE) / t.na -
-                         CAST(cumb AS DOUBLE) / t.nb) AS dv
-                   FROM c, t),
-              tm AS (SELECT CAST(round(a.dv * (b.v - a.v), 9)
-                       AS DECIMAL(38,12)) AS tt
-                   FROM dd a JOIN dd b ON b.rv = a.rv + 1)
-         SELECT t.na AS n_a, t.nb AS n_b,
-                round(CAST(coalesce(sum(tt), 0) AS DOUBLE), 6) + 0.0 AS w1
-         FROM tm, t GROUP BY 1, 2"""),
+    Some(graft.ops.Drift.ecdfSql(
+      """SELECT value AS v,
+                CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS a
+         FROM events WHERE event_type IN ('purchase', 'click')""", w1 = true)),
   )
 
   /** Q198 [X]: join-key SKEW advisor (`ops/Salting.skewReport`) — the
@@ -704,27 +640,10 @@ object ScaleQueries {
       graft.ops.Drift.incrementalKs(corpus,
         ev.filter(col("event_type") === "purchase"), "value")
     },
-    Some("""WITH v AS (SELECT value AS v,
-                     CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS a
-                   FROM events WHERE event_type IN ('purchase', 'click')),
-              pv AS (SELECT v, CAST(sum(a) AS BIGINT) AS ca,
-                     CAST(sum(1 - a) AS BIGINT) AS cb
-                   FROM v GROUP BY 1),
-              t AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
-                     CAST(sum(cb) AS BIGINT) AS nb FROM pv),
-              c AS (SELECT v,
-                     sum(ca) OVER (ORDER BY v) AS cuma,
-                     sum(cb) OVER (ORDER BY v) AS cumb
-                   FROM pv),
-              dd AS MATERIALIZED (SELECT v,
-                     abs(CAST(cuma AS DOUBLE) / t.na -
-                         CAST(cumb AS DOUBLE) / t.nb) AS dv
-                   FROM c, t),
-              m AS (SELECT max(dv) AS mx FROM dd)
-         SELECT t.na AS n_a, t.nb AS n_b,
-                round(m.mx, 6) + 0.0 AS d_stat,
-                (SELECT min(v) FROM dd WHERE dv = m.mx) AS at_value
-         FROM t, m"""),
+    Some(graft.ops.Drift.ecdfSql(
+      """SELECT value AS v,
+                CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS a
+         FROM events WHERE event_type IN ('purchase', 'click')""", w1 = false)),
   )
 
   /** Q202 [X]: INCREMENTAL Wasserstein-1
@@ -744,29 +663,10 @@ object ScaleQueries {
       graft.ops.Drift.incrementalWasserstein(corpus,
         ev.filter(col("event_type") === "purchase"), "value")
     },
-    Some("""WITH v AS (SELECT value AS v,
-                     CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS a
-                   FROM events WHERE event_type IN ('purchase', 'click')),
-              pv AS (SELECT v, CAST(sum(a) AS BIGINT) AS ca,
-                     CAST(sum(1 - a) AS BIGINT) AS cb
-                   FROM v GROUP BY 1),
-              t AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
-                     CAST(sum(cb) AS BIGINT) AS nb FROM pv),
-              c AS (SELECT v,
-                     sum(ca) OVER (ORDER BY v) AS cuma,
-                     sum(cb) OVER (ORDER BY v) AS cumb,
-                     row_number() OVER (ORDER BY v) AS rv
-                   FROM pv),
-              dd AS MATERIALIZED (SELECT v, rv,
-                     abs(CAST(cuma AS DOUBLE) / t.na -
-                         CAST(cumb AS DOUBLE) / t.nb) AS dv
-                   FROM c, t),
-              tm AS (SELECT CAST(round(a.dv * (b.v - a.v), 9)
-                       AS DECIMAL(38,12)) AS tt
-                   FROM dd a JOIN dd b ON b.rv = a.rv + 1)
-         SELECT t.na AS n_a, t.nb AS n_b,
-                round(CAST(coalesce(sum(tt), 0) AS DOUBLE), 6) + 0.0 AS w1
-         FROM tm, t GROUP BY 1, 2"""),
+    Some(graft.ops.Drift.ecdfSql(
+      """SELECT value AS v,
+                CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS a
+         FROM events WHERE event_type IN ('purchase', 'click')""", w1 = true)),
   )
 
   /** Q205 [X]: QUANTIZED incremental KS
@@ -792,27 +692,10 @@ object ScaleQueries {
       graft.ops.Drift.incrementalKsQuantized(corpus,
         ev.filter(col("event_type") === "purchase"), "value", step)
     },
-    Some("""WITH v AS (SELECT floor(value / 0.25) * 0.25 AS v,
-                     CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS a
-                   FROM events WHERE event_type IN ('purchase', 'click')),
-              pv AS (SELECT v, CAST(sum(a) AS BIGINT) AS ca,
-                     CAST(sum(1 - a) AS BIGINT) AS cb
-                   FROM v GROUP BY 1),
-              t AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
-                     CAST(sum(cb) AS BIGINT) AS nb FROM pv),
-              c AS (SELECT v,
-                     sum(ca) OVER (ORDER BY v) AS cuma,
-                     sum(cb) OVER (ORDER BY v) AS cumb
-                   FROM pv),
-              dd AS MATERIALIZED (SELECT v,
-                     abs(CAST(cuma AS DOUBLE) / t.na -
-                         CAST(cumb AS DOUBLE) / t.nb) AS dv
-                   FROM c, t),
-              m AS (SELECT max(dv) AS mx FROM dd)
-         SELECT t.na AS n_a, t.nb AS n_b,
-                round(m.mx, 6) + 0.0 AS d_stat,
-                (SELECT min(v) FROM dd WHERE dv = m.mx) AS at_value
-         FROM t, m"""),
+    Some(graft.ops.Drift.ecdfSql(
+      """SELECT floor(value / 0.25) * 0.25 AS v,
+                CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS a
+         FROM events WHERE event_type IN ('purchase', 'click')""", w1 = false)),
   )
 
   /** Q206 [X]: QUANTIZED incremental Wasserstein-1 — the same frozen
@@ -832,29 +715,10 @@ object ScaleQueries {
       graft.ops.Drift.incrementalWassersteinQuantized(corpus,
         ev.filter(col("event_type") === "purchase"), "value", step)
     },
-    Some("""WITH v AS (SELECT floor(value / 0.25) * 0.25 AS v,
-                     CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS a
-                   FROM events WHERE event_type IN ('purchase', 'click')),
-              pv AS (SELECT v, CAST(sum(a) AS BIGINT) AS ca,
-                     CAST(sum(1 - a) AS BIGINT) AS cb
-                   FROM v GROUP BY 1),
-              t AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
-                     CAST(sum(cb) AS BIGINT) AS nb FROM pv),
-              c AS (SELECT v,
-                     sum(ca) OVER (ORDER BY v) AS cuma,
-                     sum(cb) OVER (ORDER BY v) AS cumb,
-                     row_number() OVER (ORDER BY v) AS rv
-                   FROM pv),
-              dd AS MATERIALIZED (SELECT v, rv,
-                     abs(CAST(cuma AS DOUBLE) / t.na -
-                         CAST(cumb AS DOUBLE) / t.nb) AS dv
-                   FROM c, t),
-              tm AS (SELECT CAST(round(a.dv * (b.v - a.v), 9)
-                       AS DECIMAL(38,12)) AS tt
-                   FROM dd a JOIN dd b ON b.rv = a.rv + 1)
-         SELECT t.na AS n_a, t.nb AS n_b,
-                round(CAST(coalesce(sum(tt), 0) AS DOUBLE), 6) + 0.0 AS w1
-         FROM tm, t GROUP BY 1, 2"""),
+    Some(graft.ops.Drift.ecdfSql(
+      """SELECT floor(value / 0.25) * 0.25 AS v,
+                CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS a
+         FROM events WHERE event_type IN ('purchase', 'click')""", w1 = true)),
   )
 
   /** Q212 [X layout]: shard manifest ([[graft.ops.Manifest.shardManifest]])

@@ -26,22 +26,7 @@ object SimilarityQueries {
     "q103_cosine_join",
     (s, d) => Dedup.cosineSimilarityJoin(
       Tables.documents(s, d), "doc_id", "text", n = 2, tauNum = 4, tauDen = 5),
-    Some("""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-                 bg AS (SELECT doc_id, unnest([t[i] || ' ' || t[i+1]
-                          FOR i IN generate_series(1, len(t) - 1)]) AS g FROM tok),
-                 tf AS (SELECT doc_id, g, least(CAST(count(*) AS BIGINT), 65535) AS w
-                        FROM bg GROUP BY 1, 2),
-                 n2 AS (SELECT doc_id, CAST(sum(w * w) AS BIGINT) AS n2
-                        FROM tf GROUP BY 1),
-                 i AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                              CAST(sum(a.w * b.w) AS BIGINT) AS dot
-                       FROM tf a JOIN tf b ON b.g = a.g AND b.doc_id > a.doc_id
-                       GROUP BY 1, 2)
-            SELECT doc_a, doc_b, dot,
-                   round(CAST(dot AS DOUBLE) /
-                         sqrt(CAST(x.n2 * y.n2 AS DOUBLE)), 6) AS cos
-            FROM i JOIN n2 x ON x.doc_id = doc_a JOIN n2 y ON y.doc_id = doc_b
-            WHERE 25 * CAST(dot AS HUGEINT) * dot >= 16 * CAST(x.n2 AS HUGEINT) * y.n2"""),
+    Some(Dedup.gramJoinSql(Dedup.Cosine, 4, 5)),
   )
 
   /** Q104 [X]: seeded ±1 random projection (JL sketch) of the embeddings
@@ -79,19 +64,7 @@ object SimilarityQueries {
     "q105_containment_join",
     (s, d) => Dedup.containmentJoin(
       Tables.documents(s, d), "doc_id", "text", n = 2, tauNum = 4, tauDen = 5),
-    Some("""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-                 bg AS (SELECT DISTINCT doc_id, g FROM
-                          (SELECT doc_id, unnest([t[i] || ' ' || t[i+1]
-                                  FOR i IN generate_series(1, len(t) - 1)]) AS g FROM tok)),
-                 n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nn FROM bg GROUP BY doc_id),
-                 i AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                              CAST(count(*) AS BIGINT) AS n_common
-                       FROM bg a JOIN bg b ON b.g = a.g AND b.doc_id != a.doc_id
-                       GROUP BY 1, 2)
-            SELECT doc_a, doc_b, n_common,
-                   round(CAST(n_common AS DOUBLE) / x.nn, 6) AS containment
-            FROM i JOIN n x ON x.doc_id = doc_a
-            WHERE 5 * n_common >= 4 * x.nn"""),
+    Some(Dedup.gramJoinSql(Dedup.Containment, 4, 5)),
   )
 
   /** Q106 [X]: reciprocal-rank fusion — the standard hybrid-retrieval
@@ -291,28 +264,7 @@ object SimilarityQueries {
         docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
         tauNum = 1, tauDen = 2)
     },
-    Some("""WITH ct AS (SELECT doc_id, string_split(text, ' ') AS t
-                        FROM documents WHERE doc_id % 10 != 0),
-                 bt AS (SELECT doc_id, string_split(text, ' ') AS t
-                        FROM documents WHERE doc_id % 10 = 0),
-                 cbg AS (SELECT DISTINCT doc_id, g FROM
-                          (SELECT doc_id, unnest([t[i] || ' ' || t[i+1]
-                                  FOR i IN generate_series(1, len(t) - 1)]) AS g FROM ct)),
-                 bbg AS (SELECT DISTINCT doc_id, g FROM
-                          (SELECT doc_id, unnest([t[i] || ' ' || t[i+1]
-                                  FOR i IN generate_series(1, len(t) - 1)]) AS g FROM bt)),
-                 cn AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nn FROM cbg GROUP BY 1),
-                 bn AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nn FROM bbg GROUP BY 1),
-                 i AS (SELECT b.doc_id AS doc_a, c.doc_id AS doc_b,
-                              CAST(count(*) AS BIGINT) AS n_common
-                       FROM bbg b JOIN cbg c ON c.g = b.g
-                       GROUP BY 1, 2)
-            SELECT doc_a, doc_b, n_common,
-                   round(CAST(n_common AS DOUBLE) /
-                         CAST(x.nn + y.nn - n_common AS DOUBLE), 6) AS jac
-            FROM i JOIN bn x ON x.doc_id = doc_a
-                   JOIN cn y ON y.doc_id = doc_b
-            WHERE 2 * n_common >= x.nn + y.nn - n_common"""),
+    Some(Dedup.gramJoinSql(Dedup.Jaccard, 1, 2, batch = true)),
   )
 
   /** Q113 [X]: EXACT incremental CONTAINMENT join — the 10%-of-ids
@@ -332,26 +284,7 @@ object SimilarityQueries {
         docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
         tauNum = 3, tauDen = 5)
     },
-    Some("""WITH ct AS (SELECT doc_id, string_split(text, ' ') AS t
-                        FROM documents WHERE doc_id % 10 != 0),
-                 bt AS (SELECT doc_id, string_split(text, ' ') AS t
-                        FROM documents WHERE doc_id % 10 = 0),
-                 cbg AS (SELECT DISTINCT doc_id, g FROM
-                          (SELECT doc_id, unnest([t[i] || ' ' || t[i+1]
-                                  FOR i IN generate_series(1, len(t) - 1)]) AS g FROM ct)),
-                 bbg AS (SELECT DISTINCT doc_id, g FROM
-                          (SELECT doc_id, unnest([t[i] || ' ' || t[i+1]
-                                  FOR i IN generate_series(1, len(t) - 1)]) AS g FROM bt)),
-                 bn AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nn FROM bbg GROUP BY 1),
-                 i AS (SELECT b.doc_id AS doc_a, c.doc_id AS doc_b,
-                              CAST(count(*) AS BIGINT) AS n_common
-                       FROM bbg b JOIN cbg c ON c.g = b.g
-                       GROUP BY 1, 2)
-            SELECT doc_a, doc_b, n_common,
-                   round(CAST(n_common AS DOUBLE) / CAST(x.nn AS DOUBLE), 6)
-                     AS containment
-            FROM i JOIN bn x ON x.doc_id = doc_a
-            WHERE 5 * n_common >= 3 * x.nn"""),
+    Some(Dedup.gramJoinSql(Dedup.Containment, 3, 5, batch = true)),
   )
 
   /** Q114 [X]: EXACT incremental COSINE join — the 10%-of-ids "batch"
@@ -372,23 +305,7 @@ object SimilarityQueries {
         docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
         tauNum = 7, tauDen = 10)
     },
-    Some("""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-                 bg AS (SELECT doc_id, unnest([t[i] || ' ' || t[i+1]
-                          FOR i IN generate_series(1, len(t) - 1)]) AS g FROM tok),
-                 tf AS (SELECT doc_id, g, least(CAST(count(*) AS BIGINT), 65535) AS w
-                        FROM bg GROUP BY 1, 2),
-                 n2 AS (SELECT doc_id, CAST(sum(w * w) AS BIGINT) AS n2
-                        FROM tf GROUP BY 1),
-                 i AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                              CAST(sum(a.w * b.w) AS BIGINT) AS dot
-                       FROM tf a JOIN tf b ON b.g = a.g
-                        AND a.doc_id % 10 = 0 AND b.doc_id % 10 != 0
-                       GROUP BY 1, 2)
-            SELECT doc_a, doc_b, dot,
-                   round(CAST(dot AS DOUBLE) /
-                         sqrt(CAST(x.n2 * y.n2 AS DOUBLE)), 6) AS cos
-            FROM i JOIN n2 x ON x.doc_id = doc_a JOIN n2 y ON y.doc_id = doc_b
-            WHERE 100 * CAST(dot AS HUGEINT) * dot >= 49 * CAST(x.n2 AS HUGEINT) * y.n2"""),
+    Some(Dedup.gramJoinSql(Dedup.Cosine, 7, 10, batch = true)),
   )
 
   /** Q115 [X]: GramIndex APPEND maintenance certificate — the index is
@@ -409,20 +326,7 @@ object SimilarityQueries {
         .append(docs.filter(col("doc_id") % 10 === 0), "doc_id", "text")
       Dedup.jaccardSimilarityJoin(idx, tauNum = 1, tauDen = 2)
     },
-    Some("""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-            bg AS (SELECT DISTINCT doc_id, g FROM
-                     (SELECT doc_id, unnest([t[i] || ' ' || t[i+1]
-                             FOR i IN generate_series(1, len(t) - 1)]) AS g FROM tok)),
-            n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nn FROM bg GROUP BY doc_id),
-            i AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                         CAST(count(*) AS BIGINT) AS n_common
-                  FROM bg a JOIN bg b ON b.g = a.g AND b.doc_id > a.doc_id
-                  GROUP BY 1, 2)
-            SELECT doc_a, doc_b, n_common,
-                   round(CAST(n_common AS DOUBLE) /
-                         CAST(x.nn + y.nn - n_common AS DOUBLE), 6) AS jac
-            FROM i JOIN n x ON x.doc_id = doc_a JOIN n y ON y.doc_id = doc_b
-            WHERE 2 * n_common >= (x.nn + y.nn - n_common)"""),
+    Some(Dedup.gramJoinSql(Dedup.Jaccard, 1, 2)),
   )
 
   /** Q116 [X]: persisted gram-index certificate — build the corpus
@@ -443,20 +347,7 @@ object SimilarityQueries {
       Scratch.collectLocal(Dedup.jaccardSimilarityJoin(
         graft.ext.IndexStore.loadGramIndex(s, out), tauNum = 1, tauDen = 2))
     },
-    Some("""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-            bg AS (SELECT DISTINCT doc_id, g FROM
-                     (SELECT doc_id, unnest([t[i] || ' ' || t[i+1]
-                             FOR i IN generate_series(1, len(t) - 1)]) AS g FROM tok)),
-            n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nn FROM bg GROUP BY doc_id),
-            i AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                         CAST(count(*) AS BIGINT) AS n_common
-                  FROM bg a JOIN bg b ON b.g = a.g AND b.doc_id > a.doc_id
-                  GROUP BY 1, 2)
-            SELECT doc_a, doc_b, n_common,
-                   round(CAST(n_common AS DOUBLE) /
-                         CAST(x.nn + y.nn - n_common AS DOUBLE), 6) AS jac
-            FROM i JOIN n x ON x.doc_id = doc_a JOIN n y ON y.doc_id = doc_b
-            WHERE 2 * n_common >= (x.nn + y.nn - n_common)"""),
+    Some(Dedup.gramJoinSql(Dedup.Jaccard, 1, 2)),
   )
 
   /** Q117 [X]: incremental SIMHASH probe — the 10%-of-ids "batch"
@@ -510,24 +401,8 @@ object SimilarityQueries {
         col("admit").cast("long").as("admit"))
     },
     Some(s"""WITH sig AS ($simhash64Sql),
-         ct AS (SELECT doc_id, string_split(text, ' ') AS t
-                FROM documents WHERE doc_id % 10 != 0),
-         bt AS (SELECT doc_id, string_split(text, ' ') AS t
-                FROM documents WHERE doc_id % 10 = 0),
-         cbg AS (SELECT DISTINCT doc_id, g FROM
-                  (SELECT doc_id, unnest([t[i] || ' ' || t[i+1]
-                          FOR i IN generate_series(1, len(t) - 1)]) AS g FROM ct)),
-         bbg AS (SELECT DISTINCT doc_id, g FROM
-                  (SELECT doc_id, unnest([t[i] || ' ' || t[i+1]
-                          FOR i IN generate_series(1, len(t) - 1)]) AS g FROM bt)),
-         cn AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nn FROM cbg GROUP BY 1),
-         bn AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nn FROM bbg GROUP BY 1),
-         ji AS (SELECT b.doc_id AS doc_a, c.doc_id AS doc_b,
-                       CAST(count(*) AS BIGINT) AS n_common
-                FROM bbg b JOIN cbg c ON c.g = b.g GROUP BY 1, 2),
-         jd AS (SELECT DISTINCT doc_a AS doc_id FROM ji
-                JOIN bn x ON x.doc_id = doc_a JOIN cn y ON y.doc_id = doc_b
-                WHERE 2 * n_common >= x.nn + y.nn - n_common),
+         jd AS (SELECT DISTINCT doc_a AS doc_id FROM
+                (${Dedup.gramJoinSql(Dedup.Jaccard, 1, 2, batch = true)})),
          sd AS (SELECT DISTINCT a.doc_id FROM sig a JOIN sig b
                 ON a.doc_id % 10 = 0 AND b.doc_id % 10 != 0
                 WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
@@ -999,16 +874,14 @@ object SimilarityQueries {
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
       val cSig = Similarity.srpSignature(corpus, "embedding", "vec_id")
-        .select(col("vec_id").as("__id"), col("sh"))
         .localCheckpoint()
       val labelsF = Future(Similarity.srpClustersFromSig(
         corpus, "vec_id", cSig, maxDist = 16))
       val pairsF = Future(Similarity.incrementalSrpPairs(
-        cSig.select(col("__id").as("vec_id"), col("sh")),
-        batch, "embedding", "vec_id", maxDist = 16).localCheckpoint())
+        cSig, batch, "embedding", "vec_id", maxDist = 16).localCheckpoint())
       val labels = Await.result(labelsF, Duration.Inf)
       val pairs = Await.result(pairsF, Duration.Inf)
-      Similarity.adoptSrpClusters(labels, pairs, batch, "vec_id")
+      graft.ext.DedupCluster.adopt(labels, pairs, batch, "vec_id")
     },
     Some(s"""WITH RECURSIVE sig AS ($srpSql),
                  cs AS (SELECT * FROM sig WHERE vec_id % 10 != 0),
@@ -1061,15 +934,6 @@ object SimilarityQueries {
          FROM c WHERE levenshtein(ka, kb) <= 2"""),
   )
 
-  /** Q171 [X]: embedding covariance matrix
-    * (`Similarity.covarianceMatrix`) — the d(d+1)/2 upper-triangle
-    * whitening/PCA-prep statistic, every sum integer-exact via the q104
-    * 2^-40 truncation (float products are exact doubles; power-of-two
-    * scaling is exact; truncation + integer sums are order-free), doubles
-    * only in the final fixed-shape expression on both engines. The twin
-    * mirrors Spark's truncating double→long cast as
-    * `CAST(trunc(·) AS BIGINT)`.
-    */
   /** q171's twin, shared with q174 (the incremental sketch finalizes to
     * the bit-identical full-corpus matrix, so the SAME full recompute is
     * its oracle — equality with it IS the mergeability certificate).
@@ -1094,6 +958,15 @@ object SimilarityQueries {
                   + 0.0 AS cov
          FROM p JOIN s sa ON sa.i = p.i JOIN s sb ON sb.i = p.j, n"""
 
+  /** Q171 [X]: embedding covariance matrix
+    * (`Similarity.covarianceMatrix`) — the d(d+1)/2 upper-triangle
+    * whitening/PCA-prep statistic, every sum integer-exact via the q104
+    * 2^-40 truncation (float products are exact doubles; power-of-two
+    * scaling is exact; truncation + integer sums are order-free), doubles
+    * only in the final fixed-shape expression on both engines. The twin
+    * mirrors Spark's truncating double→long cast as
+    * `CAST(trunc(·) AS BIGINT)`.
+    */
   val q171 = OracleQuery(
     "q171_embedding_covariance",
     (s, d) => Similarity.covarianceMatrix(

@@ -139,11 +139,6 @@ object StubCodecSql {
                round(avg(m), 6) AS avg_px
         FROM fm GROUP BY media_id"""
 
-  /** The q57 twin — decodeAudio's sample stream (4 samples per payload
-    * byte, seed folded from C1, samples floorMod(mix, 65536) − 32768) cut
-    * into 1024-sample chunks; per-chunk RMS is sqrt of an exact integer
-    * sum (≤2^40, inside double precision) over the chunk length.
-    */
   /** Shared audio-chunk CTE body (q57, q176): per (payload, 1024-sample
     * chunk) the RMS energy — exact integer sum under the sqrt, so the
     * unrounded double is identical on both engines.
@@ -168,6 +163,11 @@ object StubCodecSql {
                 FROM smp GROUP BY 1, 2)"""
   }
 
+  /** The q57 twin — decodeAudio's sample stream (4 samples per payload
+    * byte, seed folded from C1, samples floorMod(mix, 65536) − 32768) cut
+    * into 1024-sample chunks; per-chunk RMS is sqrt of an exact integer
+    * sum (≤2^40, inside double precision) over the chunk length.
+    */
   val q57Oracle: String =
     s"""WITH $audioChunksCte
         SELECT media_id, CAST(count(*) AS BIGINT) AS n_chunks,

@@ -1059,16 +1059,6 @@ object TrainQueries {
             FROM s"""),
   )
 
-  /** Q163 [X]: triangle counts + local clustering coefficient over the
-    * LSH candidate-pair graph (`Graph.triangleStats`, degree-ordered
-    * compact-forward enumeration) — the cluster-density audit on top of
-    * q19b's edges: high-LCC components are genuine cliques of variants;
-    * a low-LCC hub is a chain of borderline matches q41's transitive
-    * closure is about to over-merge. The twin enumerates each triangle
-    * once in canonical a<b<c order over the same pair graph; the only
-    * float is the final 2·tri/deg(deg−1), rounded at 6 from exact
-    * integers on both engines.
-    */
   /** Shared twin CTE for q163/q165: the signature-CONTRACTED LSH band
     * graph in canonical u < v form — one min-id representative per
     * distinct 4-minhash signature, band edges between distinct classes
@@ -1107,6 +1097,16 @@ object TrainQueries {
       .select(col("doc_a"), col("doc_b"))
   }
 
+  /** Q163 [X]: triangle counts + local clustering coefficient over the
+    * LSH candidate-pair graph (`Graph.triangleStats`, degree-ordered
+    * compact-forward enumeration) — the cluster-density audit on top of
+    * q19b's edges: high-LCC components are genuine cliques of variants;
+    * a low-LCC hub is a chain of borderline matches q41's transitive
+    * closure is about to over-merge. The twin enumerates each triangle
+    * once in canonical a<b<c order over the same pair graph; the only
+    * float is the final 2·tri/deg(deg−1), rounded at 6 from exact
+    * integers on both engines.
+    */
   val q163 = OracleQuery(
     "q163_triangle_lcc",
     (s, d) => graft.ops.Graph.triangleStats(

@@ -572,4 +572,49 @@ class DedupSpec extends SparkSpec {
         an[IllegalArgumentException] should be thrownBy f(tn, td)
       }
   }
+
+  test("hammingPairs ≡ brute-force XOR-popcount at dist = maxDist and maxDist + 1") {
+    val rnd = new scala.util.Random(77)
+    // each base word gets variants at 0..6 flipped bits, bit 63 among the
+    // flips of every other base, so pairs sit on both sides of the radius
+    def flips(x: Long, k: Int, top: Boolean, bits: Int): Long = {
+      val pos =
+        if (top && k > 0) (bits - 1) :: rnd.shuffle((0 until bits - 1).toList).take(k - 1)
+        else rnd.shuffle((0 until bits).toList).take(k)
+      pos.foldLeft(x)((h, b) => h ^ (1L << b))
+    }
+    for ((bits, maxDist) <- Seq((64, 2), (64, 4), (16, 2))) {
+      val mask = if (bits == 64) -1L else (1L << bits) - 1
+      val rows = (0 until 24).flatMap { i =>
+        val x = rnd.nextLong() & mask
+        (0 to 6).map(k => (i * 10L + k, flips(x, k, i % 2 == 0, bits)))
+      }
+      val sig = rows.toDF("id", "h")
+      val want = (for {
+        (ia, ha) <- rows; (ib, hb) <- rows if ia < ib
+        dist = java.lang.Long.bitCount(ha ^ hb).toLong
+        if dist <= maxDist
+      } yield (ia, ib, dist)).toSet
+      def pairs(a: org.apache.spark.sql.DataFrame,
+          b: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
+        Dedup.hammingPairs(a, b, col("id"), col("h"), bits, maxDist)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      withClue(s"$bits bits, maxDist $maxDist: ") {
+        // (maxDist + 1) does not divide 64 or 16 for these radii
+        bits % (maxDist + 1) should not be 0
+        rows.exists(_._2 < 0) shouldBe (bits == 64) // bit 63 set somewhere
+        // the planted radius edge: base vs its maxDist and maxDist+1 variants
+        want.map(p => (p._1, p._2)) should contain((0L, maxDist.toLong))
+        want.map(p => (p._1, p._2)) should not contain ((0L, maxDist + 1L))
+        val self = pairs(sig, sig)
+        self shouldBe want
+        // the probe of the signature against itself (a distinct relation,
+        // so no self-pair rule) holds each pair both ways and every id with
+        // itself; restricted to doc_a < doc_b it is the self-join
+        val probe = pairs(sig, rows.toDF("id", "h"))
+        probe.filter(p => p._1 < p._2) shouldBe self
+        probe.count(p => p._1 == p._2) shouldBe rows.size
+      }
+    }
+  }
 }

@@ -139,6 +139,48 @@ class TrainOpsSpec extends SparkSpec {
     }
   }
 
+  test("adopt: min cluster among matches, unmatched ids found their own") {
+    val labels = Seq((1L, 1L), (2L, 1L), (5L, 5L), (6L, 5L), (9L, 9L))
+      .toDF("doc_id", "cluster_id")
+    val pairs = Seq(
+      (10L, 6L), (10L, 2L), // two clusters: takes the smaller id, 1
+      (11L, 6L), (11L, 5L), // two members of one cluster
+      (13L, 9L)
+    ).toDF("id_a", "id_b")
+    val batch = Seq((10L, "x"), (11L, "y"), (12L, "z"), (13L, "w"))
+      .toDF("doc_id", "text")
+    val got = DedupCluster.adopt(labels, pairs, batch, "doc_id")
+    got.columns.toSeq shouldBe Seq("doc_id", "cluster_id", "is_keeper")
+    got.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getInt(2))))
+      .toMap shouldBe Map(
+        10L -> ((1L, 0)), 11L -> ((5L, 0)),
+        12L -> ((12L, 1)), // no match: founds its own cluster, keeper
+        13L -> ((9L, 0)))
+    // the roles come from the column order, not the names
+    DedupCluster.adopt(labels, pairs.toDF("doc_a", "doc_b"), batch, "doc_id")
+      .collect().toSet shouldBe got.collect().toSet
+  }
+
+  test("clustersFromEdges: an uncut edge relation labels like a cut one") {
+    val nodes = (1L to 12L).map(i => (i, s"d$i")).toDF("id", "s")
+    // a lazy relation with its own shuffle: two chains and a triangle
+    val raw = Seq((2L, 1L), (3L, 2L), (4L, 3L), (7L, 6L), (8L, 7L),
+      (11L, 10L), (12L, 11L), (12L, 10L), (12L, 10L))
+      .toDF("src", "dst")
+    val uncut = raw.distinct().filter(col("src") =!= col("dst"))
+    val cut = uncut.localCheckpoint()
+    def labels(edges: org.apache.spark.sql.DataFrame, threshold: Long) =
+      DedupCluster.clustersFromEdges(nodes, "id", edges, threshold)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    for (threshold <- Seq(100000L, 0L)) { // driver union-find, then the loop
+      val got = labels(uncut, threshold)
+      got shouldBe labels(cut, threshold)
+      got.map(r => r._1 -> r._2).toMap shouldBe Map(
+        1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L, 6L -> 6L,
+        7L -> 6L, 8L -> 6L, 9L -> 9L, 10L -> 10L, 11L -> 10L, 12L -> 10L)
+    }
+  }
+
   test("band-star edges connect the same components as all-pairs banding") {
     val docs = Seq(
       (1L, "alpha beta gamma delta"),

@@ -35,6 +35,23 @@ class FeatureTablesSpec extends SparkSpec {
     (g.getDouble(0), g.getDouble(1)) shouldBe ((-118.0, 34.0))
   }
 
+  test("wayGeometries: a node id with several rows gives one point, newest version first") {
+    // node 2: versions 1 and 3 (3 wins); node 3: two version-2 rows (the
+    // smaller lon wins); node 4: no version at all on either row
+    val dup = Seq(
+      (1L, Option(1), -118.0, 34.0), (2L, Option(1), -117.0, 33.0),
+      (2L, Option(3), -118.1, 34.1), (3L, Option(2), -118.2, 34.2),
+      (3L, Option(2), -118.25, 34.2), (4L, None, -118.3, 34.3),
+      (4L, None, -118.3, 34.35)
+    ).toDF("id", "version", "lon", "lat")
+    val w = Seq((20L, Seq(1L, 2L, 3L, 4L))).toDF("id", "nds")
+    val g = FeatureTables.wayGeometries(w, dup).head()
+    g.getAs[Long]("n_resolved") shouldBe 4L
+    g.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("geom")
+      .map(p => (p.getDouble(0), p.getDouble(1))) shouldBe
+      Seq((-118.0, 34.0), (-118.1, 34.1), (-118.25, 34.2), (-118.3, 34.3))
+  }
+
   test("wayGeometries resolves ordered coordinates (J2/A5/O1)") {
     val g = FeatureTables.wayGeometries(ways.filter($"id" === 10L), nodes)
     val geom = g.head().getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("geom")

@@ -11,6 +11,10 @@ each plan is normalized:
   are renumbered in order of first appearance, so two plans match when they
   use the same ids in the same places, whatever their absolute values;
 - call sites (`at Dedup.scala:802`) become `at <site>`;
+- lambda instances (`Multimodal$$$Lambda$5506/0x00007f33f15ca398@f571c0d`:
+  a class-load counter, an address and an identity hash, which differ
+  between any two JVMs) become `Multimodal$$$Lambda<run>`; the enclosing
+  class still compares;
 - each `--rename OLD=NEW` replaces the word OLD with NEW (e.g. a column
   renamed on purpose).
 
@@ -29,12 +33,14 @@ IDS = [
     (re.compile(r"RDD\[(\d+)\]"), "RDD[{}]"),
 ]
 SITE = re.compile(r"at [\w$]+\.(?:scala|java):\d+")
+LAMBDA = re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+")
 
 
 def normalize(text, renames):
     for old, new in renames:
         text = re.sub(r"\b%s\b" % re.escape(old), new, text)
     text = SITE.sub("at <site>", text)
+    text = LAMBDA.sub("$Lambda<run>", text)
     for pattern, fmt in IDS:
         seen = {}
 
