@@ -1,5 +1,6 @@
 package graft.ext
 
+import java.awt.image.BufferedImage
 import java.nio.{ByteBuffer, ByteOrder}
 
 import graft.ext.Multimodal.Frame
@@ -82,20 +83,12 @@ object Containers {
     * PCM / mono / 16-bit; returns signed samples in [-32768, 32767].
     */
   def decodeWav(bytes: Array[Byte]): Array[Int] = {
-    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    def fourCC(): String = {
-      val b = new Array[Byte](4); buf.get(b); new String(b, "US-ASCII")
-    }
-    require(fourCC() == "RIFF", "decodeWav: missing RIFF magic")
-    val riffLen = buf.getInt
-    require(riffLen >= 4 && 8 + riffLen <= bytes.length,
-      s"decodeWav: RIFF length $riffLen exceeds payload")
-    require(fourCC() == "WAVE", "decodeWav: not a WAVE form")
+    val buf = riffForm(bytes, "WAVE", "decodeWav", "not a WAVE form")
     var fmtSeen = false
     var data: Array[Int] = null
-    val end = 8 + riffLen
+    val end = 8 + buf.getInt(4)
     while (buf.position() + 8 <= end) {
-      val id = fourCC()
+      val id = fourCC(buf)
       val len = buf.getInt
       require(len >= 0 && buf.position() + len <= end,
         s"decodeWav: chunk '$id' length $len overruns the form")
@@ -124,6 +117,70 @@ object Containers {
     data
   }
 
+  /** A little-endian reader over a RIFF form (shared by [[decodeWav]] and
+    * [[decodeAvi]]): checks the "RIFF" magic, the declared length against
+    * the payload and the form type, and returns the buffer positioned at
+    * the first chunk; the form ends at `8 + buf.getInt(4)`.
+    */
+  private def riffForm(bytes: Array[Byte], form: String, caller: String,
+      wrongForm: String): ByteBuffer = {
+    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    require(fourCC(buf) == "RIFF", s"$caller: missing RIFF magic")
+    val riffLen = buf.getInt
+    require(riffLen >= 4 && 8 + riffLen <= bytes.length,
+      s"$caller: RIFF length $riffLen exceeds payload")
+    require(fourCC(buf) == form, s"$caller: $wrongForm")
+    buf
+  }
+
+  private def fourCC(buf: ByteBuffer): String = {
+    val b = new Array[Byte](4); buf.get(b); new String(b, "US-ASCII")
+  }
+
+  /** Bytes per stored row of a 24 bpp DIB (BMP and AVI frames): w·3
+    * padded to a 4-byte boundary.
+    */
+  private def dibStride(w: Int): Int = (w * 3 + 3) / 4 * 4
+
+  /** Write a gray frame as DIB rows: pixel (v, v, v) = B, G, R, rows
+    * BOTTOM-UP (last image row first), each padded to [[dibStride]].
+    */
+  private def putDib(buf: ByteBuffer, f: Frame): Unit = {
+    val pad = dibStride(f.width) - f.width * 3
+    var y = f.height - 1
+    while (y >= 0) {
+      var x = 0
+      while (x < f.width) {
+        val v = (f.pixels(y * f.width + x) & 0xff).toByte
+        buf.put(v).put(v).put(v)
+        x += 1
+      }
+      var p = 0
+      while (p < pad) { buf.put(0.toByte); p += 1 }
+      y -= 1
+    }
+  }
+
+  /** Read w × h DIB rows stored from `pos` (the [[putDib]] layout) into a
+    * gray frame; gray = the blue channel (the encoders write equal
+    * channels).
+    */
+  private def readDib(bytes: Array[Byte], pos: Int, w: Int, h: Int): Frame = {
+    val px = new Array[Int](w * h)
+    var y = 0
+    while (y < h) {
+      val fileRow = pos + dibStride(w) * y
+      val imgY = h - 1 - y
+      var x = 0
+      while (x < w) {
+        px(imgY * w + x) = bytes(fileRow + x * 3) & 0xff
+        x += 1
+      }
+      y += 1
+    }
+    Frame(w, h, px)
+  }
+
   // --------------------------------------------------------------- AVI
 
   /** Serialize grayscale frames as a real uncompressed AVI: a RIFF
@@ -140,9 +197,7 @@ object Containers {
     val h = frames.head.height
     require(frames.forall(f => f.width == w && f.height == h),
       "aviBytes: frames must share one geometry")
-    val rowLen = w * 3
-    val pad = (4 - rowLen % 4) % 4
-    val frameLen = (rowLen + pad) * h
+    val frameLen = dibStride(w) * h
     val strfLen = 40
     val strhLen = 56
     val avihLen = 56
@@ -178,21 +233,7 @@ object Containers {
       .putInt(0).putInt(0)
     // movi
     tag("LIST"); buf.putInt(moviLen); tag("movi")
-    frames.foreach { f =>
-      tag("00db"); buf.putInt(frameLen)
-      var y = h - 1
-      while (y >= 0) {
-        var x = 0
-        while (x < w) {
-          val v = (f.pixels(y * w + x) & 0xff).toByte
-          buf.put(v).put(v).put(v)
-          x += 1
-        }
-        var p = 0
-        while (p < pad) { buf.put(0.toByte); p += 1 }
-        y -= 1
-      }
-    }
+    frames.foreach { f => tag("00db"); buf.putInt(frameLen); putDib(buf, f) }
     buf.array()
   }
 
@@ -203,46 +244,20 @@ object Containers {
     * frame's bottom-up padded 24 bpp rows to grayscale (blue channel).
     */
   def decodeAvi(bytes: Array[Byte]): Seq[Frame] = {
-    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    def fourCC(): String = {
-      val b = new Array[Byte](4); buf.get(b); new String(b, "US-ASCII")
-    }
-    require(fourCC() == "RIFF", "decodeAvi: missing RIFF magic")
-    val riffLen = buf.getInt
-    require(riffLen >= 4 && 8 + riffLen <= bytes.length,
-      s"decodeAvi: RIFF length $riffLen exceeds payload")
-    require(fourCC() == "AVI ", "decodeAvi: not an AVI form")
+    val buf = riffForm(bytes, "AVI ", "decodeAvi", "not an AVI form")
     var w = -1
     var h = -1
     val frames = scala.collection.mutable.ArrayBuffer[Frame]()
-    def decodeDib(pos: Int): Frame = {
-      require(w > 0 && h > 0, "decodeAvi: frame chunk before strf header")
-      val rowLen = w * 3
-      val pad = (4 - rowLen % 4) % 4
-      val px = new Array[Int](w * h)
-      var y = 0
-      while (y < h) {
-        val fileRow = pos + (rowLen + pad) * y
-        val imgY = h - 1 - y
-        var x = 0
-        while (x < w) {
-          px(imgY * w + x) = bytes(fileRow + x * 3) & 0xff
-          x += 1
-        }
-        y += 1
-      }
-      Frame(w, h, px)
-    }
     def walk(end: Int, inMovi: Boolean): Unit = {
       while (buf.position() + 8 <= end) {
-        val id = fourCC()
+        val id = fourCC(buf)
         val len = buf.getInt
         require(len >= 0 && buf.position() + len <= end,
           s"decodeAvi: chunk '$id' length $len overruns its list")
         val next = buf.position() + len + (len & 1)
         id match {
           case "LIST" =>
-            val listType = fourCC()
+            val listType = fourCC(buf)
             walk(buf.position() + len - 4, inMovi || listType == "movi")
           case "strf" =>
             require(len >= 40, "decodeAvi: strf too short")
@@ -258,16 +273,16 @@ object Containers {
             buf.position(p0)
           case c if inMovi && (c == "00db" || c == "00dc") =>
             require(w > 0 && h > 0, "decodeAvi: frame chunk before strf header")
-            val needed = (w * 3 + (4 - (w * 3) % 4) % 4) * h
+            val needed = dibStride(w) * h
             require(len >= needed,
               s"decodeAvi: frame chunk '$c' length $len shorter than $needed")
-            frames += decodeDib(buf.position())
+            frames += readDib(bytes, buf.position(), w, h)
           case _ => () // avih, strh, junk, idx1 — skip
         }
         buf.position(math.min(next, end))
       }
     }
-    walk(8 + riffLen, inMovi = false)
+    walk(8 + buf.getInt(4), inMovi = false)
     require(frames.nonEmpty, "decodeAvi: no frame chunks in movi list")
     frames.toSeq
   }
@@ -280,27 +295,14 @@ object Containers {
     * declared offset.
     */
   def bmpBytes(f: Frame): Array[Byte] = {
-    val rowLen = f.width * 3
-    val pad = (4 - rowLen % 4) % 4
-    val imgLen = (rowLen + pad) * f.height
+    val imgLen = dibStride(f.width) * f.height
     val off = 14 + 40
     val buf = ByteBuffer.allocate(off + imgLen).order(ByteOrder.LITTLE_ENDIAN)
     buf.put('B'.toByte).put('M'.toByte).putInt(off + imgLen)
       .putShort(0).putShort(0).putInt(off)
     buf.putInt(40).putInt(f.width).putInt(f.height).putShort(1).putShort(24)
       .putInt(0).putInt(imgLen).putInt(2835).putInt(2835).putInt(0).putInt(0)
-    var y = f.height - 1 // bottom-up: last image row first in the file
-    while (y >= 0) {
-      var x = 0
-      while (x < f.width) {
-        val v = (f.pixels(y * f.width + x) & 0xff).toByte
-        buf.put(v).put(v).put(v) // B, G, R
-        x += 1
-      }
-      var p = 0
-      while (p < pad) { buf.put(0.toByte); p += 1 }
-      y -= 1
-    }
+    putDib(buf, f)
     buf.array()
   }
 
@@ -326,23 +328,9 @@ object Containers {
     val compression = buf.getInt
     require(bpp == 24 && compression == 0,
       s"decodeBmp: need 24 bpp uncompressed, got bpp=$bpp comp=$compression")
-    val rowLen = w * 3
-    val pad = (4 - rowLen % 4) % 4
-    require(off + (rowLen + pad) * h <= bytes.length,
+    require(off + dibStride(w) * h <= bytes.length,
       "decodeBmp: pixel data overruns payload")
-    val px = new Array[Int](w * h)
-    var y = 0
-    while (y < h) {
-      val fileRow = off + (rowLen + pad) * y
-      val imgY = h - 1 - y // bottom-up
-      var x = 0
-      while (x < w) {
-        px(imgY * w + x) = bytes(fileRow + x * 3) & 0xff
-        x += 1
-      }
-      y += 1
-    }
-    Frame(w, h, px)
+    readDib(bytes, off, w, h)
   }
 
   // --------------------------------------------------------------- PNG
@@ -360,21 +348,7 @@ object Containers {
     * (`raster/TileStore.scala` ImageIO.read).
     */
   def pngBytes(f: Frame): Array[Byte] = {
-    require(f.width > 0 && f.height > 0, "pngBytes: empty frame")
-    val img = new java.awt.image.BufferedImage(
-      f.width, f.height, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    val raster = img.getRaster
-    var y = 0
-    while (y < f.height) {
-      var x = 0
-      while (x < f.width) {
-        val v = f.pixels(y * f.width + x)
-        require(v >= 0 && v <= 255, s"pngBytes: pixel $v outside [0, 255]")
-        raster.setSample(x, y, 0, v)
-        x += 1
-      }
-      y += 1
-    }
+    val img = grayImage(f, "pngBytes")
     val bos = new java.io.ByteArrayOutputStream()
     require(javax.imageio.ImageIO.write(img, "png", bos),
       "pngBytes: no PNG writer available")
@@ -387,16 +361,55 @@ object Containers {
     * corrupt hashes downstream exactly like a silent row-padding bug.
     */
   def decodePng(bytes: Array[Byte]): Frame = {
+    requirePngSignature(bytes, "decodePng")
+    grayFrame(readImage(bytes, "decodePng"), "decodePng")
+  }
+
+  private def requirePngSignature(bytes: Array[Byte], caller: String): Unit = {
     val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
     require(bytes.length > 8 && sig.indices.forall(i =>
-      (bytes(i) & 0xff) == sig(i)), "decodePng: missing PNG signature")
+      (bytes(i) & 0xff) == sig(i)), s"$caller: missing PNG signature")
+  }
+
+  /** ImageIO's decode of `bytes`, failing loudly when no reader accepts
+    * the stream.
+    */
+  private def readImage(bytes: Array[Byte], caller: String): BufferedImage = {
     val img = javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(bytes))
-    require(img != null, "decodePng: no reader accepted the stream")
+    require(img != null, s"$caller: no reader accepted the stream")
+    img
+  }
+
+  /** Copy a gray frame into an 8-bit `TYPE_BYTE_GRAY` image (the PNG and
+    * JPEG encoders' input); every pixel must lie in [0, 255].
+    */
+  private def grayImage(f: Frame, caller: String): BufferedImage = {
+    require(f.width > 0 && f.height > 0, s"$caller: empty frame")
+    val img = new BufferedImage(f.width, f.height, BufferedImage.TYPE_BYTE_GRAY)
+    val raster = img.getRaster
+    var y = 0
+    while (y < f.height) {
+      var x = 0
+      while (x < f.width) {
+        val v = f.pixels(y * f.width + x)
+        require(v >= 0 && v <= 255, s"$caller: pixel $v outside [0, 255]")
+        raster.setSample(x, y, 0, v)
+        x += 1
+      }
+      y += 1
+    }
+    img
+  }
+
+  /** Copy a decoded image back to a gray frame; it must be one 8-bit
+    * band (silent channel coercion would corrupt hashes downstream).
+    */
+  private def grayFrame(img: BufferedImage, caller: String): Frame = {
     val raster = img.getRaster
     require(raster.getNumBands == 1 && raster.getSampleModel
       .getSampleSize(0) == 8,
-      s"decodePng: need 8-bit single-band gray, got ${raster.getNumBands} " +
+      s"$caller: need 8-bit single-band gray, got ${raster.getNumBands} " +
         s"bands x ${raster.getSampleModel.getSampleSize(0)} bits")
     val w = img.getWidth
     val h = img.getHeight
@@ -435,8 +448,7 @@ object Containers {
         f"pngBytesRgb: pixel 0x${rgb(i)}%08x outside packed 24-bit RGB")
       i += 1
     }
-    val img = new java.awt.image.BufferedImage(
-      width, height, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val img = new BufferedImage(width, height, BufferedImage.TYPE_INT_RGB)
     img.setRGB(0, 0, width, height, rgb, 0, width)
     val bos = new java.io.ByteArrayOutputStream()
     require(javax.imageio.ImageIO.write(img, "png", bos),
@@ -450,12 +462,8 @@ object Containers {
     * channel coercion would corrupt the luma hashes downstream.
     */
   def decodePngRgb(bytes: Array[Byte]): (Int, Int, Array[Int]) = {
-    val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-    require(bytes.length > 8 && sig.indices.forall(i =>
-      (bytes(i) & 0xff) == sig(i)), "decodePngRgb: missing PNG signature")
-    val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(bytes))
-    require(img != null, "decodePngRgb: no reader accepted the stream")
+    requirePngSignature(bytes, "decodePngRgb")
+    val img = readImage(bytes, "decodePngRgb")
     val sm = img.getRaster.getSampleModel
     require(sm.getNumBands == 3 &&
       (0 until 3).forall(b => sm.getSampleSize(b) == 8),
@@ -495,23 +503,9 @@ object Containers {
     * and `MultimodalSpec` pins the aHash-survives-JPEG property.
     */
   def jpegBytes(f: Frame, quality: Float = 0.9f): Array[Byte] = {
-    require(f.width > 0 && f.height > 0, "jpegBytes: empty frame")
     require(quality > 0f && quality <= 1f,
       s"jpegBytes: quality in (0, 1], got $quality")
-    val img = new java.awt.image.BufferedImage(
-      f.width, f.height, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-    val raster = img.getRaster
-    var y = 0
-    while (y < f.height) {
-      var x = 0
-      while (x < f.width) {
-        val v = f.pixels(y * f.width + x)
-        require(v >= 0 && v <= 255, s"jpegBytes: pixel $v outside [0, 255]")
-        raster.setSample(x, y, 0, v)
-        x += 1
-      }
-      y += 1
-    }
+    val img = grayImage(f, "jpegBytes")
     val it = javax.imageio.ImageIO.getImageWritersByFormatName("jpeg")
     require(it.hasNext, "jpegBytes: no JPEG writer available")
     val writer = it.next()
@@ -536,27 +530,7 @@ object Containers {
   def decodeJpeg(bytes: Array[Byte]): Frame = {
     require(bytes.length > 2 && (bytes(0) & 0xff) == 0xff &&
       (bytes(1) & 0xff) == 0xd8, "decodeJpeg: missing SOI marker")
-    val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(bytes))
-    require(img != null, "decodeJpeg: no reader accepted the stream")
-    val raster = img.getRaster
-    require(raster.getNumBands == 1 && raster.getSampleModel
-      .getSampleSize(0) == 8,
-      s"decodeJpeg: need 8-bit single-band gray, got ${raster.getNumBands} " +
-        s"bands x ${raster.getSampleModel.getSampleSize(0)} bits")
-    val w = img.getWidth
-    val h = img.getHeight
-    val px = new Array[Int](w * h)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        px(y * w + x) = raster.getSample(x, y, 0)
-        x += 1
-      }
-      y += 1
-    }
-    Frame(w, h, px)
+    grayFrame(readImage(bytes, "decodeJpeg"), "decodeJpeg")
   }
 
   // ------------------------------------------------------ MIME sniffing

@@ -190,6 +190,61 @@ object Retrieval {
       .agg(round(sum(col("c")).cast("double"), 6).as("score"))
   }
 
+  /** The MaxSim kernel of [[maxSimTopK]] and [[maxSimRoute]]: per (doc,
+    * `terms` row) the max exact dot `__m` between the term's affine
+    * integer vector and any of the doc's token vectors. `terms` holds
+    * `qt` and any key columns; the output keeps them all. The dots are
+    * computed once per DISTINCT corpus token against the broadcast terms.
+    */
+  private def maxTermDots(docs: DataFrame, idCol: String, textCol: String,
+      terms: DataFrame): DataFrame = {
+    val P = TextHash.P
+    def comps(h: org.apache.spark.sql.Column): Seq[org.apache.spark.sql.Column] =
+      TextHash.Seeds.map { case (a, b) => (h * a + b) % P - (P / 2) }
+    val keys = terms.columns.toSeq.map(col)
+    // docTok feeds BOTH the distinct-token dot table and the probe
+    // join — without a cut the documents scan + explode + distinct
+    // recomputes twice (the multi-use-subplan rule; same discipline as
+    // q86 / Drift.chiSquare).
+    val docTok = docs.select(col(idCol),
+      explode(Dedup.tokens(col(textCol))).as("w")).distinct()
+      .localCheckpoint()
+    val tokDot = docTok.select("w").distinct()
+      .withColumn("__h", TextHash.tokenHash(col("w")))
+      .crossJoin(broadcast(terms
+        .withColumn("__qh", TextHash.tokenHash(col("qt")))))
+      .select((col("w") +: keys) :+ comps(col("__h")).zip(comps(col("__qh")))
+        .map { case (c, q) => c * q }.reduce(_ + _).as("__d"): _*)
+    docTok.join(tokDot, "w")
+      .groupBy(col(idCol) +: keys: _*)
+      .agg(max(col("__d")).as("__m"))
+  }
+
+  /** SQL twin of [[maxTermDots]]: the CTEs ending in `pm(doc_id, keys...,
+    * qt, m)` over the term rows `terms` (a SELECT of `keys` and `qt`) —
+    * same hash, same affine components, same integer dots; `//` for the
+    * P/2 floor.
+    */
+  private def maxTermDotsSql(terms: String, keys: Seq[String]): String = {
+    val P = TextHash.P
+    val dot = TextHash.Seeds.map { case (a, b) =>
+      s"(((th.h * $a + $b) % $P - ${P / 2}) * ((qh.h * $a + $b) % $P - ${P / 2}))"
+    }.mkString(" + ")
+    val kq = keys :+ "qt"
+    s"""dt AS (SELECT DISTINCT doc_id,
+                  unnest(string_split(text, ' ')) AS w FROM documents),
+             th AS (SELECT w, ${TextHash.tokenHashSql("w")} AS h
+                    FROM (SELECT DISTINCT w FROM dt)),
+             qh AS (SELECT ${kq.mkString(", ")},
+                      ${TextHash.tokenHashSql("qt")} AS h FROM ($terms)),
+             dd AS (SELECT th.w, ${kq.map("qh." + _).mkString(", ")}, $dot AS d
+                    FROM th, qh),
+             pm AS (SELECT dt.doc_id, ${kq.map("dd." + _).mkString(", ")},
+                      max(dd.d) AS m
+                    FROM dt JOIN dd ON dd.w = dt.w
+                    GROUP BY ${(1 to kq.size + 1).mkString(", ")})"""
+  }
+
   /** ColBERT-style MAXSIM late-interaction retrieval (Khattab &
     * Zaharia 2020, SIGIR): score(q, doc) = Σ over query terms of the MAX
     * dot product between that term's vector and any document-token
@@ -214,28 +269,9 @@ object Retrieval {
       queryTerms: Seq[String], k: Int): DataFrame = {
     require(queryTerms.nonEmpty && queryTerms.size <= 8,
       "maxSimTopK: 1..8 query terms (long headroom)")
-    val P = TextHash.P
-    def comps(h: org.apache.spark.sql.Column): Seq[org.apache.spark.sql.Column] =
-      TextHash.Seeds.map { case (a, b) => (h * a + b) % P - (P / 2) }
     val spark = docs.sparkSession
     import spark.implicits._
-    // docTok feeds BOTH the distinct-token dot table and the probe
-    // join — without a cut the documents scan + explode + distinct
-    // recomputes twice (the multi-use-subplan rule; same discipline as
-    // q86 / Drift.chiSquare).
-    val docTok = docs.select(col(idCol),
-      explode(Dedup.tokens(col(textCol))).as("w")).distinct()
-      .localCheckpoint()
-    val tokDot = docTok.select("w").distinct()
-      .withColumn("__h", TextHash.tokenHash(col("w")))
-      .crossJoin(broadcast(queryTerms.toDF("qt")
-        .withColumn("__qh", TextHash.tokenHash(col("qt")))))
-      .select(col("w"), col("qt"),
-        comps(col("__h")).zip(comps(col("__qh")))
-          .map { case (c, q) => c * q }.reduce(_ + _).as("__d"))
-    docTok.join(tokDot, "w")
-      .groupBy(col(idCol), col("qt"))
-      .agg(max(col("__d")).as("__m"))
+    maxTermDots(docs, idCol, textCol, queryTerms.toDF("qt"))
       .groupBy(idCol)
       .agg(sum(col("__m")).as("maxsim"))
       .withColumn("rnk", row_number().over(
@@ -245,25 +281,11 @@ object Retrieval {
       .select(col(idCol), col("maxsim"), col("rnk"))
   }
 
-  /** DuckDB twin of [[maxSimTopK]] — same hash, same affine components,
-    * same integer dots; `//` for the P/2 floor.
-    */
+  /** DuckDB twin of [[maxSimTopK]] over [[maxTermDotsSql]]. */
   def maxSimOracleSql(queryTerms: Seq[String], k: Int): String = {
-    val P = TextHash.P
     val termList =
       queryTerms.map(t => s"'${t.replace("'", "''")}'").mkString(", ")
-    val dot = TextHash.Seeds.map { case (a, b) =>
-      s"(((th.h * $a + $b) % $P - ${P / 2}) * ((qh.h * $a + $b) % $P - ${P / 2}))"
-    }.mkString(" + ")
-    s"""WITH dt AS (SELECT DISTINCT doc_id,
-                  unnest(string_split(text, ' ')) AS w FROM documents),
-             th AS (SELECT w, ${TextHash.tokenHashSql("w")} AS h
-                    FROM (SELECT DISTINCT w FROM dt)),
-             qh AS (SELECT qt, ${TextHash.tokenHashSql("qt")} AS h
-                    FROM (SELECT unnest([$termList]) AS qt)),
-             dd AS (SELECT th.w, qh.qt, $dot AS d FROM th, qh),
-             pm AS (SELECT dt.doc_id, dd.qt, max(dd.d) AS m
-                    FROM dt JOIN dd ON dd.w = dt.w GROUP BY 1, 2),
+    s"""WITH ${maxTermDotsSql(s"SELECT unnest([$termList]) AS qt", Nil)},
              sc AS (SELECT doc_id, CAST(sum(m) AS BIGINT) AS maxsim
                     FROM pm GROUP BY 1)
         SELECT doc_id, maxsim,
@@ -290,28 +312,9 @@ object Retrieval {
     val allTerms = topics.toSeq.flatMap { case (n, ts) => ts.map(n -> _) }
     require(topics.nonEmpty && allTerms.size <= 8,
       "maxSimRoute: 1..8 terms across all topics (long headroom)")
-    val P = TextHash.P
-    def comps(h: org.apache.spark.sql.Column): Seq[org.apache.spark.sql.Column] =
-      TextHash.Seeds.map { case (a, b) => (h * a + b) % P - (P / 2) }
     val spark = docs.sparkSession
     import spark.implicits._
-    // docTok feeds BOTH the distinct-token dot table and the probe
-    // join — without a cut the documents scan + explode + distinct
-    // recomputes twice (the multi-use-subplan rule; same discipline as
-    // q86 / Drift.chiSquare).
-    val docTok = docs.select(col(idCol),
-      explode(Dedup.tokens(col(textCol))).as("w")).distinct()
-      .localCheckpoint()
-    val tokDot = docTok.select("w").distinct()
-      .withColumn("__h", TextHash.tokenHash(col("w")))
-      .crossJoin(broadcast(allTerms.toDF("topic", "qt")
-        .withColumn("__qh", TextHash.tokenHash(col("qt")))))
-      .select(col("w"), col("topic"), col("qt"),
-        comps(col("__h")).zip(comps(col("__qh")))
-          .map { case (c, q) => c * q }.reduce(_ + _).as("__d"))
-    docTok.join(tokDot, "w")
-      .groupBy(col(idCol), col("topic"), col("qt"))
-      .agg(max(col("__d")).as("__m"))
+    maxTermDots(docs, idCol, textCol, allTerms.toDF("topic", "qt"))
       .groupBy(col(idCol), col("topic"))
       .agg(sum(col("__m")).as("__s"))
       // argmax per doc: highest score, smallest topic name on ties — a
@@ -323,25 +326,13 @@ object Retrieval {
       .select(col(idCol), col("topic"), col("__s").as("score"))
   }
 
-  /** DuckDB twin of [[maxSimRoute]]. */
+  /** DuckDB twin of [[maxSimRoute]] over [[maxTermDotsSql]]. */
   def maxSimRouteSql(topics: Map[String, Seq[String]]): String = {
-    val P = TextHash.P
     val pairs = topics.toSeq.sortBy(_._1).flatMap { case (n, ts) =>
       ts.map(t => s"('${n.replace("'", "''")}', '${t.replace("'", "''")}')")
     }.mkString(", ")
-    val dot = TextHash.Seeds.map { case (a, b) =>
-      s"(((th.h * $a + $b) % $P - ${P / 2}) * ((qh.h * $a + $b) % $P - ${P / 2}))"
-    }.mkString(" + ")
-    s"""WITH dt AS (SELECT DISTINCT doc_id,
-                  unnest(string_split(text, ' ')) AS w FROM documents),
-             th AS (SELECT w, ${TextHash.tokenHashSql("w")} AS h
-                    FROM (SELECT DISTINCT w FROM dt)),
-             q0 AS (SELECT * FROM (VALUES $pairs) v(topic, qt)),
-             qh AS (SELECT topic, qt, ${TextHash.tokenHashSql("qt")} AS h
-                    FROM q0),
-             dd AS (SELECT th.w, qh.topic, qh.qt, $dot AS d FROM th, qh),
-             pm AS (SELECT dt.doc_id, dd.topic, dd.qt, max(dd.d) AS m
-                    FROM dt JOIN dd ON dd.w = dt.w GROUP BY 1, 2, 3),
+    s"""WITH ${maxTermDotsSql(s"SELECT * FROM (VALUES $pairs) v(topic, qt)",
+                 Seq("topic"))},
              sc AS (SELECT doc_id, topic, CAST(sum(m) AS BIGINT) AS s
                     FROM pm GROUP BY 1, 2),
              rk AS (SELECT doc_id, topic, s,
@@ -545,6 +536,20 @@ object Retrieval {
       .select(col("topic"), col(idCol), col("score"), col("rnk"))
   }
 
+  /** The corpus side of the BM25 twins ([[hardNegativesSql]],
+    * [[prfOracleSql]]): tokens `tok(doc_id, w)`, lengths `dl`, the
+    * average length `ad` and the doc count `nd`.
+    */
+  private val bm25CorpusCtes: String =
+    """tok AS MATERIALIZED (
+              SELECT doc_id, unnest(string_split(text, ' ')) AS w
+              FROM documents),
+            dl AS MATERIALIZED (
+              SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
+              FROM tok GROUP BY doc_id),
+            ad AS (SELECT avg(dl) AS avgdl FROM dl),
+            nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents)"""
+
   /** DuckDB twin of [[hardNegatives]] — same per-topic scoring and rank
     * band; topics ride a VALUES list (the q200 twin form).
     */
@@ -553,14 +558,7 @@ object Retrieval {
     val pairs = topics.toSeq.sortBy(_._1).flatMap { case (t, ws) =>
       ws.map(w => s"('${t.replace("'", "''")}', '${w.replace("'", "''")}')")
     }.mkString(", ")
-    s"""WITH tok AS MATERIALIZED (
-              SELECT doc_id, unnest(string_split(text, ' ')) AS w
-              FROM documents),
-            dl AS MATERIALIZED (
-              SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-              FROM tok GROUP BY doc_id),
-            ad AS (SELECT avg(dl) AS avgdl FROM dl),
-            nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
+    s"""WITH $bm25CorpusCtes,
             q AS (SELECT * FROM (VALUES $pairs) v(topic, w)),
             tf AS (SELECT doc_id, q.topic, tok.w,
                      CAST(count(*) AS BIGINT) AS tf
@@ -600,14 +598,7 @@ object Retrieval {
             (($tf * ($k1 + 1.0)) /
              ($tf + $k1 * (1.0 - $b + $b * dl.dl / ad.avgdl))), 9)
           AS DECIMAL(28,9))"""
-    s"""WITH tok AS MATERIALIZED (
-              SELECT doc_id, unnest(string_split(text, ' ')) AS w
-              FROM documents),
-            dl AS MATERIALIZED (
-              SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-              FROM tok GROUP BY doc_id),
-            ad AS (SELECT avg(dl) AS avgdl FROM dl),
-            nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
+    s"""WITH $bm25CorpusCtes,
             tf1 AS (SELECT doc_id, w, 1.0 AS wt,
                      CAST(count(*) AS BIGINT) AS tf
                    FROM tok WHERE w IN ($termList) GROUP BY 1, 2, 3),

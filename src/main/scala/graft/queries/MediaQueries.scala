@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.ext.Multimodal
+import StubCodecSql.{aHashSql, pow2Cte, signed64}
 
 /** Multimodal fingerprint queries: the perceptual-hash (aHash) image
   * dedup family over documents-as-payloads — the IMAGE sibling of the
@@ -126,23 +127,31 @@ object MediaQueries {
     (s, d) => Multimodal.voiceActivity(
       Multimodal.asMedia(Tables.documents(s, d), "doc_id", "text"),
       window = 1024, tau = 18900.0),
-    Some(s"""WITH ${StubCodecSql.audioChunksCte},
-              v AS (SELECT media_id, CAST(chunk AS INTEGER) AS chunk
-                    FROM ch WHERE rms >= 18900.0),
-              g AS (SELECT media_id, chunk,
-                     chunk - row_number() OVER (PARTITION BY media_id
-                                                ORDER BY chunk) AS grp
-                    FROM v),
-              r AS (SELECT media_id, grp,
-                     min(chunk) AS start_chunk, max(chunk) AS end_chunk,
-                     CAST(count(*) AS BIGINT) AS n_chunks
-                    FROM g GROUP BY 1, 2)
-         SELECT media_id,
-                CAST(row_number() OVER (PARTITION BY media_id
-                  ORDER BY start_chunk) AS INTEGER) AS run_idx,
-                start_chunk, end_chunk, n_chunks
-         FROM r"""),
+    Some(voiceRunsSql(s"""${StubCodecSql.audioChunksCte},
+              act AS (SELECT media_id, CAST(chunk AS INTEGER) AS chunk
+                      FROM ch WHERE rms >= 18900.0)""")),
   )
+
+  /** Twin of `Multimodal.voiceActivity`'s run cut (q176, q188): `ctes`
+    * end in `act(media_id, chunk)`, the voiced chunks; consecutive chunks
+    * form one run (gaps-and-islands: chunk − row_number is constant along
+    * a run), numbered per payload by start chunk.
+    */
+  private def voiceRunsSql(ctes: String): String =
+    s"""WITH $ctes,
+         g AS (SELECT media_id, chunk,
+                chunk - row_number() OVER (PARTITION BY media_id
+                                           ORDER BY chunk) AS grp
+               FROM act),
+         r AS (SELECT media_id, grp,
+                min(chunk) AS start_chunk, max(chunk) AS end_chunk,
+                CAST(count(*) AS BIGINT) AS n_chunks
+               FROM g GROUP BY 1, 2)
+        SELECT media_id,
+               CAST(row_number() OVER (PARTITION BY media_id
+                 ORDER BY start_chunk) AS INTEGER) AS run_idx,
+               start_chunk, end_chunk, n_chunks
+        FROM r"""
 
   /** Twin of `Multimodal.cdcChunks` — per (payload, chunk): boundary
     * detection from the 8-byte trailing-window Rabin hash (the window
@@ -194,9 +203,7 @@ object MediaQueries {
                   (sum((bv * pw.v) % $M::HUGEINT) % $M::HUGEINT) AS u
                 FROM cb JOIN pw ON pw.k = cb.e GROUP BY 1, 2)
         SELECT chs.media_id, chs.chunk_idx, chs.start, chs.len,
-               CAST(CASE WHEN ch.u >= 9223372036854775808::HUGEINT
-                         THEN ch.u - $M::HUGEINT ELSE ch.u END AS BIGINT)
-                 AS chash
+               ${signed64("ch.u")} AS chash
         FROM chs JOIN ch USING (media_id, chunk_idx)"""
   }
 
@@ -444,7 +451,7 @@ object MediaQueries {
     "q188_wav_container_vad",
     (s, d) => Multimodal.voiceActivity(wavMedia(s, d), window = 160,
       tau = 18900.0, decode = graft.ext.Containers.decodeWav),
-    Some("""WITH d AS (SELECT doc_id,
+    Some(voiceRunsSql("""d AS (SELECT doc_id,
                      3200 + (doc_id % 5) * 160 + doc_id % 7 AS n
                    FROM documents),
               s AS (SELECT doc_id,
@@ -459,21 +466,25 @@ object MediaQueries {
                       sum(smp * smp) AS ss, count(*) AS cnt
                     FROM v GROUP BY 1, 2),
               act AS (SELECT media_id, chunk FROM ch
-                    WHERE sqrt(CAST(ss AS DOUBLE) / cnt) >= 18900.0),
-              g AS (SELECT media_id, chunk,
-                     chunk - row_number() OVER (PARTITION BY media_id
-                                                ORDER BY chunk) AS grp
-                    FROM act),
-              r AS (SELECT media_id, grp,
-                     min(chunk) AS start_chunk, max(chunk) AS end_chunk,
-                     CAST(count(*) AS BIGINT) AS n_chunks
-                    FROM g GROUP BY 1, 2)
-         SELECT media_id,
-                CAST(row_number() OVER (PARTITION BY media_id
-                  ORDER BY start_chunk) AS INTEGER) AS run_idx,
-                start_chunk, end_chunk, n_chunks
-         FROM r"""),
+                    WHERE sqrt(CAST(ss AS DOUBLE) / cnt) >= 18900.0)""")),
   )
+
+  /** aHash twin of the formula-built frames (q189, q192, q203, q204,
+    * q219): per doc a `w` × `h` frame, for frames f < `frames` and aHash
+    * cell i the nearest-neighbor source index
+    * `s = (y·h div 8)·w + (x·w div 8)`, and the pixel there as the SQL
+    * expression `value` of (doc_id, s, f). Output (media_id, frame_idx,
+    * ph) as [[StubCodecSql.aHashSql]].
+    */
+  private def formulaAHashSql(w: String, h: String, frames: Int,
+      value: String): String =
+    aHashSql(s"""d AS (SELECT doc_id, $w AS w, $h AS h FROM documents),
+         cell AS (SELECT doc_id, CAST(f.f AS INTEGER) AS f, g.i AS i,
+                   (((g.i // 8) * h) // 8) * w + ((g.i % 8) * w) // 8 AS s
+                  FROM d, unnest(generate_series(0, 63)) AS g(i),
+                       unnest(generate_series(0, ${frames - 1})) AS f(f)),
+         px AS (SELECT doc_id AS media_id, f AS frame_idx, i, $value AS v
+                FROM cell)""")
 
   /** Q189 [X]: perceptual hash through a REAL BMP container — each
     * doc's deterministic gray frame (`v = ((id+1)·131 + idx·17) mod
@@ -506,29 +517,9 @@ object MediaQueries {
         decode = graft.ext.Containers.decodeBmp)
         .toDF().select(col("media_id"), col("ph"))
     },
-    Some("""WITH RECURSIVE
-              pw(k, v) AS (SELECT 0, 1::HUGEINT UNION ALL
-                           SELECT k + 1, v * 2 FROM pw WHERE k < 63),
-              d AS (SELECT doc_id, 13 + doc_id % 9 AS w,
-                     11 + doc_id % 7 AS h FROM documents),
-              grid AS (SELECT t.i AS i, t.i % 8 AS x, t.i // 8 AS y
-                       FROM unnest(generate_series(0, 63)) AS t(i)),
-              px AS (SELECT doc_id, i,
-                      ((doc_id + 1) * 131 +
-                       (((y * h) // 8) * w + (x * w) // 8) * 17) % 256 AS v
-                    FROM d, grid),
-              sm AS (SELECT doc_id, sum(v) AS sv FROM px GROUP BY 1),
-              b AS (SELECT px.doc_id AS media_id,
-                     sum(CASE WHEN px.v * 64 > sm.sv THEN pw.v
-                         ELSE 0::HUGEINT END) AS u
-                   FROM px JOIN sm ON sm.doc_id = px.doc_id
-                   JOIN pw ON pw.k = px.i
-                   GROUP BY 1)
-         SELECT media_id,
-                CAST(CASE WHEN u >= 9223372036854775808::HUGEINT
-                     THEN u - 18446744073709551616::HUGEINT
-                     ELSE u END AS BIGINT) AS ph
-         FROM b"""),
+    Some(s"""WITH sig AS (${formulaAHashSql("13 + doc_id % 9",
+      "11 + doc_id % 7", frames = 1, "((doc_id + 1) * 131 + s * 17) % 256")})
+         SELECT media_id, ph FROM sig"""),
   )
 
   /** Shared twin fragment for q190/q191: per-doc 65-window energies and
@@ -565,10 +556,6 @@ object MediaQueries {
           GROUP BY 1)"""
   }
 
-  private val signedU =
-    """CAST(CASE WHEN u >= 9223372036854775808::HUGEINT
-       THEN u - 18446744073709551616::HUGEINT ELSE u END AS BIGINT)"""
-
   /** Q190 [X]: 64-bit ENERGY-DELTA audio fingerprint through real WAV
     * containers (`Multimodal.audioFingerprint`, Haitsma & Kalker 2002):
     * bit b = window b+1's exact integer energy exceeds window b's, over
@@ -582,11 +569,9 @@ object MediaQueries {
     "q190_audio_fingerprint",
     (s, d) => Multimodal.audioFingerprint(wavMedia(s, d), window = 48,
       decode = graft.ext.Containers.decodeWav),
-    Some(s"""WITH RECURSIVE
-              pw(k, v) AS (SELECT 0, 1::HUGEINT UNION ALL
-                           SELECT k + 1, v * 2 FROM pw WHERE k < 63),
+    Some(s"""WITH RECURSIVE $pow2Cte,
               ${audioFpCtes("c", scaled = false)}
-         SELECT media_id, $signedU AS afp FROM uc"""),
+         SELECT media_id, ${signed64("u")} AS afp FROM uc"""),
   )
 
   /** Q191 [X]: INCREMENTAL audio near-dup probe under RE-ENCODING — the
@@ -621,13 +606,11 @@ object MediaQueries {
       Multimodal.incrementalAudioPairs(corpusFp, batch, window = 48,
         maxDist = 6, decode = graft.ext.Containers.decodeWav)
     },
-    Some(s"""WITH RECURSIVE
-              pw(k, v) AS (SELECT 0, 1::HUGEINT UNION ALL
-                           SELECT k + 1, v * 2 FROM pw WHERE k < 63),
+    Some(s"""WITH RECURSIVE $pow2Cte,
               ${audioFpCtes("c", scaled = false)},
               ${audioFpCtes("b", scaled = true)},
-              c AS (SELECT media_id, $signedU AS afp FROM uc),
-              bf AS (SELECT media_id, $signedU AS afp FROM ub
+              c AS (SELECT media_id, ${signed64("u")} AS afp FROM uc),
+              bf AS (SELECT media_id, ${signed64("u")} AS afp FROM ub
                      WHERE media_id % 10 = 0)
          SELECT b.media_id AS doc_a, c.media_id AS doc_b,
                 CAST(bit_count(xor(b.afp, c.afp)) AS BIGINT) AS dist
@@ -665,33 +648,8 @@ object MediaQueries {
       Multimodal.videoFrameHashes(media, graft.ext.Containers.decodeAvi)
         .toDF().select(col("media_id"), col("frame_idx"), col("ph"))
     },
-    Some("""WITH RECURSIVE
-              pw(k, v) AS (SELECT 0, 1::HUGEINT UNION ALL
-                           SELECT k + 1, v * 2 FROM pw WHERE k < 63),
-              d AS (SELECT doc_id, 13 + doc_id % 9 AS w,
-                     11 + doc_id % 7 AS h FROM documents),
-              grid AS (SELECT t.i AS i, t.i % 8 AS x, t.i // 8 AS y
-                       FROM unnest(generate_series(0, 63)) AS t(i)),
-              fr AS (SELECT t.f AS f
-                     FROM unnest(generate_series(0, 2)) AS t(f)),
-              px AS (SELECT doc_id, f, i,
-                      ((doc_id + 1) * 131 +
-                       (((y * h) // 8) * w + (x * w) // 8) * 17 +
-                       f * 7) % 256 AS v
-                    FROM d, grid, fr),
-              sm AS (SELECT doc_id, f, sum(v) AS sv FROM px GROUP BY 1, 2),
-              b AS (SELECT px.doc_id AS media_id,
-                     CAST(px.f AS INTEGER) AS frame_idx,
-                     sum(CASE WHEN px.v * 64 > sm.sv THEN pw.v
-                         ELSE 0::HUGEINT END) AS u
-                   FROM px JOIN sm ON sm.doc_id = px.doc_id AND sm.f = px.f
-                   JOIN pw ON pw.k = px.i
-                   GROUP BY 1, 2)
-         SELECT media_id, frame_idx,
-                CAST(CASE WHEN u >= 9223372036854775808::HUGEINT
-                     THEN u - 18446744073709551616::HUGEINT
-                     ELSE u END AS BIGINT) AS ph
-         FROM b"""),
+    Some(formulaAHashSql("13 + doc_id % 9", "11 + doc_id % 7", frames = 3,
+      "((doc_id + 1) * 131 + s * 17 + f * 7) % 256")),
   )
 
   /** Q203 [X]: per-image aHash signatures through REAL COMPRESSED PNG
@@ -723,29 +681,9 @@ object MediaQueries {
         decode = graft.ext.Containers.decodePng)
         .toDF().select(col("media_id"), col("ph"))
     },
-    Some("""WITH RECURSIVE
-              pw(k, v) AS (SELECT 0, 1::HUGEINT UNION ALL
-                           SELECT k + 1, v * 2 FROM pw WHERE k < 63),
-              d AS (SELECT doc_id, 12 + doc_id % 11 AS w,
-                     10 + doc_id % 5 AS h FROM documents),
-              grid AS (SELECT t.i AS i, t.i % 8 AS x, t.i // 8 AS y
-                       FROM unnest(generate_series(0, 63)) AS t(i)),
-              px AS (SELECT doc_id, i,
-                      ((doc_id + 3) * 197 +
-                       (((y * h) // 8) * w + (x * w) // 8) * 29) % 256 AS v
-                    FROM d, grid),
-              sm AS (SELECT doc_id, sum(v) AS sv FROM px GROUP BY 1),
-              b AS (SELECT px.doc_id AS media_id,
-                     sum(CASE WHEN px.v * 64 > sm.sv THEN pw.v
-                         ELSE 0::HUGEINT END) AS u
-                   FROM px JOIN sm ON sm.doc_id = px.doc_id
-                   JOIN pw ON pw.k = px.i
-                   GROUP BY 1)
-         SELECT media_id,
-                CAST(CASE WHEN u >= 9223372036854775808::HUGEINT
-                     THEN u - 18446744073709551616::HUGEINT
-                     ELSE u END AS BIGINT) AS ph
-         FROM b"""),
+    Some(s"""WITH sig AS (${formulaAHashSql("12 + doc_id % 11",
+      "10 + doc_id % 5", frames = 1, "((doc_id + 3) * 197 + s * 29) % 256")})
+         SELECT media_id, ph FROM sig"""),
   )
 
   /** Q204 [X]: the RE-ENCODE near-dup probe through real PNG bytes —
@@ -780,36 +718,13 @@ object MediaQueries {
       Multimodal.incrementalPhashPairs(corpusSig, media(7), maxDist = 4,
         frame = 0, decode = graft.ext.Containers.decodePng)
     },
-    Some("""WITH RECURSIVE
-              pw(k, v) AS (SELECT 0, 1::HUGEINT UNION ALL
-                           SELECT k + 1, v * 2 FROM pw WHERE k < 63),
-              d AS (SELECT doc_id, 12 + doc_id % 11 AS w,
-                     10 + doc_id % 5 AS h FROM documents),
-              grid AS (SELECT t.i AS i, t.i % 8 AS x, t.i // 8 AS y
-                       FROM unnest(generate_series(0, 63)) AS t(i)),
-              fr AS (SELECT t.f AS f
-                     FROM unnest(generate_series(0, 1)) AS t(f)),
-              px AS (SELECT doc_id, f, i,
-                      ((doc_id + 3) * 197 +
-                       (((y * h) // 8) * w + (x * w) // 8) * 29 +
-                       f * 7) % 256 AS v
-                    FROM d, grid, fr),
-              sm AS (SELECT doc_id, f, sum(v) AS sv FROM px GROUP BY 1, 2),
-              b AS (SELECT px.doc_id AS media_id, px.f AS f,
-                     sum(CASE WHEN px.v * 64 > sm.sv THEN pw.v
-                         ELSE 0::HUGEINT END) AS u
-                   FROM px JOIN sm ON sm.doc_id = px.doc_id AND sm.f = px.f
-                   JOIN pw ON pw.k = px.i
-                   GROUP BY 1, 2),
-              sig AS (SELECT media_id, f,
-                       CAST(CASE WHEN u >= 9223372036854775808::HUGEINT
-                            THEN u - 18446744073709551616::HUGEINT
-                            ELSE u END AS BIGINT) AS ph
-                     FROM b)
+    Some(s"""WITH sig AS (${formulaAHashSql("12 + doc_id % 11",
+      "10 + doc_id % 5", frames = 2,
+      "((doc_id + 3) * 197 + s * 29 + f * 7) % 256")})
          SELECT a.media_id AS doc_a, c.media_id AS doc_b,
                 CAST(bit_count(xor(a.ph, c.ph)) AS BIGINT) AS dist
          FROM sig a JOIN sig c
-           ON a.f = 1 AND c.f = 0
+           ON a.frame_idx = 1 AND c.frame_idx = 0
          WHERE bit_count(xor(a.ph, c.ph)) <= 4"""),
   )
 
@@ -852,36 +767,14 @@ object MediaQueries {
         })
         .toDF().select(col("media_id"), col("ph"))
     },
-    Some("""WITH RECURSIVE
-              pw(k, v) AS (SELECT 0, 1::HUGEINT UNION ALL
-                           SELECT k + 1, v * 2 FROM pw WHERE k < 63),
-              d AS (SELECT doc_id, 12 + doc_id % 11 AS w,
-                     10 + doc_id % 5 AS h FROM documents),
-              grid AS (SELECT t.i AS i, t.i % 8 AS x, t.i // 8 AS y
-                       FROM unnest(generate_series(0, 63)) AS t(i)),
-              src AS (SELECT doc_id, i,
-                       (((y * h) // 8) * w + (x * w) // 8) AS s
-                     FROM d, grid),
-              ch AS (SELECT doc_id, i,
-                      ((doc_id + 3) * 197 + s * 29) % 256 AS r,
-                      ((doc_id + 5) * 131 + s * 17) % 256 AS g,
-                      ((doc_id + 7) * 173 + s * 23) % 256 AS b
-                    FROM src),
-              px AS (SELECT doc_id, i,
-                      (r * 19595 + g * 38470 + b * 7471 + 32768) // 65536 AS v
-                    FROM ch),
-              sm AS (SELECT doc_id, sum(v) AS sv FROM px GROUP BY 1),
-              b AS (SELECT px.doc_id AS media_id,
-                     sum(CASE WHEN px.v * 64 > sm.sv THEN pw.v
-                         ELSE 0::HUGEINT END) AS u
-                   FROM px JOIN sm ON sm.doc_id = px.doc_id
-                   JOIN pw ON pw.k = px.i
-                   GROUP BY 1)
-         SELECT media_id,
-                CAST(CASE WHEN u >= 9223372036854775808::HUGEINT
-                     THEN u - 18446744073709551616::HUGEINT
-                     ELSE u END AS BIGINT) AS ph
-         FROM b"""),
+    Some {
+      val luma = """(((doc_id + 3) * 197 + s * 29) % 256 * 19595 +
+          ((doc_id + 5) * 131 + s * 17) % 256 * 38470 +
+          ((doc_id + 7) * 173 + s * 23) % 256 * 7471 + 32768) // 65536"""
+      s"""WITH sig AS (${formulaAHashSql("12 + doc_id % 11",
+        "10 + doc_id % 5", frames = 1, luma)})
+         SELECT media_id, ph FROM sig"""
+    },
   )
 
   /** Q256 [X]: MIME sniffing — content-type from MAGIC BYTES

@@ -490,8 +490,9 @@ object RetrievalQueries {
          FROM c GROUP BY doc_id"""),
   )
 
-  /** DuckDB twin of `Graph.pageRank`: the k rounds UNROLL as chained CTEs
-    * (r0 → c1/r1 → … → rk) generated by the same builder loop, each round
+  /** DuckDB twin of `Graph.pageRank` over the edge table `e(src, dst)`
+    * that the CTEs `edges` end in (q152, q260): the k rounds UNROLL as
+    * chained CTEs (r0 → c1/r1 → … → rk), each round
     * mirroring the Spark plan operation-for-operation — contributions
     * round at 1e-12 and sum as DECIMAL(38,12) (order-free exact), the new
     * rank rounds at 1e-9, and every float literal is CAST to DOUBLE so
@@ -499,7 +500,8 @@ object RetrievalQueries {
     * double math (1.0 − 0.85 must be the DOUBLE 0.15000000000000002 on
     * both engines, not an exact DECIMAL 0.15).
     */
-  private def pageRankSql(iters: Int, damping: Double): String = {
+  private def pageRankSql(edges: String, iters: Int,
+      damping: Double): String = {
     val rounds = (1 to iters).map { i =>
       s"""c$i AS (SELECT e.dst AS node,
                  SUM(CAST(round(r${i - 1}.r / od.outdeg, 12) AS DECIMAL(38,12))) AS s
@@ -511,11 +513,7 @@ object RetrievalQueries {
                        $damping * CAST(coalesce(c$i.s, 0) AS DOUBLE), 9) AS r
                FROM nodes LEFT JOIN c$i ON c$i.node = nodes.node, nn)"""
     }.mkString(",\n          ")
-    s"""WITH base AS (SELECT DISTINCT CAST(l_suppkey AS BIGINT) AS s,
-                     CAST(l_partkey AS BIGINT) + 1000000 AS p
-              FROM lineitem WHERE l_quantity < 2),
-          e AS (SELECT s AS src, p AS dst FROM base
-                UNION ALL SELECT p, s FROM base),
+    s"""WITH $edges,
           od AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg
                  FROM e GROUP BY 1),
           nodes AS (SELECT DISTINCT node FROM
@@ -543,7 +541,11 @@ object RetrievalQueries {
         .unionAll(base.select(col("p").as("src"), col("s").as("dst")))
       graft.ops.Graph.pageRank(edges, "src", "dst", iters = 3)
     },
-    Some(pageRankSql(3, 0.85)),
+    Some(pageRankSql("""base AS (SELECT DISTINCT CAST(l_suppkey AS BIGINT) AS s,
+                     CAST(l_partkey AS BIGINT) + 1000000 AS p
+              FROM lineitem WHERE l_quantity < 2),
+          e AS (SELECT s AS src, p AS dst FROM base
+                UNION ALL SELECT p, s FROM base)""", 3, 0.85)),
   )
 
   /** Q155: per-user activity streaks — the gaps-and-islands idiom as a
@@ -982,25 +984,13 @@ object RetrievalQueries {
     },
   )
 
-  /** q260's twin: the SAME unrolled-rounds text as [[pageRankSql]] over
-    * an edge base that replays the link extraction — `regexp_extract_all`
-    * of the shared Java∩RE2 href pattern, then the
+  /** q260's edge base for [[pageRankSql]]: replays the link extraction —
+    * `regexp_extract_all` of the shared Java∩RE2 href pattern, then the
     * [[TextAnalysis.linkHostSql]] resolution CASE. `$` anchors are
     * escaped `$$` for the interpolator (the q45 class of trap).
     */
-  private def hostRankSql(iters: Int, damping: Double): String = {
-    val rounds = (1 to iters).map { i =>
-      s"""c$i AS (SELECT e.dst AS node,
-                 SUM(CAST(round(r${i - 1}.r / od.outdeg, 12) AS DECIMAL(38,12))) AS s
-               FROM e JOIN r${i - 1} ON r${i - 1}.node = e.src
-                      JOIN od ON od.src = e.src
-               GROUP BY 1),
-          r$i AS (SELECT nodes.node,
-                 round((CAST(1.0 AS DOUBLE) - $damping) / nn.n +
-                       $damping * CAST(coalesce(c$i.s, 0) AS DOUBLE), 9) AS r
-               FROM nodes LEFT JOIN c$i ON c$i.node = nodes.node, nn)"""
-    }.mkString(",\n          ")
-    s"""WITH docs AS (SELECT doc_id,
+  private val hostEdgesSql: String =
+    s"""docs AS (SELECT doc_id,
                  'h' || CAST(doc_id % 12 AS VARCHAR) || '.test' AS bh,
                  '<html><body><p>doc</p>' ||
                  '<a href="http://h' || CAST((doc_id * 3 + 1) % 12 AS VARCHAR) || '.test/page1">x</a>' ||
@@ -1018,16 +1008,7 @@ object RetrievalQueries {
           e AS (SELECT DISTINCT
                   CAST(regexp_extract(bh, '^h([0-9]+)[.]test$$', 1) AS BIGINT) AS src,
                   CAST(regexp_extract(dh, '^h([0-9]+)[.]test$$', 1) AS BIGINT) AS dst
-               FROM hosts),
-          od AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg
-               FROM e GROUP BY 1),
-          nodes AS (SELECT DISTINCT node FROM
-                    (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-          nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-          r0 AS (SELECT node, CAST(1.0 AS DOUBLE) / nn.n AS r FROM nodes, nn),
-          $rounds
-        SELECT node, round(r, 6) AS pr FROM r$iters"""
-  }
+               FROM hosts)"""
 
   /** Q260 [X]: HTML link graph → host PageRank — the crawl-analytics
     * composition (prioritize hosts by link centrality): per-doc
@@ -1070,7 +1051,7 @@ object RetrievalQueries {
           "^h([0-9]+)[.]test$", 1).cast("long").as("dst"))
       graft.ops.Graph.pageRank(edges, "src", "dst", iters = 3)
     },
-    Some(hostRankSql(3, 0.85)),
+    Some(pageRankSql(hostEdgesSql, 3, 0.85)),
   )
 
   val all: Seq[OracleQuery] =

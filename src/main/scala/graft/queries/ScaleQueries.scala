@@ -134,6 +134,23 @@ object ScaleQueries {
             FROM c, t WHERE n_a > 0 AND n_b > 0"""),
   )
 
+  /** Twin of `SemDedup.assign` with q79's seed centroids (vec_id < 8):
+    * `asg(vec_id, v, cid)`, every other vector at its nearest centroid by
+    * rounded cosine, ties to the smaller cid (q79, q136).
+    */
+  private val semDedupAssignSql: String =
+    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+            c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
+            a AS (SELECT vec_id, v, cid,
+                         round(list_dot_product(v, cv) /
+                               (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(cv, cv))), 6) AS cs
+                  FROM e, c WHERE vec_id >= 8),
+            asg AS (SELECT vec_id, v, cid FROM
+                       (SELECT *, row_number() OVER
+                              (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
+                        FROM a) z
+                     WHERE rn = 1)"""
+
   /** Q79 [X]: SemDeDup — embedding-space dedup restricted to nearest-
     * centroid clusters (deterministic seed centroids vec_id < 8 so the
     * oracle can restate it; production uses IvfIndex.build's k-means).
@@ -151,17 +168,7 @@ object ScaleQueries {
         emb.filter(col("vec_id") >= 8), "embedding", "vec_id", centroids)
       SemDedup.dropList(assigned, threshold = 0.2)
     },
-    Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-            c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-            a AS (SELECT vec_id, v, cid,
-                         round(list_dot_product(v, cv) /
-                               (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(cv, cv))), 6) AS cs
-                  FROM e, c WHERE vec_id >= 8),
-            asg AS (SELECT vec_id, v, cid FROM
-                       (SELECT *, row_number() OVER
-                              (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-                        FROM a) z
-                     WHERE rn = 1),
+    Some(s"""WITH $semDedupAssignSql,
             p AS (SELECT y.vec_id AS dropped, x.vec_id AS a_id,
                          round(list_dot_product(x.v, y.v) /
                                (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))), 6) AS cos_r
@@ -398,17 +405,7 @@ object ScaleQueries {
         emb.filter(col("vec_id") >= 8 && col("vec_id") % 10 === 0),
         "embedding", "vec_id", centroids, threshold = 0.2)
     },
-    Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-            c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-            a AS (SELECT vec_id, v, cid,
-                         round(list_dot_product(v, cv) /
-                               (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(cv, cv))), 6) AS cs
-                  FROM e, c WHERE vec_id >= 8),
-            asg AS (SELECT vec_id, v, cid FROM
-                       (SELECT *, row_number() OVER
-                              (PARTITION BY vec_id ORDER BY cs DESC, cid) AS rn
-                        FROM a) z
-                     WHERE rn = 1),
+    Some(s"""WITH $semDedupAssignSql,
             co AS (SELECT * FROM asg WHERE vec_id % 10 != 0),
             ba AS (SELECT * FROM asg WHERE vec_id % 10 = 0),
             p AS (SELECT x.vec_id AS dropped, y.vec_id AS c_id,
@@ -736,6 +733,34 @@ object ScaleQueries {
     Some(graft.ops.Manifest.shardManifestSql(shards = 8)),
   )
 
+  /** Twin of the per-source bottom-k token sketch (q213, q214, q216):
+    * `r(source, h, rn)` ranks each source's distinct token hashes `hash`
+    * (a SQL expression of `tok`) ascending.
+    */
+  private def bottomKCtes(hash: String): String =
+    s"""tk AS (SELECT DISTINCT source, $hash AS h
+                  FROM (SELECT source, unnest(string_split(text, ' ')) AS tok
+                        FROM documents)),
+              r AS (SELECT source, h,
+                       row_number() OVER (PARTITION BY source ORDER BY h) AS rn
+                    FROM tk)"""
+
+  /** Twin of the k = 64 KMV distinct estimate (q214, q216): the sketch
+    * size when under k, else `numerator / h_k`, the numerator a SQL
+    * double of the hash space times k − 1.
+    */
+  private def kmvEstimateSql(hash: String, numerator: String): String =
+    s"""WITH ${bottomKCtes(hash)},
+              sk AS (SELECT source, h FROM r WHERE rn <= 64),
+              a AS (SELECT source, CAST(count(*) AS BIGINT) AS n_sketch,
+                       max(h) AS h_k
+                    FROM sk GROUP BY 1)
+         SELECT source, n_sketch, h_k,
+                round(CASE WHEN n_sketch < 64 THEN CAST(n_sketch AS DOUBLE)
+                           ELSE $numerator / CAST(h_k AS DOUBLE) END, 6)
+                  + 0.0 AS est_distinct
+         FROM a"""
+
   /** Q213 [X sketch]: bottom-k (KMV) vocabulary sketch per source
     * ([[graft.ops.Sketches.bottomK]], k = 64) — the DETERMINISTIC
     * mergeable distinct sketch next to q24's HLL: the k smallest distinct
@@ -748,12 +773,7 @@ object ScaleQueries {
       Tables.documents(s, d)
         .select(col("source"), explode(Dedup.tokens(col("text"))).as("tok")),
       "source", "tok", k = 64),
-    Some(s"""WITH tk AS (SELECT DISTINCT source, ${tokenHashSql("tok")} AS h
-                  FROM (SELECT source, unnest(string_split(text, ' ')) AS tok
-                        FROM documents)),
-              r AS (SELECT source, h,
-                       row_number() OVER (PARTITION BY source ORDER BY h) AS rn
-                    FROM tk)
+    Some(s"""WITH ${bottomKCtes(tokenHashSql("tok"))}
          SELECT source, rn, h FROM r WHERE rn <= 64"""),
   )
 
@@ -780,21 +800,7 @@ object ScaleQueries {
         graft.ops.Sketches.merge(corpus, batch, "source", k = 64),
         "source", k = 64)
     },
-    Some(s"""WITH tk AS (SELECT DISTINCT source, ${tokenHashSql("tok")} AS h
-                  FROM (SELECT source, unnest(string_split(text, ' ')) AS tok
-                        FROM documents)),
-              r AS (SELECT source, h,
-                       row_number() OVER (PARTITION BY source ORDER BY h) AS rn
-                    FROM tk),
-              sk AS (SELECT source, h FROM r WHERE rn <= 64),
-              a AS (SELECT source, CAST(count(*) AS BIGINT) AS n_sketch,
-                       max(h) AS h_k
-                    FROM sk GROUP BY 1)
-         SELECT source, n_sketch, h_k,
-                round(CASE WHEN n_sketch < 64 THEN CAST(n_sketch AS DOUBLE)
-                           ELSE 6300000000.0 / CAST(h_k AS DOUBLE) END, 6)
-                  + 0.0 AS est_distinct
-         FROM a"""),
+    Some(kmvEstimateSql(tokenHashSql("tok"), "6300000000.0")),
   )
 
   /** Q216 [X sketch]: the PRODUCTION-WIDTH bottom-k sketch — q214's
@@ -828,23 +834,8 @@ object ScaleQueries {
         graft.ops.Sketches.merge(corpus, batch, "source", k = 64),
         "source", k = 64)
     },
-    Some(s"""WITH tk AS (SELECT DISTINCT source,
-                       ${graft.ext.TextHash.tokenHash63Sql("tok")} AS h
-                  FROM (SELECT source, unnest(string_split(text, ' ')) AS tok
-                        FROM documents)),
-              r AS (SELECT source, h,
-                       row_number() OVER (PARTITION BY source ORDER BY h) AS rn
-                    FROM tk),
-              sk AS (SELECT source, h FROM r WHERE rn <= 64),
-              a AS (SELECT source, CAST(count(*) AS BIGINT) AS n_sketch,
-                       max(h) AS h_k
-                    FROM sk GROUP BY 1)
-         SELECT source, n_sketch, h_k,
-                round(CASE WHEN n_sketch < 64 THEN CAST(n_sketch AS DOUBLE)
-                           ELSE (63.0 * 9223372036854775808.0) /
-                                CAST(h_k AS DOUBLE) END, 6)
-                  + 0.0 AS est_distinct
-         FROM a"""),
+    Some(kmvEstimateSql(graft.ext.TextHash.tokenHash63Sql("tok"),
+      "(63.0 * 9223372036854775808.0)")),
   )
 
   /** Q217 [X incremental]: shard-manifest MERGE certificate — the

@@ -221,10 +221,7 @@ object SimilarityQueries {
             hh AS (SELECT doc_id, $hs FROM tok),
             b AS (SELECT doc_id, $sums FROM hh GROUP BY doc_id),
             uu AS (SELECT doc_id, ($bits) AS u FROM b)
-            SELECT doc_id,
-                   CAST(CASE WHEN u >= 9223372036854775808::HUGEINT
-                             THEN u - 18446744073709551616::HUGEINT
-                             ELSE u END AS BIGINT) AS simhash
+            SELECT doc_id, ${StubCodecSql.signed64("u")} AS simhash
             FROM uu"""
   }
 
@@ -759,10 +756,7 @@ object SimilarityQueries {
             uu AS (SELECT vec_id,
                  SUM(CASE WHEN sj >= 0 THEN p ELSE 0::HUGEINT END) AS u
                FROM sums JOIN bits USING (j) GROUP BY 1)
-            SELECT vec_id,
-                   CAST(CASE WHEN u >= 9223372036854775808::HUGEINT
-                             THEN u - 18446744073709551616::HUGEINT
-                             ELSE u END AS BIGINT) AS sh
+            SELECT vec_id, ${StubCodecSql.signed64("u")} AS sh
             FROM uu"""
   }
 

@@ -58,59 +58,71 @@ object StubCodecSql {
                        $seedFold AS su
                 FROM d),
          dim AS (SELECT media_id, n_bytes, su,
-                   CAST(8 + ((((CASE WHEN su >= 9223372036854775808
-                                     THEN su - $M ELSE su END) % 57) + 57) % 57)
-                        AS INTEGER) AS w,
+                   CAST(8 + (((${signed64("su")} % 57) + 57) % 57) AS INTEGER) AS w,
                    CAST(8 + ((su // 128) % 57) AS INTEGER) AS h
                  FROM sd),
          px AS (SELECT media_id, (${mix("dim.su", "CAST(j.j AS HUGEINT)")}) % 256 AS p
                 FROM dim, unnest(generate_series(0, CAST(w*h - 1 AS BIGINT))) AS j(j))"""
 
-  /** Twin of `Multimodal.frameHashes`: per (document-as-payload, frame)
-    * the 64-bit aHash, both as the unsigned HUGEINT `u` (band-key
-    * extraction in callers) and the signed BIGINT `ph` Spark's long
-    * carries (xor/bit_count verification). Only the 64 RESIZED pixel
-    * indices are materialized — `j = (y·h div 8)·w + (x·w div 8)`, the
-    * nearest-neighbor selection — never the full w·h grid; the frame
-    * shift is the stub's pointwise `(p + 7f) mod 256`; the bit rule is
-    * the strict integer `p·64 > Σp`. Bits 0..62 assemble in BIGINT
-    * (`1::BIGINT << bit`), bit 63 joins in HUGEINT — the q111 discipline:
-    * assemble unsigned, convert to two's complement once.
+  /** The unsigned powers 2^0..2^63 as the HUGEINT table `pw(k, v)`: the
+    * bit weights of a 64-bit assembly (needs `WITH RECURSIVE`).
+    */
+  val pow2Cte: String =
+    """pw(k, v) AS (SELECT 0, 1::HUGEINT UNION ALL
+                  SELECT k + 1, v * 2 FROM pw WHERE k < 63)"""
+
+  /** The one HUGEINT → BIGINT step of every 64-bit twin: an unsigned value
+    * `u` in [0, 2^64) as the two's complement a Spark long carries. All
+    * arithmetic stays unsigned in HUGEINT and converts here once, last
+    * (DuckDB xor/bit_count on the BIGINT then match Java exactly).
+    */
+  def signed64(u: String): String =
+    s"""CAST(CASE WHEN $u >= 9223372036854775808::HUGEINT
+              THEN $u - $M::HUGEINT ELSE $u END AS BIGINT)"""
+
+  /** Twin of the aHash bit rule of `Multimodal.frameHashes`: `ctes` end in
+    * a `px(media_id, frame_idx, i, v)` table, the 64 resized gray values
+    * of each (payload, frame) at bit i = 8·y + x. Bit i is set iff the
+    * strict integer mean test `v·64 > Σv` holds; the bits sum unsigned in
+    * HUGEINT over [[pow2Cte]] and convert once. Output (media_id,
+    * frame_idx, ph).
+    */
+  def aHashSql(ctes: String): String =
+    s"""WITH RECURSIVE $pow2Cte,
+         $ctes,
+         sm AS (SELECT media_id, frame_idx, sum(v) AS sv FROM px GROUP BY 1, 2),
+         b AS (SELECT px.media_id, px.frame_idx,
+                sum(CASE WHEN px.v * 64 > sm.sv THEN pw.v
+                    ELSE 0::HUGEINT END) AS u
+               FROM px JOIN sm ON sm.media_id = px.media_id
+                              AND sm.frame_idx = px.frame_idx
+               JOIN pw ON pw.k = px.i
+               GROUP BY 1, 2)
+        SELECT media_id, frame_idx, ${signed64("u")} AS ph FROM b"""
+
+  /** Twin of `Multimodal.frameHashes` over the stub codec: per
+    * (document-as-payload, frame) the 64-bit aHash `ph`. Only the 64
+    * RESIZED pixel indices are materialized — `j = (y·h div 8)·w +
+    * (x·w div 8)`, the nearest-neighbor selection — never the full w·h
+    * grid; the frame shift is the stub's pointwise `(p + 7f) mod 256`.
     */
   def phashSql(frames: Seq[Int]): String =
-    s"""WITH d AS (SELECT doc_id AS media_id, text FROM documents),
+    aHashSql(s"""d AS (SELECT doc_id AS media_id, text FROM documents),
          sd AS (SELECT media_id, $seedFold AS su FROM d),
          dim AS (SELECT media_id, su,
-                   CAST(8 + ((((CASE WHEN su >= 9223372036854775808
-                                     THEN su - $M ELSE su END) % 57) + 57) % 57)
-                        AS BIGINT) AS w,
+                   CAST(8 + (((${signed64("su")} % 57) + 57) % 57) AS BIGINT) AS w,
                    CAST(8 + ((su // 128) % 57) AS BIGINT) AS h
                  FROM sd),
-         rs AS (SELECT media_id, su, y.y * 8 + x.x AS bit,
+         rs AS (SELECT media_id, su, y.y * 8 + x.x AS i,
                        ((y.y * h) // 8) * w + ((x.x * w) // 8) AS j
                 FROM dim, unnest(generate_series(0, 7)) AS y(y),
                      unnest(generate_series(0, 7)) AS x(x)),
-         bp AS (SELECT media_id, bit,
+         bp AS (SELECT media_id, i,
                        CAST((${mix("rs.su", "CAST(j AS HUGEINT)")}) % 256
                             AS BIGINT) AS p
                 FROM rs),
-         fp AS (SELECT media_id, f.f AS frame_idx, bit, (p + f.f * 7) % 256 AS p
-                FROM bp, unnest([${frames.mkString(", ")}]) AS f(f)),
-         sm AS (SELECT media_id, frame_idx, bit, p,
-                       sum(p) OVER (PARTITION BY media_id, frame_idx) AS s
-                FROM fp),
-         hu AS (SELECT media_id, frame_idx,
-                       CAST(sum(CASE WHEN p * 64 > s AND bit < 63
-                                     THEN (CAST(1 AS BIGINT) << CAST(bit AS INTEGER))
-                                     ELSE 0 END) AS HUGEINT)
-                       + CAST(sum(CASE WHEN p * 64 > s AND bit = 63
-                                       THEN 1 ELSE 0 END) AS HUGEINT)
-                         * 9223372036854775808::HUGEINT AS u
-                FROM sm GROUP BY 1, 2)
-        SELECT media_id, frame_idx, u,
-               CAST(CASE WHEN u >= 9223372036854775808::HUGEINT
-                         THEN u - $M::HUGEINT ELSE u END AS BIGINT) AS ph
-        FROM hu"""
+         px AS (SELECT media_id, f.f AS frame_idx, i, (p + f.f * 7) % 256 AS v
+                FROM bp, unnest([${frames.mkString(", ")}]) AS f(f))""")
 
   val q33Oracle: String =
     s"""$pixelCtes

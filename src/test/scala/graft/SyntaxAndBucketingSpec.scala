@@ -74,6 +74,13 @@ class SyntaxAndBucketingSpec extends SparkSpec {
     val emb = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(1.0f, 0.0f)))
       .toDF("vec_id", "embedding")
     emb.nearDuplicatesBlocked("embedding", "vec_id", 0.9).count() shouldBe 1
+    // README's two join forwarders: the same rows as their operators
+    val sigs = docs.minhashSignature("doc_id", "text")
+    sigs.lshCandidates("doc_id", Seq(Seq("mh0", "mh1"))).collect().toSet shouldBe
+      graft.ext.Dedup.lshCandidatePairs(sigs, "doc_id", Seq(Seq("mh0", "mh1"))).collect().toSet
+    val ws = vals.select($"v".as("w"))
+    vals.bandedJoin(ws, "v", "w", 1.0).collect().toSet shouldBe
+      graft.ops.RangeJoin.banded(vals, ws, "v", "w", 1.0).collect().toSet
   }
 
   test("bucketed join plans without an exchange (co-located storage)") {

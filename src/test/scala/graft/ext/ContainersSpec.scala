@@ -193,6 +193,8 @@ class ContainersSpec extends AnyFunSuite with Matchers {
       Containers.decodePng(Containers.bmpBytes(Frame(2, 2, Array.fill(4)(1))))
     an[IllegalArgumentException] should be thrownBy
       Containers.pngBytes(Frame(2, 2, Array(0, 1, 2, 300))) // out-of-range px
+    an[IllegalArgumentException] should be thrownBy
+      Containers.jpegBytes(Frame(2, 2, Array(0, 1, 2, 300)))
   }
 
   test("sniffMime: every own container + adversarial non-payloads") {

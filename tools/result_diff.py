@@ -37,16 +37,20 @@ def exact(v):
     return (type(v).__name__, v)
 
 
-def sort_key(row):
-    return tuple((x is None, str(x)) for x in row)
-
-
 def load(con, path):
+    """One query's columns sorted by name and its rows, each row the `repr`
+    of its `exact` values in that column order, sorted. A string per row
+    is a fraction of the memory of the tuples it prints. Every value's
+    repr is one parenthesised tuple, so none is a proper prefix of
+    another: the sorted reprs stand in the order of the rows' per-value
+    reprs, compared as tuples."""
     rel = con.sql(f"SELECT * FROM '{path}/*.parquet'")
     cols = rel.columns
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    rows = [tuple(exact(r[i]) for i in order) for r in rel.fetchall()]
-    rows.sort(key=sort_key)
+    rows = []
+    while batch := rel.fetchmany(100000):
+        rows.extend(repr(tuple(exact(r[i]) for i in order)) for r in batch)
+    rows.sort()
     return [cols[i] for i in order], rows
 
 
@@ -55,9 +59,17 @@ def queries(d):
 
 
 def digest(con, path):
-    """(row count, sha256 hex) of one query's canonical columns and rows."""
+    """(row count, sha256 hex) of one query's canonical columns and rows:
+    the sha256 of `repr((cols, rows))` with each row the tuple of its
+    `exact` values, fed piece by piece so that string never exists whole."""
     cols, rows = load(con, path)
-    return len(rows), hashlib.sha256(repr((cols, rows)).encode()).hexdigest()
+    h = hashlib.sha256(("(" + repr(cols) + ", [").encode())
+    sep = ""
+    for row in rows:
+        h.update((sep + row).encode())
+        sep = ", "
+    h.update(b"])")
+    return len(rows), h.hexdigest()
 
 
 def spark_version(con, d, names):
@@ -141,9 +153,9 @@ def main():
             sa, sb = set(ra), set(rb)
             print(f"DIFF {q}: {len(ra)} vs {len(rb)} rows, "
                   f"{len(sa - sb)} only in A, {len(sb - sa)} only in B")
-            for r in sorted(sa - sb, key=sort_key)[:3]:
+            for r in sorted(sa - sb)[:3]:
                 print(f"   A-only: {r}")
-            for r in sorted(sb - sa, key=sort_key)[:3]:
+            for r in sorted(sb - sa)[:3]:
                 print(f"   B-only: {r}")
             differing.append(q)
         else:
